@@ -42,7 +42,7 @@ ROWS_ONLY = frozenset({
 # r9): an uncommitted artifact appearing mid-round — or a deploy
 # missing artifacts — must not silently shift the head order away
 # from what the committed repo state mandates.
-ATTESTED_THROUGH = 16
+ATTESTED_THROUGH = 17
 
 # Queries whose IMPLEMENTATION changed this round and therefore must
 # re-attest even though a previous round's driver run was green.
@@ -50,33 +50,32 @@ ATTESTED_THROUGH = 16
 # tests/test_rotation_guard.py derives the queries whose package-
 # internal import closure intersects the round's diff and fails the
 # suite if any is missing here.
-# Round 17 (optimization round 2/2) opens with the r16 artifacts
-# committed and the pin bumped to 16; the list grows as the r17 diff
-# touches query closures (the guard test derives the mandatory set
-# mechanically and fails the suite if an entry is missing).
+# This round opens with the r17 artifacts committed and the pin bumped
+# to 17; the list grows as the round's diff touches query closures.
 FORCE_REATTEST: tuple[str, ...] = (
-    # r16 overflow carry-over: these r16-changed queries were cut from
+    # r17 overflow carry-over: these r17-changed queries were cut from
     # the 50-slot head by the deterministic truncation (never-attested
     # first) and must still re-attest (policy: cut forced entries stay
     # listed until a committed artifact shows them green).
-    "q_profile_columns", "q_repetition_ratio", "q_skew_salted_agg",
-    "q_skew_salted_join", "q_source_overlap", "q_stream_first_seen",
-    "q_stream_first_seen_ttl", "q_stream_threshold_alarm",
-    "q_tfidf_top_terms", "q_token_entropy", "q_user_paths",
-    "q_weighted_median", "q_window_range_frame", "q_winsorize_bounds",
-    "q_pagerank", "q_shortest_paths", "q_triangle_count",
-    "q_sparse_cosine_pairs", "q_bm25_topk",
-    # r17 OPTIMIZATION diff entries are appended below as the round
-    # touches query closures (tests/test_rotation_guard.py derives the
-    # mandatory set mechanically and fails the suite on omissions).
-    # sinks/keyed_table.py (write-time schema-memo seed, memo cap,
-    # NULL-pass check reporting) is in every keyed query's closure;
-    # sinks/views.py (inline-fused contributions, stats ride the
-    # write, rc_full materialization) in the view queries';
-    # operators/graph.py (changed-count rides the checkpoint) in the
-    # dedup/cluster queries'.
-    "q_correlation_matrix", "q_dedup_clusters", "q_dedup_keep_one",
-    "q_doc_packing", "q_event_funnel", "q_incremental_rollup",
+    "q_retention_cohorts", "q_training_pipeline", "q_constraint_audit",
+    "q_csv_ingest", "q_fixedwidth_ingest", "q_generate",
+    "q_jsonl_ingest", "q_merge_upsert", "q_merge_upsert_delete",
+    "q_schema_evolution_read", "q_xml_ingest", "q_ann_ivf_assign",
+    "q_ann_ivf_search", "q_arrow_batch_norms", "q_arrow_grouped_stats",
+    "q_cluster_balanced_sample", "q_contrastive_negatives",
+    "q_corpus_card", "q_decontaminate", "q_embedding_neardup",
+    "q_event_sliding", "q_grouped_map_median", "q_incremental_vec_dedup",
+    "q_kmeans_iter", "q_knn_bruteforce", "q_label_centroids",
+    "q_mixture_sample", "q_null_funcs", "q_phrase_decontaminate",
+    "q_pq_encode", "q_pq_search", "q_quota_allocation",
+    "q_rhp_lsh_buckets", "q_rhp_lsh_pairs", "q_semdedup",
+    "q_shard_assign", "q_sq_int8_quantize", "q_udaf_grouped_agg",
+    "q_udtf_bigrams", "q_vector_lsh_verified", "q_weighted_sample",
+    # sinks/keyed_table.py (bounded-probe lookups: version-schema
+    # subset reads, single-partition merge, JVM-side empty relations,
+    # one-selectExpr merge projection) and sinks/bloom_index.py (meta
+    # memo fingerprinted by the sidecar listing) are in every keyed
+    # query's closure
     "q_keyed_autosize", "q_keyed_bloom_scan", "q_keyed_constraints",
     "q_keyed_lookup_join", "q_keyed_lsm_roundtrip",
     "q_keyed_merged_read", "q_keyed_pruned_compact",
@@ -87,28 +86,7 @@ FORCE_REATTEST: tuple[str, ...] = (
     "q_keyed_view_avg", "q_keyed_view_follow", "q_keyed_view_maintain",
     "q_keyed_view_minmax", "q_keyed_view_recover",
     "q_keyed_zonemap_lookup", "q_keyed_zonemap_scan",
-    "q_keyed_zorder_scan", "q_lsh_verified_pairs", "q_regression_ols",
-    "q_retention_cohorts", "q_training_pipeline",
-    # operators/merge.py (source_prepared flag — the CHECK-constrained
-    # upsert no longer plans the dedup window twice) is in the merge/
-    # ingest queries' closure
-    "q_constraint_audit", "q_csv_ingest", "q_fixedwidth_ingest",
-    "q_generate", "q_jsonl_ingest", "q_merge_upsert",
-    "q_merge_upsert_delete", "q_schema_evolution_read", "q_xml_ingest",
-    # operators/vector_kernels.py (scale-adaptive kernel-input
-    # widening) + plans/kmeans.py are in the vector/sampling queries'
-    # closure
-    "q_ann_ivf_assign", "q_ann_ivf_search", "q_arrow_batch_norms",
-    "q_arrow_grouped_stats", "q_cluster_balanced_sample",
-    "q_contrastive_negatives", "q_corpus_card", "q_decontaminate",
-    "q_embedding_neardup", "q_event_sliding", "q_grouped_map_median",
-    "q_incremental_vec_dedup", "q_kmeans_iter", "q_knn_bruteforce",
-    "q_label_centroids", "q_mixture_sample", "q_null_funcs",
-    "q_phrase_decontaminate", "q_pq_encode", "q_pq_search",
-    "q_quota_allocation", "q_rhp_lsh_buckets", "q_rhp_lsh_pairs",
-    "q_semdedup", "q_shard_assign", "q_sq_int8_quantize",
-    "q_udaf_grouped_agg", "q_udtf_bigrams", "q_vector_lsh_verified",
-    "q_weighted_sample",
+    "q_keyed_zorder_scan",
 )
 
 

@@ -147,12 +147,16 @@ def read_bloom_index(spark: SparkSession,
     return _read_committed_parquet(spark, [d])
 
 
-# (dtype, max n_hashes) per (base_dir, col) — the sidecar is immutable
-# per base version (it commits, time-travels, and GCs with its base),
-# so the meta aggregate is derived metadata of immutable files: one
-# job on first probe, memo hits afterwards (r17 — a point-probe loop
-# paid the meta job per probe). Bounded like the schema memo.
-_BLOOM_META_MEMO: dict[tuple[str, str], tuple | None] = {}
+# (dtype, max n_hashes) per (base_dir, col, sidecar listing) — the
+# sidecar is immutable per base version (it commits, time-travels, and
+# GCs with its base), so the meta aggregate is derived metadata of
+# immutable files: one job on first probe, memo hits afterwards (r17 —
+# a point-probe loop paid the meta job per probe). The listing is the
+# fingerprint, as for the schema memo: a table dropped and re-created
+# at the same path writes new job-UUID file names, so a stale dtype
+# can never hash the probe differently from the build and prune a file
+# that holds it. Bounded like the schema memo.
+_BLOOM_META_MEMO: dict[tuple, tuple | None] = {}
 _BLOOM_META_CAP = 4096
 
 
@@ -176,7 +180,8 @@ def bloom_kept_files(spark: SparkSession, base_dir: str, col: str,
     if idx is None:
         return None
     mine = idx.filter(F.col("col") == col)
-    mkey = (base_dir, col)
+    mkey = (base_dir, col, tuple(sorted(
+        hfs.listdir(spark, hfs.join(base_dir, BLOOM_SIDECAR)))))
     cached = _BLOOM_META_MEMO.get(mkey, ())
     if cached == ():
         meta = mine.agg(F.collect_set("dtype").alias("dt"),

@@ -335,11 +335,7 @@ def _read_committed_parquet(spark: SparkSession, paths: list[str],
     a fresh first read. Explicit file lists are their own fingerprint.
     Results are never cached — only the schema, which is derived
     metadata of immutable files."""
-    if len(paths) == 1 and not paths[0].endswith(".parquet"):
-        fp = tuple(sorted(hfs.listdir(spark, paths[0])))
-    else:
-        fp = ()
-    key = (tuple(paths), fp, merge_schema)
+    key = _schema_memo_key(spark, paths, merge_schema)
     schema = _PQ_SCHEMA_MEMO.get(key)
     reader = spark.read
     if schema is not None:
@@ -349,6 +345,27 @@ def _read_committed_parquet(spark: SparkSession, paths: list[str],
     df = reader.parquet(*paths)
     _memo_put(key, df.schema)
     return df
+
+
+def _schema_memo_key(spark: SparkSession, paths: list[str],
+                     merge_schema: bool) -> tuple:
+    if len(paths) == 1 and not paths[0].endswith(".parquet"):
+        fp = tuple(sorted(hfs.listdir(spark, paths[0])))
+    else:
+        fp = ()
+    return (tuple(paths), fp, merge_schema)
+
+
+def _committed_schema(spark: SparkSession, paths: list[str],
+                      merge_schema: bool = False) -> T.StructType:
+    """The schema `_read_committed_parquet` reads `paths` with: the
+    memo entry when present (no DataFrame is built, so a hit costs no
+    py4j round trip), else one footer inference, memoized."""
+    schema = _PQ_SCHEMA_MEMO.get(
+        _schema_memo_key(spark, paths, merge_schema))
+    if schema is None:
+        schema = _read_committed_parquet(spark, paths, merge_schema).schema
+    return schema
 
 
 def _read_delta_dir(spark: SparkSession, path: str, v: int) -> DataFrame:
@@ -431,13 +448,44 @@ def _read_base(spark: SparkSession, path: str, version: int) -> DataFrame:
     schema leaves carried files on the old schema, and a single-footer
     read would silently drop the new column (carried rows surface it
     as NULL — exactly what the full fold's unionByName produces)."""
+    return _read_committed_parquet(spark, *_base_read_paths(
+        spark, path, version))
+
+
+def _base_read_paths(spark: SparkSession, path: str,
+                     version: int) -> tuple[list[str], bool]:
+    """(paths, merge_schema) `_read_base` reads a base version with."""
     refs = _carried_refs(spark, path, version)
     base = _base_dir(path, version)
     if not refs:
-        return _read_committed_parquet(spark, [base])
+        return [base], False
     own = [hfs.join(base, f) for f in _base_data_files(spark, base)]
-    paths = own + [hfs.join(path, r) for r in refs]
-    return _read_committed_parquet(spark, paths, merge_schema=True)
+    return own + [hfs.join(path, r) for r in refs], True
+
+
+def _base_schema(spark: SparkSession, path: str,
+                 version: int) -> T.StructType:
+    """The schema `_read_base` resolves for a base version, from the
+    memo without building a DataFrame. Every file of the version reads
+    with it: a file lacking a column (an older schema generation
+    carried by reference) surfaces it as NULL."""
+    return _committed_schema(spark, *_base_read_paths(spark, path, version))
+
+
+def _read_base_files(spark: SparkSession, path: str, version: int,
+                     files: list[str]) -> DataFrame:
+    """A subset of a base version's data files (full paths, e.g. the
+    zone-map-kept set) read with the VERSION's schema. Inferring the
+    subset's own schema would cost one `parquet at` footer job per new
+    subset, and could drop a column the subset's files happen to lack;
+    with the version's schema every subset reads exactly like the full
+    base, filtered. An empty subset plans an empty relation inside the
+    JVM (the optimizer prunes the false filter and the scan with it):
+    no Python-built frame, no tasks."""
+    reader = spark.read.schema(_base_schema(spark, path, version))
+    if files:
+        return reader.parquet(*files)
+    return reader.parquet(_base_dir(path, version)).where(F.lit(False))
 
 
 def _base_dir(path: str, version: int) -> str:
@@ -2252,7 +2300,7 @@ def _hits_base(spark: SparkSession, path: str, key: str,
             # just unbounded).
             rng = _deltas_key_range(spark, path, key, deltas)
             if rng == (None, None):      # every delta empty
-                return spark.createDataFrame([], base.schema)
+                return base.where(F.lit(False))
             if rng is not None:
                 entries, _ = idx.entries_for(key, lo=rng[0], hi=rng[1])
             else:
@@ -2273,10 +2321,8 @@ def _hits_base(spark: SparkSession, path: str, key: str,
         return base
     if len(touched) >= len(all_files):
         return base
-    if not touched:
-        return spark.createDataFrame([], base.schema)
-    return _read_committed_parquet(
-        spark, [fmap[f] for f in sorted(touched)], merge_schema=True)
+    return _read_base_files(spark, path, base_version,
+                            [fmap[f] for f in sorted(touched)])
 
 
 def _merged_fast(spark: SparkSession, path: str, key: str,
@@ -2328,26 +2374,42 @@ def _merged_touched(spark: SparkSession, path: str, key: str,
         hits_src = hits_src.filter(predicate)
     base_hits = (hits_src.join(F.broadcast(dkeys), key)
                  .withColumn("__v", F.lit(0)))
-    allv = base_hits.unionByName(dl, allowMissingColumns=True)
+    merged = _latest_per_key(
+        base_hits.unionByName(dl, allowMissingColumns=True), key)
+    return dkeys, merged, [c for c in merged.columns if c != key]
+
+
+def _latest_per_key(allv: DataFrame, key: str) -> DataFrame:
+    """The merge itself over version-tagged rows (`__v`, 0 = base):
+    the tombstone cut, then per key the newest version wins with
+    per-column null-skip — `first(col, ignorenulls)` in descending
+    version order over the FULL partition frame (the default ORDER BY
+    frame ends at the current row, which would hide older non-null
+    values from the newest row). Output: the key, then every other
+    column in input order. The projection is one `selectExpr`: one
+    analysis round trip instead of ~4 py4j calls per column."""
     allv = _apply_tombstones(allv, key)
-    cols = [c for c in allv.columns if c not in (key, "__v")]
-    w = Window.partitionBy(key).orderBy(F.col("__v").desc())
-    w_full = w.rowsBetween(Window.unboundedPreceding,
-                           Window.unboundedFollowing)
-    merged = (allv.select(
-        key, "__v",
-        *[F.first(c, ignorenulls=True).over(w_full).alias(c)
-          for c in cols],
-        F.row_number().over(w).alias("__rn"))
-        .filter(F.col("__rn") == 1).drop("__rn", "__v"))
-    return dkeys, merged, cols
+    order = f"PARTITION BY {_q(key)} ORDER BY __v DESC"
+    full = f"({order} ROWS BETWEEN UNBOUNDED PRECEDING AND UNBOUNDED FOLLOWING)"
+    merged = allv.selectExpr(
+        _q(key),
+        *[f"first({_q(c)}, true) OVER {full} AS {_q(c)}"
+          for c in allv.columns if c not in (key, "__v")],
+        f"row_number() OVER ({order}) AS __rn")
+    return merged.where("__rn = 1").drop("__rn")
+
+
+def _q(name: str) -> str:
+    """`name` as a quoted SQL identifier."""
+    return "`" + name.replace("`", "``") + "`"
 
 
 def _read_merged_through(spark: SparkSession, path: str, key: str,
                          deltas: list[int],
                          base_version: int | None = None,
                          base_df: DataFrame | None = None,
-                         predicate: Column | None = None) -> DataFrame:
+                         predicate: Column | None = None,
+                         single_partition: bool = False) -> DataFrame:
     """`read_merged` over an EXPLICIT delta set — the fold paths use it
     to absorb only the contiguous complete run when later deltas exist
     beyond an in-flight slot. `base_version` pins the base directory
@@ -2355,10 +2417,13 @@ def _read_merged_through(spark: SparkSession, path: str, key: str,
     watermark, deltas) one consistent snapshot; None falls back to the
     legacy resolution chain (`_lsm_base`). `base_df` overrides the
     base resolution entirely (the pruned-lookup path passes the
-    zone-map-selected file subset); `predicate` is a key-only filter
-    applied to EVERY part — sound because the merge and tombstone cut
-    both partition by the key, so restricting to a key subset keeps
-    each surviving key's full version history."""
+    zone-map-selected file subset; passing `base_version` with it
+    marks the subset as drawn from that versioned base); `predicate`
+    is a key-only filter applied to EVERY part — sound because the
+    merge and tombstone cut both partition by the key, so restricting
+    to a key subset keeps each surviving key's full version history.
+    `single_partition` plans the version window over one partition
+    (no exchange) — for callers that know the input is small."""
     parts = []
     if base_df is not None:
         base = base_df
@@ -2366,14 +2431,13 @@ def _read_merged_through(spark: SparkSession, path: str, key: str,
         base = _read_base(spark, path, base_version)
     else:
         base = _lsm_base(spark, path)
-    if base is not None and base_df is None and base_version \
-            and not deltas:
-        # fully folded VERSIONED table: the base IS the merged view
-        # (the sink's writers hold one row per key, tombstones are
-        # purged at fold) — running the version window over it would
-        # be an identity bought with a full-base shuffle. Legacy
-        # (pre-versioned) bases keep the window: their provenance is
-        # not the sink's to guarantee.
+    if base is not None and base_version and not deltas:
+        # fully folded VERSIONED table (or no delta in the caller's
+        # set): the base IS the merged view (the sink's writers hold
+        # one row per key, tombstones are purged at fold) — running
+        # the version window over it would be an identity bought with
+        # a full-base shuffle. Legacy (pre-versioned) bases keep the
+        # window: their provenance is not the sink's to guarantee.
         return base.filter(predicate) if predicate is not None else base
     if base is not None and base_df is None and base_version and deltas:
         # fast path: delta-key broadcast joins instead of shuffling
@@ -2402,18 +2466,11 @@ def _read_merged_through(spark: SparkSession, path: str, key: str,
     allv = parts[0]
     for p in parts[1:]:
         allv = allv.unionByName(p, allowMissingColumns=True)
-    allv = _apply_tombstones(allv, key)
-    cols = [c for c in allv.columns if c not in (key, "__v")]
-    w = Window.partitionBy(key).orderBy(F.col("__v").desc())
-    # full-partition frame: the default ORDER BY frame ends at the
-    # current row, which would hide older non-null values from the
-    # newest row — exactly the null-skip lookback we need
-    w_full = w.rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
-    merged = allv.select(
-        key, "__v",
-        *[F.first(c, ignorenulls=True).over(w_full).alias(c) for c in cols],
-        F.row_number().over(w).alias("__rn"))
-    return merged.filter(F.col("__rn") == 1).drop("__rn", "__v")
+    if single_partition:
+        # one partition already satisfies the window's clustering, so
+        # no exchange is planned: scan, merge and result in one stage
+        allv = allv.coalesce(1)
+    return _latest_per_key(allv, key)
 
 
 # --- pruned point/range lookups (data skipping) ----------------------
@@ -2437,15 +2494,21 @@ def _bucket_ids_for_values(spark: SparkSession, path: str, key: str,
     HashPartitioning.partitionIdExpression, the function the bucketed
     writer used to place rows (verified against written file suffixes
     in tests/test_keyed_zonemap.py) — so the Python side never
-    re-implements Murmur3. One tiny local job over the probe set;
+    re-implements Murmur3. The probe set is an inline VALUES table of
+    bound parameters — a relation local to the driver, so the
+    optimizer evaluates the projection there and no Spark job runs;
     lookups are for bounded probe sets (use a join for bulk probes)."""
     dtype = table_key_dtype(spark, path, key)
     if dtype is None:
         return None
-    df = spark.createDataFrame([(v,) for v in values],
-                               T.StructType([T.StructField(key, dtype)]))
-    return {r["__b"] for r in df.select(
-        F.pmod(F.hash(key), F.lit(buckets)).alias("__b")).collect()}
+    if not values:
+        return set()
+    args = {f"p{i}": v for i, v in enumerate(values)}
+    rows = spark.sql(
+        f"SELECT pmod(hash(CAST(col1 AS {dtype.simpleString()})), "
+        f"{int(buckets)}) AS b FROM VALUES "
+        + ", ".join(f"(:{p})" for p in args), args=args).collect()
+    return {r["b"] for r in rows}
 
 
 def pruned_base_files(spark: SparkSession, path: str, key: str, *,
@@ -2533,7 +2596,21 @@ def lookup_keyed_table(spark: SparkSession, path: str, key: str, *,
     are small by the LSM contract and are filtered by the same
     predicate. Returns the DataFrame, or ``(df, stats)`` with
     ``with_stats`` where stats records files_total/files_read/deltas
-    — the observability hook tests pin pruning behavior on."""
+    — the observability hook tests pin pruning behavior on.
+
+    A bounded probe runs as ONE Spark job with one stage:
+    - the kept files read with the base version's memoized schema, so
+      no footer-inference job runs for a kept-file set never seen
+      before;
+    - when the kept files plus the intersecting deltas fit one scan
+      partition by Spark's own sizing (`spark.sql.files.
+      maxPartitionBytes`), the version window runs over that single
+      partition and plans no exchange. A bulk probe whose input is
+      larger keeps the partitioned plan. The decision reads the
+      input's bytes, so it needs no setting of its own;
+    - when no pending delta intersects the probe, the filtered kept
+      files ARE the merged view (one row per key in a versioned
+      base), and no window runs at all."""
     version, meta = _current_manifest(spark, path)
     if not version:
         version = current_base_version(spark, path)
@@ -2543,16 +2620,8 @@ def lookup_keyed_table(spark: SparkSession, path: str, key: str, *,
                                     lo=lo, hi=hi, version=version,
                                     meta=meta)
     fmap = base_file_map(spark, path, version)
-    if kept:
-        # mergeSchema: a carried base can mix schema generations across
-        # files (see _read_base); kept is small, so the footer cost is
-        # bounded by the prune itself
-        base_df = _read_committed_parquet(
-            spark, [fmap[f] for f in kept], merge_schema=True)
-    else:
-        # every file pruned — the probe keys can still live in deltas
-        base_df = spark.createDataFrame(
-            [], _read_base(spark, path, version).schema)
+    files = [fmap[f] for f in kept]
+    base_df = _read_base_files(spark, path, version, files)
     deltas = _complete_deltas(spark, path, floor=floor)
     # LSM read-path skipping: a pending delta whose recorded key range
     # cannot intersect the probe is not even opened (sound for
@@ -2561,13 +2630,41 @@ def lookup_keyed_table(spark: SparkSession, path: str, key: str, *,
     read_deltas = [v for v in deltas
                    if _delta_may_match(spark, path, v, key,
                                        values, lo, hi)]
+    one = bool(read_deltas) and _fits_one_partition(
+        spark, files, [hfs.join(path, f"delta_{v:05d}")
+                       for v in read_deltas])
     out = _read_merged_through(spark, path, key, read_deltas,
-                               base_df=base_df, predicate=pred)
+                               base_version=version, base_df=base_df,
+                               predicate=pred, single_partition=one)
     if with_stats:
         return out, {"files_total": total, "files_read": len(kept),
                      "deltas": len(read_deltas),
                      "deltas_total": len(deltas)}
     return out
+
+
+def _files_bytes(spark: SparkSession, files: list[str]) -> int:
+    """Total bytes of data files given as full paths: one listing per
+    parent directory."""
+    by_dir: dict[str, set[str]] = {}
+    for f in files:
+        d, name = f.rsplit("/", 1)
+        by_dir.setdefault(d, set()).add(name)
+    return sum(sz for d, names in by_dir.items()
+               for n, sz in hfs.listdir_sizes(spark, d).items()
+               if n in names)
+
+
+def _fits_one_partition(spark: SparkSession, files: list[str],
+                        dirs: list[str]) -> bool:
+    """Whether data files (full paths) plus whole directories hold no
+    more bytes than ONE scan partition may by Spark's own sizing
+    (`spark.sql.files.maxPartitionBytes`), so one task can read them."""
+    limit = spark._jsparkSession.sessionState().conf() \
+        .filesMaxPartitionBytes()
+    total = _files_bytes(spark, files) + sum(
+        hfs.dir_size(spark, d) for d in dirs)
+    return total <= limit
 
 
 def lookup_join_keyed_table(spark: SparkSession, path: str, key: str,
@@ -2595,19 +2692,14 @@ def lookup_join_keyed_table(spark: SparkSession, path: str, key: str,
     pkeys = probes.select(key).filter(F.col(key).isNotNull()).distinct()
     b = pkeys.agg(F.min(key).alias("lo"), F.max(key).alias("hi")).first()
     if b.lo is None:                     # empty probe set
-        empty = spark.createDataFrame(
-            [], _read_base(spark, path, version).schema)
+        empty = _read_base_files(spark, path, version, [])
         return (empty, {"files_total": 0, "files_read": 0, "deltas": 0,
                         "deltas_total": 0}) if with_stats else empty
     kept, total = pruned_base_files(spark, path, key, lo=b.lo, hi=b.hi,
                                     version=version, meta=meta)
     fmap = base_file_map(spark, path, version)
-    if kept:
-        base_df = _read_committed_parquet(
-            spark, [fmap[f] for f in kept], merge_schema=True)
-    else:
-        base_df = spark.createDataFrame(
-            [], _read_base(spark, path, version).schema)
+    base_df = _read_base_files(spark, path, version,
+                               [fmap[f] for f in kept])
     base_df = base_df.join(F.broadcast(pkeys), key, "left_semi")
     deltas = _complete_deltas(spark, path, floor=floor)
     read_deltas = [v for v in deltas
@@ -2713,12 +2805,8 @@ def scan_keyed_table(spark: SparkSession, path: str, *,
             kept &= bf
             bloom_used.append(col)
     kept_names = sorted(kept)
-    if kept_names:
-        df = _read_committed_parquet(
-            spark, [fmap[f] for f in kept_names], merge_schema=True)
-    else:
-        df = spark.createDataFrame(
-            [], _read_base(spark, path, version).schema)
+    df = _read_base_files(spark, path, version,
+                          [fmap[f] for f in kept_names])
     pred = F.lit(True)
     for col, (lo, hi) in where.items():
         if lo is not None:
@@ -2934,13 +3022,10 @@ def compact_pruned(spark: SparkSession, path: str, key: str,
     touched = _touched_base_files(spark, path, key, fold, zmap,
                                   all_files)
     untouched = [f for f in all_files if f not in touched]
-    if touched:
-        base_df = _read_committed_parquet(
-            spark, [fmap[f] for f in sorted(touched)], merge_schema=True)
-    else:
-        # pure-insert fold: every delta key lands outside every span
-        base_df = spark.createDataFrame(
-            [], _read_base(spark, path, version).schema)
+    # empty on a pure-insert fold: every delta key lands outside every
+    # span
+    base_df = _read_base_files(spark, path, version,
+                               [fmap[f] for f in sorted(touched)])
     rewritten = _read_merged_through(spark, path, key, fold,
                                      base_df=base_df)
     # default: the rewritten group keeps its file count. Under a
@@ -2951,14 +3036,7 @@ def compact_pruned(spark: SparkSession, path: str, key: str,
     eff_target = _resolve_target(meta, key, None)
     n_out = max(1, len(touched))
     if eff_target:
-        by_dir: dict[str, set[str]] = {}
-        for f in touched:
-            d = fmap[f].rsplit("/", 1)[0]
-            by_dir.setdefault(d, set()).add(f)
-        tb = 0
-        for d, names in by_dir.items():
-            sizes = hfs.listdir_sizes(spark, d)
-            tb += sum(sz for n, sz in sizes.items() if n in names)
+        tb = _files_bytes(spark, [fmap[f] for f in touched])
         for v in fold:
             tb += hfs.dir_size(spark, hfs.join(path, f"delta_{v:05d}"))
         if tb > 0:
@@ -3298,7 +3376,7 @@ def table_schema(spark: SparkSession, path: str):
     parquet-footer read, no data."""
     version = current_base_version(spark, path)
     if version:
-        return _read_base(spark, path, version).schema
+        return _base_schema(spark, path, version)
     deltas = _delta_versions(spark, path)
     if deltas:
         return _read_delta_dir(spark, path, deltas[-1]).schema

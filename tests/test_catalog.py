@@ -26,10 +26,9 @@ def test_entry_contract(spark):
     assert "sum_qty" in df.columns and "count_order" in df.columns
 
 
-def test_every_query_returns_dataframe_lazily(spark):
+def test_every_query_returns_dataframe_lazily(catalog_frames):
     # construction (no action) must be cheap and not raise
-    for name, fn in all_queries().items():
-        df = fn(spark, SF)
+    for name, df in catalog_frames(SF).items():
         assert df.columns, f"{name} produced no columns"
 
 

@@ -252,3 +252,33 @@ def test_caller_supplied_n_max_matches_auto_sizing(spark, tmp_path):
         assert a[f]["m_bits"] == g[f]["m_bits"] == bi.auto_m_bits(n_max)
         assert a[f]["words"] == g[f]["words"]
     assert path  # silence unused-path lint in minimal runs
+
+
+def test_recreated_table_with_new_dtype_keeps_every_row(spark, tmp_path):
+    """A table dropped and re-created at the same path in one session,
+    with a different dtype for the bloom column: the probe must hash
+    under the NEW build's dtype. Reusing the dropped table's memoized
+    meta (int) against a bigint build would prune the file that holds
+    the value — silently missing rows."""
+    path = str(tmp_path / "recreated")
+
+    def create(dtype):
+        hfs.delete(spark, path)
+        rows = spark.range(4000).select(
+            F.col("id").alias("k"), (F.col("id") * 7).cast(dtype).alias("tag"))
+        upsert_into_keyed_table(spark, rows, path=path, key="k",
+                                updated_at_col=None, range_files=8,
+                                bloom_cols=["tag"])
+
+    for dtype in ("int", "bigint"):
+        create(dtype)
+        for value in (700, 7 * 3001):
+            out, st = scan_keyed_table(spark, path,
+                                       where={"tag": (value, value)},
+                                       with_stats=True)
+            assert st["bloom_cols_used"] == ["tag"]
+            unpruned = spark.read.parquet(
+                hfs.join(path, f"base_v{current_base_version(spark, path):05d}"))
+            want = sorted(r["k"] for r in
+                          unpruned.filter(F.col("tag") == value).collect())
+            assert sorted(r["k"] for r in out.collect()) == want == [value // 7]
