@@ -302,14 +302,17 @@ def _seed_schema_memo(spark: SparkSession, dirpath: str,
     verified write→read roundtrip); anything else (nested, char/
     varchar) skips seeding. The fingerprint is the dir's post-commit
     listing, taken AFTER all sidecars land, so it matches what readers
-    list."""
+    list. One write means one schema in every file, so the single-
+    footer and the merged inference agree and both keys are seeded
+    (base versions read merged, see `_read_base`)."""
     if any(not isinstance(f.dataType, _SEEDABLE_ATOMIC)
            for f in schema.fields):
         return
     fp = tuple(sorted(hfs.listdir(spark, dirpath)))
-    _memo_put(((dirpath,), fp, False), T.StructType(
-        [T.StructField(f.name, f.dataType, True)
-         for f in schema.fields]))
+    seeded = T.StructType([T.StructField(f.name, f.dataType, True)
+                           for f in schema.fields])
+    for merge_schema in (False, True):
+        _memo_put(((dirpath,), fp, merge_schema), seeded)
 
 
 def _read_committed_parquet(spark: SparkSession, paths: list[str],
@@ -442,34 +445,39 @@ def _read_deltas_tagged(spark: SparkSession, path: str,
 
 def _read_base(spark: SparkSession, path: str, version: int) -> DataFrame:
     """Read a base version's data, resolving carry-by-reference when
-    present. Self-contained bases (no sidecar) keep today's plain
-    directory read. A carried base reads the explicit resolved file
-    list WITH schema merge: a pruned fold whose deltas widened the
-    schema leaves carried files on the old schema, and a single-footer
-    read would silently drop the new column (carried rows surface it
-    as NULL — exactly what the full fold's unionByName produces)."""
-    return _read_committed_parquet(spark, *_base_read_paths(
-        spark, path, version))
+    present: a self-contained base (no sidecar) reads its directory, a
+    carried base the explicit resolved file list. Both read WITH schema
+    merge: a pruned fold whose deltas widened the schema leaves carried
+    files on the old schema — by reference, or copied into the new
+    directory by `compact_pruned(materialize=True)` — and a
+    single-footer read would silently drop the new column whenever an
+    old-generation file sorts first (their rows surface it as NULL —
+    exactly what the full fold's unionByName produces). A base one
+    writer wrote holds one schema, so the merge changes nothing there,
+    and the writer seeds the merged key of the memo too."""
+    return _read_committed_parquet(
+        spark, _base_read_paths(spark, path, version), merge_schema=True)
 
 
 def _base_read_paths(spark: SparkSession, path: str,
-                     version: int) -> tuple[list[str], bool]:
-    """(paths, merge_schema) `_read_base` reads a base version with."""
+                     version: int) -> list[str]:
+    """The paths `_read_base` reads a base version from."""
     refs = _carried_refs(spark, path, version)
     base = _base_dir(path, version)
     if not refs:
-        return [base], False
+        return [base]
     own = [hfs.join(base, f) for f in _base_data_files(spark, base)]
-    return own + [hfs.join(path, r) for r in refs], True
+    return own + [hfs.join(path, r) for r in refs]
 
 
 def _base_schema(spark: SparkSession, path: str,
                  version: int) -> T.StructType:
     """The schema `_read_base` resolves for a base version, from the
     memo without building a DataFrame. Every file of the version reads
-    with it: a file lacking a column (an older schema generation
-    carried by reference) surfaces it as NULL."""
-    return _committed_schema(spark, *_base_read_paths(spark, path, version))
+    with it: a file lacking a column (an older schema generation,
+    carried or copied) surfaces it as NULL."""
+    return _committed_schema(spark, _base_read_paths(spark, path, version),
+                             merge_schema=True)
 
 
 def _read_base_files(spark: SparkSession, path: str, version: int,
@@ -2438,7 +2446,15 @@ def _read_merged_through(spark: SparkSession, path: str, key: str,
         # the version window over it would be an identity bought with
         # a full-base shuffle. Legacy (pre-versioned) bases keep the
         # window: their provenance is not the sink's to guarantee.
-        return base.filter(predicate) if predicate is not None else base
+        if predicate is not None:
+            base = base.filter(predicate)
+        if base_df is not None:
+            # a caller-supplied base (a lookup's kept files) answers
+            # in the window path's column order, key first, whether or
+            # not a delta made the window run
+            base = base.select(
+                key, *[c for c in base.columns if c != key])
+        return base
     if base is not None and base_df is None and base_version and deltas:
         # fast path: delta-key broadcast joins instead of shuffling
         # the whole base through the version window — taken whenever
@@ -2494,21 +2510,15 @@ def _bucket_ids_for_values(spark: SparkSession, path: str, key: str,
     HashPartitioning.partitionIdExpression, the function the bucketed
     writer used to place rows (verified against written file suffixes
     in tests/test_keyed_zonemap.py) — so the Python side never
-    re-implements Murmur3. The probe set is an inline VALUES table of
-    bound parameters — a relation local to the driver, so the
-    optimizer evaluates the projection there and no Spark job runs;
+    re-implements Murmur3. One tiny local job over the probe set;
     lookups are for bounded probe sets (use a join for bulk probes)."""
     dtype = table_key_dtype(spark, path, key)
     if dtype is None:
         return None
-    if not values:
-        return set()
-    args = {f"p{i}": v for i, v in enumerate(values)}
-    rows = spark.sql(
-        f"SELECT pmod(hash(CAST(col1 AS {dtype.simpleString()})), "
-        f"{int(buckets)}) AS b FROM VALUES "
-        + ", ".join(f"(:{p})" for p in args), args=args).collect()
-    return {r["b"] for r in rows}
+    df = spark.createDataFrame([(v,) for v in values],
+                               T.StructType([T.StructField(key, dtype)]))
+    return {r["__b"] for r in df.select(
+        F.pmod(F.hash(key), F.lit(buckets)).alias("__b")).collect()}
 
 
 def pruned_base_files(spark: SparkSession, path: str, key: str, *,
@@ -2610,7 +2620,9 @@ def lookup_keyed_table(spark: SparkSession, path: str, key: str, *,
       input's bytes, so it needs no setting of its own;
     - when no pending delta intersects the probe, the filtered kept
       files ARE the merged view (one row per key in a versioned
-      base), and no window runs at all."""
+      base), and no window runs at all.
+    On a `buckets` table, hashing the probe values to bucket ids
+    (`_bucket_ids_for_values`) runs one more small local job first."""
     version, meta = _current_manifest(spark, path)
     if not version:
         version = current_base_version(spark, path)

@@ -15,20 +15,14 @@ def spark():
 
 @pytest.fixture(scope="session")
 def catalog_frames(spark):
-    """`catalog_frames(sf)` -> {query name: DataFrame} for EVERY catalog
-    query, built once per session and data root. The catalog-wide
-    sweeps (laziness, plan hazards, tiny-key windows) all read these
-    frames instead of each rebuilding ~241 queries; cycle-lane queries
-    run their commits at build time, so a rebuild is not cheap."""
+    """{query name: DataFrame} for EVERY catalog query over the catalog
+    tests' data root, built once per session. The catalog-wide sweeps
+    (laziness, plan hazards, tiny-key windows) all read these frames
+    instead of each rebuilding ~241 queries; cycle-lane queries run
+    their commits at build time, so a rebuild is not cheap."""
     from howto_mongo_bulk_update_from_parquet_spark.plans import all_queries
-    built: dict[str, dict] = {}
-
-    def frames(sf: str) -> dict:
-        if sf not in built:
-            built[sf] = {name: fn(spark, sf)
-                         for name, fn in all_queries().items()}
-        return built[sf]
-    return frames
+    from test_catalog import SF
+    return {name: fn(spark, SF) for name, fn in all_queries().items()}
 
 
 @pytest.fixture(autouse=True)

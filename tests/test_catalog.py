@@ -28,7 +28,7 @@ def test_entry_contract(spark):
 
 def test_every_query_returns_dataframe_lazily(catalog_frames):
     # construction (no action) must be cheap and not raise
-    for name, df in catalog_frames(SF).items():
+    for name, df in catalog_frames.items():
         assert df.columns, f"{name} produced no columns"
 
 

@@ -163,3 +163,88 @@ def test_lookup_larger_than_one_scan_partition_keeps_the_exchange(
         assert big_df.collect() == want
     finally:
         spark.conf.set(conf, old)
+
+
+def _first_data_file(base_dir):
+    """The data file Spark's single-footer schema inference reads: the
+    lexicographically first path of the directory."""
+    import os
+    return os.path.join(base_dir, min(
+        f for f in os.listdir(base_dir)
+        if not f.startswith(("_", "."))))
+
+
+def test_materialized_widening_fold_keeps_the_new_column(spark, tmp_path):
+    """`compact_pruned(materialize=True)` after a delta that adds column
+    `c` copies old-generation files next to the rewritten ones into a
+    self-contained base (no carried refs). The version's schema must
+    still hold `c` whichever footer sorts first: in lookups, and in the
+    files the next pruned fold rewrites. Spark's single-footer inference
+    reads the lexicographically first file, and file names carry random
+    job ids, so the table is rebuilt until an old-generation file sorts
+    first (each build has an even chance)."""
+    from howto_mongo_bulk_update_from_parquet_spark.sinks.keyed_table import (
+        current_base_version)
+    for attempt in range(20):
+        path = str(tmp_path / f"t{attempt}")
+        base = spark.range(200).select(
+            F.col("id").alias("k"),
+            F.concat(F.lit("a"), F.col("id").cast("string")).alias("a"),
+            (F.col("id") / 2).alias("b"))
+        upsert_into_keyed_table(spark, base, path=path, key="k",
+                                updated_at_col=None, range_files=4)
+        append_delta(spark, spark.createDataFrame(
+            [(120, "w", None, "wide")],
+            "k long, a string, b double, c string"), path=path, key="k")
+        _, st = compact_pruned(spark, path, "k", materialize=True)
+        assert st["pruned"] and st["files_carried"] > 0
+        first = _first_data_file(
+            f"{path}/base_v{current_base_version(spark, path):05d}")
+        if "c" not in spark.read.parquet(first).columns:
+            break
+    else:
+        pytest.fail("no build put an old-generation file first")
+    row = lookup_keyed_table(spark, path, "k", values=[120]).first()
+    assert (row["a"], row["b"], row["c"]) == ("w", 60.0, "wide")
+    assert "c" in read_merged(spark, path, "k").columns
+    # the next pruned fold rewrites the file holding 120 (and one more)
+    append_delta(spark, _rows(spark, [(125, "x", None), (5, "y", 1.0)]),
+                 path=path, key="k")
+    _, st = compact_pruned(spark, path, "k")
+    assert st["pruned"] and st["files_rewritten"] >= 1
+    row = lookup_keyed_table(spark, path, "k", values=[120]).first()
+    assert (row["a"], row["c"]) == ("w", "wide")
+    _assert_lookups_equal_merged(spark, path, (5, 120, 125, 180))
+
+
+def test_lookup_puts_the_key_first_with_or_without_pending_deltas(
+        spark, tmp_path):
+    """A lookup returns the key first whether or not a pending delta
+    intersects the probe: the no-window path and the window path agree
+    on column order. The sink's writers store the key first, so the
+    merge is also driven directly with a kept-file frame whose key
+    comes later."""
+    from howto_mongo_bulk_update_from_parquet_spark.sinks.keyed_table import (
+        _read_merged_through, current_base_version)
+    path = str(tmp_path / "t")
+    src = spark.range(50).select(
+        F.concat(F.lit("a"), F.col("id").cast("string")).alias("a"),
+        F.col("id").alias("k"), (F.col("id") / 2).alias("b"))
+    upsert_into_keyed_table(spark, src, path=path, key="k",
+                            updated_at_col=None, range_files=2)
+    append_delta(spark, spark.createDataFrame([("u", 3, None)],
+                                              "a string, k long, b double"),
+                 path=path, key="k")
+    hit = lookup_keyed_table(spark, path, "k", values=[3])
+    miss = lookup_keyed_table(spark, path, "k", values=[40])
+    assert hit.columns == miss.columns == ["k", "a", "b"]
+    assert [tuple(r) for r in hit.collect()] == [(3, "u", 1.5)]
+    assert [tuple(r) for r in miss.collect()] == [(40, "a40", 20.0)]
+    version = current_base_version(spark, path)
+    key_later = read_merged(spark, path, "k").select("a", "k", "b")
+    no_window = _read_merged_through(spark, path, "k", [],
+                                     base_version=version,
+                                     base_df=key_later)
+    window = _read_merged_through(spark, path, "k", [1],
+                                  base_version=version, base_df=key_later)
+    assert no_window.columns == window.columns == ["k", "a", "b"]

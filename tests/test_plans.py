@@ -253,7 +253,7 @@ def test_catalog_wide_no_global_windows_cartesians_or_row_udfs(
     unpart = re.compile(
         r"windowspecdefinition\((specifiedwindowframe|\S+ (ASC|DESC) NULLS)")
     findings = {}
-    for name, df in sorted(catalog_frames(SF).items()):
+    for name, df in sorted(catalog_frames.items()):
         if name.startswith("q_stream_"):
             continue
         opt = df._jdf.queryExecution().optimizedPlan().toString()
@@ -343,7 +343,7 @@ def test_catalog_wide_no_undocumented_tiny_key_windows(catalog_frames):
     q_weighted_median hazard class fixed in r7): the findings must
     exactly equal the documented-inherent allowlist."""
     findings = {}
-    for name, df in sorted(catalog_frames(SF).items()):
+    for name, df in sorted(catalog_frames.items()):
         if name.startswith("q_stream_"):
             continue
         h = _tiny_key_window_hazards(df, _TINY_KEYS)
