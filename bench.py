@@ -99,7 +99,8 @@ def prior_artifact(layout: str, sf) -> dict[str, float]:
     (per layout: BENCH_FULL.json for the default single-file run,
     BENCH_MULTIFILE.json for the multifile experiment), used as the
     re-measure reference — only when layout and sf match (cross-layout
-    slots aren't comparable)."""
+    slots aren't comparable) and the artifact is not itself flagged
+    `noisy` (a slot measured under CPU steal is no reference)."""
     fname = ("BENCH_MULTIFILE.json" if layout == "multifile32"
              else "BENCH_FULL.json")
     path = os.path.join(os.path.dirname(os.path.abspath(__file__)), fname)
@@ -108,7 +109,8 @@ def prior_artifact(layout: str, sf) -> dict[str, float]:
             prior = json.load(fh)
     except (OSError, json.JSONDecodeError):
         return {}
-    if prior.get("layout") != layout or prior.get("sf") != sf:
+    if (prior.get("layout") != layout or prior.get("sf") != sf
+            or prior.get("noisy")):
         return {}
     return {n: v for n, v in prior.get("queries", {}).items()
             if isinstance(v, (int, float)) and v > 0}

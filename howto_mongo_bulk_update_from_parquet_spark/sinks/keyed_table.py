@@ -273,17 +273,28 @@ _PQ_SCHEMA_MEMO: dict[tuple, T.StructType] = {}
 # re-inference.
 _PQ_SCHEMA_MEMO_CAP = 4096
 
+#: the zone-map touched-file decision (`_touched_base_files`) per
+#: (table path, key, spans, folded deltas' listings): the file names
+#: only, never rows. Same soundness rule and FIFO cap as the schema
+#: memo — data-file names carry the writing job's UUID, so a table
+#: dropped and re-created at the same path never matches an old entry.
+_TOUCHED_MEMO: dict[tuple, frozenset[str]] = {}
 
-def _memo_put(key: tuple, schema: T.StructType) -> None:
-    if len(_PQ_SCHEMA_MEMO) >= _PQ_SCHEMA_MEMO_CAP:
-        _PQ_SCHEMA_MEMO.pop(next(iter(_PQ_SCHEMA_MEMO)))
-    _PQ_SCHEMA_MEMO[key] = schema
+
+def _memo_put(memo: dict, key: tuple, value) -> None:
+    if len(memo) >= _PQ_SCHEMA_MEMO_CAP:
+        # racing writers may evict the same oldest key
+        memo.pop(next(iter(memo)), None)
+    memo[key] = value
 
 
 #: atomic Spark types whose parquet write→footer-inference roundtrip
 #: reproduces the written dataType exactly (inference only forces
 #: top-level nullability); nested/char/exotic types skip write-time
 #: memo seeding and pay the normal first-read inference instead.
+#: TIMESTAMP_NTZ round-trips whatever `spark.sql.parquet.
+#: inferTimestampNTZ.enabled` says: that conf only governs files
+#: without the Spark schema Spark writes into every footer.
 _SEEDABLE_ATOMIC = (T.ByteType, T.ShortType, T.IntegerType, T.LongType,
                     T.FloatType, T.DoubleType, T.StringType,
                     T.BooleanType, T.DateType, T.TimestampType,
@@ -312,7 +323,8 @@ def _seed_schema_memo(spark: SparkSession, dirpath: str,
     seeded = T.StructType([T.StructField(f.name, f.dataType, True)
                            for f in schema.fields])
     for merge_schema in (False, True):
-        _memo_put(((dirpath,), fp, merge_schema), seeded)
+        _memo_put(_PQ_SCHEMA_MEMO, ((dirpath,), fp, merge_schema),
+                  seeded)
 
 
 def _read_committed_parquet(spark: SparkSession, paths: list[str],
@@ -346,7 +358,7 @@ def _read_committed_parquet(spark: SparkSession, paths: list[str],
     if merge_schema:
         reader = reader.option("mergeSchema", "true")
     df = reader.parquet(*paths)
-    _memo_put(key, df.schema)
+    _memo_put(_PQ_SCHEMA_MEMO, key, df.schema)
     return df
 
 
@@ -2280,17 +2292,20 @@ def _hits_base(spark: SparkSession, path: str, key: str,
     """The base frame for the fast merge's HITS branch: only rows
     whose key a pending delta could touch matter, so on a range-layout
     base the branch reads just the files whose zone span some delta
-    key intersects — the same exact Spark-side span join the pruned
+    key intersects — the same exact Spark-side span test the pruned
     compaction uses (`_touched_base_files`; delta keys never collected
-    to the driver, touched names are O(files) driver state). A coarse
+    to the driver, touched names are O(files) driver state, a bound
+    that fails the cast to the key dtype counts as touched). A coarse
     overall-[min,max] test would be useless here: one appended key
     beyond the table's max stretches the bounds over every span. The
-    span join is one small eager job at plan time — the same class as
-    repartitionByRange's sampling — and cuts the fast path's second
-    base scan from O(table) to O(touched files). Every degraded case
-    (no version, no zone map on the key) returns `base` unchanged; the
-    broadcast semi join on the exact key set keeps correctness either
-    way."""
+    span test is one small eager job at plan time — the same class as
+    repartitionByRange's sampling — and none at all when the same
+    (spans, delta listings) pair was decided before in this session:
+    the change feed, the scan and the next fold of one delta share one
+    memoized answer. It cuts the fast path's second base scan from
+    O(table) to O(touched files). Every degraded case (no version, no
+    zone map on the key) returns `base` unchanged; the broadcast semi
+    join on the exact key set keeps correctness either way."""
     if not base_version:
         return base
     try:
@@ -2927,10 +2942,23 @@ def _touched_base_files(spark: SparkSession, path: str, key: str,
     null/absent stats, and files whose stored bounds fail the cast
     back to the key's dtype all count as touched — a wrongly-touched
     file costs one redundant rewrite, a wrongly-skipped one would
-    LOSE the delta's effect. The span test runs as one broadcast
-    range join (spans are O(files) driver state, the same bounded
-    class as the map itself; delta keys stay distributed), so the
-    decision never collects delta keys to the driver."""
+    LOSE the delta's effect.
+
+    The decision is memoized per session (`_TOUCHED_MEMO`) on its own
+    inputs: table path, key, the spans (file, lo, hi) of `zmap`, and
+    the sorted listing of each folded delta directory. One keyed cycle
+    asks the same question up to three times — the change feed's
+    pre-image read and the range scan after an arrival (`_hits_base`),
+    then the next fold of that delta — and only the first one runs.
+
+    A miss is ONE Spark job: the spans travel as a single constant
+    array (built in the JVM from one JSON literal, cast with
+    `try_cast` — a span whose bound does not survive the cast matches
+    every key), each delta key keeps the spans containing it, and the
+    distinct file names are collected. When the deltas fit one scan
+    partition (`_fits_one_partition`) the keys are read as one
+    partition, so the distinct runs without an exchange. Delta keys
+    stay distributed; only O(files) names reach the driver."""
     mapped = {e["file"] for e in zmap["files"]}
     present = set(all_files)
     touched = {f for f in all_files if f not in mapped}
@@ -2945,29 +2973,44 @@ def _touched_base_files(spark: SparkSession, path: str, key: str,
             spans.append((e["file"], str(lo), str(hi)))
     if not spans:
         return touched
-    keys = _read_deltas_tagged(spark, path, fold).select(key)
-    keys = keys.filter(F.col(key).isNotNull()).distinct()
+    dirs = [hfs.join(path, f"delta_{v:05d}") for v in fold]
+    memo_key = (path, key, tuple(spans),
+                tuple((d, tuple(sorted(hfs.listdir(spark, d))))
+                      for d in dirs))
+    hit = _TOUCHED_MEMO.get(memo_key)
+    if hit is None:
+        hit = _span_hits(spark, path, key, fold, dirs, spans)
+        _memo_put(_TOUCHED_MEMO, memo_key, hit)
+    return touched | hit
+
+
+def _span_hits(spark: SparkSession, path: str, key: str,
+               fold: list[int], dirs: list[str],
+               spans: list[tuple[str, str, str]]) -> frozenset[str]:
+    """Names of the `spans` (file, lo, hi — bounds as strings) that
+    hold at least one non-null key of the `fold` deltas; a span whose
+    bound fails the cast to the key's dtype holds every key. One job
+    (see `_touched_base_files`)."""
+    import json
     dtype = table_key_dtype(spark, path, key)
-    spans_df = spark.createDataFrame(
-        spans, T.StructType([T.StructField("__file", T.StringType()),
-                             T.StructField("__lo_s", T.StringType()),
-                             T.StructField("__hi_s", T.StringType())]))
-    spans_df = spans_df.select(
-        "__file", F.col("__lo_s").cast(dtype).alias("__lo"),
-        F.col("__hi_s").cast(dtype).alias("__hi"))
-    # a bound that does not survive the round-trip cast cannot be
-    # trusted to prune — treat its file as touched rather than joining
-    # a NULL span (which would silently skip the file)
-    bad = spans_df.filter(F.col("__lo").isNull() | F.col("__hi").isNull())
-    touched |= {r["__file"] for r in bad.select("__file").collect()}
-    good = spans_df.filter(F.col("__lo").isNotNull()
-                           & F.col("__hi").isNotNull())
-    hit = (keys.join(F.broadcast(good),
-                     (F.col(key) >= F.col("__lo"))
-                     & (F.col(key) <= F.col("__hi")))
-           .select("__file").distinct().collect())
-    touched |= {r["__file"] for r in hit}
-    return touched
+    doc = json.dumps([{"f": f, "lo": lo, "hi": hi} for f, lo, hi in spans])
+    arr = F.transform(
+        F.from_json(F.lit(doc),
+                    "array<struct<f:string,lo:string,hi:string>>"),
+        lambda s: F.named_struct(
+            F.lit("f"), s["f"],
+            F.lit("lo"), s["lo"].try_cast(dtype),
+            F.lit("hi"), s["hi"].try_cast(dtype)))
+    k = F.col(key)
+    keys = _read_deltas_tagged(spark, path, fold).select(key)
+    if _fits_one_partition(spark, [], dirs):
+        keys = keys.coalesce(1)
+    rows = (keys.filter(k.isNotNull())
+            .select(F.explode(F.filter(
+                arr, lambda s: s["lo"].isNull() | s["hi"].isNull()
+                | k.between(s["lo"], s["hi"]))).alias("s"))
+            .select(F.col("s.f").alias("f")).distinct().collect())
+    return frozenset(r["f"] for r in rows)
 
 
 @_vanished_snapshot_guard

@@ -366,11 +366,18 @@ def _apply_differential(spark: SparkSession, table_path: str, key: str,
                        F.max(f"__v{i}").alias(f"__wmax{i}"),
                        F.min(f"__r{i}").alias(f"__rmin{i}"),
                        F.max(f"__r{i}").alias(f"__rmax{i}")]
+    # the touched-group count rides the same checkpoint job: `merged`
+    # below holds exactly one row per `delta` group (the view holds one
+    # row per group, semi-joined to these), so no later action has to
+    # consume `merged` for the count to latch
+    group_obs = Observation(f"groups_{_uuid.uuid4().hex[:8]}")
     delta = (contrib
              .filter(F.col("__keep") & F.col("__g").isNotNull())
              .groupBy("__g").agg(*delta_aggs)
+             .observe(group_obs, F.count(F.lit(1)).alias("__n"))
              .localCheckpoint())
     stats = feed_obs.get
+    n_groups = int(group_obs.get["__n"])
     served, n_changes = stats["__v"], int(stats["__n"])
     if served is None:
         return {"applied_through": off, "groups_touched": 0,
@@ -430,15 +437,6 @@ def _apply_differential(spark: SparkSession, table_path: str, key: str,
                     F.col(f"c.{group_col}") == F.col("d.__g"),
                     "full_outer")
               .select(*cols))
-    # groups_touched rides an existing action at zero extra jobs (r16
-    # trim): the minmax branch's checkpoint below, or — non-minmax —
-    # the view upsert's write job itself (r17). Sound for the
-    # recompute branch too: rc_full substitutes exactly one row per
-    # flagged group, so the final frame's count equals the observed
-    # frame's.
-    touch_obs = Observation(f"touched_{_uuid.uuid4().hex[:8]}")
-    merged = merged.observe(touch_obs,
-                            F.count(F.lit(1)).alias("__n"))
     n_rc = 0
     if track_minmax:
         merged = merged.localCheckpoint()
@@ -493,17 +491,14 @@ def _apply_differential(spark: SparkSession, table_path: str, key: str,
                       .unionByName(rc_full))
         else:
             merged = merged.drop("__rc")
-    # non-minmax rounds no longer checkpoint `merged` (r17, guide
-    # §1.4): it is consumed exactly once — by the view upsert's write
-    # job — so the touch Observation latches there at zero extra jobs,
-    # where the r16 form paid a localCheckpoint job purely to host the
-    # stats. (The minmax branch keeps its checkpoint: rc_keys are
-    # collected from it before the write.)
+    # non-minmax rounds do not checkpoint `merged` (r17, guide §1.4):
+    # the view upsert's write job consumes it. (The minmax branch keeps
+    # its checkpoint: rc_keys are collected from it before the write.)
     upsert_into_keyed_table(spark, merged, path=view_path,
                             key=group_col, updated_at_col=None,
                             table_props={OFFSET_PROP: str(served)})
     out = {"applied_through": int(served),
-           "groups_touched": int(touch_obs.get["__n"]),
+           "groups_touched": n_groups,
            "changes": n_changes}
     if track_minmax:
         out["recomputed_groups"] = n_rc

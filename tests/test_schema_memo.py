@@ -75,3 +75,32 @@ def test_memo_is_schema_only_not_results(spark, tmp_path):
     got = {r["_id"]: r.asDict() for r in
            read_merged(spark, path, "_id").collect()}
     assert got["b"]["tag"] == "y9" and got["b"]["v"] == 2.0
+
+
+def test_seeded_ntz_type_equals_a_cold_read(spark, tmp_path):
+    """With `spark.sql.parquet.inferTimestampNTZ.enabled` off, a
+    memo-served read of a TIMESTAMP_NTZ column gives the type a cold
+    `spark.read.parquet` of the same directory infers — for the base
+    and for a delta."""
+    conf = "spark.sql.parquet.inferTimestampNTZ.enabled"
+    old = spark.conf.get(conf)
+    spark.conf.set(conf, "false")
+    try:
+        path = os.path.join(str(tmp_path), "t")
+        upsert_into_keyed_table(spark, spark.sql(
+            "SELECT 'a' AS _id, TIMESTAMP_NTZ'2024-01-02 03:04:05' AS ts"),
+            path=path, key="_id", updated_at_col=None)
+        append_delta(spark, spark.sql(
+            "SELECT 'b' AS _id, TIMESTAMP_NTZ'2024-02-03 00:00:00' AS ts"),
+            path=path, key="_id")
+        base = kt._base_dir(path, kt.current_base_version(spark, path))
+        cold = spark.read.parquet(base).schema["ts"].dataType
+        assert read_merged(spark, path, "_id").schema["ts"].dataType == cold
+        assert kt._read_base(spark, path, kt.current_base_version(
+            spark, path)).schema["ts"].dataType == cold
+        cold_delta = spark.read.parquet(
+            os.path.join(path, "delta_00001")).schema["ts"].dataType
+        assert kt._read_delta_dir(spark, path, 1).schema["ts"].dataType \
+            == cold_delta
+    finally:
+        spark.conf.set(conf, old)

@@ -134,6 +134,7 @@ def test_bootstrap_then_increments_match_recompute(spark, tmp_path):
                                view_path=vp, group_col="g",
                                sum_col="val")
     assert st["applied_through"] == 4 and st["changes"] == 4
+    assert st["groups_touched"] == 5        # 0, 1, 2, 5 and 9
     assert _view(spark, vp) == _recompute(spark, path)
     # idempotent: nothing new, nothing touched
     st = maintain_grouped_view(spark, table_path=path, key="k",
@@ -331,7 +332,7 @@ def test_minmax_monotone_path_no_recompute(spark, tmp_path):
     st = maintain_grouped_view(spark, table_path=path, key="k",
                                view_path=vp, group_col="g",
                                sum_col="val", track_minmax=True)
-    assert st["recomputed_groups"] == 0
+    assert st["recomputed_groups"] == 0 and st["groups_touched"] == 2
     assert _view_mm(spark, vp) == _recompute_mm(spark, path)
 
 
@@ -347,7 +348,7 @@ def test_minmax_extremum_retraction_recomputes(spark, tmp_path):
     st = maintain_grouped_view(spark, table_path=path, key="k",
                                view_path=vp, group_col="g",
                                sum_col="val", track_minmax=True)
-    assert st["recomputed_groups"] == 1
+    assert st["recomputed_groups"] == 1 and st["groups_touched"] == 1
     assert _view_mm(spark, vp) == _recompute_mm(spark, path)
     # an interior retraction (k=5, val 5.0 — neither extremum of
     # group 2 which now spans 2..8) stays pure-differential
