@@ -485,12 +485,10 @@ def cmd_table_info(args: argparse.Namespace) -> int:
     from .sinks.keyed_table import (_base_dir, _carried_refs,
                                     _complete_deltas, _current_manifest,
                                     _delta_versions, _manifest_versions,
-                                    base_file_map, current_base_version)
+                                    base_file_map)
 
     spark = get_spark("table-info")
     version, meta = _current_manifest(spark, args.table)
-    if not version:
-        version = current_base_version(spark, args.table)
     if not version:
         print(f"no versioned keyed table at {args.table}",
               file=sys.stderr)
@@ -1109,31 +1107,22 @@ def cmd_dedup_incremental(args: argparse.Namespace) -> int:
     pending = read_pending_deltas(spark, args.index) if seeded else None
 
     if args.mode == "near":
-        # prefer the store's single merge key: a bucket_key-bucketed
-        # index feeds the probe join exchange-free (index side never
-        # re-shuffles, the win when the index is the big side)
-        if seeded and "bucket_key" in index.columns:
-            # rep_id rides along for replay self-exclusion: re-running
-            # an already-folded batch classifies as the first run did
-            idx_bands = (index.select("bucket_key", "rep_id")
-                         if "rep_id" in index.columns
-                         else index.select("bucket_key"))
-        elif seeded:
-            idx_bands = index.select("band", "band_sig")
-        else:
-            idx_bands = spark.createDataFrame(
-                [], "band int, band_sig string")
+        # the store's single merge key: a bucket_key-bucketed index
+        # feeds the probe join exchange-free (index side never
+        # re-shuffles, the win when the index is the big side); rep_id
+        # rides along for replay self-exclusion: re-running an
+        # already-folded batch classifies as the first run did
+        idx_bands = (index.select("bucket_key", "rep_id") if seeded
+                     else spark.createDataFrame(
+                         [], "bucket_key string, rep_id long"))
         # sign the batch ONCE: the same band frame drives the probe
         # and (filtered to survivors) the index fold — shingling and
         # minhashing are the dominant batch cost (code-review r11)
         from .plans.incremental_dedup import (
             batch_bands, signature_index_rows_from_bands)
         bands = batch_bands(docs, "doc_id").localCheckpoint(eager=False)
-        pend_bands = None
-        if pending is not None and "bucket_key" in pending.columns:
-            pend_bands = (pending.select("bucket_key", "rep_id")
-                          if "rep_id" in pending.columns
-                          else pending.select("bucket_key"))
+        pend_bands = (pending.select("bucket_key", "rep_id")
+                      if pending is not None else None)
         out = incremental_near_dup_flags(docs, idx_bands, "doc_id",
                                          new_bands=bands,
                                          pending_index_bands=pend_bands)
@@ -1148,20 +1137,15 @@ def cmd_dedup_incremental(args: argparse.Namespace) -> int:
         summary = ", ".join(f"{k}={counts.get(k, 0)}" for k in
                             ("unique", "dup_vs_index", "dup_in_batch"))
     else:
-        gram_idx = (index.select("h", "rep_id")
-                    if seeded and "rep_id" in index.columns
-                    else index.select("h") if seeded
-                    else spark.createDataFrame([], "h string"))
+        gram_idx = (index.select("h", "rep_id") if seeded
+                    else spark.createDataFrame([], "h string, rep_id long"))
         # hash the batch's windows ONCE for both the probe and the fold
         from .plans.dup_spans import gram_windows
         from .plans.incremental_spans import gram_index_rows_from_grams
         grams = gram_windows(docs)[0].localCheckpoint(eager=False)
-        pend_grams = None
-        if pending is not None and "h" in pending.columns:
-            pend_grams = (pending.groupBy("h")
-                          .agg(F.min("rep_id").alias("rep_id"))
-                          if "rep_id" in pending.columns
-                          else pending.select("h").distinct())
+        pend_grams = (pending.groupBy("h")
+                      .agg(F.min("rep_id").alias("rep_id"))
+                      if pending is not None else None)
         out = incremental_dup_spans(docs, gram_idx, new_grams=grams,
                                     pending_gram_index=pend_grams) \
             .persist()

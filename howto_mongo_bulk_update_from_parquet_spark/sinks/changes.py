@@ -41,10 +41,10 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from . import fs as hfs
-from .keyed_table import (_TOMBSTONE, _complete_deltas, _delta_versions,
-                          _hits_base, _lsm_base, _read_base,
-                          _read_delta_dir, current_base_version,
-                          folded_through)
+from .keyed_table import (_TOMBSTONE, _base_schema, _complete_deltas,
+                          _current_manifest, _delta_versions, _hits_base,
+                          _meta_floor, _read_base, _read_delta_dir,
+                          current_base_version)
 
 #: system columns appended to every change row (Delta CDF analogs:
 #: _commit_version / _change_type)
@@ -103,7 +103,9 @@ def read_table_changes(spark: SparkSession, path: str, *,
     appender's incomplete slot so emission stays contiguous."""
     if with_preimage and not key:
         raise ValueError("with_preimage needs the merge key")
-    floor = folded_through(spark, path)
+    # base version and watermark from ONE manifest read
+    version_now, meta = _current_manifest(spark, path)
+    floor = _meta_floor(meta)
     present = _delta_versions(spark, path)
     known_max = max(present[-1] if present else 0, floor)
     hi = known_max if until is None else min(until, known_max)
@@ -132,9 +134,9 @@ def read_table_changes(spark: SparkSession, path: str, *,
             f"watermark {floor} of {path} — its pre-state is baked "
             f"into the base; drain the feed before compacting")
     if not versions:
-        base = _lsm_base(spark, path)
-        if base is None:
+        if not version_now:
             raise ValueError(f"no keyed table at {path}")
+        base = _read_base(spark, path, version_now)
         empty = spark.createDataFrame([], base.schema)
         out = (empty
                .withColumn(VERSION_COL, F.lit(None).cast("int"))
@@ -146,10 +148,9 @@ def read_table_changes(spark: SparkSession, path: str, *,
                     f"{c}:{dict(base.dtypes)[c]}" for c in pcols) + ">"))
         return out
     deltas = {v: _read_delta_dir(spark, path, v) for v in versions}
-    version_now = current_base_version(spark, path)
-    base = (_read_base(spark, path, version_now) if version_now
-            else _lsm_base(spark, path))
-    if base is None:                     # deltas-only table
+    if version_now:
+        base = _read_base(spark, path, version_now)
+    else:                                # deltas-only table
         base = spark.createDataFrame([], deltas[versions[0]].schema)
     # the full payload schema (base + every served delta): a window
     # holding only tombstones must still emit the table's payload
@@ -317,11 +318,12 @@ def changes_schema(spark: SparkSession, path: str) -> T.StructType:
     sources cannot mergeSchema per batch). Payload columns absent
     from an individual delta file — tombstones, pre-evolution batches
     — read as NULL under this schema, matching the batch reader."""
-    base = _lsm_base(spark, path)
-    if base is None:
+    version = current_base_version(spark, path)
+    if not version:
         raise ValueError(f"no keyed table at {path}")
     fields = [T.StructField(f.name, f.dataType, True)
-              for f in base.schema.fields if f.name != _TOMBSTONE]
+              for f in _base_schema(spark, path, version).fields
+              if f.name != _TOMBSTONE]
     fields.append(T.StructField(_TOMBSTONE, T.BooleanType(), True))
     return T.StructType(fields)
 

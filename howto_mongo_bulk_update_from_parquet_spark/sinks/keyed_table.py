@@ -24,14 +24,16 @@ All path operations go through the Hadoop FileSystem API (`sinks.fs`),
 so every function works unchanged on `file:`, `hdfs://` and `s3a://`
 paths.
 
-Commit protocol (round 4): the pointer is a VERSIONED manifest file
-`_CURRENT.v{NNNNN}` — readers take the highest — published by writing
-a temp file and renaming it into place only if the target is absent
-(`fs.rename_no_clobber`). Because a commit creates a NEW name and
-retires older pointers only after the new one is visible, there is
-never a missing-pointer window (the delete-then-rename sliver of the
-old single `_CURRENT` file, which could send a racing reader to the
-newest *uncommitted* base directory via the fallback scan).
+On-disk layout: `base_v{NNNNN}/` base directories, `delta_{NNNNN}/`
+delta directories and the VERSIONED manifest files `_CURRENT.v{NNNNN}`
+— nothing else. `_current_manifest` is the one resolver of (base
+version, manifest) for every reader and writer: the highest manifest
+wins. Commits publish a manifest by writing a temp file and renaming
+it into place only if the target is absent (`fs.rename_no_clobber`).
+Because a commit creates a NEW name and retires older pointers only
+after the new one is visible, there is never a missing-pointer
+window; a table whose pointers were all removed by hand recovers
+from its complete base directories (see `_current_manifest`).
 
 Concurrent writers: two upsert rounds that both read base version N
 both try to produce N+1. The loser is caught at TWO fences and gets a
@@ -64,11 +66,10 @@ from . import bloom_index as bloom
 from . import fs as hfs
 from . import zonemap as zm
 
-_MANIFEST = "_CURRENT"                      # legacy (pre-round-4) pointer
+_MANIFEST = "_CURRENT"
 _MANIFEST_V_RE = re.compile(r"^_CURRENT\.v(\d{5})$")
 _BASE_RE = re.compile(r"^base_v(\d{5})$")
 _DELTA_RE = re.compile(r"^delta_(\d{5})$")
-_LEGACY_BASE = "base"
 
 
 class ConcurrentWriteError(RuntimeError):
@@ -522,45 +523,10 @@ def _manifest_versions(spark: SparkSession, path: str) -> list[int]:
 
 
 def current_base_version(spark: SparkSession, path: str) -> int:
-    """Committed base version: the highest versioned manifest pointer
-    (`_CURRENT.v{NNNNN}`), then the legacy single `_CURRENT` file, then
-    a recovery fallback over *complete* (has _SUCCESS) base_v dirs.
-    0 = none.
-
-    The fallback only runs when every pointer is gone (manual damage —
-    the commit protocol never leaves a pointerless window). It prefers
-    the SECOND-newest complete base when several survive: the newest
-    complete directory may be a data write whose manifest publish never
-    landed, i.e. an uncommitted snapshot — stale-but-committed beats
-    newest-but-unconfirmed."""
-    versions = _manifest_versions(spark, path)
-    if versions:
-        return versions[-1]
-    txt = hfs.read_text(spark, hfs.join(path, _MANIFEST))
-    if txt:
-        try:
-            return int(txt.strip())
-        except ValueError:
-            # legacy single-file pointer exists but is garbage — say so
-            # (the complete-base fallback below still recovers) rather
-            # than silently pretending it was absent.
-            import logging
-            logging.getLogger(__name__).warning(
-                "keyed_table: unparseable legacy _CURRENT pointer at %s "
-                "(%r) — falling back to complete-base recovery",
-                path, txt.strip()[:64])
-    complete = sorted(int(m.group(1)) for d in hfs.listdir(spark, path)
-                      if (m := _BASE_RE.match(d))
-                      and hfs.exists(spark, hfs.join(path, d, "_SUCCESS")))
-    if len(complete) >= 2:
-        return complete[-2]
-    return complete[-1] if complete else 0
-
-
-def _legacy_root_has_data(spark: SparkSession, path: str) -> bool:
-    """Round-1 layout: plain parquet files directly at `path`."""
-    return any(f.endswith(".parquet")
-               for f in hfs.listdir(spark, path))
+    """Committed base version, 0 = none: the version half of
+    `_current_manifest`, so every reader and writer resolves the same
+    base by the same rule."""
+    return _current_manifest(spark, path)[0]
 
 
 def read_keyed_table(spark: SparkSession, path: str,
@@ -586,56 +552,54 @@ def read_keyed_table(spark: SparkSession, path: str,
                 f"version {version} of {path} does not exist or was "
                 f"retired (write with retain_versions > 1 to keep history)")
         return _read_base(spark, path, version)
-    if honor_buckets:
-        v, meta = _current_manifest(spark, path)
-        key, buckets = meta.get("bucket_key"), int(meta.get("buckets", 0) or 0)
-        if v and key and buckets:
-            return _read_base_bucketed(spark, path, v, key, buckets)
-    v = current_base_version(spark, path)
-    if v:
-        return _read_base(spark, path, v)
-    if _legacy_root_has_data(spark, path):
-        return spark.read.parquet(path)
-    raise FileNotFoundError(f"no keyed table at {path}")
+    v, meta = _current_manifest(spark, path)
+    if not v:
+        raise FileNotFoundError(f"no keyed table at {path}")
+    key, buckets = meta.get("bucket_key"), int(meta.get("buckets", 0) or 0)
+    if honor_buckets and key and buckets:
+        return _read_base_bucketed(spark, path, v, key, buckets)
+    return _read_base(spark, path, v)
 
 
 def _current_manifest(spark: SparkSession, path: str,
                       retries: int = 3) -> tuple[int, dict[str, str]]:
-    """(base version, metadata) of the newest committed manifest,
-    resolved from ONE pointer so a reader never pairs a new base with
-    a stale watermark (or vice versa). `_commit_version` retires old
-    pointers right after publishing, so the content read can find its
-    file already deleted — re-list and retry rather than silently
-    returning empty metadata (which would collapse the watermark to 0
-    and resurrect folded deltas). Returns (0, {}) for legacy tables
-    with no versioned pointer."""
-    for _ in range(max(retries, 1)):
-        versions = _manifest_versions(spark, path)
+    """(base version, metadata) of the newest committed manifest
+    `_CURRENT.v{NNNNN}` — the one resolver every reader and writer
+    uses, so a reader never pairs a new base with a stale watermark
+    (or vice versa). (0, {}) when `path` holds no table.
+
+    `_commit_version` retires old pointers right after publishing, so
+    the content read can find its file already deleted: re-list and
+    retry (`retries` + 1 reads in all, at least two) rather than
+    return empty metadata, which would collapse the watermark to 0 and
+    resurrect folded deltas; if every read races a retirement, fail
+    retryable instead of guessing (ADVICE r10).
+
+    Recovery, when every pointer is gone (manual damage — the commit
+    protocol never leaves a pointerless window): the version is the
+    SECOND-newest complete (has _SUCCESS) `base_v{NNNNN}` when several
+    survive, since the newest may be a data write whose manifest
+    publish never landed — stale-but-committed beats
+    newest-but-unconfirmed — and its metadata is empty. The scan
+    reuses the pointer listing, so a path with no base directory pays
+    no further call."""
+    for _ in range(max(retries, 1) + 1):
+        names = hfs.listdir(spark, path)
+        versions = sorted(int(m.group(1)) for d in names
+                          if (m := _MANIFEST_V_RE.match(d)))
         if not versions:
-            return 0, {}
+            complete = sorted(
+                int(m.group(1)) for d in names
+                if (m := _BASE_RE.match(d))
+                and hfs.exists(spark, hfs.join(path, d, "_SUCCESS")))
+            if len(complete) >= 2:
+                return complete[-2], {}
+            return (complete[-1] if complete else 0), {}
         txt = hfs.read_text(spark,
                             hfs.join(path, _manifest_name(versions[-1])))
         if txt is None:
             continue                     # retired mid-read — re-list
         meta: dict[str, str] = {}
-        for line in txt.splitlines()[1:]:
-            k, sep, v = line.partition("=")
-            if sep:
-                meta[k.strip()] = v.strip()
-        return versions[-1], meta
-    # Every retry raced a retirement. Returning (version, {}) here
-    # would collapse folded_through to 0 — the exact failure this
-    # function exists to prevent (re-applying folded-but-not-yet-GC'd
-    # deltas, transiently resurrecting deleted rows) — so make one
-    # final attempt on the freshest listing and, if the newest pointer
-    # is STILL unreadable, fail retryable instead of guessing
-    # (ADVICE r10). Legacy tables with no pointer stay (0, {}).
-    versions = _manifest_versions(spark, path)
-    if not versions:
-        return 0, {}
-    txt = hfs.read_text(spark, hfs.join(path, _manifest_name(versions[-1])))
-    if txt is not None:
-        meta = {}
         for line in txt.splitlines()[1:]:
             k, sep, v = line.partition("=")
             if sep:
@@ -652,7 +616,8 @@ def table_meta(spark: SparkSession, path: str) -> dict[str, str]:
     up to which deltas are already folded into the base — readers
     ignore deltas at or below it, making post-fold delta-file removal
     pure GC instead of a correctness fence), and the base bucketing
-    spec (`buckets`/`bucket_key`). Empty for legacy tables."""
+    spec (`buckets`/`bucket_key`). Empty when `path` holds no table or
+    was recovered without a pointer."""
     return _current_manifest(spark, path)[1]
 
 
@@ -707,7 +672,6 @@ def _commit_version(spark: SparkSession, path: str, version: int,
             f"first; this round lost the commit race — re-read and retry")
     for v in published:
         hfs.delete(spark, hfs.join(path, _manifest_name(v)), recursive=False)
-    hfs.delete(spark, hfs.join(path, _MANIFEST), recursive=False)  # legacy
     # retain by PUBLISHED pointers, not arithmetic: version numbers
     # may be sparse (orphan slots skipped by _next_base_version), and
     # the previous reader-visible base is the newest old pointer, not
@@ -732,10 +696,6 @@ def _commit_version(spark: SparkSession, path: str, version: int,
             # files are already gone anyway)
             spark.sql("DROP TABLE IF EXISTS "
                       + _bucket_table_ident(path, int(m.group(1))))
-    # migrate-away: files of a pre-versioned (round-1) table at root
-    for f in hfs.listdir(spark, path):
-        if f.endswith(".parquet") or f == "_SUCCESS":
-            hfs.delete(spark, hfs.join(path, f))
 
 
 def _write_claiming_base(spark: SparkSession, df: DataFrame, path: str,
@@ -1530,7 +1490,9 @@ def upsert_into_keyed_table(spark: SparkSession, source: DataFrame, *,
                             checks: dict[str, str] | None = None,
                             schema_mode: str | None = None):
     """MERGE `source` into the keyed parquet table at `path` (created on
-    first write). Returns the post-merge table DataFrame, or
+    first write; a first write into a directory holding plain parquet
+    files at its root raises `FileExistsError` and leaves them alone).
+    Returns the post-merge table DataFrame, or
     ``(df, counts)`` with the reference-style write-result counts
     (n_matched / n_upserted / n_untouched) when ``return_counts``.
 
@@ -1591,8 +1553,6 @@ def upsert_into_keyed_table(spark: SparkSession, source: DataFrame, *,
     # and bucket spec must be a consistent snapshot
     version, committed_meta = _current_manifest(spark, path)
     meta = dict(committed_meta)
-    if not version:
-        version = current_base_version(spark, path)   # legacy pointers
     old_floor = _meta_floor(meta)
     # record the merge key in the manifest (r15): catalog-level SQL
     # registration (`register_sql_catalog`) discovers tables by it —
@@ -1674,10 +1634,19 @@ def upsert_into_keyed_table(spark: SparkSession, source: DataFrame, *,
         target = _read_base_bucketed(spark, path, version, key, cur_buckets)
     elif version:
         target = _read_base(spark, path, version)
-    elif _legacy_root_has_data(spark, path):
-        target = spark.read.parquet(path)
     else:
-        target = None                    # brand-new table: bootstrap
+        # brand-new table: bootstrap. Plain parquet files at the root
+        # are no layout this table reads — adopting them would merge
+        # (and then delete) data the caller never handed over, so the
+        # first write refuses them, as CREATE TABLE's LOCATION check does
+        stray = sorted(f for f in hfs.listdir(spark, path)
+                       if f.endswith(".parquet"))
+        if stray:
+            raise FileExistsError(
+                f"{path} holds {len(stray)} parquet file(s) at its root "
+                f"(e.g. {stray[0]}) but no keyed table — read them with "
+                f"spark.read.parquet and upsert them into a fresh path")
+        target = None
     obs = Observation("merge_counts") if return_counts else None
     if target is None:
         # BOOTSTRAP fast path (r16 optimization, guide §2.4): the
@@ -1709,8 +1678,7 @@ def upsert_into_keyed_table(spark: SparkSession, source: DataFrame, *,
                               observation=obs,
                               source_prepared=source_prepared)
     chk2_validate = None
-    if new_check_names and (version or fold
-                            or _legacy_root_has_data(spark, path)):
+    if new_check_names and (version or fold):
         # Delta ADD-CONSTRAINT posture (ADVICE r13): a check name
         # introduced on a table with existing rows validates HISTORY,
         # not just the batch — the post-merge state (existing ∪
@@ -1829,7 +1797,7 @@ def vacuum_orphan_bases(spark: SparkSession, path: str, *,
     published = _manifest_versions(spark, path)
     cur = published[-1] if published else 0
     if not cur:
-        return []                        # legacy table — nothing versioned
+        return []                        # no pointer to measure against
     try:
         now_ms = hfs.probe_now_ms(spark, path)
     except Exception:                    # probe unwritable: fall back
@@ -2103,26 +2071,6 @@ def append_delta(spark: SparkSession, source: DataFrame, *, path: str,
                                   checks_spec=spec)
 
 
-def _lsm_base(spark: SparkSession, path: str) -> DataFrame | None:
-    v = current_base_version(spark, path)
-    if v:
-        return _read_base(spark, path, v)
-    legacy = hfs.join(path, _LEGACY_BASE)
-    if hfs.exists(spark, legacy):
-        return spark.read.parquet(legacy)
-    # round-1 layout: plain parquet files directly at the table root
-    # (ADVICE r9: omitting them made delete/compact on a legacy table
-    # with pending deltas silently drop the base rows — the fold missed
-    # them and _commit_version's migrate-away then deleted the files).
-    # Read the root files EXPLICITLY so the delta_*/base_v* child dirs
-    # never leak into the scan.
-    root_files = [hfs.join(path, f) for f in hfs.listdir(spark, path)
-                  if f.endswith(".parquet")]
-    if root_files:
-        return spark.read.parquet(*root_files)
-    return None
-
-
 def _complete_deltas(spark: SparkSession, path: str,
                      floor: int | None = None) -> list[int]:
     """Committed (has _SUCCESS) delta versions above the folded-through
@@ -2261,10 +2209,10 @@ def register_sql_catalog(spark: SparkSession, root: str, *,
     out: dict[str, tuple[str, str]] = {}
     for child in sorted(hfs.listdir(spark, root)):
         path = hfs.join(root, child)
-        if not current_base_version(spark, path):
+        version, meta = _current_manifest(spark, path)
+        if not version:
             continue                     # not a keyed table
-        key = (keys or {}).get(child) or table_meta(
-            spark, path).get("merge_key")
+        key = (keys or {}).get(child) or meta.get("merge_key")
         if not key:
             continue                     # pre-r15 manifest, no override
         name = prefix + child
@@ -2435,16 +2383,15 @@ def _read_merged_through(spark: SparkSession, path: str, key: str,
                          single_partition: bool = False) -> DataFrame:
     """`read_merged` over an EXPLICIT delta set — the fold paths use it
     to absorb only the contiguous complete run when later deltas exist
-    beyond an in-flight slot. `base_version` pins the base directory
-    the caller's manifest read already resolved, keeping (base,
-    watermark, deltas) one consistent snapshot; None falls back to the
-    legacy resolution chain (`_lsm_base`). `base_df` overrides the
-    base resolution entirely (the pruned-lookup path passes the
-    zone-map-selected file subset; passing `base_version` with it
-    marks the subset as drawn from that versioned base); `predicate`
-    is a key-only filter applied to EVERY part — sound because the
-    merge and tombstone cut both partition by the key, so restricting
-    to a key subset keeps each surviving key's full version history.
+    beyond an in-flight slot. `base_version` is the base the caller's
+    manifest read already resolved, keeping (base, watermark, deltas)
+    one consistent snapshot; None means the table has no base (a
+    deltas-only table). `base_df` overrides the base read entirely
+    (the pruned-lookup path passes the zone-map-selected file subset
+    of a versioned base); `predicate` is a key-only filter applied to
+    EVERY part — sound because the merge and tombstone cut both
+    partition by the key, so restricting to a key subset keeps each
+    surviving key's full version history.
     `single_partition` plans the version window over one partition
     (no exchange) — for callers that know the input is small."""
     parts = []
@@ -2453,14 +2400,13 @@ def _read_merged_through(spark: SparkSession, path: str, key: str,
     elif base_version:
         base = _read_base(spark, path, base_version)
     else:
-        base = _lsm_base(spark, path)
-    if base is not None and base_version and not deltas:
-        # fully folded VERSIONED table (or no delta in the caller's
-        # set): the base IS the merged view (the sink's writers hold
-        # one row per key, tombstones are purged at fold) — running
-        # the version window over it would be an identity bought with
-        # a full-base shuffle. Legacy (pre-versioned) bases keep the
-        # window: their provenance is not the sink's to guarantee.
+        base = None
+    if base is not None and not deltas:
+        # fully folded table (or no delta in the caller's set): the
+        # base IS the merged view (the sink's writers hold one row per
+        # key, tombstones are purged at fold) — running the version
+        # window over it would be an identity bought with a full-base
+        # shuffle.
         if predicate is not None:
             base = base.filter(predicate)
         if base_df is not None:
@@ -2470,17 +2416,12 @@ def _read_merged_through(spark: SparkSession, path: str, key: str,
             base = base.select(
                 key, *[c for c in base.columns if c != key])
         return base
-    if base is not None and base_df is None and base_version and deltas:
+    if base is not None and base_df is None and deltas:
         # fast path: delta-key broadcast joins instead of shuffling
         # the whole base through the version window — taken whenever
         # the pending tail is small (the LSM contract), which is every
         # call except bulk-load-sized deltas. base_df callers (pruned
         # lookups, surgical folds) already read a bounded base.
-        # Gated on base_version like the fully-folded shortcut above:
-        # a legacy (_lsm_base) base may hold duplicate- or null-key
-        # rows the classic window collapses, but the left-anti
-        # "untouched" branch would pass through verbatim — a
-        # cardinality change (ADVICE r12).
         total = sum(hfs.dir_size(spark, hfs.join(path, f"delta_{v:05d}"))
                     for v in deltas)
         if total <= FAST_MERGE_MAX_DELTA_BYTES:
@@ -2553,8 +2494,6 @@ def pruned_base_files(spark: SparkSession, path: str, key: str, *,
     let a caller pass an already-resolved manifest snapshot."""
     if version is None or meta is None:
         version, meta = _current_manifest(spark, path)
-        if not version:
-            version = current_base_version(spark, path)
     if not version:
         raise FileNotFoundError(f"no versioned keyed table at {path}")
     base = _base_dir(path, version)
@@ -2639,8 +2578,6 @@ def lookup_keyed_table(spark: SparkSession, path: str, key: str, *,
     On a `buckets` table, hashing the probe values to bucket ids
     (`_bucket_ids_for_values`) runs one more small local job first."""
     version, meta = _current_manifest(spark, path)
-    if not version:
-        version = current_base_version(spark, path)
     floor = _meta_floor(meta)
     pred = _key_predicate(key, values, lo, hi)
     kept, total = pruned_base_files(spark, path, key, values=values,
@@ -2661,8 +2598,8 @@ def lookup_keyed_table(spark: SparkSession, path: str, key: str, *,
         spark, files, [hfs.join(path, f"delta_{v:05d}")
                        for v in read_deltas])
     out = _read_merged_through(spark, path, key, read_deltas,
-                               base_version=version, base_df=base_df,
-                               predicate=pred, single_partition=one)
+                               base_df=base_df, predicate=pred,
+                               single_partition=one)
     if with_stats:
         return out, {"files_total": total, "files_read": len(kept),
                      "deltas": len(read_deltas),
@@ -2713,8 +2650,6 @@ def lookup_join_keyed_table(spark: SparkSession, path: str, key: str,
     probe keys present in the table (absent keys simply don't match;
     tombstoned keys are cut by the merge)."""
     version, meta = _current_manifest(spark, path)
-    if not version:
-        version = current_base_version(spark, path)
     floor = _meta_floor(meta)
     pkeys = probes.select(key).filter(F.col(key).isNotNull()).distinct()
     b = pkeys.agg(F.min(key).alias("lo"), F.max(key).alias("hi")).first()
@@ -2770,19 +2705,16 @@ def scan_keyed_table(spark: SparkSession, path: str, *,
     bounded by the delta size, never stats-pruned); the residual
     predicate runs on both branches. Equality with scan-after-fold is
     test-pinned. The decomposition needs the merge key, which a range
-    table's manifest records (`range_key`); a legacy/un-keyed table
-    with pending deltas still refuses. At 100 TB this is the
-    post-curation read path: every analytic range scan on a stats
-    column touches O(admissible files + pending delta bytes), folded
-    or not."""
+    table's manifest records (`range_key`); a table without one with
+    pending deltas still refuses. At 100 TB this is the post-curation
+    read path: every analytic range scan on a stats column touches
+    O(admissible files + pending delta bytes), folded or not."""
     if not where:
         raise ValueError("scan needs at least one column predicate")
     for col, (lo, hi) in where.items():
         if lo is None and hi is None:
             raise ValueError(f"predicate on {col!r} has neither bound")
     version, meta = _current_manifest(spark, path)
-    if not version:
-        version = current_base_version(spark, path)
     if not version:
         raise FileNotFoundError(f"no versioned keyed table at {path}")
     floor = _meta_floor(meta)
@@ -2893,10 +2825,8 @@ def compact(spark: SparkSession, path: str, key: str,
     place above the watermark for the next compaction."""
     version, committed_meta = _current_manifest(spark, path)
     meta = dict(committed_meta)
-    if not version:
-        version = current_base_version(spark, path)   # legacy pointers
     old_floor = _meta_floor(meta)
-    meta["merge_key"] = key      # legacy tables gain it on compaction
+    meta["merge_key"] = key
     meta.pop("restored_from", None)   # folded base = new content
     fold = _foldable_deltas(spark, path, gc_stale=True, floor=old_floor)
     # fold only the run — deltas beyond an in-flight slot are masked so
@@ -2926,7 +2856,6 @@ def compact(spark: SparkSession, path: str, key: str,
                                 eff_bloom=eff_bloom)
     _commit_version(spark, path, new_version, retain_versions, meta=meta)
     _gc_folded_deltas(spark, path, old_floor)
-    hfs.delete(spark, hfs.join(path, _LEGACY_BASE))
     return _read_committed_parquet(
         spark, [_base_dir(path, new_version)])
 
@@ -3054,8 +2983,6 @@ def compact_pruned(spark: SparkSession, path: str, key: str,
     version, committed_meta = _current_manifest(spark, path)
     meta = dict(committed_meta)
     meta.pop("restored_from", None)   # pruned fold = new content
-    if not version:
-        version = current_base_version(spark, path)
     zmap = zm.read_zone_map(spark, _base_dir(path, version)) \
         if version else None
     if (not version or meta.get("range_key") != key or zmap is None
@@ -3163,7 +3090,6 @@ def compact_pruned(spark: SparkSession, path: str, key: str,
     meta["folded_through"] = str(fold[-1])
     _commit_version(spark, path, new_version, retain_versions, meta=meta)
     _gc_folded_deltas(spark, path, old_floor)
-    hfs.delete(spark, hfs.join(path, _LEGACY_BASE))
     return _read_base(spark, path, new_version), {
         "pruned": True, "new_version": new_version,
         "deltas_folded": len(fold), "files_total": len(all_files),
@@ -3204,8 +3130,6 @@ def delete_from_keyed_table(spark: SparkSession, keys: DataFrame, *,
     version, committed_meta = _current_manifest(spark, path)
     meta = dict(committed_meta)
     meta.pop("restored_from", None)   # rewritten base = new content
-    if not version:
-        version = current_base_version(spark, path)   # legacy pointers
     old_floor = _meta_floor(meta)
     fold = _foldable_deltas(spark, path, gc_stale=True, floor=old_floor)
     pending = _complete_deltas(spark, path, floor=old_floor)
@@ -3227,19 +3151,15 @@ def delete_from_keyed_table(spark: SparkSession, keys: DataFrame, *,
                                       base_version=version or None)
         meta["folded_through"] = str(fold[-1])
     else:
+        if not version:
+            raise FileNotFoundError(f"no keyed table at {path}")
         cur_buckets = _resolve_buckets(meta, key, None)
-        if version and cur_buckets:
+        if cur_buckets:
             # bucketed base: the anti-join needs no exchange on it
             target = _read_base_bucketed(spark, path, version, key,
                                          cur_buckets)
         else:
-            # _lsm_base resolves every base layout: versioned, legacy
-            # `base/`, and round-1 root parquet files (ADVICE r9: the
-            # root files must feed the rewrite — _commit_version
-            # migrates them away after the commit)
-            target = _lsm_base(spark, path)
-        if target is None:
-            raise FileNotFoundError(f"no keyed table at {path}")
+            target = _read_base(spark, path, version)
     del_keys = (keys.select(F.col(key)).filter(F.col(key).isNotNull())
                 .distinct())
     remaining = target.join(del_keys, key, "left_anti")
@@ -3258,8 +3178,8 @@ def delete_from_keyed_table(spark: SparkSession, keys: DataFrame, *,
                                 eff_zorder=_resolve_zorder(meta, key, None),
                                 eff_target=keep_target,
                                 eff_bloom=_resolve_bloom(meta, key, None))
-    # count BEFORE the commit: _commit_version migrates away a legacy
-    # root layout's files, which `target` may still lazily scan
+    # count BEFORE the commit: under retain_versions=1 the commit
+    # retires the base `target` lazily scans
     n_before = target.count() if return_counts else None
     _commit_version(spark, path, new_version, retain_versions, meta=meta)
     result = _read_committed_parquet(
@@ -3306,8 +3226,6 @@ def restore_table(spark: SparkSession, path: str, key: str,
 
     cur_version, committed_meta = _current_manifest(spark, path)
     meta = dict(committed_meta)
-    if not cur_version:
-        cur_version = current_base_version(spark, path)
     snapdir = _base_dir(path, version)
     if not hfs.exists(spark, hfs.join(snapdir, "_SUCCESS")):
         raise FileNotFoundError(
@@ -3425,18 +3343,16 @@ def append_merge_delta(spark: SparkSession, rows: DataFrame, *,
 
 
 def table_schema(spark: SparkSession, path: str):
-    """The table's current declared schema (StructType) — committed
-    base first, else the newest pending delta, else the legacy root
-    layout; None when no table exists (first write defines it). One
-    parquet-footer read, no data."""
+    """The table's current declared schema (StructType) — the base
+    `_current_manifest` resolves, else the newest pending delta; None
+    when no table exists (first write defines it). One parquet-footer
+    read, no data."""
     version = current_base_version(spark, path)
     if version:
         return _base_schema(spark, path, version)
     deltas = _delta_versions(spark, path)
     if deltas:
         return _read_delta_dir(spark, path, deltas[-1]).schema
-    if _legacy_root_has_data(spark, path):
-        return spark.read.parquet(path).schema
     return None
 
 

@@ -1056,9 +1056,9 @@ def sql_create(spark: SparkSession, text: str, *,
     except Exception:  # noqa: BLE001 - absent/unreadable dir: creatable
         occupied = False
     if occupied:
-        # a versioned table OR any non-empty directory (a legacy
-        # plain-parquet root would silently merge into the "new"
-        # table through the upsert's legacy support)
+        # a keyed table OR any non-empty directory: CREATE owns a
+        # fresh location, and whatever else a directory holds (plain
+        # parquet at its root included) is not the new table's
         raise MergeSyntaxError(
             f"LOCATION {loc!r} is not empty — CREATE never "
             f"overwrites; target an existing keyed table with the "

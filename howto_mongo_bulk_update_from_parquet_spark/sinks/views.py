@@ -50,7 +50,7 @@ from pyspark.sql import functions as F
 from .changes import (OP_COL, PRE_COL, VERSION_COL,
                       ChangeHistoryUnavailable, read_table_changes)
 from .keyed_table import (_complete_deltas, _current_manifest,
-                          _delta_versions, _meta_floor,
+                          _delta_versions, _deltas_key_range, _meta_floor,
                           _read_merged_through, current_base_version,
                           folded_through, read_merged, table_meta,
                           upsert_into_keyed_table)
@@ -292,14 +292,18 @@ def _apply_differential(spark: SparkSession, table_path: str, key: str,
     the window cannot be served, having committed nothing."""
     off = view_offset(spark, view_path)
     cols_shape, names_shape = _sum_cols(sum_col)
-    # no-op fast path (r14 trim): two metadata listings decide whether
-    # anything landed above the offset — a scheduled maintainer
-    # polling an idle table must not pay feed construction (whose
-    # pre-image plan runs eager per-version span joins) to learn
-    # "nothing new"
-    newest_known = max(folded_through(spark, table_path),
-                       *_delta_versions(spark, table_path), 0)
-    if newest_known <= off:
+    # no-op fast path (r14 trim): metadata alone decides whether any
+    # change landed above the offset — a scheduled maintainer polling
+    # an idle table must not pay feed construction (whose pre-image
+    # plan runs eager per-version span joins) to learn "nothing new".
+    # Deltas whose _KEYRANGE sidecars record zero rows count as
+    # nothing: an all-empty window would run the contribution job on
+    # an empty feed, whose observed metrics never latch (AQE replaces
+    # the plan over an empty shuffle with an empty relation)
+    arrived = [v for v in _delta_versions(spark, table_path) if v > off]
+    if folded_through(spark, table_path) <= off and (
+            not arrived or _deltas_key_range(spark, table_path, key,
+                                             arrived) == (None, None)):
         # the shape contract must surface even with zero arrivals
         # (ADVICE r15): an idle poll with a mismatched
         # sum_col/track_minmax previously reported success silently.

@@ -90,14 +90,8 @@ def dedup_batch_verdicts(docs: DataFrame, index: DataFrame | None,
         idx = (index.select("bucket_key", "rep_id") if index is not None
                else spark.createDataFrame(
                    [], "bucket_key string, rep_id long"))
-        # mirror cli.py's guard: a pre-r12 index store's pending
-        # deltas carry bucket_key but no rep_id — selecting it
-        # unconditionally would kill the stream (ADVICE r12)
-        pend = None
-        if pending is not None and "bucket_key" in pending.columns:
-            pend = (pending.select("bucket_key", "rep_id")
-                    if "rep_id" in pending.columns
-                    else pending.select("bucket_key"))
+        pend = (pending.select("bucket_key", "rep_id")
+                if pending is not None else None)
         out = incremental_near_dup_flags(docs, idx, "doc_id",
                                          new_bands=bands,
                                          pending_index_bands=pend)
@@ -114,8 +108,7 @@ def dedup_batch_verdicts(docs: DataFrame, index: DataFrame | None,
         # dedupe the tail by gram: replayed deltas must not multiply
         # the per-window LEFT join's rows
         pend = (pending.groupBy("h").agg(F.min("rep_id").alias("rep_id"))
-                if pending is not None and "h" in pending.columns
-                else None)
+                if pending is not None else None)
         out = incremental_dup_spans(docs, idx, new_grams=grams,
                                     pending_gram_index=pend)
         return out, gram_index_rows_from_grams(grams), "h"

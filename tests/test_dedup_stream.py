@@ -229,26 +229,6 @@ def test_cli_dedup_stream(spark, tmp_path):
     assert v == {1: "unique", 2: "unique", 11: "dup_vs_index"}
 
 
-def test_near_pending_without_rep_id_is_tolerated(spark):
-    """ADVICE r12: a pre-r12 index store's pending deltas carry
-    bucket_key but no rep_id — the near-mode tail probe must select
-    around the missing column (as cli.py does) instead of dying with
-    an AnalysisException mid-stream."""
-    docs = spark.createDataFrame(
-        [(50, TEXTS[1]), (51, TEXTS[3])], SCHEMA)
-    from howto_mongo_bulk_update_from_parquet_spark.plans.incremental_dedup import (
-        batch_bands, signature_index_rows_from_bands)
-    # pending tail that matches doc 50's text, WITHOUT rep_id
-    pending = signature_index_rows_from_bands(
-        batch_bands(spark.createDataFrame([(7, TEXTS[1])], SCHEMA),
-                    "doc_id"), "doc_id").drop("rep_id")
-    out, _rows, key = dedup_batch_verdicts(
-        docs, index=None, mode="near", pending=pending)
-    v = {r["doc_id"]: r["verdict"] for r in out.collect()}
-    assert key == "bucket_key"
-    assert v[50] == "dup_vs_index" and v[51] == "unique"
-
-
 def test_processing_time_trigger_survives_kill_restart(spark, tmp_path):
     """r12 verdict item 6 (liveness): a CONTINUOUS (processingTime)
     drain processes arriving batches without availableNow's

@@ -6,7 +6,7 @@ import os
 
 from howto_mongo_bulk_update_from_parquet_spark.operators.merge import keyed_upsert
 from howto_mongo_bulk_update_from_parquet_spark.sinks.keyed_table import (
-    append_delta, compact, read_merged)
+    append_delta, compact, read_merged, upsert_into_keyed_table)
 
 
 def _rows(df):
@@ -18,7 +18,8 @@ def test_delta_chain_equals_sequential_merge(spark, tmp_path):
     path = os.path.join(str(tmp_path), "lsm")
     base = spark.createDataFrame(
         [("a", 1.0, "x"), ("b", 2.0, "y")], "_id string, v double, tag string")
-    base.write.parquet(os.path.join(path, "base"))
+    upsert_into_keyed_table(spark, base, path=path, key="_id",
+                            updated_at_col=None)
 
     d1 = spark.createDataFrame([("a", None, "x1"), ("c", 3.0, None)],
                                "_id string, v double, tag string")
@@ -44,7 +45,8 @@ def test_delta_chain_equals_sequential_merge(spark, tmp_path):
 def test_compact_preserves_content_and_removes_deltas(spark, tmp_path):
     path = os.path.join(str(tmp_path), "lsm2")
     base = spark.createDataFrame([("a", 1.0)], "_id string, v double")
-    base.write.parquet(os.path.join(path, "base"))
+    upsert_into_keyed_table(spark, base, path=path, key="_id",
+                            updated_at_col=None)
     append_delta(spark, spark.createDataFrame([("b", 2.0)], "_id string, v double"),
                  path=path, key="_id")
     before = _rows(read_merged(spark, path, "_id"))

@@ -1,12 +1,13 @@
 """Versioned keyed-table layout: one write per round, manifest flip,
-Hadoop-FileSystem path routing, legacy (round-1 flat parquet) upgrade."""
+Hadoop-FileSystem path routing, one resolver for every reader and
+writer, and a first write that refuses plain parquet at the root."""
 
 import os
 
 from howto_mongo_bulk_update_from_parquet_spark.sinks import fs as hfs
 from howto_mongo_bulk_update_from_parquet_spark.sinks.keyed_table import (
     append_delta, compact, current_base_version, read_keyed_table,
-    read_merged, upsert_into_keyed_table)
+    read_merged, table_schema, upsert_into_keyed_table)
 
 
 def test_hadoop_fs_helpers_roundtrip(spark, tmp_path):
@@ -69,18 +70,22 @@ def test_retain_versions_keeps_previous_snapshot(spark, tmp_path):
         read_keyed_table(spark, path, version=7)
 
 
-def test_legacy_flat_table_upgrades_in_place(spark, tmp_path):
-    path = os.path.join(str(tmp_path), "legacy")
+def test_bootstrap_refuses_root_parquet_files(spark, tmp_path):
+    """Plain parquet files at a directory's root are no keyed table:
+    reads find none, and the first upsert raises and leaves the files
+    alone instead of merging them in and deleting them."""
+    import pytest
+    path = os.path.join(str(tmp_path), "flat")
     spark.createDataFrame([("a", 1.0), ("b", 2.0)],
                           "_id string, v double").write.parquet(path)
-    assert read_keyed_table(spark, path).count() == 2   # reads flat layout
-    src = spark.createDataFrame([("a", None), ("c", 3.0)], "_id string, v double")
-    out = upsert_into_keyed_table(spark, src, path=path, key="_id")
-    rows = {r["_id"]: r["v"] for r in out.collect()}
-    assert rows == {"a": 1.0, "b": 2.0, "c": 3.0}       # null-skip kept a=1.0
-    # table is now versioned and the flat files are gone
-    assert current_base_version(spark, path) == 1
-    assert not [f for f in os.listdir(path) if f.endswith(".parquet")]
+    before = sorted(os.listdir(path))
+    with pytest.raises(FileNotFoundError):
+        read_keyed_table(spark, path)
+    src = spark.createDataFrame([("c", 3.0)], "_id string, v double")
+    with pytest.raises(FileExistsError, match="parquet file"):
+        upsert_into_keyed_table(spark, src, path=path, key="_id")
+    assert sorted(os.listdir(path)) == before
+    assert current_base_version(spark, path) == 0
 
 
 def test_reader_ignores_incomplete_version_dirs(spark, tmp_path):
@@ -150,11 +155,9 @@ def test_manifest_publish_cas_refuses_stale_commit(spark, tmp_path):
     assert current_base_version(spark, path) == 2
 
 
-def test_versioned_manifest_layout_and_legacy_pointer(spark, tmp_path):
+def test_versioned_manifest_layout(spark, tmp_path):
     """Commits publish _CURRENT.v{N} (no pointerless window: old
-    pointers retire only after the new one is visible); a pre-round-4
-    single _CURRENT file is still honored and migrated away on the
-    next commit."""
+    pointers retire only after the new one is visible)."""
     path = os.path.join(str(tmp_path), "layout")
     for i in range(2):
         src = spark.createDataFrame([("a", float(i))], "_id string, v double")
@@ -163,29 +166,40 @@ def test_versioned_manifest_layout_and_legacy_pointer(spark, tmp_path):
     assert "_CURRENT.v00002" in names
     assert "_CURRENT.v00001" not in names and "_CURRENT" not in names
     assert not [n for n in names if n.endswith(".tmp")]
-    # legacy layout: only the old single-file pointer present
-    legacy = os.path.join(str(tmp_path), "legacy_ptr")
-    src = spark.createDataFrame([("a", 1.0)], "_id string, v double")
-    src.write.parquet(os.path.join(legacy, "base_v00001"))
-    hfs.write_text(spark, hfs.join(legacy, "_CURRENT"), "1")
-    assert current_base_version(spark, legacy) == 1
-    upsert_into_keyed_table(spark, src, path=legacy, key="_id")
-    names = set(os.listdir(legacy))
-    assert "_CURRENT.v00002" in names and "_CURRENT" not in names
 
 
 def test_pointerless_fallback_prefers_second_newest(spark, tmp_path):
     """Recovery semantics: with every pointer gone and 2+ complete
     bases, the newest may be an unconfirmed commit — the reader takes
-    the second-newest (stale-but-committed)."""
+    the second-newest (stale-but-committed). Every reader and the
+    next writer resolve that same version."""
+    import time
     path = os.path.join(str(tmp_path), "fallback")
     for i in range(2):
-        src = spark.createDataFrame([("a", float(i))], "_id string, v double")
+        src = spark.createDataFrame([(f"k{i}", float(i))],
+                                    "_id string, v double")
         upsert_into_keyed_table(spark, src, path=path, key="_id")
     for f in os.listdir(path):
         if f.startswith("_CURRENT"):
             hfs.delete(spark, hfs.join(path, f))
     assert current_base_version(spark, path) == 1
+
+    def ids(df):
+        return {r["_id"] for r in df.collect()}
+    assert ids(read_keyed_table(spark, path)) == {"k0"}
+    assert ids(read_merged(spark, path, "_id")) == {"k0"}
+    assert table_schema(spark, path).names == \
+        read_keyed_table(spark, path, version=1).schema.names
+    # age the unconfirmed base_v00002 past the claim grace window so
+    # the next writer skips its slot instead of presuming a live racer
+    old = time.time() - 3600
+    for root, dirs, files in os.walk(os.path.join(path, "base_v00002")):
+        for n in files + dirs + ["."]:
+            os.utime(os.path.join(root, n), (old, old))
+    src = spark.createDataFrame([("k9", 9.0)], "_id string, v double")
+    out = upsert_into_keyed_table(spark, src, path=path, key="_id")
+    assert ids(out) == {"k0", "k9"}                    # merged onto v1
+    assert current_base_version(spark, path) == 3
 
 
 def test_read_missing_table_raises(spark, tmp_path):
@@ -196,14 +210,12 @@ def test_read_missing_table_raises(spark, tmp_path):
 
 def test_compact_single_write_versioned_base(spark, tmp_path):
     path = os.path.join(str(tmp_path), "lsm_v")
-    spark.createDataFrame([("a", 1.0)], "_id string, v double") \
-        .write.parquet(os.path.join(path, "base"))
-    append_delta(spark, spark.createDataFrame([("b", 2.0)], "_id string, v double"),
-                 path=path, key="_id")
+    for row in (("a", 1.0), ("b", 2.0)):
+        append_delta(spark, spark.createDataFrame([row], "_id string, v double"),
+                     path=path, key="_id")
     compact(spark, path, "_id")
     entries = set(os.listdir(path))
     assert "base_v00001" in entries
-    assert "base" not in entries                        # legacy base removed
     assert not [d for d in entries if "tmp" in d.lower()]
     # the freshly-folded delta keeps its files one more commit (the
     # delta analog of retain_versions) but is invisible to readers

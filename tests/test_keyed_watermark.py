@@ -1,7 +1,7 @@
 """Round-10 keyed-table hardening: the folded-through watermark (a
 reader racing a fold never sees folded deltas re-applied), live-claim
 protection (an incomplete-but-fresh directory is occupied, not debris),
-the legacy root-layout LSM fold, and Java-side exists-error mapping."""
+and Java-side exists-error mapping."""
 
 import os
 import shutil
@@ -126,33 +126,6 @@ def test_fresh_incomplete_base_dir_raises_clean_conflict(spark, tmp_path):
     out = upsert_into_keyed_table(spark, _df(spark, [(2, "b")]),
                                   path=p, key="k", updated_at_col=None)
     assert {r.k for r in out.collect()} == {1, 2}
-
-
-def test_legacy_root_layout_delete_with_pending_deltas(spark, tmp_path):
-    """ADVICE r9: a round-1 layout (plain parquet at the table root)
-    with pending LSM deltas — the fold must absorb the root files so
-    the migrate-away after the commit cannot lose the base rows."""
-    p = str(tmp_path / "legacy")
-    _df(spark, [(1, "a"), (2, "b"), (3, "c")]).write.parquet(p)
-    append_delta(spark, _df(spark, [(4, "d"), (1, "a2")]), path=p, key="k")
-    out, n = delete_from_keyed_table(
-        spark, spark.createDataFrame([(2,)], "k long"),
-        path=p, key="k", return_counts=True)
-    assert n == 1
-    got = {r.k: r.v for r in out.collect()}
-    assert got == {1: "a2", 3: "c", 4: "d"}          # base rows survived
-    assert {r.k: r.v for r in read_merged(spark, p, "k").collect()} == got
-    # root files migrated away, table now versioned
-    assert not [f for f in os.listdir(p) if f.endswith(".parquet")]
-
-
-def test_legacy_root_layout_compact_with_pending_deltas(spark, tmp_path):
-    p = str(tmp_path / "legacy2")
-    _df(spark, [(1, "a"), (2, "b")]).write.parquet(p)
-    append_delta(spark, _df(spark, [(3, "c")]), path=p, key="k")
-    out = compact(spark, p, "k")
-    assert {r.k for r in out.collect()} == {1, 2, 3}
-    assert not [f for f in os.listdir(p) if f.endswith(".parquet")]
 
 
 def test_fold_stops_at_inflight_gap(spark, tmp_path):
@@ -444,10 +417,10 @@ def test_manifest_retry_exhaustion_raises_not_empty_meta(spark, tmp_path,
     monkeypatch.setattr(hfs, "read_text", lambda s, path: None)
     with pytest.raises(ConcurrentWriteError, match="re-read and retry"):
         kt._current_manifest(spark, p, retries=2)
-    # legacy table (no pointer at all) still reads as (0, {})
-    legacy = str(tmp_path / "legacy_empty")
-    os.makedirs(legacy)
-    assert kt._current_manifest(spark, legacy) == (0, {})
+    # a directory with no table reads as (0, {})
+    empty = str(tmp_path / "no_table")
+    os.makedirs(empty)
+    assert kt._current_manifest(spark, empty) == (0, {})
 
 
 def test_vacuum_reclaims_dormant_folded_deltas(spark, tmp_path):

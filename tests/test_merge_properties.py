@@ -83,14 +83,16 @@ def test_lsm_read_merged_equals_sequential_merge(spark, tmp_path_factory,
     import os
     import uuid
     from hypothesis import assume
-    from howto_mongo_bulk_update_from_parquet_spark.sinks.keyed_table import append_delta, read_merged
+    from howto_mongo_bulk_update_from_parquet_spark.sinks.keyed_table import (
+        append_delta, read_merged, upsert_into_keyed_table)
 
     assume(base or any(deltas))
     path = os.path.join(str(tmp_path_factory.mktemp("lsm_prop")),
                         uuid.uuid4().hex[:8])
     folded = _df(spark, base, dedup_keys=True)
     if base:
-        folded.write.parquet(os.path.join(path, "base"))
+        upsert_into_keyed_table(spark, folded, path=path, key="_id",
+                                updated_at_col=None)
     for d in deltas:
         ddf = _df(spark, d, dedup_keys=True)
         append_delta(spark, ddf, path=path, key="_id")

@@ -169,33 +169,3 @@ def test_lookup_unaffected(spark, tmp_path):
     out = lookup_keyed_table(spark, path, "k", values=[3, 4])
     got = {r["k"]: r["val"] for r in out.collect()}
     assert got == {3: -3, 4: 8}
-
-
-def test_legacy_base_keeps_classic_window(spark, tmp_path):
-    """ADVICE r12: a legacy (pre-versioned, base_version=None) base may
-    hold duplicate- or null-key rows; the classic window collapses them
-    to one row per key, but the fast path's left-anti 'untouched'
-    branch would pass them all through. The fast path must be gated on
-    base_version — a legacy base with pending deltas takes the classic
-    form and keeps the collapsed cardinality."""
-    import os
-    path = str(tmp_path / "legacy")
-    # legacy layout: plain parquet under <path>/base, NO manifest
-    (spark.createDataFrame(
-        [Row(k=1, val=10, tag="a"), Row(k=1, val=11, tag="b"),  # dup key
-         Row(k=2, val=20, tag="c"),
-         Row(k=None, val=99, tag="z")])                          # null key
-     .write.parquet(os.path.join(path, "base")))
-    append_delta(spark, spark.createDataFrame(
-        [Row(k=2, val=21, tag=None)],
-        "k long, val long, tag string"), path=path, key="k")
-    out = read_merged(spark, path, "k")
-    got = out.collect()
-    rows = {r["k"]: (r["val"], r["tag"]) for r in got}
-    # classic cardinality: one row per key — dup k=1 collapsed, the
-    # null keys collapsed to ONE row. The ungated fast path passed
-    # both k=1 rows and the null row through verbatim (4 rows).
-    assert len(got) == 3
-    assert sum(1 for r in got if r["k"] is None) == 1
-    assert rows[2] == (21, "c")
-    assert 1 in rows

@@ -833,9 +833,8 @@ def test_sql_create_table_as_select(spark, tmp_path):
 
 
 def test_sql_create_refuses_legacy_parquet_dir(spark, tmp_path):
-    """CREATE over a plain-parquet directory must refuse — the
-    upsert's legacy-root support would otherwise silently merge the
-    CTAS rows with the pre-existing files."""
+    """CREATE over a plain-parquet directory must refuse: CREATE owns
+    a fresh location and never writes next to files it did not make."""
     from howto_mongo_bulk_update_from_parquet_spark.sinks.sql_merge import (
         sql_create)
 

@@ -117,6 +117,13 @@ def test_bootstrap_then_increments_match_recompute(spark, tmp_path):
                                sum_col="val")
     assert st.get("bootstrap") and st["groups_touched"] == 3
     assert _view(spark, vp) == _recompute(spark, path)
+    # a window holding only an empty delta is a no-op round
+    append_delta(spark, spark.createDataFrame(
+        [], "k bigint, g bigint, val double"), path=path, key="k")
+    st = maintain_grouped_view(spark, table_path=path, key="k",
+                               view_path=vp, group_col="g",
+                               sum_col="val")
+    assert st["changes"] == 0 and st["groups_touched"] == 0
     # one window with a group move, a delete, an insert, and a
     # null-skip partial update (g=None keeps the old group)
     append_delta(spark, spark.createDataFrame([Row(k=1, g=9, val=11.0)]),
@@ -133,7 +140,7 @@ def test_bootstrap_then_increments_match_recompute(spark, tmp_path):
     st = maintain_grouped_view(spark, table_path=path, key="k",
                                view_path=vp, group_col="g",
                                sum_col="val")
-    assert st["applied_through"] == 4 and st["changes"] == 4
+    assert st["applied_through"] == 5 and st["changes"] == 4
     assert st["groups_touched"] == 5        # 0, 1, 2, 5 and 9
     assert _view(spark, vp) == _recompute(spark, path)
     # idempotent: nothing new, nothing touched
