@@ -482,26 +482,18 @@ def cmd_table_info(args: argparse.Namespace) -> int:
 
     from .sinks import fs as hfs
     from .sinks import zonemap as zm
-    from .sinks.keyed_table import (_base_dir, _carried_refs,
-                                    _complete_deltas, _current_manifest,
-                                    _delta_versions, _manifest_versions,
-                                    base_file_map)
+    from .sinks.keyed_table import snapshot
 
     spark = get_spark("table-info")
-    version, meta = _current_manifest(spark, args.table)
+    snap = snapshot(spark, args.table)
+    version, meta, floor = snap.version, snap.meta, snap.floor
     if not version:
         print(f"no versioned keyed table at {args.table}",
               file=sys.stderr)
         return 2
-    base = _base_dir(args.table, version)
-    files = sorted(base_file_map(spark, args.table, version))
-    carried = _carried_refs(spark, args.table, version)
-    retained = sorted(
-        int(d.split("_v")[1]) for d in hfs.listdir(spark, args.table)
-        if d.startswith("base_v"))
-    floor = int(meta.get("folded_through", 0) or 0)
-    deltas = _delta_versions(spark, args.table)
-    pending = _complete_deltas(spark, args.table, floor=floor)
+    base = snap.base.dir
+    files = sorted(snap.base.file_map)
+    deltas = list(snap.listed)
     if meta.get("buckets"):
         layout = (f"hash ({meta['buckets']} buckets on "
                   f"{meta.get('bucket_key')})")
@@ -528,12 +520,12 @@ def cmd_table_info(args: argparse.Namespace) -> int:
         **({"merge_key": meta["merge_key"]}
            if meta.get("merge_key") else {}),
         "base_files": len(files),
-        "base_files_carried": len(carried),
-        "retained_versions": retained,
-        "manifest_pointers": _manifest_versions(spark, args.table),
+        "base_files_carried": len(snap.base.refs),
+        "retained_versions": list(snap.bases),
+        "manifest_pointers": list(snap.pointers),
         "folded_through": floor,
         "deltas_on_disk": deltas,
-        "deltas_pending": pending,
+        "deltas_pending": list(snap.deltas),
         "deltas_folded_awaiting_gc": [v for v in deltas if v <= floor],
         # claim debris: incomplete (no _SUCCESS) or complete-but-
         # unpublished base/delta dirs. Racing writers resolve these
@@ -541,13 +533,11 @@ def cmd_table_info(args: argparse.Namespace) -> int:
         # stream) clears them via recover_dead_claims — this line is
         # how an operator sees there is anything to decide about
         "claim_debris": sorted(
-            d for d in hfs.listdir(spark, args.table)
-            if (d.startswith("base_v") or d.startswith("delta_"))
-            and (not hfs.exists(spark, hfs.join(args.table, d, "_SUCCESS"))
-                 or (d.startswith("base_v")
-                     and int(d.split("_v")[1]) not in
-                     _manifest_versions(spark, args.table)
-                     and int(d.split("_v")[1]) != version))),
+            d for d in ([f"base_v{v:05d}" for v in snap.bases]
+                        + [f"delta_{v:05d}" for v in snap.listed])
+            if not hfs.exists(spark, hfs.join(args.table, d, "_SUCCESS"))
+            or (d.startswith("base_v") and int(d[6:]) not in snap.pointers
+                and int(d[6:]) != version)),
     }
     props = {k: v for k, v in meta.items() if k.startswith("user.")}
     if props:
@@ -967,10 +957,8 @@ def cmd_changefeed(args: argparse.Namespace) -> int:
                             op_col=args.op_col, checkpoint=args.checkpoint)
     print(f"changefeed {args.source} applied to {args.table}")
     if args.compact_pending:
-        from .sinks.keyed_table import (compact_pruned, folded_through,
-                                        _complete_deltas)
-        pending = _complete_deltas(spark, args.table,
-                                   floor=folded_through(spark, args.table))
+        from .sinks.keyed_table import compact_pruned, snapshot
+        pending = snapshot(spark, args.table).deltas
         if len(pending) >= args.compact_pending:
             _, stats = compact_pruned(spark, args.table, args.key)
             print(f"auto-fold: {len(pending)} pending deltas >= "
@@ -1054,7 +1042,7 @@ def cmd_dedup_incremental(args: argparse.Namespace) -> int:
 
     from .plans.incremental_dedup import incremental_near_dup_flags
     from .plans.incremental_spans import incremental_dup_spans
-    from .sinks.keyed_table import (read_keyed_table, read_pending_deltas,
+    from .sinks.keyed_table import (_read_current, _read_pending, snapshot,
                                     upsert_into_keyed_table)
 
     if args.mode == "vec" and not args.vectors:
@@ -1088,23 +1076,22 @@ def cmd_dedup_incremental(args: argparse.Namespace) -> int:
     docs = batch.select(F.col(args.id_col).alias("doc_id"),
                         F.col(args.text_col).alias("text"))
 
-    try:
-        # honor_buckets: a --buckets index stored on the probe key
-        # (spans mode: h) feeds the probe join exchange-free on the
-        # index side — only the batch shuffles
-        index = read_keyed_table(spark, args.index, honor_buckets=True)
-        seeded = True
-    except FileNotFoundError:
-        # first arrival: probe against an empty index (in-batch dedup
-        # still applies), then seed it if --update-index
-        seeded = False
-        index = None
+    # one resolution of the index serves its base read and its tail.
+    # No index yet (first arrival): probe against an empty index
+    # (in-batch dedup still applies), then seed it if --update-index
+    index_snap = snapshot(spark, args.index)
+    seeded = bool(index_snap.version)
+    # honor_buckets: a --buckets index stored on the probe key
+    # (spans mode: h) feeds the probe join exchange-free on the
+    # index side — only the batch shuffles
+    index = _read_current(index_snap, honor_buckets=True) if seeded \
+        else None
     # LSM tail: signatures appended since the last fold live in
     # pending deltas, invisible to the committed-base read — probe
     # them as a SEPARATE small join so the base scan stays bucketed
     # (read_pending_deltas docstring; sound here because the index is
     # append-only, never merge-semantics)
-    pending = read_pending_deltas(spark, args.index) if seeded else None
+    pending = _read_pending(index_snap) if seeded else None
 
     if args.mode == "near":
         # the store's single merge key: a bucket_key-bucketed index
@@ -1163,14 +1150,11 @@ def cmd_dedup_incremental(args: argparse.Namespace) -> int:
     else:
         out.show(args.limit, truncate=False)
     if args.update_index and args.index_lsm and seeded:
-        from .sinks.keyed_table import (append_delta, compact,
-                                        folded_through, _complete_deltas)
+        from .sinks.keyed_table import append_delta, compact, snapshot
         append_delta(spark, index_rows, path=args.index, key=index_key)
         action = "appended (LSM)"
         if args.compact_pending:
-            n_pend = len(_complete_deltas(
-                spark, args.index,
-                floor=folded_through(spark, args.index)))
+            n_pend = len(snapshot(spark, args.index).deltas)
             if n_pend >= args.compact_pending:
                 # the index is hash-layout (bucketed): the fold itself
                 # is the exchange-free bucketed rewrite

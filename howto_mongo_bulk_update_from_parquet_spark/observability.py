@@ -35,25 +35,11 @@ def rotating_file_handler(path: str, max_bytes: int = 1_000_000,
         path, maxBytes=max_bytes, backupCount=backup_count)
 
 
-def cloudwatch_handler(**kwargs: Any) -> logging.Handler:
-    """CloudWatch sink (reference src/func/log.py:15-32 setup_logger).
-    The `watchtower` package isn't in this environment — honest gate;
-    any stdlib logging.Handler plugs into StructuredLog the same way."""
-    try:
-        import watchtower  # type: ignore[import-not-found]
-    except ImportError as exc:
-        raise NotImplementedError(
-            "CloudWatch handler requires the public `watchtower` package "
-            "(pip install watchtower) — not present in this environment"
-        ) from exc
-    return watchtower.CloudWatchLogHandler(**kwargs)
-
-
 class StructuredLog:
     """Minimal JSON-lines event logger (stdlib-only, picklable-free —
     driver-side use). `handlers` tees every record, as its JSON line,
-    into arbitrary stdlib logging.Handlers (rotating file, CloudWatch,
-    syslog, …) — the reference's multi-handler config surface
+    into arbitrary stdlib logging.Handlers (rotating file, a
+    CloudWatch handler, syslog, …) — the reference's multi-handler config surface
     (config.yaml logging.root.handlers) without a hard dependency."""
 
     def __init__(self, stream: TextIO | None = None,

@@ -430,7 +430,7 @@ def q_keyed_autosize(spark: SparkSession, sf_dir: str) -> DataFrame:
     import tempfile
 
     from ..sinks import fs as hfs
-    from ..sinks.keyed_table import _current_manifest, base_file_map
+    from ..sinks.keyed_table import snapshot
 
     target_b = 8 * 1024
     orders = load_table(spark, sf_dir, "orders")
@@ -444,15 +444,14 @@ def q_keyed_autosize(spark: SparkSession, sf_dir: str) -> DataFrame:
                             range_files=1, target_file_bytes=target_b)
     upsert_into_keyed_table(spark, rows.filter(F.col("k") % 5 != 0),
                             path=path, key="k", updated_at_col=None)
-    v2, _ = _current_manifest(spark, path)
-    n2 = len(base_file_map(spark, path, v2))
+    n2 = len(snapshot(spark, path).base.file_map)
     ups = rows.filter(F.col("k") % 10 == 0).select(
         "k", (F.col("price") * 2).alias("price"), "status")
     upsert_into_keyed_table(spark, ups, path=path, key="k",
                             updated_at_col=None)
-    v3, meta = _current_manifest(spark, path)
-    n3 = len(base_file_map(spark, path, v3))
-    sizes = hfs.listdir_sizes(spark, hfs.join(path, f"base_v{v3:05d}"))
+    snap = snapshot(spark, path)
+    n3, meta = len(snap.base.file_map), snap.meta
+    sizes = hfs.listdir_sizes(spark, snap.base.dir)
     fat = {n: s for n, s in sizes.items()
            if not n.startswith("_") and s > 4 * target_b}
     if not (n3 > n2 >= 1 and n3 > 1) or fat or \
@@ -887,8 +886,8 @@ def q_keyed_schema_strict(spark: SparkSession, sf_dir: str) -> DataFrame:
                             .select("k", F.lit("N").alias("flag")),
                             path=path, key="k", updated_at_col=None,
                             schema_mode="merge")
-    from ..sinks.keyed_table import table_meta
-    if table_meta(spark, path).get("schema.mode") != "strict":
+    from ..sinks.keyed_table import snapshot
+    if snapshot(spark, path).meta.get("schema.mode") != "strict":
         raise AssertionError("merge round dropped the strict pin")
     rogue2 = target.limit(1).select("k", "price", "status",
                                     F.lit(1).alias("rogue2"))

@@ -28,7 +28,7 @@ only path that scales per-arrival cost at 100 TB.
 
 Emission order: strictly by delta version, truncated at the first
 gap or incomplete (claimed, mid-write) slot — the same contiguity
-discipline as `_foldable_deltas`, so a consumer can never observe
+discipline as `_fold_run`, so a consumer can never observe
 change v+1 before a concurrent appender finishes v.
 """
 
@@ -41,10 +41,8 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from . import fs as hfs
-from .keyed_table import (_TOMBSTONE, _base_schema, _complete_deltas,
-                          _current_manifest, _delta_versions, _hits_base,
-                          _meta_floor, _read_base, _read_delta_dir,
-                          current_base_version)
+from .keyed_table import (_TOMBSTONE, Snapshot, _hits_base, _read_delta_dir,
+                          snapshot)
 
 #: system columns appended to every change row (Delta CDF analogs:
 #: _commit_version / _change_type)
@@ -61,11 +59,6 @@ class ChangeHistoryUnavailable(RuntimeError):
     were already reclaimed (folded + GC'd or vacuumed). Recover by
     snapshot-diffing retained versions (`operators/diff.py`) and
     resuming the feed from the current watermark."""
-
-
-def _complete(spark: SparkSession, path: str, v: int) -> bool:
-    return hfs.exists(spark,
-                      hfs.join(path, f"delta_{v:05d}", "_SUCCESS"))
 
 
 def read_table_changes(spark: SparkSession, path: str, *,
@@ -101,12 +94,19 @@ def read_table_changes(spark: SparkSession, path: str, *,
     Raises `ChangeHistoryUnavailable` when the window reaches
     versions already reclaimed; truncates (never errors) at a live
     appender's incomplete slot so emission stays contiguous."""
+    return _table_changes(snapshot(spark, path), after=after, until=until,
+                          with_preimage=with_preimage, key=key)
+
+
+def _table_changes(snap: Snapshot, *, after: int = 0,
+                   until: int | None = None, with_preimage: bool = False,
+                   key: str | None = None) -> DataFrame:
+    """`read_table_changes` over one resolved snapshot: its base, its
+    watermark and its delta listing."""
     if with_preimage and not key:
         raise ValueError("with_preimage needs the merge key")
-    # base version and watermark from ONE manifest read
-    version_now, meta = _current_manifest(spark, path)
-    floor = _meta_floor(meta)
-    present = _delta_versions(spark, path)
+    spark, path = snap.spark, snap.path
+    version_now, floor, present = snap.version, snap.floor, snap.listed
     known_max = max(present[-1] if present else 0, floor)
     hi = known_max if until is None else min(until, known_max)
     have = set(present)
@@ -118,7 +118,10 @@ def read_table_changes(spark: SparkSession, path: str, *,
                 missing.append(v)        # folded AND reclaimed
                 continue
             break                        # gap above the floor: stop
-        if not _complete(spark, path, v):
+        # above the floor the snapshot knows which slots committed; a
+        # folded delta still on disk is checked directly
+        if not (v in snap.deltas or (v <= floor and hfs.exists(
+                spark, hfs.join(path, f"delta_{v:05d}", "_SUCCESS")))):
             break                        # live appender mid-write
         versions.append(v)
     if missing:
@@ -136,7 +139,7 @@ def read_table_changes(spark: SparkSession, path: str, *,
     if not versions:
         if not version_now:
             raise ValueError(f"no keyed table at {path}")
-        base = _read_base(spark, path, version_now)
+        base = snap.base.read()
         empty = spark.createDataFrame([], base.schema)
         out = (empty
                .withColumn(VERSION_COL, F.lit(None).cast("int"))
@@ -149,7 +152,7 @@ def read_table_changes(spark: SparkSession, path: str, *,
         return out
     deltas = {v: _read_delta_dir(spark, path, v) for v in versions}
     if version_now:
-        base = _read_base(spark, path, version_now)
+        base = snap.base.read()
     else:                                # deltas-only table
         base = spark.createDataFrame([], deltas[versions[0]].schema)
     # the full payload schema (base + every served delta): a window
@@ -162,8 +165,8 @@ def read_table_changes(spark: SparkSession, path: str, *,
             if c not in ptypes and c != _TOMBSTONE:
                 ptypes[c] = t
     if with_preimage:
-        return _with_preimage_one_pass(spark, path, key, versions, floor,
-                                       deltas, base, version_now, ptypes)
+        return _with_preimage_one_pass(snap, key, versions, deltas, base,
+                                       ptypes)
     parts = [deltas[v].withColumn(VERSION_COL, F.lit(v))
              for v in versions]
     allv = reduce(
@@ -181,10 +184,9 @@ def read_table_changes(spark: SparkSession, path: str, *,
     return allv.select(*cols, *tail)
 
 
-def _with_preimage_one_pass(spark: SparkSession, path: str, key: str,
-                            versions: list[int], floor: int,
+def _with_preimage_one_pass(snap: Snapshot, key: str, versions: list[int],
                             deltas: dict, base: DataFrame,
-                            version_now: int, ptypes: dict) -> DataFrame:
+                            ptypes: dict) -> DataFrame:
     """Pre-image enrichment as ONE window pass (r16 optimization).
 
     The r15 form computed each version's pre-state with its own chain
@@ -212,7 +214,6 @@ def _with_preimage_one_pass(spark: SparkSession, path: str, key: str,
     per_version_merge."""
     from pyspark.sql.window import Window
 
-    committed = _complete_deltas(spark, path, floor=floor)
     # The enriched form's payload surface must span base + every
     # committed delta UP TO the window — not just the window deltas:
     # a column that arrived via an EARLIER unfolded delta (schema
@@ -223,11 +224,11 @@ def _with_preimage_one_pass(spark: SparkSession, path: str, key: str,
     # column the requested versions never had, and its schema must
     # not change when later deltas land (review r14; found by
     # test_two_views_one_table_independent_offsets).
-    hist = [e for e in committed if e <= versions[-1]]
+    hist = [e for e in snap.deltas if e <= versions[-1]]
     hist_dfs = dict(deltas)
     for e in hist:
         if e not in hist_dfs:
-            hist_dfs[e] = _read_delta_dir(spark, path, e)
+            hist_dfs[e] = _read_delta_dir(snap.spark, snap.path, e)
             for c, t in hist_dfs[e].dtypes:
                 if c not in ptypes and c != _TOMBSTONE:
                     ptypes[c] = t
@@ -241,8 +242,7 @@ def _with_preimage_one_pass(spark: SparkSession, path: str, key: str,
         kdf = deltas[v].select(key).filter(F.col(key).isNotNull())
         win_keys = kdf if win_keys is None else win_keys.unionByName(kdf)
     win_keys = win_keys.distinct()
-    hits = _hits_base(spark, path, key, base, version_now or None,
-                      versions)
+    hits = _hits_base(snap, key, base, versions)
     parts = [deltas[v].withColumn("__v", F.lit(v)) for v in versions]
     parts += [hist_dfs[e].withColumn("__v", F.lit(e))
               for e in hist if e not in deltas]
@@ -318,11 +318,11 @@ def changes_schema(spark: SparkSession, path: str) -> T.StructType:
     sources cannot mergeSchema per batch). Payload columns absent
     from an individual delta file — tombstones, pre-evolution batches
     — read as NULL under this schema, matching the batch reader."""
-    version = current_base_version(spark, path)
-    if not version:
+    snap = snapshot(spark, path)
+    if not snap.version:
         raise ValueError(f"no keyed table at {path}")
     fields = [T.StructField(f.name, f.dataType, True)
-              for f in _base_schema(spark, path, version).fields
+              for f in snap.base.schema.fields
               if f.name != _TOMBSTONE]
     fields.append(T.StructField(_TOMBSTONE, T.BooleanType(), True))
     return T.StructType(fields)

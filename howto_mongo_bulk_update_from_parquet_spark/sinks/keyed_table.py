@@ -26,14 +26,26 @@ paths.
 
 On-disk layout: `base_v{NNNNN}/` base directories, `delta_{NNNNN}/`
 delta directories and the VERSIONED manifest files `_CURRENT.v{NNNNN}`
-— nothing else. `_current_manifest` is the one resolver of (base
-version, manifest) for every reader and writer: the highest manifest
-wins. Commits publish a manifest by writing a temp file and renaming
-it into place only if the target is absent (`fs.rename_no_clobber`).
+— nothing else. Every keyed statement resolves the table ONCE into a
+`Snapshot` (`snapshot`): one root listing, one read of the newest
+manifest, one `_SUCCESS` check per delta above its `folded_through`
+floor. Base version, manifest metadata, floor and committed pending
+deltas therefore always come from one resolution, and the base's file
+map and schema are built from it at most once. Readers, writers and
+SQL verbs take that snapshot instead of re-resolving the table. Only
+the fences that must see fresh state read fresh state: the commit's
+pointer compare-and-swap (`_commit_version`), the next free base
+slot (`_next_base_version`) and the claim checks.
+
+Commits publish a manifest by writing a temp file and renaming it
+into place only if the target is absent (`fs.rename_no_clobber`).
 Because a commit creates a NEW name and retires older pointers only
 after the new one is visible, there is never a missing-pointer
 window; a table whose pointers were all removed by hand recovers
-from its complete base directories (see `_current_manifest`).
+from its complete base directories (see `snapshot`). The rewriting
+writers (upsert, compact, delete) share one prelude (`_fold_run`) and
+one commit tail (`_commit_base`); the pruned fold and restore share
+its publish + GC step (`_publish`).
 
 Concurrent writers: two upsert rounds that both read base version N
 both try to produce N+1. The loser is caught at TWO fences and gets a
@@ -55,6 +67,8 @@ from __future__ import annotations
 
 import math
 import re
+from dataclasses import dataclass, field
+from functools import cached_property
 
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -104,12 +118,17 @@ def _claim_is_stale(spark: SparkSession, dst: str,
     if truncated:
         return False                     # can't prove death — presume live
     parent = dst.rstrip("/").rsplit("/", 1)[0]
+    return (_fs_now_ms(spark, parent) - newest) > grace_ms
+
+
+def _fs_now_ms(spark: SparkSession, dir_path: str) -> int:
+    """'Now' by the filesystem's clock (a probe file's mtime under
+    `dir_path`), this process's clock when the probe is unwritable."""
     try:
-        now_ms = hfs.probe_now_ms(spark, parent)
+        return hfs.probe_now_ms(spark, dir_path)
     except Exception:                    # probe unwritable: fall back
         import time
-        now_ms = int(time.time() * 1000)
-    return (now_ms - newest) > grace_ms
+        return int(time.time() * 1000)
 
 
 def _is_vanished_snapshot_error(exc: BaseException) -> bool:
@@ -121,18 +140,23 @@ def _is_vanished_snapshot_error(exc: BaseException) -> bool:
     at first resolution, before any snapshot was taken.)"""
     from pyspark.errors import AnalysisException
     if isinstance(exc, AnalysisException):
-        cond = None
-        try:
-            cond = exc.getCondition()
-        except Exception:                # older surface / detached JVM
-            pass
-        if cond == "PATH_NOT_FOUND":
-            return True
-        first = str(exc).split("\n", 1)[0]
-        return cond is None and "Path does not exist" in first
+        return _analysis_says(exc, {"PATH_NOT_FOUND"}, "Path does not exist")
     jexc = getattr(exc, "java_exception", None)
     return jexc is not None and _java_chain_has_class(
         jexc, "FileNotFoundException")
+
+
+def _analysis_says(exc, conditions, marker: str) -> bool:
+    """Whether an AnalysisException carries one of the error
+    `conditions` — or, on a surface that reports no condition, has
+    `marker` in its first line (anything below is stack trace)."""
+    try:
+        cond = exc.getCondition()
+    except Exception:                    # older surface / detached JVM
+        cond = None
+    if cond is not None:
+        return cond in conditions
+    return marker in str(exc).split("\n", 1)[0]
 
 
 def _vanished_snapshot_guard(fn):
@@ -249,21 +273,9 @@ def _carried_refs(spark: SparkSession, path: str,
 
 def base_file_map(spark: SparkSession, path: str,
                   version: int) -> dict[str, str]:
-    """{file name -> full path} of every data file of a base version:
-    the files in its own directory plus carried references. File
-    names are job-UUID-unique, so a collision between an own file and
-    a ref means a corrupt sidecar — fail loudly rather than silently
-    shadowing one of the two."""
-    base = _base_dir(path, version)
-    out = {f: hfs.join(base, f) for f in _base_data_files(spark, base)}
-    for ref in _carried_refs(spark, path, version):
-        name = ref.rsplit("/", 1)[-1]
-        if name in out:
-            raise IOError(
-                f"carried ref {ref} of {base} collides with an own "
-                f"file — corrupt {_CARRIED} sidecar")
-        out[name] = hfs.join(path, ref)
-    return out
+    """{file name -> full path} of every data file of a base version
+    (see `_Base.file_map`)."""
+    return _Base(spark, path, version).file_map
 
 
 _PQ_SCHEMA_MEMO: dict[tuple, T.StructType] = {}
@@ -316,7 +328,7 @@ def _seed_schema_memo(spark: SparkSession, dirpath: str,
     listing, taken AFTER all sidecars land, so it matches what readers
     list. One write means one schema in every file, so the single-
     footer and the merged inference agree and both keys are seeded
-    (base versions read merged, see `_read_base`)."""
+    (base versions read merged, see `_Base.schema`)."""
     if any(not isinstance(f.dataType, _SEEDABLE_ATOMIC)
            for f in schema.fields):
         return
@@ -351,16 +363,10 @@ def _read_committed_parquet(spark: SparkSession, paths: list[str],
     a fresh first read. Explicit file lists are their own fingerprint.
     Results are never cached — only the schema, which is derived
     metadata of immutable files."""
-    key = _schema_memo_key(spark, paths, merge_schema)
-    schema = _PQ_SCHEMA_MEMO.get(key)
-    reader = spark.read
-    if schema is not None:
-        return reader.schema(schema).parquet(*paths)
-    if merge_schema:
-        reader = reader.option("mergeSchema", "true")
-    df = reader.parquet(*paths)
-    _memo_put(_PQ_SCHEMA_MEMO, key, df.schema)
-    return df
+    schema = _memo_schema(spark,
+                          _schema_memo_key(spark, paths, merge_schema),
+                          paths, merge_schema)
+    return spark.read.schema(schema).parquet(*paths)
 
 
 def _schema_memo_key(spark: SparkSession, paths: list[str],
@@ -372,15 +378,17 @@ def _schema_memo_key(spark: SparkSession, paths: list[str],
     return (tuple(paths), fp, merge_schema)
 
 
-def _committed_schema(spark: SparkSession, paths: list[str],
-                      merge_schema: bool = False) -> T.StructType:
-    """The schema `_read_committed_parquet` reads `paths` with: the
-    memo entry when present (no DataFrame is built, so a hit costs no
-    py4j round trip), else one footer inference, memoized."""
-    schema = _PQ_SCHEMA_MEMO.get(
-        _schema_memo_key(spark, paths, merge_schema))
+def _memo_schema(spark: SparkSession, key: tuple, paths: list[str],
+                 merge_schema: bool) -> T.StructType:
+    """The memo entry `key` names, else one footer inference of
+    `paths`, memoized."""
+    schema = _PQ_SCHEMA_MEMO.get(key)
     if schema is None:
-        schema = _read_committed_parquet(spark, paths, merge_schema).schema
+        reader = spark.read
+        if merge_schema:
+            reader = reader.option("mergeSchema", "true")
+        schema = reader.parquet(*paths).schema
+        _memo_put(_PQ_SCHEMA_MEMO, key, schema)
     return schema
 
 
@@ -456,57 +464,86 @@ def _read_deltas_tagged(spark: SparkSession, path: str,
     return df
 
 
-def _read_base(spark: SparkSession, path: str, version: int) -> DataFrame:
-    """Read a base version's data, resolving carry-by-reference when
-    present: a self-contained base (no sidecar) reads its directory, a
-    carried base the explicit resolved file list. Both read WITH schema
-    merge: a pruned fold whose deltas widened the schema leaves carried
-    files on the old schema — by reference, or copied into the new
-    directory by `compact_pruned(materialize=True)` — and a
-    single-footer read would silently drop the new column whenever an
-    old-generation file sorts first (their rows surface it as NULL —
-    exactly what the full fold's unionByName produces). A base one
-    writer wrote holds one schema, so the merge changes nothing there,
-    and the writer seeds the merged key of the memo too."""
-    return _read_committed_parquet(
-        spark, _base_read_paths(spark, path, version), merge_schema=True)
+class _Base:
+    """One committed base version's data files, listed once: the
+    files in its own directory plus the files it carries by reference
+    in older base directories (`_CARRIED.json`, read only when the
+    listing shows one). The file map, the read paths and the schema
+    every reader needs derive from that one listing, each built at
+    most once."""
 
+    def __init__(self, spark: SparkSession, path: str, version: int):
+        self.spark, self.path, self.version = spark, path, version
+        self.dir = _base_dir(path, version)
 
-def _base_read_paths(spark: SparkSession, path: str,
-                     version: int) -> list[str]:
-    """The paths `_read_base` reads a base version from."""
-    refs = _carried_refs(spark, path, version)
-    base = _base_dir(path, version)
-    if not refs:
-        return [base]
-    own = [hfs.join(base, f) for f in _base_data_files(spark, base)]
-    return own + [hfs.join(path, r) for r in refs]
+    @cached_property
+    def names(self) -> list[str]:
+        return hfs.listdir(self.spark, self.dir)
 
+    @cached_property
+    def refs(self) -> list[str]:
+        if _CARRIED not in self.names:
+            return []
+        return _carried_refs(self.spark, self.path, self.version)
 
-def _base_schema(spark: SparkSession, path: str,
-                 version: int) -> T.StructType:
-    """The schema `_read_base` resolves for a base version, from the
-    memo without building a DataFrame. Every file of the version reads
-    with it: a file lacking a column (an older schema generation,
-    carried or copied) surfaces it as NULL."""
-    return _committed_schema(spark, _base_read_paths(spark, path, version),
-                             merge_schema=True)
+    @cached_property
+    def file_map(self) -> dict[str, str]:
+        """{file name -> full path} of every data file. File names are
+        job-UUID-unique, so a collision between an own file and a ref
+        means a corrupt sidecar — fail loudly rather than silently
+        shadowing one of the two."""
+        out = {f: hfs.join(self.dir, f) for f in self.names
+               if not f.startswith(("_", "."))}
+        for ref in self.refs:
+            name = ref.rsplit("/", 1)[-1]
+            if name in out:
+                raise IOError(
+                    f"carried ref {ref} of {self.dir} collides with an "
+                    f"own file — corrupt {_CARRIED} sidecar")
+            out[name] = hfs.join(self.path, ref)
+        return out
 
+    @cached_property
+    def read_paths(self) -> list[str]:
+        """The directory of a self-contained base, else the explicit
+        resolved file list."""
+        return list(self.file_map.values()) if self.refs else [self.dir]
 
-def _read_base_files(spark: SparkSession, path: str, version: int,
-                     files: list[str]) -> DataFrame:
-    """A subset of a base version's data files (full paths, e.g. the
-    zone-map-kept set) read with the VERSION's schema. Inferring the
-    subset's own schema would cost one `parquet at` footer job per new
-    subset, and could drop a column the subset's files happen to lack;
-    with the version's schema every subset reads exactly like the full
-    base, filtered. An empty subset plans an empty relation inside the
-    JVM (the optimizer prunes the false filter and the scan with it):
-    no Python-built frame, no tasks."""
-    reader = spark.read.schema(_base_schema(spark, path, version))
-    if files:
-        return reader.parquet(*files)
-    return reader.parquet(_base_dir(path, version)).where(F.lit(False))
+    @cached_property
+    def schema(self) -> T.StructType:
+        """The schema every file of the version reads with, resolved
+        WITH schema merge: a pruned fold whose deltas widened the
+        schema leaves carried files on the old schema — by reference,
+        or copied into the new directory by
+        `compact_pruned(materialize=True)` — and a single-footer read
+        would silently drop the new column whenever an old-generation
+        file sorts first (their rows surface it as NULL — exactly what
+        the full fold's unionByName produces). A base one writer wrote
+        holds one schema, so the merge changes nothing there, and the
+        writer seeds the merged key of the memo too. The memo key is
+        `_read_committed_parquet`'s, fingerprinted by the listing this
+        object already holds."""
+        fp = () if self.refs else tuple(sorted(self.names))
+        return _memo_schema(self.spark, (tuple(self.read_paths), fp, True),
+                            self.read_paths, True)
+
+    def read(self) -> DataFrame:
+        return self.spark.read.schema(self.schema).parquet(*self.read_paths)
+
+    def read_files(self, files: list[str]) -> DataFrame:
+        """A subset of the data files (full paths, e.g. the
+        zone-map-kept set) read with the VERSION's schema. Inferring
+        the subset's own schema would cost one `parquet at` footer job
+        per new subset, and could drop a column the subset's files
+        happen to lack; with the version's schema every subset reads
+        exactly like the full base, filtered. An empty subset plans an
+        empty relation inside the JVM (the optimizer prunes the false
+        filter and the scan with it): no Python-built frame, no
+        tasks."""
+        reader = self.spark.read.schema(self.schema)
+        if files:
+            return reader.parquet(*files)
+        return reader.parquet(self.dir).where(F.lit(False))
 
 
 def _base_dir(path: str, version: int) -> str:
@@ -517,16 +554,161 @@ def _manifest_name(version: int) -> str:
     return f"{_MANIFEST}.v{version:05d}"
 
 
-def _manifest_versions(spark: SparkSession, path: str) -> list[int]:
-    return sorted(int(m.group(1)) for d in hfs.listdir(spark, path)
-                  if (m := _MANIFEST_V_RE.match(d)))
+def _delta_dir(path: str, v: int) -> str:
+    return hfs.join(path, f"delta_{v:05d}")
+
+
+def _versions(names: list[str], rx: re.Pattern) -> list[int]:
+    return sorted(int(m.group(1)) for d in names if (m := rx.match(d)))
+
+
+def _meta_int(meta: dict[str, str], name: str) -> int:
+    try:
+        return int(meta.get(name, 0) or 0)
+    except ValueError:
+        return 0
+
+
+@dataclass(frozen=True)
+class Snapshot:
+    """One resolution of a keyed table's state, made by `snapshot` and
+    passed to every reader and writer of one statement. Its version,
+    manifest metadata, `folded_through` floor and committed pending
+    deltas come from ONE root listing and ONE manifest read, so a
+    reader never pairs a new base with a stale watermark (or vice
+    versa) — resolving them in two passes would let a fold commit in
+    between and resurrect exactly what the watermark hides. The
+    base's file map and schema (`base`, `schema`) are built lazily
+    and at most once.
+
+    A snapshot is never refreshed: a writer that commits against a
+    stale one loses the manifest compare-and-swap with a clean
+    `ConcurrentWriteError`."""
+    spark: SparkSession = field(repr=False, compare=False)
+    path: str
+    #: committed base version, 0 = none
+    version: int
+    #: key=value metadata of that version's manifest
+    meta: dict[str, str]
+    #: the delta version through which deltas are folded into the base
+    floor: int
+    #: committed (has _SUCCESS) deltas above the floor — the set a
+    #: reader applies
+    deltas: tuple[int, ...]
+    #: every `delta_*` directory listed, in any state
+    listed: tuple[int, ...]
+    #: published manifest pointers
+    pointers: tuple[int, ...]
+    #: every `base_v*` directory listed, in any state
+    bases: tuple[int, ...]
+
+    @cached_property
+    def base(self) -> "_Base | None":
+        return _Base(self.spark, self.path, self.version) \
+            if self.version else None
+
+    def require_base(self) -> "_Base":
+        if not self.version:
+            raise FileNotFoundError(
+                f"no versioned keyed table at {self.path}")
+        return self.base
+
+    @cached_property
+    def schema(self) -> "T.StructType | None":
+        """The table's declared schema: the base's, else the newest
+        delta's; None when no table exists (first write defines it)."""
+        if self.version:
+            return self.base.schema
+        if self.listed:
+            return _read_delta_dir(self.spark, self.path,
+                                   self.listed[-1]).schema
+        return None
+
+    def key_dtype(self, key: str):
+        """Declared DataType of `key`, None when the table (or the
+        column) does not exist yet."""
+        s = self.schema
+        return s[key].dataType if s is not None and key in s.names else None
+
+
+#: reads of the newest manifest pointer `snapshot` makes before it
+#: gives up: `_commit_version` retires old pointers right after
+#: publishing, so a read can find its file already deleted
+_MANIFEST_READS = 4
+
+
+def snapshot(spark: SparkSession, path: str) -> Snapshot:
+    """Resolve the table at `path` once: one root listing (manifest
+    pointers, `base_v*` and `delta_*` directories), one read of the
+    newest manifest `_CURRENT.v{NNNNN}`, and one `_SUCCESS` check per
+    delta above its `folded_through` floor. Version 0 with empty
+    metadata when `path` holds no table.
+
+    A pointer retired between the listing and the read re-lists and
+    retries (`_MANIFEST_READS` reads in all) rather than return empty
+    metadata, which would collapse the watermark to 0 and resurrect
+    folded deltas; if every read races a retirement, it fails
+    retryable instead of guessing (ADVICE r10).
+
+    Recovery, when every pointer is gone (manual damage — the commit
+    protocol never leaves a pointerless window): the version is the
+    SECOND-newest complete (has _SUCCESS) `base_v{NNNNN}` when several
+    survive, since the newest may be a data write whose manifest
+    publish never landed — stale-but-committed beats
+    newest-but-unconfirmed — and its metadata is empty."""
+    for _ in range(_MANIFEST_READS):
+        names = hfs.listdir(spark, path)
+        pointers = _versions(names, _MANIFEST_V_RE)
+        bases = _versions(names, _BASE_RE)
+        meta: dict[str, str] = {}
+        if pointers:
+            version = pointers[-1]
+            txt = hfs.read_text(spark,
+                                hfs.join(path, _manifest_name(version)))
+            if txt is None:
+                continue                     # retired mid-read — re-list
+            for line in txt.splitlines()[1:]:
+                k, sep, v = line.partition("=")
+                if sep:
+                    meta[k.strip()] = v.strip()
+        else:
+            complete = [v for v in bases if hfs.exists(
+                spark, hfs.join(_base_dir(path, v), "_SUCCESS"))]
+            version = complete[-2] if len(complete) >= 2 else \
+                (complete[-1] if complete else 0)
+        floor = _meta_int(meta, "folded_through")
+        listed = _versions(names, _DELTA_RE)
+        deltas = tuple(v for v in listed if v > floor and hfs.exists(
+            spark, hfs.join(_delta_dir(path, v), "_SUCCESS")))
+        return Snapshot(spark, path, version, meta, floor, deltas,
+                        tuple(listed), tuple(pointers), tuple(bases))
+    raise ConcurrentWriteError(
+        f"manifest pointer for {path} kept racing retirements across "
+        f"{_MANIFEST_READS} reads — re-read and retry")
 
 
 def current_base_version(spark: SparkSession, path: str) -> int:
-    """Committed base version, 0 = none: the version half of
-    `_current_manifest`, so every reader and writer resolves the same
-    base by the same rule."""
-    return _current_manifest(spark, path)[0]
+    """Committed base version, 0 = none."""
+    return snapshot(spark, path).version
+
+
+def table_meta(spark: SparkSession, path: str) -> dict[str, str]:
+    """Key=value metadata recorded in the newest committed manifest
+    (lines after the version line): `folded_through` (the delta version
+    up to which deltas are already folded into the base — readers
+    ignore deltas at or below it, making post-fold delta-file removal
+    pure GC instead of a correctness fence), and the base bucketing
+    spec (`buckets`/`bucket_key`). Empty when `path` holds no table or
+    was recovered without a pointer."""
+    return snapshot(spark, path).meta
+
+
+def folded_through(spark: SparkSession, path: str) -> int:
+    """Highest delta version already folded into the committed base
+    (0 = none). `read_merged` ignores deltas at or below this; new
+    delta claims start above it so version numbers stay monotonic
+    across compactions."""
+    return snapshot(spark, path).floor
 
 
 def read_keyed_table(spark: SparkSession, path: str,
@@ -545,95 +727,31 @@ def read_keyed_table(spark: SparkSession, path: str,
     only when buckets >= the join's shuffle parallelism; with fewer
     buckets it silently de-buckets, which is correct, just un-helped.
     Plain reads stay the default — bucket files are ordinary parquet."""
-    if version is not None:
-        snap = _base_dir(path, version)
-        if not hfs.exists(spark, hfs.join(snap, "_SUCCESS")):
-            raise FileNotFoundError(
-                f"version {version} of {path} does not exist or was "
-                f"retired (write with retain_versions > 1 to keep history)")
-        return _read_base(spark, path, version)
-    v, meta = _current_manifest(spark, path)
-    if not v:
-        raise FileNotFoundError(f"no keyed table at {path}")
-    key, buckets = meta.get("bucket_key"), int(meta.get("buckets", 0) or 0)
+    if version is None:
+        return _read_current(snapshot(spark, path), honor_buckets)
+    return _retained_base(spark, path, version).read()
+
+
+def _retained_base(spark: SparkSession, path: str, version: int) -> "_Base":
+    """A committed historical base version; FileNotFoundError when it
+    never existed or retention retired it."""
+    if not hfs.exists(spark, hfs.join(_base_dir(path, version), "_SUCCESS")):
+        raise FileNotFoundError(
+            f"version {version} of {path} does not exist or was "
+            f"retired (write with retain_versions > 1 to keep history)")
+    return _Base(spark, path, version)
+
+
+def _read_current(snap: Snapshot, honor_buckets: bool = False) -> DataFrame:
+    """`read_keyed_table` of the snapshot's base."""
+    if not snap.version:
+        raise FileNotFoundError(f"no keyed table at {snap.path}")
+    key = snap.meta.get("bucket_key")
+    buckets = _meta_int(snap.meta, "buckets")
     if honor_buckets and key and buckets:
-        return _read_base_bucketed(spark, path, v, key, buckets)
-    return _read_base(spark, path, v)
-
-
-def _current_manifest(spark: SparkSession, path: str,
-                      retries: int = 3) -> tuple[int, dict[str, str]]:
-    """(base version, metadata) of the newest committed manifest
-    `_CURRENT.v{NNNNN}` — the one resolver every reader and writer
-    uses, so a reader never pairs a new base with a stale watermark
-    (or vice versa). (0, {}) when `path` holds no table.
-
-    `_commit_version` retires old pointers right after publishing, so
-    the content read can find its file already deleted: re-list and
-    retry (`retries` + 1 reads in all, at least two) rather than
-    return empty metadata, which would collapse the watermark to 0 and
-    resurrect folded deltas; if every read races a retirement, fail
-    retryable instead of guessing (ADVICE r10).
-
-    Recovery, when every pointer is gone (manual damage — the commit
-    protocol never leaves a pointerless window): the version is the
-    SECOND-newest complete (has _SUCCESS) `base_v{NNNNN}` when several
-    survive, since the newest may be a data write whose manifest
-    publish never landed — stale-but-committed beats
-    newest-but-unconfirmed — and its metadata is empty. The scan
-    reuses the pointer listing, so a path with no base directory pays
-    no further call."""
-    for _ in range(max(retries, 1) + 1):
-        names = hfs.listdir(spark, path)
-        versions = sorted(int(m.group(1)) for d in names
-                          if (m := _MANIFEST_V_RE.match(d)))
-        if not versions:
-            complete = sorted(
-                int(m.group(1)) for d in names
-                if (m := _BASE_RE.match(d))
-                and hfs.exists(spark, hfs.join(path, d, "_SUCCESS")))
-            if len(complete) >= 2:
-                return complete[-2], {}
-            return (complete[-1] if complete else 0), {}
-        txt = hfs.read_text(spark,
-                            hfs.join(path, _manifest_name(versions[-1])))
-        if txt is None:
-            continue                     # retired mid-read — re-list
-        meta: dict[str, str] = {}
-        for line in txt.splitlines()[1:]:
-            k, sep, v = line.partition("=")
-            if sep:
-                meta[k.strip()] = v.strip()
-        return versions[-1], meta
-    raise ConcurrentWriteError(
-        f"manifest pointer for {path} kept racing retirements across "
-        f"{max(retries, 1) + 1} reads — re-read and retry")
-
-
-def table_meta(spark: SparkSession, path: str) -> dict[str, str]:
-    """Key=value metadata recorded in the newest committed manifest
-    (lines after the version line): `folded_through` (the delta version
-    up to which deltas are already folded into the base — readers
-    ignore deltas at or below it, making post-fold delta-file removal
-    pure GC instead of a correctness fence), and the base bucketing
-    spec (`buckets`/`bucket_key`). Empty when `path` holds no table or
-    was recovered without a pointer."""
-    return _current_manifest(spark, path)[1]
-
-
-def _meta_floor(meta: dict[str, str]) -> int:
-    try:
-        return int(meta.get("folded_through", 0))
-    except ValueError:
-        return 0
-
-
-def folded_through(spark: SparkSession, path: str) -> int:
-    """Highest delta version already folded into the committed base
-    (0 = none). `read_merged` ignores deltas at or below this; new
-    delta claims start above it so version numbers stay monotonic
-    across compactions."""
-    return _meta_floor(table_meta(spark, path))
+        return _read_base_bucketed(snap.spark, snap.path, snap.version,
+                                   key, buckets)
+    return snap.base.read()
 
 
 def _commit_version(spark: SparkSession, path: str, version: int,
@@ -646,8 +764,12 @@ def _commit_version(spark: SparkSession, path: str, version: int,
     new pointer is visible, so readers always resolve some committed
     pointer. The default retain window keeps current + previous so a
     reader that resolved version N just before the flip can finish its
-    scan; set 1 only when no concurrent readers exist."""
-    published = _manifest_versions(spark, path)
+    scan; set 1 only when no concurrent readers exist. One listing
+    serves the fence and the retirement: a base directory that appears
+    after it belongs to a newer writer and is not this commit's to
+    retire."""
+    names = hfs.listdir(spark, path)
+    published = _versions(names, _MANIFEST_V_RE)
     if published and published[-1] >= version:
         raise ConcurrentWriteError(
             f"base version of {path} advanced to {published[-1]} while "
@@ -687,15 +809,13 @@ def _commit_version(spark: SparkSession, path: str, version: int,
             m = _BASE_RE.match(ref.split("/", 1)[0])
             if m:
                 keep.add(int(m.group(1)))
-    for d in hfs.listdir(spark, path):
-        m = _BASE_RE.match(d)
-        if m and int(m.group(1)) not in keep:
-            hfs.delete(spark, hfs.join(path, d))
+    for v in _versions(names, _BASE_RE):
+        if v not in keep:
+            hfs.delete(spark, _base_dir(path, v))
             # retire the external bucketed-table catalog entry with its
             # directory (external: DROP never touches data files — the
             # files are already gone anyway)
-            spark.sql("DROP TABLE IF EXISTS "
-                      + _bucket_table_ident(path, int(m.group(1))))
+            spark.sql("DROP TABLE IF EXISTS " + _bucket_table_ident(path, v))
 
 
 def _write_claiming_base(spark: SparkSession, df: DataFrame, path: str,
@@ -774,7 +894,7 @@ def _next_base_version(spark: SparkSession, path: str,
     need not be dense: readers resolve through manifest pointers only,
     and `_commit_version` retains by published pointers, so a skipped
     orphan falls out of the keep set at the next commit."""
-    published = set(_manifest_versions(spark, path))
+    published = set(_versions(hfs.listdir(spark, path), _MANIFEST_V_RE))
     v = current + 1
     while True:
         dst = _base_dir(path, v)
@@ -825,9 +945,10 @@ def recover_dead_claims(spark: SparkSession, path: str,
             f"refusing to force-clear claims on {path}: writer lease "
             f"held live by {holder!r} — its staging may be in flight; "
             f"stop that writer or let the lease expire")
-    published = set(_manifest_versions(spark, path))
+    names = hfs.listdir(spark, path)
+    published = set(_versions(names, _MANIFEST_V_RE))
     cleared = []
-    for d in hfs.listdir(spark, path):
+    for d in names:
         base_m = _BASE_RE.match(d)
         if d.startswith(".stage-"):
             # a killed writer's private staging (never renamed into a
@@ -911,14 +1032,7 @@ def _run_claimed_write(dst: str, write) -> None:
     try:
         write()
     except AnalysisException as exc:
-        cond = None
-        try:
-            cond = exc.getCondition()
-        except Exception:                # older surface / detached JVM
-            pass
-        first_line = str(exc).split("\n", 1)[0]
-        if cond in _CONFLICT_CONDITIONS or (
-                cond is None and "already exists" in first_line):
+        if _analysis_says(exc, _CONFLICT_CONDITIONS, "already exists"):
             raise ConcurrentWriteError(
                 f"{dst} appeared during this round's write (concurrent "
                 f"writer) — re-read and retry") from exc
@@ -1006,61 +1120,15 @@ def _write_claiming_base_bucketed(spark: SparkSession, df: DataFrame,
     spark.sql(f"DROP TABLE IF EXISTS {_bucket_table_ident(path, version)}")
 
 
-def _resolve_buckets(meta: dict[str, str], key: str,
-                     buckets: int | None) -> int:
-    """Effective bucket count for the NEXT base: an explicit `buckets`
-    wins (0 = un-bucket the table); otherwise inherit the current
-    base's spec, which only applies when its bucket key matches the
-    merge key."""
-    if buckets is not None:
-        return buckets
-    if meta.get("bucket_key") == key:
-        try:
-            return int(meta.get("buckets", 0))
-        except ValueError:
-            return 0
-    return 0
-
-
-def _resolve_range(meta: dict[str, str], key: str,
-                   range_files: int | None) -> int:
-    """Effective range-layout file count for the NEXT base — the same
-    inheritance rule as `_resolve_buckets`: an explicit `range_files`
-    wins (0 = drop the range layout); otherwise inherit the current
-    base's spec when its range key matches the merge key."""
-    if range_files is not None:
-        return range_files
-    if meta.get("range_key") == key:
-        try:
-            return int(meta.get("range_files", 0))
-        except ValueError:
-            return 0
-    return 0
-
-
-def _resolve_layout(meta: dict[str, str], key: str,
-                    buckets: int | None,
-                    range_files: int | None) -> tuple[int, int]:
-    """(eff_buckets, eff_range) for the next base. The two layouts are
-    exclusive per table — hash (bucketed: exchange-free merges, bucket
-    pruning) vs range (zone-map pruning for point/range reads). An
-    explicit choice of one layout drops the other, so `buckets=N` on a
-    range table (or vice versa) SWITCHES layout instead of erroring;
-    asking for both at once is a contradiction and raises."""
-    if buckets and range_files:
-        raise ValueError(
-            "buckets and range_files are alternative base layouts — "
-            "hash (merge-optimized) vs range (lookup-optimized); "
-            "choose one per table")
-    eff_buckets = _resolve_buckets(meta, key, buckets)
-    eff_range = _resolve_range(meta, key, range_files)
-    if buckets:
-        eff_range = 0
-    if range_files:
-        eff_buckets = 0
-    if eff_buckets and eff_range:    # corrupt manifest carrying both
-        eff_range = 0
-    return eff_buckets, eff_range
+@dataclass(frozen=True)
+class _Layout:
+    """The next base's layout, resolved once per write (`_resolve_layout`)."""
+    buckets: int = 0
+    range_files: int = 0
+    stats_cols: list[str] | None = None
+    zorder: str | None = None
+    target: int = 0
+    bloom: tuple[str, ...] = ()
 
 
 # Seed file count for a range layout requested by byte target alone:
@@ -1070,110 +1138,100 @@ def _resolve_layout(meta: dict[str, str], key: str,
 _AUTOSIZE_SEED = 16
 
 
-def _resolve_target(meta: dict[str, str], key: str,
-                    target_file_bytes: int | None) -> int:
-    """Effective per-file byte target for the NEXT base — the same
-    inheritance rule as buckets/range_files: an explicit value wins
-    (0 = back to a pinned `range_files` count); otherwise inherit the
-    current base's spec when its range key matches the merge key."""
-    if target_file_bytes is not None:
-        return max(0, target_file_bytes)
-    if meta.get("range_key") == key:
-        try:
-            return int(meta.get("target_file_bytes", 0))
-        except ValueError:
-            return 0
-    return 0
+def _resolve_layout(snap: Snapshot, key: str, fold: list[int], *,
+                    buckets: int | None = None,
+                    range_files: int | None = None,
+                    stats_cols: list[str] | None = None,
+                    zorder_col: str | None = None,
+                    target_file_bytes: int | None = None,
+                    bloom_cols: list[str] | None = None) -> _Layout:
+    """The layout of the base a rewrite of `snap` + `fold` writes. Each
+    spec follows one inheritance rule: an explicit argument wins (0,
+    '' or [] drops it); otherwise the current manifest's spec carries
+    over, the range specs (file count, byte target, z-order column,
+    bloom columns) only when the table's range key is the merge key,
+    the bucket spec only when its bucket key is.
+
+    The hash (bucketed: exchange-free merges, bucket pruning) and range
+    (zone-map pruning for point/range reads) layouts are exclusive per
+    table: an explicit choice of one drops the other, so `buckets=N` on
+    a range table (or vice versa) SWITCHES layout; asking for both at
+    once is a contradiction and raises. `target_file_bytes` sizes the
+    range layout only: explicit together with `buckets` it raises,
+    explicit on a bucketed table it switches layout, and an inherited
+    target dies with the layout when `buckets=N`/`range_files=0` drops
+    it. Under a byte target the file count is re-planned from observed
+    bytes (`_autosize_range`)."""
+    if buckets and range_files:
+        raise ValueError(
+            "buckets and range_files are alternative base layouts — "
+            "hash (merge-optimized) vs range (lookup-optimized); "
+            "choose one per table")
+    if buckets and target_file_bytes:
+        raise ValueError(
+            "target_file_bytes sizes the range layout — it contradicts "
+            "buckets (hash layout); choose one per table")
+    meta = snap.meta
+    ranged = meta.get("range_key") == key
+    n_buckets = buckets if buckets is not None else (
+        _meta_int(meta, "buckets") if meta.get("bucket_key") == key else 0)
+    n_range = range_files if range_files is not None else (
+        _meta_int(meta, "range_files") if ranged else 0)
+    if buckets:
+        n_range = 0
+    if range_files:
+        n_buckets = 0
+    if n_buckets and n_range:            # corrupt manifest carrying both
+        n_range = 0
+    if not target_file_bytes and (n_buckets or range_files == 0):
+        target = 0                       # the layout drops the target
+    elif target_file_bytes is not None:
+        target = max(0, target_file_bytes)
+    else:
+        target = _meta_int(meta, "target_file_bytes") if ranged else 0
+    if target:
+        n_buckets = 0
+        n_range = _autosize_range(snap, fold, target,
+                                  seed=n_range or _AUTOSIZE_SEED)
+    if zorder_col is not None:
+        zorder = zorder_col or None
+    else:
+        zorder = (meta.get("zorder_col") or None) if ranged else None
+    if bloom_cols is None:
+        bloom_cols = [c for c in meta.get("bloom_cols", "").split(",")
+                      if c] if ranged else []
+    return _Layout(n_buckets, n_range, stats_cols, zorder, target,
+                   tuple(bloom_cols))
 
 
-def _observed_base_bytes(spark: SparkSession, path: str,
-                         version: int) -> int:
-    """Data bytes of a base version, carried refs resolved — sizes
-    come from ONE listing per owner directory (the base's own dir
-    plus each directory a carried ref points into), never from
-    reading data: O(dirs) round trips + O(files) driver state, the
-    same bounded metadata class as the zone map."""
-    if not version:
-        return 0
-    by_dir: dict[str, set[str]] = {}
-    for name, full in base_file_map(spark, path, version).items():
-        d = full.rsplit("/", 1)[0]
-        by_dir.setdefault(d, set()).add(name)
-    total = 0
-    for d, names in by_dir.items():
-        sizes = hfs.listdir_sizes(spark, d)
-        total += sum(sz for n, sz in sizes.items() if n in names)
-    return total
-
-
-def _autosize_range(spark: SparkSession, path: str, version: int,
-                    fold: list[int], target: int, seed: int) -> int:
+def _autosize_range(snap: Snapshot, fold: list[int], target: int,
+                    seed: int) -> int:
     """File count for the next RANGE base under a byte target
     (`target_file_bytes` — the Iceberg/Delta target-file-size posture):
-    observed bytes of the current base plus the foldable delta dirs,
-    divided by the target. A PINNED `range_files` count means a
-    growing table grows its FILES without bound — at 100 TB the zone
-    map stops pruning anything because every file spans a huge slice;
-    a byte target grows the COUNT instead and file size stays flat.
-    Planned from version N's on-disk footprint: the incoming source's
-    bytes are unknown before the write, so the count lags one commit
-    behind growth and the next fold corrects it — the same one-commit
-    self-correction the retention protocol uses. A fresh table has
-    nothing observed and lands as `seed` files."""
-    est = _observed_base_bytes(spark, path, version)
-    for v in fold:
-        est += hfs.dir_size(spark, hfs.join(path, f"delta_{v:05d}"))
+    observed bytes of the current base (carried refs resolved, sizes
+    from one listing per owner directory, never from reading data)
+    plus the foldable delta dirs, divided by the target. A PINNED
+    `range_files` count means a growing table grows its FILES without
+    bound — at 100 TB the zone map stops pruning anything because
+    every file spans a huge slice; a byte target grows the COUNT
+    instead and file size stays flat. Planned from the snapshot's
+    on-disk footprint: the incoming source's bytes are unknown before
+    the write, so the count lags one commit behind growth and the
+    next fold corrects it — the same one-commit self-correction the
+    retention protocol uses. A fresh table has nothing observed and
+    lands as `seed` files."""
+    est = _files_bytes(snap.spark, list(snap.base.file_map.values())) \
+        if snap.version else 0
+    est += sum(hfs.dir_size(snap.spark, _delta_dir(snap.path, v))
+               for v in fold)
     if est <= 0:
         return seed
     return max(1, math.ceil(est / target))
 
 
-def _apply_autosize(spark: SparkSession, path: str, version: int,
-                    fold: list[int], meta: dict[str, str], key: str,
-                    eff_buckets: int, eff_range: int,
-                    buckets: int | None,
-                    target_file_bytes: int | None,
-                    range_files: int | None = None
-                    ) -> tuple[int, int, int]:
-    """(eff_buckets, eff_range, eff_target) after adaptive sizing.
-    `target_file_bytes` sizes the RANGE layout only: explicit together
-    with `buckets` is a contradiction (raise); explicit on a bucketed
-    table switches layout like `range_files` does; an inherited target
-    dies with the layout when `buckets=N`/`range_files=0` drops it."""
-    if buckets and target_file_bytes:
-        raise ValueError(
-            "target_file_bytes sizes the range layout — it contradicts "
-            "buckets (hash layout); choose one per table")
-    drops_layout = (eff_buckets and not target_file_bytes) \
-        or (range_files is not None and range_files == 0
-            and not target_file_bytes)
-    eff_target = 0 if drops_layout \
-        else _resolve_target(meta, key, target_file_bytes)
-    if eff_target and eff_buckets:       # explicit target switches layout
-        eff_buckets = 0
-    if eff_target:
-        eff_range = _autosize_range(spark, path, version, fold,
-                                    eff_target,
-                                    seed=eff_range or _AUTOSIZE_SEED)
-    return eff_buckets, eff_range, eff_target
-
-
 def _meta_stats_cols(meta: dict[str, str]) -> list[str]:
     raw = meta.get("zonemap_cols", "")
     return [c for c in raw.split(",") if c]
-
-
-def _resolve_zorder(meta: dict[str, str], key: str,
-                    zorder_col: str | None) -> str | None:
-    """Effective secondary clustering column for a RANGE base — the
-    same inheritance rule as buckets/range_files: an explicit value
-    wins ('' = drop back to key-only sort); otherwise inherit the
-    current base's spec when its range key matches the merge key."""
-    if zorder_col is not None:
-        return zorder_col or None
-    if meta.get("range_key") == key:
-        return meta.get("zorder_col") or None
-    return None
 
 
 class ConstraintViolation(ValueError):
@@ -1319,20 +1377,6 @@ def _observed_checks(df: DataFrame, checks: dict[str, str], what: str,
     return out, validate
 
 
-def _resolve_bloom(meta: dict[str, str], key: str,
-                   bloom_cols: list[str] | None) -> list[str]:
-    """Effective bloom-index columns for a RANGE base — the same
-    inheritance rule as the other layout specs: an explicit list wins
-    ([] drops the index); otherwise inherit the current base's spec
-    when its range key matches the merge key."""
-    if bloom_cols is not None:
-        return list(bloom_cols)
-    if meta.get("range_key") == key:
-        raw = meta.get("bloom_cols", "")
-        return [c for c in raw.split(",") if c]
-    return []
-
-
 def _zorder_expr(df: DataFrame, key: str, col: str):
     """Morton interleave of (key, col) min-max scaled to 16 bits each
     — the write-side clustering expression for two-dimensional file
@@ -1359,86 +1403,81 @@ def _zorder_expr(df: DataFrame, key: str, col: str):
 
 
 def _write_base_and_meta(spark: SparkSession, df: DataFrame, path: str,
-                         version: int, key: str, eff_buckets: int,
-                         meta: dict[str, str], eff_range: int = 0,
-                         stats_cols: list[str] | None = None,
-                         eff_zorder: str | None = None,
-                         eff_target: int = 0,
-                         eff_bloom: list[str] | None = None
-                         ) -> dict[str, str]:
+                         version: int, key: str, layout: _Layout,
+                         meta: dict[str, str]) -> dict[str, str]:
     """Route to the bucketed, range-clustered, or plain claiming
     writer and keep the manifest's layout spec truthful for the base
     being written. The RANGE layout clusters the base into
-    `eff_range` disjoint key ranges (`repartitionByRange` +
+    `layout.range_files` disjoint key ranges (`repartitionByRange` +
     `sortWithinPartitions`) and records a per-file min/max zone map
     (`_zonemap.json` inside the base dir) over the key plus
-    `stats_cols` (inherited from the manifest's `zonemap_cols` when
-    not given), so point/range lookups prune to the files that can
-    hold the key instead of scanning the base. `eff_zorder` names a
-    SECONDARY clustering column (r12 verdict stretch): files then
-    cover bounded (key, col) z-rectangles instead of pure key slices,
-    making `scan_keyed_table` prunes selective on the stats column
-    too — key prunes widen ~√files in exchange, the classic Z-ORDER
-    trade (Delta OPTIMIZE ZORDER BY). Costs one extra pass for the
-    z-bounds, paid against a persisted frame."""
+    `layout.stats_cols` (inherited from the manifest's `zonemap_cols`
+    when not given), so point/range lookups prune to the files that
+    can hold the key instead of scanning the base. `layout.zorder`
+    names a SECONDARY clustering column (r12 verdict stretch): files
+    then cover bounded (key, col) z-rectangles instead of pure key
+    slices, making `scan_keyed_table` prunes selective on the stats
+    column too — key prunes widen ~√files in exchange, the classic
+    Z-ORDER trade (Delta OPTIMIZE ZORDER BY). Costs one extra pass for
+    the z-bounds, paid against a persisted frame."""
     meta = dict(meta)
-    if eff_buckets:
+    n_range, zorder = layout.range_files, layout.zorder
+    if layout.buckets:
         _write_claiming_base_bucketed(spark, df, path, version,
-                                      key, eff_buckets)
-        meta["buckets"] = str(eff_buckets)
+                                      key, layout.buckets)
+        meta["buckets"] = str(layout.buckets)
         meta["bucket_key"] = key
-        eff_range = 0
+        n_range = 0
     else:
-        if eff_range and eff_zorder and eff_zorder in df.columns:
+        if n_range and zorder and zorder in df.columns:
             df = df.persist()
             try:
-                z = _zorder_expr(df, key, eff_zorder)
+                z = _zorder_expr(df, key, zorder)
                 if z is not None:
                     clustered = (df.withColumn("__z", z)
-                                 .repartitionByRange(eff_range, "__z")
+                                 .repartitionByRange(n_range, "__z")
                                  .sortWithinPartitions("__z")
                                  .drop("__z"))
                 else:                        # empty/all-null dims
-                    clustered = (df.repartitionByRange(eff_range,
+                    clustered = (df.repartitionByRange(n_range,
                                                        F.col(key))
                                  .sortWithinPartitions(key))
                 _write_claiming_base(spark, clustered, path, version)
             finally:
                 df.unpersist()
         else:
-            if eff_range:
-                df = (df.repartitionByRange(eff_range, F.col(key))
+            if n_range:
+                df = (df.repartitionByRange(n_range, F.col(key))
                       .sortWithinPartitions(key))
             _write_claiming_base(spark, df, path, version)
-            eff_zorder = None
+            zorder = None
         meta.pop("buckets", None)
         meta.pop("bucket_key", None)
-    if eff_range:
-        cols = stats_cols if stats_cols is not None \
+    if n_range:
+        cols = layout.stats_cols if layout.stats_cols is not None \
             else _meta_stats_cols(meta)
         zm_cols = [key] + [c for c in cols if c != key]
-        if eff_zorder and eff_zorder not in zm_cols:
-            zm_cols.append(eff_zorder)       # the 2nd dim must be mapped
+        if zorder and zorder not in zm_cols:
+            zm_cols.append(zorder)           # the 2nd dim must be mapped
         zmap = zm.collect_zone_map(spark, _base_dir(path, version), zm_cols)
         if zmap:
             zm.write_zone_map(spark, _base_dir(path, version), zmap)
-            meta["range_files"] = str(eff_range)
+            meta["range_files"] = str(n_range)
             meta["range_key"] = key
             meta["zonemap_cols"] = ",".join(zmap["cols"])
-            if eff_zorder:
-                meta["zorder_col"] = eff_zorder
+            if zorder:
+                meta["zorder_col"] = zorder
             else:
                 meta.pop("zorder_col", None)
-            if eff_target:
-                meta["target_file_bytes"] = str(eff_target)
+            if layout.target:
+                meta["target_file_bytes"] = str(layout.target)
             else:
                 meta.pop("target_file_bytes", None)
             # bloom index on top of the range layout: equality-probe
             # file skipping for high-cardinality columns the min/max
             # map cannot prune (collected like the zone map — one
             # column-pruned job over the just-written base)
-            bl = [c for c in (eff_bloom or [])
-                  if c in df.columns]
+            bl = [c for c in layout.bloom if c in df.columns]
             if bl:
                 rows = bloom.collect_bloom_index(
                     spark, _base_dir(path, version), bl,
@@ -1458,20 +1497,127 @@ def _write_base_and_meta(spark: SparkSession, df: DataFrame, path: str,
             # wrote (r17, guide §1.2)
             _seed_schema_memo(spark, _base_dir(path, version), df.schema)
             return meta
-    meta.pop("range_files", None)
-    meta.pop("range_key", None)
-    meta.pop("zonemap_cols", None)
-    meta.pop("zorder_col", None)
-    meta.pop("target_file_bytes", None)
-    meta.pop("bloom_cols", None)
-    if not eff_buckets:
+    for k in ("range_files", "range_key", "zonemap_cols", "zorder_col",
+              "target_file_bytes", "bloom_cols"):
+        meta.pop(k, None)
+    if not layout.buckets:
         # plain (non-bucketed, non-range) base: dir is complete — seed
         # the memo for the post-commit result read (r17)
         _seed_schema_memo(spark, _base_dir(path, version), df.schema)
     return meta
 
 
-@_vanished_snapshot_guard
+def _fold_run(snap: Snapshot) -> tuple[list[int], list[int]]:
+    """The prelude every rewriting writer shares: ``(run, stranded)``
+    — the contiguous complete RUN of pending deltas a fold may safely
+    absorb, and every slot above the floor left out of it. The run
+    stops at the first claimed-but-incomplete slot: a live appender
+    may still complete it, and a watermark past its number would make
+    every reader skip it forever. An incomplete slot whose files sat
+    untouched past the staleness grace window is dead-writer debris:
+    it is deleted and the run continues — otherwise abandoned debris
+    below committed deltas would block every fold forever. Each writer
+    decides what a stranded slot means for it."""
+    run: list[int] = []
+    stranded: list[int] = []
+    for v in snap.listed:
+        if v <= snap.floor:
+            continue
+        if stranded:
+            stranded.append(v)
+        elif v in snap.deltas:
+            run.append(v)
+        elif _claim_is_stale(snap.spark, _delta_dir(snap.path, v)):
+            hfs.delete(snap.spark, _delta_dir(snap.path, v))
+        else:
+            stranded.append(v)
+    return run, stranded
+
+
+def _refuse_stranded_deltas(snap: Snapshot, run: list[int],
+                            stranded: list[int], what: str) -> None:
+    """The upsert/delete policy on `_fold_run`'s stranded slots: a
+    committed delta beyond an in-flight slot refuses the rewrite.
+    Folding past the gap would orphan the in-flight delta below the
+    watermark; folding only the run would leave the later deltas to
+    re-apply over the rewrite (resurrect). A rewrite loses nothing by
+    waiting out the in-flight append."""
+    if any(v in snap.deltas for v in stranded):
+        raise ConcurrentWriteError(
+            f"{snap.path} has committed deltas beyond an in-flight append "
+            f"(foldable run {run} vs committed {list(snap.deltas)}) — "
+            f"retry the {what} after the appender finishes or times out")
+
+
+def _next_meta(snap: Snapshot, key: str, fold: list[int]) -> dict[str, str]:
+    """The manifest metadata a rewrite of `snap` + `fold` carries
+    forward — dropping the watermark would resurrect folded-but-not-
+    yet-GC'd deltas for every reader. It records the merge key
+    (`register_sql_catalog` discovers tables by it) and drops the
+    restore provenance: a rewritten base is new content."""
+    meta = dict(snap.meta)
+    meta["merge_key"] = key
+    meta.pop("restored_from", None)
+    if fold:
+        meta["folded_through"] = str(fold[-1])
+    return meta
+
+
+def _rewrite_target(snap: Snapshot, key: str,
+                    fold: list[int]) -> DataFrame | None:
+    """What a rewrite merges into: the base with the folded run applied
+    (tombstones included, so no delta outlives the new base and none
+    re-applies over it), else the base alone — read through its bucket
+    metadata when bucketed on `key`, so the merge needs no exchange on
+    it; None for a brand-new table."""
+    if fold:
+        return _read_merged_through(snap, key, fold)
+    if not snap.version:
+        return None
+    if snap.meta.get("bucket_key") == key and _meta_int(snap.meta, "buckets"):
+        return _read_base_bucketed(snap.spark, snap.path, snap.version, key,
+                                   _meta_int(snap.meta, "buckets"))
+    return snap.base.read()
+
+
+def _commit_base(snap: Snapshot, df: DataFrame, key: str, layout: _Layout,
+                 meta: dict[str, str], retain_versions: int,
+                 validators=()) -> int:
+    """The commit tail every rewriting writer shares: claim the next
+    base version, write `df` with its layout and sidecars, run the
+    pre-publish `validators` (observations latched by the write — a
+    violation deletes the unpublished base, which no manifest names,
+    so no reader ever resolves it), publish, and GC. Returns the new
+    version."""
+    spark, path = snap.spark, snap.path
+    version = _next_base_version(spark, path, snap.version)
+    meta = _write_base_and_meta(spark, df, path, version, key, layout, meta)
+    for validate in validators:
+        if validate is not None:
+            try:
+                validate()
+            except ConstraintViolation:
+                hfs.delete(spark, _base_dir(path, version))
+                raise
+    _publish(snap, version, meta, retain_versions)
+    return version
+
+
+def _publish(snap: Snapshot, version: int, meta: dict[str, str],
+             retain_versions: int) -> None:
+    """Publish `version` against `snap` (the manifest compare-and-swap),
+    then GC the deltas folded at or before the snapshot's floor."""
+    _commit_version(snap.spark, snap.path, version, retain_versions,
+                    meta=meta)
+    _gc_folded_deltas(snap)
+
+
+def _read_new_base(snap: Snapshot, version: int) -> DataFrame:
+    """The result read of a rewrite: the base it just committed."""
+    return _read_committed_parquet(snap.spark,
+                                   [_base_dir(snap.path, version)])
+
+
 def upsert_into_keyed_table(spark: SparkSession, source: DataFrame, *,
                             path: str, key: str,
                             payload: list[str] | None = None,
@@ -1547,38 +1693,43 @@ def upsert_into_keyed_table(spark: SparkSession, source: DataFrame, *,
     `user.`-prefixed keys only — engine-reserved names are refused;
     properties persist until overwritten (set a key to '' to drop
     it)."""
+    return _upsert(snapshot(spark, path), source, key, payload=payload,
+                   dedup_order_by=dedup_order_by,
+                   updated_at_col=updated_at_col, n_files=n_files,
+                   retain_versions=retain_versions,
+                   return_counts=return_counts, table_props=table_props,
+                   checks=checks, schema_mode=schema_mode, buckets=buckets,
+                   range_files=range_files, stats_cols=stats_cols,
+                   zorder_col=zorder_col,
+                   target_file_bytes=target_file_bytes,
+                   bloom_cols=bloom_cols)
+
+
+@_vanished_snapshot_guard
+def _upsert(snap: Snapshot, source: DataFrame, key: str, *,
+            payload: list[str] | None = None,
+            dedup_order_by: list[str] | None = None,
+            updated_at_col: str | None = "updatedAt",
+            n_files: int | None = None,
+            retain_versions: int = 2,
+            return_counts: bool = False,
+            table_props: dict[str, str] | None = None,
+            checks: dict[str, str] | None = None,
+            schema_mode: str | None = None, **layout_args):
+    """`upsert_into_keyed_table` against a resolved snapshot; the
+    explicit layout arguments (`_resolve_layout`) ride in
+    `layout_args`."""
     from pyspark.sql import Observation
+    spark, path = snap.spark, snap.path
     schema_cols = source.columns if payload is None else [key, *payload]
-    # ONE manifest resolution for the whole round: version, watermark
-    # and bucket spec must be a consistent snapshot
-    version, committed_meta = _current_manifest(spark, path)
-    meta = dict(committed_meta)
-    old_floor = _meta_floor(meta)
-    # record the merge key in the manifest (r15): catalog-level SQL
-    # registration (`register_sql_catalog`) discovers tables by it —
-    # a property of the table itself, carried forward by every commit
-    meta["merge_key"] = key
-    # this base is new content — it is not the restored snapshot
-    meta.pop("restored_from", None)
-    eff_buckets, eff_range = _resolve_layout(meta, key, buckets,
-                                             range_files)
-    eff_zorder = _resolve_zorder(meta, key, zorder_col)
-    eff_bloom = _resolve_bloom(meta, key, bloom_cols)
-    cur_buckets = _resolve_buckets(meta, key, None)
     # mixed-path safety (same class as the r8 delete bug): a table
     # carrying un-compacted LSM deltas must fold them into the merge
     # target — otherwise the pending deltas re-apply over the NEW base
     # in read_merged and win over this (newer) upsert round.
-    fold = _foldable_deltas(spark, path, gc_stale=True, floor=old_floor)
-    pending = _complete_deltas(spark, path, floor=old_floor)
-    if pending and fold != pending:
-        raise ConcurrentWriteError(
-            f"{path} has committed deltas beyond an in-flight append "
-            f"(foldable run {fold} vs committed {pending}) — retry the "
-            f"upsert after the appender finishes or times out")
-    eff_buckets, eff_range, eff_target = _apply_autosize(
-        spark, path, version, fold, meta, key, eff_buckets, eff_range,
-        buckets, target_file_bytes, range_files=range_files)
+    fold, stranded = _fold_run(snap)
+    _refuse_stranded_deltas(snap, fold, stranded, "upsert")
+    layout = _resolve_layout(snap, key, fold, **layout_args)
+    meta = _next_meta(snap, key, fold)
     if table_props:
         for k, v in table_props.items():
             if not k.startswith("user."):
@@ -1602,15 +1753,15 @@ def upsert_into_keyed_table(spark: SparkSession, source: DataFrame, *,
         # dedup window. `source_prepared` tells the downstream merge
         # not to plan the dedup window a second time (r17, VERDICT
         # r16 item 7).
-        # Validation runs before the manifest publish (below).
+        # Validation runs before the manifest publish (_commit_base).
         source, chk_validate = _observed_checks(
             prepare_source(source, key, dedup_order_by), eff_checks,
-            "upsert source", table_fields=table_schema(spark, path))
+            "upsert source", table_fields=snap.schema)
         source_prepared = True
     new_check_names = sorted(n for n in eff_checks
                              if inherited_checks.get(n) != eff_checks[n])
     eff_schema_mode = _resolve_schema_mode(meta, schema_mode)
-    _enforce_schema_mode(spark, path, schema_cols, eff_schema_mode,
+    _enforce_schema_mode(snap, schema_cols, eff_schema_mode,
                          "upsert source", updated_at_col=updated_at_col)
     # Persistence is driven by the EXPLICIT argument, not the
     # effective batch mode (ADVICE r13): one schema_mode='merge'
@@ -1626,15 +1777,8 @@ def upsert_into_keyed_table(spark: SparkSession, source: DataFrame, *,
         del meta[k]
     for n, e in eff_checks.items():
         meta[_CHECK_PREFIX + n] = e
-    if fold:
-        target = _read_merged_through(spark, path, key, fold,
-                                      base_version=version or None)
-        meta["folded_through"] = str(fold[-1])
-    elif version and cur_buckets:
-        target = _read_base_bucketed(spark, path, version, key, cur_buckets)
-    elif version:
-        target = _read_base(spark, path, version)
-    else:
+    target = _rewrite_target(snap, key, fold)
+    if target is None:
         # brand-new table: bootstrap. Plain parquet files at the root
         # are no layout this table reads — adopting them would merge
         # (and then delete) data the caller never handed over, so the
@@ -1646,7 +1790,6 @@ def upsert_into_keyed_table(spark: SparkSession, source: DataFrame, *,
                 f"{path} holds {len(stray)} parquet file(s) at its root "
                 f"(e.g. {stray[0]}) but no keyed table — read them with "
                 f"spark.read.parquet and upsert them into a fresh path")
-        target = None
     obs = Observation("merge_counts") if return_counts else None
     if target is None:
         # BOOTSTRAP fast path (r16 optimization, guide §2.4): the
@@ -1678,7 +1821,7 @@ def upsert_into_keyed_table(spark: SparkSession, source: DataFrame, *,
                               observation=obs,
                               source_prepared=source_prepared)
     chk2_validate = None
-    if new_check_names and (version or fold):
+    if new_check_names and target is not None:
         # Delta ADD-CONSTRAINT posture (ADVICE r13): a check name
         # introduced on a table with existing rows validates HISTORY,
         # not just the batch — the post-merge state (existing ∪
@@ -1695,53 +1838,30 @@ def upsert_into_keyed_table(spark: SparkSession, source: DataFrame, *,
             "existing table state (new CHECK)")
     # bucketed writes split files by bucket id, range writes by key
     # range — an n_files repartition would only fight the layout
-    out = merged.repartition(n_files) \
-        if (n_files and not eff_buckets and not eff_range) else merged
-    new_version = _next_base_version(spark, path, version)
-    # the manifest metadata (folded_through watermark, layout spec) is
-    # carried forward — dropping the watermark would resurrect
-    # folded-but-not-yet-GC'd deltas for every reader
-    meta = _write_base_and_meta(spark, out, path, new_version,
-                                key, eff_buckets, meta,
-                                eff_range=eff_range,
-                                stats_cols=stats_cols,
-                                eff_zorder=eff_zorder,
-                                eff_target=eff_target,
-                                eff_bloom=eff_bloom)
-    # pre-publish constraint validation (observations latched by the
-    # base write above): a violation discards the unpublished base —
-    # no manifest points at it, so no reader ever resolves it — and
-    # raises exactly as the old pre-write probe did. Batch checks
-    # report before new-check history scans (same precedence as the
-    # old probe order).
-    for _validate in (chk_validate, chk2_validate):
-        if _validate is not None:
-            try:
-                _validate()
-            except ConstraintViolation:
-                hfs.delete(spark, _base_dir(path, new_version))
-                raise
-    _commit_version(spark, path, new_version, retain_versions, meta=meta)
-    _gc_folded_deltas(spark, path, old_floor)
-    result = _read_committed_parquet(
-        spark, [_base_dir(path, new_version)])
+    if n_files and not layout.buckets and not layout.range_files:
+        merged = merged.repartition(n_files)
+    # batch checks report before new-check history scans
+    version = _commit_base(snap, merged, key, layout, meta,
+                           retain_versions, (chk_validate, chk2_validate))
+    result = _read_new_base(snap, version)
     if return_counts:
         return result, obs.get
     return result
 
 
-def _gc_folded_deltas(spark: SparkSession, path: str, up_to: int) -> None:
+def _gc_folded_deltas(snap: Snapshot) -> None:
     """Remove delta files folded at or before the PREVIOUS commit's
-    watermark (`up_to` = the floor read at the start of the committing
-    operation). The freshly-folded run keeps its files for one more
+    watermark (`snap.floor`, the floor the committing operation
+    resolved). The freshly-folded run keeps its files for one more
     commit — the same one-commit retention superseded bases get via
     `retain_versions` — so an in-flight reader that resolved the
     pre-fold manifest can finish scanning them; any reader still
     referencing deltas at or below the PREVIOUS floor resolved two
-    commits ago."""
-    for v in _delta_versions(spark, path):
-        if v <= up_to:
-            hfs.delete(spark, hfs.join(path, f"delta_{v:05d}"))
+    commits ago. New delta claims number above the floor, so the
+    snapshot's listing holds every such delta."""
+    for v in snap.listed:
+        if v <= snap.floor:
+            hfs.delete(snap.spark, _delta_dir(snap.path, v))
 
 
 def vacuum(spark: SparkSession, path: str, *,
@@ -1758,19 +1878,15 @@ def vacuum(spark: SparkSession, path: str, *,
     an in-flight reader still holding the pre-fold manifest. A
     truncated metadata scan reads as fresh, never reclaimable.
     Returns the removed delta versions."""
-    floor = folded_through(spark, path)
-    if not floor:
+    snap = snapshot(spark, path)
+    if not snap.floor:
         return []
-    try:
-        now_ms = hfs.probe_now_ms(spark, path)
-    except Exception:                    # probe unwritable: fall back
-        import time
-        now_ms = int(time.time() * 1000)
+    now_ms = _fs_now_ms(spark, path)
     removed: list[int] = []
-    for v in _delta_versions(spark, path):
-        if v > floor:
+    for v in snap.listed:
+        if v > snap.floor:
             continue
-        d = hfs.join(path, f"delta_{v:05d}")
+        d = _delta_dir(path, v)
         newest, truncated = hfs.newest_mtime(spark, d)
         if newest is None or truncated:
             continue
@@ -1794,66 +1910,35 @@ def vacuum_orphan_bases(spark: SparkSession, path: str, *,
     design, so 'no pointer' does not mean 'not retained' there. Same
     age discipline as `vacuum`: filesystem clock, untouched past
     `older_than_ms`, truncated scans read as fresh."""
-    published = _manifest_versions(spark, path)
-    cur = published[-1] if published else 0
-    if not cur:
+    names = hfs.listdir(spark, path)
+    published = _versions(names, _MANIFEST_V_RE)
+    if not published:
         return []                        # no pointer to measure against
-    try:
-        now_ms = hfs.probe_now_ms(spark, path)
-    except Exception:                    # probe unwritable: fall back
-        import time
-        now_ms = int(time.time() * 1000)
+    now_ms = _fs_now_ms(spark, path)
     removed: list[int] = []
-    for d in hfs.listdir(spark, path):
-        m = _BASE_RE.match(d)
-        if not m or int(m.group(1)) <= cur:
+    for v in _versions(names, _BASE_RE):
+        if v <= published[-1]:
             continue
-        full = hfs.join(path, d)
+        full = _base_dir(path, v)
         newest, truncated = hfs.newest_mtime(spark, full)
         if newest is None or truncated:
             continue
         if (now_ms - newest) > older_than_ms:
             hfs.delete(spark, full)
-            spark.sql("DROP TABLE IF EXISTS "
-                      + _bucket_table_ident(path, int(m.group(1))))
-            removed.append(int(m.group(1)))
-    return sorted(removed)
+            spark.sql("DROP TABLE IF EXISTS " + _bucket_table_ident(path, v))
+            removed.append(v)
+    return removed
 
 
 # --- log-structured base + delta ---------------------------------------
 
 
-def _delta_versions(spark: SparkSession, path: str) -> list[int]:
-    return sorted(int(m.group(1)) for d in hfs.listdir(spark, path)
-                  if (m := _DELTA_RE.match(d)))
-
-
+# Each delta's key [min,max] and row count, recorded inside the delta
+# dir so point/range lookups SKIP whole pending deltas whose key range
+# cannot intersect the probe — the LSM read-path twin of the base's
+# zone map. Written after the claim's rename: a reader sees no sidecar
+# (reads the delta) or the complete one.
 _KEYRANGE = "_KEYRANGE.json"
-
-
-def _write_delta_keyrange(spark: SparkSession, dst: str, key: str,
-                          df: DataFrame) -> None:
-    """Record the delta's key [min,max] (+ row count) as an O(1)
-    sidecar inside the delta dir, so point/range lookups can SKIP
-    whole pending deltas whose key range cannot intersect the probe —
-    the LSM read-path twin of the base's zone map. One column-pruned
-    aggregation over `df` (O(delta)); a missing/unreadable sidecar
-    just means the delta is read, never skipped. Written AFTER
-    _SUCCESS: a reader that lists the delta mid-append sees either no
-    sidecar (reads the delta) or the complete one. The append hot
-    path no longer calls this (its stats ride the write job via an
-    Observation — see `_append_delta_claiming`); kept for repair /
-    backfill use."""
-    try:
-        row = df.select(F.min(key).alias("lo"), F.max(key).alias("hi"),
-                        F.count(F.lit(1)).alias("n")).collect()[0]
-        _write_delta_keyrange_from_stats(
-            spark, dst, key,
-            {"lo": row["lo"], "hi": row["hi"], "n": row["n"]})
-    except Exception:
-        # the sidecar is advisory — an append must never fail (or
-        # leave a committed delta unreadable) because stats didn't land
-        pass
 
 
 def _write_delta_keyrange_from_stats(spark: SparkSession, dst: str,
@@ -1874,6 +1959,21 @@ def _write_delta_keyrange_from_stats(spark: SparkSession, dst: str,
         pass
 
 
+def _keyrange(spark: SparkSession, path: str, v: int,
+              key: str) -> dict | None:
+    """Delta `v`'s `_KEYRANGE` sidecar for `key`; None when it is
+    missing, unreadable, or recorded for another key."""
+    import json
+    txt = hfs.read_text(spark, hfs.join(_delta_dir(path, v), _KEYRANGE))
+    try:
+        doc = json.loads(txt) if txt is not None else None
+    except ValueError:
+        return None
+    if not doc or doc.get("version") != 1 or doc.get("key") != key:
+        return None
+    return doc
+
+
 def _deltas_key_range(spark: SparkSession, path: str, key: str,
                       deltas: list[int]) -> tuple | None:
     """Combined key [min,max] over the deltas' _KEYRANGE sidecars
@@ -1882,18 +1982,10 @@ def _deltas_key_range(spark: SparkSession, path: str, key: str,
     without the bound. Empty deltas contribute nothing; all-empty
     folds return the empty marker ("", "")-free (None, None) range
     handled by the caller keeping zero shards."""
-    import json
     lo = hi = None
     for v in deltas:
-        txt = hfs.read_text(spark,
-                            hfs.join(path, f"delta_{v:05d}", _KEYRANGE))
-        if txt is None:
-            return None
-        try:
-            doc = json.loads(txt)
-        except ValueError:
-            return None
-        if doc.get("version") != 1 or doc.get("key") != key:
+        doc = _keyrange(spark, path, v, key)
+        if doc is None:
             return None
         if doc.get("rows") == 0:
             continue
@@ -1913,17 +2005,9 @@ def _delta_may_match(spark: SparkSession, path: str, v: int, key: str,
     normalization as the zone map, so comparisons are like-for-like.
     Sound for tombstones too: a tombstone outside the probe's key set
     cannot change any probed key's history."""
-    import json
     from bisect import bisect_left
-    txt = hfs.read_text(spark,
-                        hfs.join(path, f"delta_{v:05d}", _KEYRANGE))
-    if txt is None:
-        return True
-    try:
-        doc = json.loads(txt)
-    except ValueError:
-        return True
-    if doc.get("version") != 1 or doc.get("key") != key:
+    doc = _keyrange(spark, path, v, key)
+    if doc is None:
         return True
     if doc.get("rows") == 0:
         return False                     # empty delta affects nothing
@@ -1942,11 +2026,9 @@ def _delta_may_match(spark: SparkSession, path: str, v: int, key: str,
     return True
 
 
-def _append_delta_claiming(spark: SparkSession, src: DataFrame,
-                           path: str, max_retries: int = 64,
-                           floor: int | None = None,
-                           key: str | None = None,
-                           checks_spec: tuple | None = None) -> int:
+def _append_delta_claiming(snap: Snapshot, src: DataFrame, key: str,
+                           checks_spec: tuple | None = None,
+                           max_retries: int = 64) -> int:
     """Write `src` as the next `delta_{N}` directory, CLAIMING the
     version: two concurrent appenders (a CLI tombstone racing a
     streaming changefeed batch, or a scheduled compact) can list the
@@ -1963,16 +2045,16 @@ def _append_delta_claiming(spark: SparkSession, src: DataFrame,
     slot re-claimed (ADVICE r9: deleting a fresh one would corrupt the
     in-flight job).
 
-    Numbering starts above BOTH the newest existing delta and the
-    committed `folded_through` watermark, so delta versions stay
+    Numbering starts above BOTH the newest delta the snapshot lists
+    and its `folded_through` watermark, so delta versions stay
     monotonic across compactions (a re-used number at or below the
-    watermark would be invisibly skipped by every reader)."""
+    watermark would be invisibly skipped by every reader); a slot
+    claimed since the listing is one more lost race."""
     from pyspark.errors import AnalysisException
-    if floor is None:
-        floor = folded_through(spark, path)
-    version = max((_delta_versions(spark, path) or [0])[-1], floor) + 1
+    spark, path = snap.spark, snap.path
+    version = max((snap.listed or (0,))[-1], snap.floor) + 1
     for _ in range(max_retries):
-        dst = hfs.join(path, f"delta_{version:05d}")
+        dst = _delta_dir(path, version)
         if hfs.exists(spark, dst) and not hfs.exists(
                 spark, hfs.join(dst, "_SUCCESS")):
             if not _claim_is_stale(spark, dst):
@@ -2002,7 +2084,7 @@ def _append_delta_claiming(spark: SparkSession, src: DataFrame,
                                                  table_fields=tf,
                                                  live_if=live_if)
             obs = None
-            if key is not None and key in src.columns:
+            if key in src.columns:
                 import uuid as _uuid
 
                 from pyspark.sql import Observation
@@ -2030,14 +2112,7 @@ def _append_delta_claiming(spark: SparkSession, src: DataFrame,
             # other analysis failure is permanent — retrying it 64
             # times would only bury the real error (same narrowing as
             # _run_claimed_write, ADVICE r10)
-            cond = None
-            try:
-                cond = exc.getCondition()
-            except Exception:
-                pass
-            if cond in _CONFLICT_CONDITIONS or (
-                    cond is None
-                    and "already exists" in str(exc).split("\n", 1)[0]):
+            if _analysis_says(exc, _CONFLICT_CONDITIONS, "already exists"):
                 version += 1           # a concurrent appender won this slot
             else:
                 raise
@@ -2057,62 +2132,22 @@ def append_delta(spark: SparkSession, source: DataFrame, *, path: str,
     """Append one upsert round as a delta file set (no base rewrite).
     Returns the delta version number. The source is normalized first
     (null-key drop + latest-per-key, reference notes 3/5)."""
-    src = prepare_source(source, key, dedup_order_by)
-    meta = table_meta(spark, path)
-    chk = _resolve_checks(meta, None)
-    _enforce_schema_mode(spark, path, src.columns,
-                         _resolve_schema_mode(meta, None),
-                         "delta append")
-    # checks ride the delta write job itself (one batch pass, no
-    # probe job — r16); the claiming writer validates pre-rename
-    spec = (chk, "delta append",
-            table_schema(spark, path), None) if chk else None
-    return _append_delta_claiming(spark, src, path, key=key,
-                                  checks_spec=spec)
+    return _append_checked(snapshot(spark, path),
+                           prepare_source(source, key, dedup_order_by),
+                           key, "delta append")
 
 
-def _complete_deltas(spark: SparkSession, path: str,
-                     floor: int | None = None) -> list[int]:
-    """Committed (has _SUCCESS) delta versions above the folded-through
-    watermark — the set a reader may apply. Folded deltas (at or below
-    the watermark) are already inside the base: applying them again
-    before their files are GC'd would transiently resurrect deleted
-    rows (r9 verdict #3). Incomplete ones belong to a writer mid-job.
-    Pass `floor` when the caller already resolved the manifest — both
-    to save the metadata round-trip and so one operation works off ONE
-    consistent (version, watermark) pair."""
-    if floor is None:
-        floor = folded_through(spark, path)
-    return [v for v in _delta_versions(spark, path) if v > floor
-            and hfs.exists(spark,
-                           hfs.join(path, f"delta_{v:05d}", "_SUCCESS"))]
-
-
-def _foldable_deltas(spark: SparkSession, path: str,
-                     gc_stale: bool = False,
-                     floor: int | None = None) -> list[int]:
-    """The contiguous complete RUN of pending deltas a fold may safely
-    absorb: stop at the first claimed-but-incomplete slot — a live
-    appender may still complete it, and a watermark past its number
-    would make every reader skip it forever.
-
-    With `gc_stale` (the fold paths), an incomplete slot whose files
-    sat untouched past the staleness grace window is dead-writer
-    debris: it is deleted and the run continues — otherwise abandoned
-    debris below committed deltas would block compaction forever."""
-    if floor is None:
-        floor = folded_through(spark, path)
-    pending = [v for v in _delta_versions(spark, path) if v > floor]
-    run: list[int] = []
-    for v in pending:
-        d = hfs.join(path, f"delta_{v:05d}")
-        if not hfs.exists(spark, hfs.join(d, "_SUCCESS")):
-            if gc_stale and _claim_is_stale(spark, d):
-                hfs.delete(spark, d)
-                continue
-            break
-        run.append(v)
-    return run
+def _append_checked(snap: Snapshot, src: DataFrame, key: str, what: str,
+                    live_if: Column | None = None) -> int:
+    """Claim a delta for `src` under the table's schema mode and CHECK
+    constraints. The checks ride the delta write job itself (one batch
+    pass, no probe job — r16) and validate before the claim's rename;
+    `live_if` exempts rows where it is false."""
+    chk = _resolve_checks(snap.meta, None)
+    _enforce_schema_mode(snap, src.columns,
+                         _resolve_schema_mode(snap.meta, None), what)
+    spec = (chk, what, snap.schema, live_if) if chk else None
+    return _append_delta_claiming(snap, src, key, checks_spec=spec)
 
 
 def read_pending_deltas(spark: SparkSession,
@@ -2126,11 +2161,15 @@ def read_pending_deltas(spark: SparkSession,
     `read_merged` would instead window-merge the union and destroy the
     base's bucketing. Not for merge-semantics tables: no latest-wins,
     no null-skip, no tombstone cut here."""
-    version, meta = _current_manifest(spark, path)
-    deltas = _complete_deltas(spark, path, floor=_meta_floor(meta))
-    if not deltas:
+    return _read_pending(snapshot(spark, path))
+
+
+def _read_pending(snap: Snapshot) -> DataFrame | None:
+    """`read_pending_deltas` of a snapshot."""
+    if not snap.deltas:
         return None
-    return _read_deltas_tagged(spark, path, deltas).drop("__v")
+    return _read_deltas_tagged(snap.spark, snap.path,
+                               list(snap.deltas)).drop("__v")
 
 
 def read_merged(spark: SparkSession, path: str, key: str) -> DataFrame:
@@ -2140,16 +2179,9 @@ def read_merged(spark: SparkSession, path: str, key: str) -> DataFrame:
     the upsert chain exactly. Deltas at or below the manifest's
     `folded_through` watermark are already inside the base and are
     ignored, so a reader racing a fold never sees a delta re-applied
-    over its own folded result. Base version AND watermark come from
-    ONE manifest read (`_current_manifest`) — resolving them in two
-    passes would let a fold commit in between pair the new base with
-    the old watermark, resurrecting exactly what the watermark
-    prevents."""
-    version, meta = _current_manifest(spark, path)
-    return _read_merged_through(
-        spark, path, key,
-        _complete_deltas(spark, path, floor=_meta_floor(meta)),
-        base_version=version or None)
+    over its own folded result. Base version, watermark and deltas
+    come from ONE `snapshot`."""
+    return _read_merged_through(snapshot(spark, path), key)
 
 
 def register_sql_view(spark: SparkSession, path: str, key: str,
@@ -2196,30 +2228,29 @@ def register_sql_catalog(spark: SparkSession, root: str, *,
     session joins `wh_t` against `cdc_t` without per-table plumbing.
     The feed views inherit the same eager snapshot discipline:
     deltas committed after registration are invisible until
-    re-registered.
+    re-registered. Each table is resolved once (`snapshot`) for both.
 
     Returns {view_name: (table_path, key)} — exactly the `tables`
     mapping `sql_merge` takes, so one call powers the full SQL
     session: reads through the registered views, writes through
-    MERGE INTO the same names. Cost: one manifest read per table
-    (plus the feed's delta listing under `changes_prefix`), zero
-    data."""
-    from .changes import register_sql_changes
+    MERGE INTO the same names. Cost: one manifest read per table,
+    zero data."""
+    from .changes import _table_changes
 
     out: dict[str, tuple[str, str]] = {}
     for child in sorted(hfs.listdir(spark, root)):
         path = hfs.join(root, child)
-        version, meta = _current_manifest(spark, path)
-        if not version:
+        snap = snapshot(spark, path)
+        if not snap.version:
             continue                     # not a keyed table
-        key = (keys or {}).get(child) or meta.get("merge_key")
+        key = (keys or {}).get(child) or snap.meta.get("merge_key")
         if not key:
             continue                     # pre-r15 manifest, no override
         name = prefix + child
-        register_sql_view(spark, path, key, name)
+        _read_merged_through(snap, key).createOrReplaceTempView(name)
         if changes_prefix is not None:
-            register_sql_changes(spark, path, changes_prefix + child,
-                                 key=key)
+            _table_changes(snap, key=key).createOrReplaceTempView(
+                changes_prefix + child)
         out[name] = (path, key)
     return out
 
@@ -2234,8 +2265,7 @@ def register_sql_catalog(spark: SparkSession, root: str, *,
 FAST_MERGE_MAX_DELTA_BYTES = 1 << 30
 
 
-def _hits_base(spark: SparkSession, path: str, key: str,
-               base: DataFrame, base_version: int | None,
+def _hits_base(snap: Snapshot, key: str, base: DataFrame,
                deltas: list[int]) -> DataFrame:
     """The base frame for the fast merge's HITS branch: only rows
     whose key a pending delta could touch matter, so on a range-layout
@@ -2254,13 +2284,13 @@ def _hits_base(spark: SparkSession, path: str, key: str,
     O(table) to O(touched files). Every degraded case (no version, no
     zone map on the key) returns `base` unchanged; the broadcast semi
     join on the exact key set keeps correctness either way."""
-    if not base_version:
+    if not snap.version:
         return base
     try:
-        idx = zm.load_zone_map_index(spark, _base_dir(path, base_version))
+        idx = zm.load_zone_map_index(snap.spark, snap.base.dir)
         if idx is None or key not in idx.cols:
             return base
-        fmap = base_file_map(spark, path, base_version)
+        fmap = snap.base.file_map
         all_files = sorted(fmap)
         if idx.n_files == len(all_files):
             # sharded-manifest fast plan: bound the shard reads by the
@@ -2269,7 +2299,7 @@ def _hits_base(spark: SparkSession, path: str, key: str,
             # the per-read metadata parse is O(delta key span), not
             # O(files). No usable delta range → all shards (correct,
             # just unbounded).
-            rng = _deltas_key_range(spark, path, key, deltas)
+            rng = _deltas_key_range(snap.spark, snap.path, key, deltas)
             if rng == (None, None):      # every delta empty
                 return base.where(F.lit(False))
             if rng is not None:
@@ -2279,12 +2309,12 @@ def _hits_base(spark: SparkSession, path: str, key: str,
             in_scope = {e["file"] for e in entries}
             scoped = [f for f in all_files if f in in_scope]
             touched = _touched_base_files(
-                spark, path, key, deltas,
-                {"cols": idx.cols, "files": entries}, scoped)
+                snap, key, deltas, {"cols": idx.cols, "files": entries},
+                scoped)
         else:
             zmap = {"cols": idx.cols, "files": idx.entries()}
-            touched = _touched_base_files(spark, path, key, deltas,
-                                          zmap, all_files)
+            touched = _touched_base_files(snap, key, deltas, zmap,
+                                          all_files)
     except Exception:
         # a READ must never fail because its optional prune could not
         # decide (corrupt sidecar, span cast anomaly) — the exact
@@ -2292,14 +2322,11 @@ def _hits_base(spark: SparkSession, path: str, key: str,
         return base
     if len(touched) >= len(all_files):
         return base
-    return _read_base_files(spark, path, base_version,
-                            [fmap[f] for f in sorted(touched)])
+    return snap.base.read_files([fmap[f] for f in sorted(touched)])
 
 
-def _merged_fast(spark: SparkSession, path: str, key: str,
-                 base: DataFrame, deltas: list[int],
-                 predicate: Column | None,
-                 base_version: int | None = None) -> DataFrame:
+def _merged_fast(snap: Snapshot, key: str, base: DataFrame,
+                 deltas: list[int], predicate: Column | None) -> DataFrame:
     """Merge-on-read WITHOUT shuffling the base: rows whose key
     appears in no pending delta are the base rows verbatim (broadcast
     ANTI join — no exchange on the base side); rows whose key does
@@ -2313,8 +2340,8 @@ def _merged_fast(spark: SparkSession, path: str, key: str,
     (the equality is test-pinned both ways)."""
     if predicate is not None:
         base = base.filter(predicate)
-    dkeys, merged, cols = _merged_touched(spark, path, key, base,
-                                          deltas, predicate, base_version)
+    dkeys, merged, cols = _merged_touched(snap, key, base, deltas,
+                                          predicate)
     untouched = base.join(F.broadcast(dkeys), key, "left_anti")
     # column order must match the classic form (key first) so the two
     # paths are byte-for-byte interchangeable to any consumer
@@ -2323,10 +2350,8 @@ def _merged_fast(spark: SparkSession, path: str, key: str,
     return untouched.unionByName(merged, allowMissingColumns=True)
 
 
-def _merged_touched(spark: SparkSession, path: str, key: str,
-                    base: DataFrame, deltas: list[int],
-                    predicate: Column | None,
-                    base_version: int | None
+def _merged_touched(snap: Snapshot, key: str, base: DataFrame,
+                    deltas: list[int], predicate: Column | None
                     ) -> tuple[DataFrame, DataFrame, list[str]]:
     """The delta-touched half of the fast merge: ``(dkeys, merged,
     cols)`` — the distinct delta key set, the FULLY MERGED final rows
@@ -2336,11 +2361,11 @@ def _merged_touched(spark: SparkSession, path: str, key: str,
     `predicate` (key-only) if any; the delta-aware stats scan uses
     this branch directly, pairing it with its own zone-map-pruned
     untouched branch."""
-    dl = _read_deltas_tagged(spark, path, deltas, predicate)
+    dl = _read_deltas_tagged(snap.spark, snap.path, deltas, predicate)
     dkeys = dl.select(key).filter(F.col(key).isNotNull()).distinct()
     # the HITS branch only needs rows a delta could touch — on a
     # range-layout base it reads just the zone-map-admissible files
-    hits_src = _hits_base(spark, path, key, base, base_version, deltas)
+    hits_src = _hits_base(snap, key, base, deltas)
     if predicate is not None and hits_src is not base:
         hits_src = hits_src.filter(predicate)
     base_hits = (hits_src.join(F.broadcast(dkeys), key)
@@ -2375,30 +2400,31 @@ def _q(name: str) -> str:
     return "`" + name.replace("`", "``") + "`"
 
 
-def _read_merged_through(spark: SparkSession, path: str, key: str,
-                         deltas: list[int],
-                         base_version: int | None = None,
+def _read_merged_through(snap: Snapshot, key: str,
+                         deltas: list[int] | None = None,
                          base_df: DataFrame | None = None,
                          predicate: Column | None = None,
                          single_partition: bool = False) -> DataFrame:
-    """`read_merged` over an EXPLICIT delta set — the fold paths use it
-    to absorb only the contiguous complete run when later deltas exist
-    beyond an in-flight slot. `base_version` is the base the caller's
-    manifest read already resolved, keeping (base, watermark, deltas)
-    one consistent snapshot; None means the table has no base (a
-    deltas-only table). `base_df` overrides the base read entirely
-    (the pruned-lookup path passes the zone-map-selected file subset
-    of a versioned base); `predicate` is a key-only filter applied to
-    EVERY part — sound because the merge and tombstone cut both
-    partition by the key, so restricting to a key subset keeps each
-    surviving key's full version history.
+    """The merged view of `snap` over an EXPLICIT delta set — None
+    means the snapshot's committed pending deltas (`read_merged`); the
+    fold paths pass the contiguous complete run when later deltas
+    exist beyond an in-flight slot. The base is the snapshot's (none
+    for a deltas-only table); `base_df` overrides the base read
+    entirely (the pruned-lookup path passes the zone-map-selected file
+    subset); `predicate` is a key-only filter applied to EVERY part —
+    sound because the merge and tombstone cut both partition by the
+    key, so restricting to a key subset keeps each surviving key's
+    full version history.
     `single_partition` plans the version window over one partition
     (no exchange) — for callers that know the input is small."""
+    spark, path = snap.spark, snap.path
+    if deltas is None:
+        deltas = list(snap.deltas)
     parts = []
     if base_df is not None:
         base = base_df
-    elif base_version:
-        base = _read_base(spark, path, base_version)
+    elif snap.version:
+        base = snap.base.read()
     else:
         base = None
     if base is not None and not deltas:
@@ -2422,11 +2448,10 @@ def _read_merged_through(spark: SparkSession, path: str, key: str,
         # the pending tail is small (the LSM contract), which is every
         # call except bulk-load-sized deltas. base_df callers (pruned
         # lookups, surgical folds) already read a bounded base.
-        total = sum(hfs.dir_size(spark, hfs.join(path, f"delta_{v:05d}"))
+        total = sum(hfs.dir_size(spark, _delta_dir(path, v))
                     for v in deltas)
         if total <= FAST_MERGE_MAX_DELTA_BYTES:
-            return _merged_fast(spark, path, key, base, deltas, predicate,
-                                base_version=base_version)
+            return _merged_fast(snap, key, base, deltas, predicate)
     if base is not None:
         if predicate is not None:
             base = base.filter(predicate)
@@ -2454,13 +2479,8 @@ def _read_merged_through(spark: SparkSession, path: str, key: str,
 _BUCKET_SUFFIX_RE = re.compile(r"_(\d{5})\.")
 
 
-def _base_data_files(spark: SparkSession, base: str) -> list[str]:
-    return [f for f in hfs.listdir(spark, base)
-            if not f.startswith("_") and not f.startswith(".")]
-
-
-def _bucket_ids_for_values(spark: SparkSession, path: str, key: str,
-                           values: list, buckets: int) -> set[int] | None:
+def _bucket_ids_for_values(snap: Snapshot, key: str, values: list,
+                           buckets: int) -> set[int] | None:
     """Bucket ids the probe values hash into, computed with Spark's
     OWN expression — `pmod(hash(v), n)` is exactly
     HashPartitioning.partitionIdExpression, the function the bucketed
@@ -2468,10 +2488,10 @@ def _bucket_ids_for_values(spark: SparkSession, path: str, key: str,
     in tests/test_keyed_zonemap.py) — so the Python side never
     re-implements Murmur3. One tiny local job over the probe set;
     lookups are for bounded probe sets (use a join for bulk probes)."""
-    dtype = table_key_dtype(spark, path, key)
+    dtype = snap.key_dtype(key)
     if dtype is None:
         return None
-    df = spark.createDataFrame([(v,) for v in values],
+    df = snap.spark.createDataFrame([(v,) for v in values],
                                T.StructType([T.StructField(key, dtype)]))
     return {r["__b"] for r in df.select(
         F.pmod(F.hash(key), F.lit(buckets)).alias("__b")).collect()}
@@ -2479,10 +2499,7 @@ def _bucket_ids_for_values(spark: SparkSession, path: str, key: str,
 
 def pruned_base_files(spark: SparkSession, path: str, key: str, *,
                       values: list | None = None,
-                      lo=None, hi=None,
-                      version: int | None = None,
-                      meta: dict[str, str] | None = None
-                      ) -> tuple[list[str], int]:
+                      lo=None, hi=None) -> tuple[list[str], int]:
     """(kept base file names, total base files) for a key predicate —
     an equality set (`values`) or closed range [`lo`,`hi`] — using
     whichever skipping index the table's layout provides: the range
@@ -2490,46 +2507,48 @@ def pruned_base_files(spark: SparkSession, path: str, key: str, *,
     (equality probes only — a range scatters across every bucket).
     Conservative: pruning may keep a file with no matching row (the
     caller's residual filter handles it) but never drops a matching
-    one. With no usable index every file is kept. `version`/`meta`
-    let a caller pass an already-resolved manifest snapshot."""
-    if version is None or meta is None:
-        version, meta = _current_manifest(spark, path)
-    if not version:
-        raise FileNotFoundError(f"no versioned keyed table at {path}")
-    base = _base_dir(path, version)
-    all_files = sorted(base_file_map(spark, path, version))
-    idx = zm.load_zone_map_index(spark, base)
+    one. With no usable index every file is kept."""
+    return _pruned_files(snapshot(spark, path), key, values, lo, hi)
+
+
+def _pruned_files(snap: Snapshot, key: str, values: list | None,
+                  lo, hi) -> tuple[list[str], int]:
+    """`pruned_base_files` of a snapshot's base."""
+    base = snap.require_base()
+    all_files = sorted(base.file_map)
+    meta = snap.meta
+    idx = zm.load_zone_map_index(snap.spark, base.dir)
     if idx is not None and key in idx.cols:
-        if idx.n_files == len(all_files):
-            # the writer stats exactly the base's data files at commit
-            # (upsert) or carry (pruned fold) time, so a count match
-            # means full coverage — plan from the index, reading only
-            # span-intersecting shards (O(probe), not O(files))
-            kept = idx.prune(key, values=values, lo=lo, hi=hi)
-            if kept is not None:
-                known = set(kept)
-                return ([f for f in all_files if f in known],
-                        len(all_files))
-        else:
-            # partial/stale map (count mismatch) — materialize and
-            # keep unmapped files conservatively, exactly as before
-            zmap = {"cols": idx.cols, "files": idx.entries()}
-            kept = zm.prune_files(zmap, key, values=values, lo=lo, hi=hi)
-            if kept is not None:
-                mapped = {e["file"] for e in zmap["files"]}
-                known = set(kept)
-                return ([f for f in all_files
-                         if f in known or f not in mapped],
-                        len(all_files))
+        kept = _zone_kept(idx, set(all_files), key, values, lo, hi)
+        if kept is not None:
+            return [f for f in all_files if f in kept], len(all_files)
     buckets = int(meta.get("buckets", 0) or 0)
     if values is not None and buckets and meta.get("bucket_key") == key:
-        ids = _bucket_ids_for_values(spark, path, key, list(values),
-                                     buckets)
+        ids = _bucket_ids_for_values(snap, key, list(values), buckets)
         if ids is not None:
             return ([f for f in all_files
                      if not (m := _BUCKET_SUFFIX_RE.search(f))
                      or int(m.group(1)) in ids], len(all_files))
     return all_files, len(all_files)
+
+
+def _zone_kept(idx, all_files: set[str], col: str, values: list | None = None,
+               lo=None, hi=None) -> set[str] | None:
+    """The files a zone map admits for a predicate on `col`, None when
+    the map holds no stats for it. The writer stats exactly the base's
+    data files at commit (upsert) or carry (pruned fold) time, so a
+    count match means full coverage — plan from the index, reading
+    only span-intersecting shards (O(probe), not O(files)); a
+    partial/stale map (count mismatch) is materialized and its
+    unmapped files are kept conservatively."""
+    if idx.n_files == len(all_files):
+        kept = idx.prune(col, values=values, lo=lo, hi=hi)
+        return None if kept is None else set(kept)
+    zmap = {"cols": idx.cols, "files": idx.entries()}
+    kept = zm.prune_files(zmap, col, values=values, lo=lo, hi=hi)
+    if kept is None:
+        return None
+    return set(kept) | (all_files - {e["file"] for e in zmap["files"]})
 
 
 def _key_predicate(key: str, values: list | None, lo, hi) -> Column:
@@ -2577,16 +2596,12 @@ def lookup_keyed_table(spark: SparkSession, path: str, key: str, *,
       base), and no window runs at all.
     On a `buckets` table, hashing the probe values to bucket ids
     (`_bucket_ids_for_values`) runs one more small local job first."""
-    version, meta = _current_manifest(spark, path)
-    floor = _meta_floor(meta)
+    snap = snapshot(spark, path)
     pred = _key_predicate(key, values, lo, hi)
-    kept, total = pruned_base_files(spark, path, key, values=values,
-                                    lo=lo, hi=hi, version=version,
-                                    meta=meta)
-    fmap = base_file_map(spark, path, version)
-    files = [fmap[f] for f in kept]
-    base_df = _read_base_files(spark, path, version, files)
-    deltas = _complete_deltas(spark, path, floor=floor)
+    kept, total = _pruned_files(snap, key, values, lo, hi)
+    files = [snap.base.file_map[f] for f in kept]
+    base_df = snap.base.read_files(files)
+    deltas = snap.deltas
     # LSM read-path skipping: a pending delta whose recorded key range
     # cannot intersect the probe is not even opened (sound for
     # tombstones — an out-of-range tombstone can't cut a probed key's
@@ -2595,11 +2610,9 @@ def lookup_keyed_table(spark: SparkSession, path: str, key: str, *,
                    if _delta_may_match(spark, path, v, key,
                                        values, lo, hi)]
     one = bool(read_deltas) and _fits_one_partition(
-        spark, files, [hfs.join(path, f"delta_{v:05d}")
-                       for v in read_deltas])
-    out = _read_merged_through(spark, path, key, read_deltas,
-                               base_df=base_df, predicate=pred,
-                               single_partition=one)
+        spark, files, [_delta_dir(path, v) for v in read_deltas])
+    out = _read_merged_through(snap, key, read_deltas, base_df=base_df,
+                               predicate=pred, single_partition=one)
     if with_stats:
         return out, {"files_total": total, "files_read": len(kept),
                      "deltas": len(read_deltas),
@@ -2649,26 +2662,22 @@ def lookup_join_keyed_table(spark: SparkSession, path: str, key: str,
     base scan with the join still exact. Returns the merged rows for
     probe keys present in the table (absent keys simply don't match;
     tombstoned keys are cut by the merge)."""
-    version, meta = _current_manifest(spark, path)
-    floor = _meta_floor(meta)
+    snap = snapshot(spark, path)
+    base = snap.require_base()
     pkeys = probes.select(key).filter(F.col(key).isNotNull()).distinct()
     b = pkeys.agg(F.min(key).alias("lo"), F.max(key).alias("hi")).first()
     if b.lo is None:                     # empty probe set
-        empty = _read_base_files(spark, path, version, [])
+        empty = base.read_files([])
         return (empty, {"files_total": 0, "files_read": 0, "deltas": 0,
                         "deltas_total": 0}) if with_stats else empty
-    kept, total = pruned_base_files(spark, path, key, lo=b.lo, hi=b.hi,
-                                    version=version, meta=meta)
-    fmap = base_file_map(spark, path, version)
-    base_df = _read_base_files(spark, path, version,
-                               [fmap[f] for f in kept])
+    kept, total = _pruned_files(snap, key, None, b.lo, b.hi)
+    base_df = base.read_files([base.file_map[f] for f in kept])
     base_df = base_df.join(F.broadcast(pkeys), key, "left_semi")
-    deltas = _complete_deltas(spark, path, floor=floor)
+    deltas = snap.deltas
     read_deltas = [v for v in deltas
                    if _delta_may_match(spark, path, v, key,
                                        None, b.lo, b.hi)]
-    merged = _read_merged_through(spark, path, key, read_deltas,
-                                  base_df=base_df)
+    merged = _read_merged_through(snap, key, read_deltas, base_df=base_df)
     # the span admitted delta rows OUTSIDE the probe set — cut them
     # after the merge (cutting before would be wrong only for rows the
     # semi join above already restricted; this join is the exact gate)
@@ -2714,40 +2723,24 @@ def scan_keyed_table(spark: SparkSession, path: str, *,
     for col, (lo, hi) in where.items():
         if lo is None and hi is None:
             raise ValueError(f"predicate on {col!r} has neither bound")
-    version, meta = _current_manifest(spark, path)
-    if not version:
-        raise FileNotFoundError(f"no versioned keyed table at {path}")
-    floor = _meta_floor(meta)
-    pending = _complete_deltas(spark, path, floor=floor)
-    key = meta.get("range_key")
+    snap = snapshot(spark, path)
+    base = snap.require_base()
+    pending = list(snap.deltas)
+    key = snap.meta.get("range_key")
     if pending and not key:
         raise ValueError(
             f"{path} has pending deltas {pending} and no recorded "
             f"merge key (range_key) — the delta-aware decomposition "
             f"needs one; run compact first, or use lookup_keyed_table "
             f"for key predicates (merge-aware)")
-    fmap = base_file_map(spark, path, version)
+    fmap = base.file_map
     all_files = set(fmap)
-    idx = zm.load_zone_map_index(spark, _base_dir(path, version))
+    idx = zm.load_zone_map_index(spark, base.dir)
     kept = set(all_files)
-    if idx is not None and idx.n_files == len(all_files):
-        # full coverage (see pruned_base_files) — per-column prunes
-        # straight off the index, each reading only its own
-        # span-intersecting shards
-        for col, (lo, hi) in where.items():
-            ks = idx.prune(col, lo=lo, hi=hi)
-            if ks is None:
-                continue                 # column not in the map
-            kept &= set(ks)
-    elif idx is not None:
-        zmap = {"cols": idx.cols, "files": idx.entries()}
-        mapped = {e["file"] for e in zmap["files"]}
-        unmapped = all_files - mapped
-        for col, (lo, hi) in where.items():
-            ks = zm.prune_files(zmap, col, lo=lo, hi=hi)
-            if ks is None:
-                continue                 # column not in the map
-            kept &= set(ks) | unmapped
+    for col, (lo, hi) in where.items() if idx is not None else ():
+        ks = _zone_kept(idx, all_files, col, lo=lo, hi=hi)
+        if ks is not None:               # None: column not in the map
+            kept &= ks
     # bloom-index prune for EQUALITY predicates (lo == hi): the
     # complement of the zone map — a high-cardinality unsorted
     # column's per-file [min,max] spans ~everything (min/max keeps
@@ -2758,14 +2751,12 @@ def scan_keyed_table(spark: SparkSession, path: str, *,
     for col, (lo, hi) in where.items():
         if lo is None or lo != hi:
             continue
-        bf = bloom.bloom_kept_files(spark, _base_dir(path, version),
-                                    col, lo, all_files)
+        bf = bloom.bloom_kept_files(spark, base.dir, col, lo, all_files)
         if bf is not None:
             kept &= bf
             bloom_used.append(col)
     kept_names = sorted(kept)
-    df = _read_base_files(spark, path, version,
-                          [fmap[f] for f in kept_names])
+    df = base.read_files([fmap[f] for f in kept_names])
     pred = F.lit(True)
     for col, (lo, hi) in where.items():
         if lo is not None:
@@ -2781,11 +2772,11 @@ def scan_keyed_table(spark: SparkSession, path: str, *,
         key_pred = None
         if key in where:
             key_pred = _key_predicate(key, None, *where[key])
-        full_base = _read_base(spark, path, version)
+        full_base = base.read()
         if key_pred is not None:
             full_base = full_base.filter(key_pred)
-        dkeys, merged, cols = _merged_touched(
-            spark, path, key, full_base, pending, key_pred, version)
+        dkeys, merged, cols = _merged_touched(snap, key, full_base,
+                                              pending, key_pred)
         untouched = df.join(F.broadcast(dkeys), key, "left_anti")
         out = (untouched.filter(pred)
                .unionByName(merged.filter(pred),
@@ -2823,46 +2814,34 @@ def compact(spark: SparkSession, path: str, key: str,
     claimed-but-incomplete slot (live appender mid-write) stops the
     run, and every delta beyond it — complete or not — is left in
     place above the watermark for the next compaction."""
-    version, committed_meta = _current_manifest(spark, path)
-    meta = dict(committed_meta)
-    old_floor = _meta_floor(meta)
-    meta["merge_key"] = key
-    meta.pop("restored_from", None)   # folded base = new content
-    fold = _foldable_deltas(spark, path, gc_stale=True, floor=old_floor)
-    # fold only the run — deltas beyond an in-flight slot are masked so
-    # the new base contains nothing the watermark doesn't cover
-    merged = _read_merged_through(spark, path, key, fold,
-                                  base_version=version or None)
-    eff_buckets, eff_range = _resolve_layout(meta, key, buckets,
-                                             range_files)
-    eff_zorder = _resolve_zorder(meta, key, zorder_col)
-    eff_bloom = _resolve_bloom(meta, key, bloom_cols)
-    eff_buckets, eff_range, eff_target = _apply_autosize(
-        spark, path, version, fold, meta, key, eff_buckets, eff_range,
-        buckets, target_file_bytes, range_files=range_files)
-    if n_files and not eff_buckets and not eff_range:
+    version = _compact(snapshot(spark, path), key, n_files, retain_versions,
+                       buckets=buckets, range_files=range_files,
+                       stats_cols=stats_cols, zorder_col=zorder_col,
+                       target_file_bytes=target_file_bytes,
+                       bloom_cols=bloom_cols)
+    return _read_committed_parquet(spark, [_base_dir(path, version)])
+
+
+def _compact(snap: Snapshot, key: str, n_files: int | None = None,
+             retain_versions: int = 2, **layout_args) -> int:
+    """`compact` of a snapshot; returns the new base version. Compact's
+    policy on a stranded slot is to fold only the run: deltas beyond an
+    in-flight slot are masked, so the new base contains nothing the
+    watermark doesn't cover. A bucketed/range table keeps its layout
+    through compaction; an explicit `buckets`/`range_files`
+    (re-)lays-out the folded base — the natural way to cluster a table
+    built through the LSM path."""
+    fold, _ = _fold_run(snap)
+    merged = _read_merged_through(snap, key, fold)
+    layout = _resolve_layout(snap, key, fold, **layout_args)
+    if n_files and not layout.buckets and not layout.range_files:
         merged = merged.repartition(n_files)
-    new_version = _next_base_version(spark, path, version)
-    if fold:
-        meta["folded_through"] = str(fold[-1])
-    # a bucketed/range table keeps its layout through compaction; an
-    # explicit `buckets`/`range_files` (re-)lays-out the folded base —
-    # the natural way to cluster a table built through the LSM path
-    meta = _write_base_and_meta(spark, merged, path, new_version, key,
-                                eff_buckets, meta, eff_range=eff_range,
-                                stats_cols=stats_cols,
-                                eff_zorder=eff_zorder,
-                                eff_target=eff_target,
-                                eff_bloom=eff_bloom)
-    _commit_version(spark, path, new_version, retain_versions, meta=meta)
-    _gc_folded_deltas(spark, path, old_floor)
-    return _read_committed_parquet(
-        spark, [_base_dir(path, new_version)])
+    return _commit_base(snap, merged, key, layout,
+                        _next_meta(snap, key, fold), retain_versions)
 
 
-def _touched_base_files(spark: SparkSession, path: str, key: str,
-                        fold: list[int], zmap: dict,
-                        all_files: list[str]) -> set[str]:
+def _touched_base_files(snap: Snapshot, key: str, fold: list[int],
+                        zmap: dict, all_files: list[str]) -> set[str]:
     """Base files a fold of `fold` deltas may need to rewrite: every
     file whose zone-map [min,max] interval for `key` contains at least
     one key appearing in any foldable delta (upserts AND tombstones —
@@ -2902,26 +2881,27 @@ def _touched_base_files(spark: SparkSession, path: str, key: str,
             spans.append((e["file"], str(lo), str(hi)))
     if not spans:
         return touched
-    dirs = [hfs.join(path, f"delta_{v:05d}") for v in fold]
-    memo_key = (path, key, tuple(spans),
-                tuple((d, tuple(sorted(hfs.listdir(spark, d))))
+    dirs = [_delta_dir(snap.path, v) for v in fold]
+    memo_key = (snap.path, key, tuple(spans),
+                tuple((d, tuple(sorted(hfs.listdir(snap.spark, d))))
                       for d in dirs))
     hit = _TOUCHED_MEMO.get(memo_key)
     if hit is None:
-        hit = _span_hits(spark, path, key, fold, dirs, spans)
+        hit = _span_hits(snap, key, fold, dirs, spans)
         _memo_put(_TOUCHED_MEMO, memo_key, hit)
     return touched | hit
 
 
-def _span_hits(spark: SparkSession, path: str, key: str,
-               fold: list[int], dirs: list[str],
+def _span_hits(snap: Snapshot, key: str, fold: list[int],
+               dirs: list[str],
                spans: list[tuple[str, str, str]]) -> frozenset[str]:
     """Names of the `spans` (file, lo, hi — bounds as strings) that
     hold at least one non-null key of the `fold` deltas; a span whose
-    bound fails the cast to the key's dtype holds every key. One job
-    (see `_touched_base_files`)."""
+    bound fails the cast to the key's dtype (from the snapshot's base
+    schema) holds every key. One job (see `_touched_base_files`)."""
     import json
-    dtype = table_key_dtype(spark, path, key)
+    spark = snap.spark
+    dtype = snap.base.schema[key].dataType
     doc = json.dumps([{"f": f, "lo": lo, "hi": hi} for f, lo, hi in spans])
     arr = F.transform(
         F.from_json(F.lit(doc),
@@ -2931,7 +2911,7 @@ def _span_hits(spark: SparkSession, path: str, key: str,
             F.lit("lo"), s["lo"].try_cast(dtype),
             F.lit("hi"), s["hi"].try_cast(dtype)))
     k = F.col(key)
-    keys = _read_deltas_tagged(spark, path, fold).select(key)
+    keys = _read_deltas_tagged(spark, snap.path, fold).select(key)
     if _fits_one_partition(spark, [], dirs):
         keys = keys.coalesce(1)
     rows = (keys.filter(k.isNotNull())
@@ -2958,7 +2938,7 @@ def compact_pruned(spark: SparkSession, path: str, key: str,
     carry-by-copy variant spent 14 s copying 799 untouched files the
     fold never read — at 100 TB that is the table itself). Refs are
     flattened at fold time (a ref never points through another ref),
-    readers resolve them in one hop (`_read_base`), and `_commit_
+    readers resolve them in one hop (`_Base.file_map`), and `_commit_
     version` keeps every base directory a retained version still
     references, so chains of pruned folds share unchanged files until
     a FULL `compact` (or `materialize=True`) re-materializes the table
@@ -2980,49 +2960,43 @@ def compact_pruned(spark: SparkSession, path: str, key: str,
     is a no-op: no new version is committed. Returns ``(base_df,
     stats)`` where stats records files_total / files_rewritten /
     files_carried / deltas_folded / new_version / pruned."""
-    version, committed_meta = _current_manifest(spark, path)
-    meta = dict(committed_meta)
-    meta.pop("restored_from", None)   # pruned fold = new content
+    snap = snapshot(spark, path)
+    version = snap.version
     zmap = zm.read_zone_map(spark, _base_dir(path, version)) \
         if version else None
-    if (not version or meta.get("range_key") != key or zmap is None
+    if (not version or snap.meta.get("range_key") != key or zmap is None
             or key not in zmap.get("cols", {})):
-        df = compact(spark, path, key, retain_versions=retain_versions)
-        return df, {"pruned": False,
-                    "reason": "no range layout / zone map on this key "
-                              "— full fold",
-                    "new_version": current_base_version(spark, path)}
-    old_floor = _meta_floor(meta)
-    fold = _foldable_deltas(spark, path, gc_stale=True, floor=old_floor)
-    fmap = base_file_map(spark, path, version)
+        new_version = _compact(snap, key, retain_versions=retain_versions)
+        return _read_new_base(snap, new_version), {
+            "pruned": False,
+            "reason": "no range layout / zone map on this key — full fold",
+            "new_version": new_version}
+    fold, _ = _fold_run(snap)
+    fmap = snap.base.file_map
     all_files = sorted(fmap)
     if not fold:
-        return _read_base(spark, path, version), {
+        return snap.base.read(), {
             "pruned": True, "new_version": version, "deltas_folded": 0,
             "files_total": len(all_files), "files_rewritten": 0,
             "files_carried": len(all_files)}
-    touched = _touched_base_files(spark, path, key, fold, zmap,
-                                  all_files)
+    touched = _touched_base_files(snap, key, fold, zmap, all_files)
     untouched = [f for f in all_files if f not in touched]
     # empty on a pure-insert fold: every delta key lands outside every
     # span
-    base_df = _read_base_files(spark, path, version,
-                               [fmap[f] for f in sorted(touched)])
-    rewritten = _read_merged_through(spark, path, key, fold,
-                                     base_df=base_df)
+    base_df = snap.base.read_files([fmap[f] for f in sorted(touched)])
+    rewritten = _read_merged_through(snap, key, fold, base_df=base_df)
     # default: the rewritten group keeps its file count. Under a
     # `target_file_bytes` table (inherited only — layout changes go
     # through upsert/compact) the group is re-sized by observed bytes
     # instead, so deltas ballooning a hot file SPLIT it at the fold
     # that absorbs them rather than growing it without bound.
-    eff_target = _resolve_target(meta, key, None)
     n_out = max(1, len(touched))
-    if eff_target:
+    target = _meta_int(snap.meta, "target_file_bytes")
+    if target:
         tb = _files_bytes(spark, [fmap[f] for f in touched])
-        for v in fold:
-            tb += hfs.dir_size(spark, hfs.join(path, f"delta_{v:05d}"))
+        tb += sum(hfs.dir_size(spark, _delta_dir(path, v)) for v in fold)
         if tb > 0:
-            n_out = max(1, math.ceil(tb / eff_target))
+            n_out = max(1, math.ceil(tb / target))
     # rewritten files are KEY-sorted even on a z-ordered table: the
     # surgical fold rewrites a handful of files and must not pay the
     # z-bounds pass; their zone-map entries are re-collected so every
@@ -3051,8 +3025,8 @@ def compact_pruned(spark: SparkSession, path: str, key: str,
                        json.dumps({"version": 1, "refs": refs},
                                   separators=(",", ":")))
     carried_names = set(untouched)
-    new_files = [f for f in _base_data_files(spark, dst)
-                 if f not in carried_names]
+    new_files = [f for f in hfs.listdir(spark, dst)
+                 if not f.startswith(("_", ".")) and f not in carried_names]
     zm_cols = list(zmap["cols"])
     new_map = zm.collect_zone_map(
         spark, dst, zm_cols,
@@ -3067,7 +3041,7 @@ def compact_pruned(spark: SparkSession, path: str, key: str,
     # carried files keep their rows verbatim (possibly built under
     # older sizing — the prober handles per-row params), rewritten
     # files are re-stats'd with a scan of only themselves
-    bl_cols = [c for c in meta.get("bloom_cols", "").split(",") if c]
+    bl_cols = [c for c in snap.meta.get("bloom_cols", "").split(",") if c]
     if bl_cols:
         idx_parts = []
         old_idx = bloom.read_bloom_index(spark, _base_dir(path, version))
@@ -3087,10 +3061,9 @@ def compact_pruned(spark: SparkSession, path: str, key: str,
             for p in idx_parts[1:]:
                 merged_idx = merged_idx.unionByName(p)
             bloom.write_bloom_index(spark, dst, merged_idx)
-    meta["folded_through"] = str(fold[-1])
-    _commit_version(spark, path, new_version, retain_versions, meta=meta)
-    _gc_folded_deltas(spark, path, old_floor)
-    return _read_base(spark, path, new_version), {
+    _publish(snap, new_version, _next_meta(snap, key, fold),
+             retain_versions)
+    return _Base(spark, path, new_version).read(), {
         "pruned": True, "new_version": new_version,
         "deltas_folded": len(fold), "files_total": len(all_files),
         "files_rewritten": len(new_files),
@@ -3127,70 +3100,29 @@ def delete_from_keyed_table(spark: SparkSession, keys: DataFrame, *,
 
     Returns the post-delete table, or ``(df, n_deleted)`` with
     ``return_counts``."""
-    version, committed_meta = _current_manifest(spark, path)
-    meta = dict(committed_meta)
-    meta.pop("restored_from", None)   # rewritten base = new content
-    old_floor = _meta_floor(meta)
-    fold = _foldable_deltas(spark, path, gc_stale=True, floor=old_floor)
-    pending = _complete_deltas(spark, path, floor=old_floor)
-    if pending and fold != pending:
-        # committed deltas sit beyond a claimed-but-incomplete slot: an
-        # appender is mid-flight. Folding past the gap would orphan its
-        # delta below the watermark; folding only the run would leave
-        # later deltas to re-apply over the delete (resurrect). Refuse
-        # cleanly — delete is a rewrite anyway, so waiting out the
-        # in-flight append loses nothing.
-        raise ConcurrentWriteError(
-            f"{path} has committed deltas beyond an in-flight append "
-            f"(foldable run {fold} vs committed {pending}) — retry the "
-            f"delete after the appender finishes or times out")
-    if fold:
-        # fold base + deltas (tombstones applied) so the anti-join
-        # sees every live key and no delta outlives the new base
-        target = _read_merged_through(spark, path, key, fold,
-                                      base_version=version or None)
-        meta["folded_through"] = str(fold[-1])
-    else:
-        if not version:
-            raise FileNotFoundError(f"no keyed table at {path}")
-        cur_buckets = _resolve_buckets(meta, key, None)
-        if cur_buckets:
-            # bucketed base: the anti-join needs no exchange on it
-            target = _read_base_bucketed(spark, path, version, key,
-                                         cur_buckets)
-        else:
-            target = _read_base(spark, path, version)
+    snap = snapshot(spark, path)
+    fold, stranded = _fold_run(snap)
+    _refuse_stranded_deltas(snap, fold, stranded, "delete")
+    target = _rewrite_target(snap, key, fold)
+    if target is None:
+        raise FileNotFoundError(f"no keyed table at {path}")
     del_keys = (keys.select(F.col(key)).filter(F.col(key).isNotNull())
                 .distinct())
     remaining = target.join(del_keys, key, "left_anti")
-    new_version = _next_base_version(spark, path, version)
+    # count BEFORE the commit: under retain_versions=1 the commit
+    # retires the base `target` lazily scans
+    n_before = target.count() if return_counts else None
     # a bucketed/range table keeps its FULL layout spec through a
     # delete rewrite — byte target (re-planned from observed bytes,
     # like any fold) and bloom index included: dropping them here
     # would silently degrade every later read (caught by
     # test_keyed_checks/test_keyed_bloom delete-survival cases)
-    keep_buckets, keep_range = _resolve_layout(meta, key, None, None)
-    keep_buckets, keep_range, keep_target = _apply_autosize(
-        spark, path, version, fold, meta, key, keep_buckets, keep_range,
-        None, None)
-    meta = _write_base_and_meta(spark, remaining, path, new_version, key,
-                                keep_buckets, meta, eff_range=keep_range,
-                                eff_zorder=_resolve_zorder(meta, key, None),
-                                eff_target=keep_target,
-                                eff_bloom=_resolve_bloom(meta, key, None))
-    # count BEFORE the commit: under retain_versions=1 the commit
-    # retires the base `target` lazily scans
-    n_before = target.count() if return_counts else None
-    _commit_version(spark, path, new_version, retain_versions, meta=meta)
-    result = _read_committed_parquet(
-        spark, [_base_dir(path, new_version)])
-    n_deleted = (n_before - result.count()) if return_counts else None
-    # freshly-folded delta files are kept for one more commit (pure GC
-    # under the watermark; in-flight pre-fold readers finish their
-    # scans) — only deltas folded at or before the PREVIOUS commit go
-    _gc_folded_deltas(spark, path, old_floor)
+    version = _commit_base(snap, remaining, key,
+                           _resolve_layout(snap, key, fold),
+                           _next_meta(snap, key, fold), retain_versions)
+    result = _read_new_base(snap, version)
     if return_counts:
-        return result, n_deleted
+        return result, n_before - result.count()
     return result
 
 
@@ -3224,30 +3156,22 @@ def restore_table(spark: SparkSession, path: str, key: str,
     deltas_superseded}."""
     import json
 
-    cur_version, committed_meta = _current_manifest(spark, path)
-    meta = dict(committed_meta)
-    snapdir = _base_dir(path, version)
-    if not hfs.exists(spark, hfs.join(snapdir, "_SUCCESS")):
-        raise FileNotFoundError(
-            f"version {version} of {path} does not exist or was "
-            f"retired (write with retain_versions > 1 to keep "
-            f"history)")
-    old_floor = _meta_floor(meta)
-    fold = _foldable_deltas(spark, path, gc_stale=True, floor=old_floor)
-    pending = [v for v in _delta_versions(spark, path) if v > old_floor]
-    stranded = sorted(set(pending) - set(fold))
+    snap = snapshot(spark, path)
+    restored = _retained_base(spark, path, version)
+    snapdir = restored.dir
+    fold, stranded = _fold_run(snap)
     if stranded:
         raise ConcurrentWriteError(
             f"delta slot(s) {stranded} of {path} are claimed by a "
             f"live appender — a restore committed now would let those "
             f"rows re-apply on top of the snapshot; retry once they "
             f"commit (or their claims go stale)")
-    # flatten: base_file_map resolves the snapshot's own carried refs
+    # flatten: the file map resolves the snapshot's own carried refs
     # to their ORIGINAL owner dirs, so the restore's refs stay one hop
-    fmap = base_file_map(spark, path, version)
+    fmap = restored.file_map
     root = path.rstrip("/")
     refs = sorted(p[len(root) + 1:] for p in fmap.values())
-    new_version = _next_base_version(spark, path, cur_version)
+    new_version = _next_base_version(spark, path, snap.version)
     dst = _claim_base_slot(spark, path, new_version)
     zmap = zm.read_zone_map(spark, snapdir)
     idx = bloom.read_bloom_index(spark, snapdir)
@@ -3268,18 +3192,14 @@ def restore_table(spark: SparkSession, path: str, key: str,
         hfs.write_text(spark, hfs.join(staging, "_SUCCESS"), "")
 
     _staged_claimed_write(spark, dst, _write_slot)
-    meta["merge_key"] = key
+    meta = _next_meta(snap, key, fold)
     meta.pop("bucket_key", None)
     meta.pop("buckets", None)
     # provenance: table-info shows where this version's content came
     # from; a later non-restore commit drops the marker (its content
     # is no longer the snapshot's)
     meta["restored_from"] = str(version)
-    if fold:
-        meta["folded_through"] = str(fold[-1])
-    _commit_version(spark, path, new_version, retain_versions,
-                    meta=meta)
-    _gc_folded_deltas(spark, path, old_floor)
+    _publish(snap, new_version, meta, retain_versions)
     return {"restored_to": version, "new_version": new_version,
             "files_carried": len(refs),
             "deltas_superseded": len(fold)}
@@ -3291,9 +3211,14 @@ def append_delete_delta(spark: SparkSession, keys: DataFrame, *,
     base — one tiny write, O(deleted keys), the path a high-frequency
     pipeline takes between compactions. `read_merged` hides
     tombstoned keys and `compact` purges them physically."""
+    return _append_tombstones(snapshot(spark, path), keys, key)
+
+
+def _append_tombstones(snap: Snapshot, keys: DataFrame, key: str) -> int:
+    """`append_delete_delta` against a snapshot."""
     src = (keys.select(F.col(key)).filter(F.col(key).isNotNull())
            .distinct().withColumn(_TOMBSTONE, F.lit(True)))
-    return _append_delta_claiming(spark, src, path, key=key)
+    return _append_delta_claiming(snap, src, key)
 
 
 def append_merge_delta(spark: SparkSession, rows: DataFrame, *,
@@ -3318,6 +3243,11 @@ def append_merge_delta(spark: SparkSession, rows: DataFrame, *,
     constraints are enforced on the UPSERT rows only — SQL deletes
     are not subject to CHECK — and the schema mode gate is the same
     as `append_delta`."""
+    return _append_merge(snapshot(spark, path), rows, key)
+
+
+def _append_merge(snap: Snapshot, rows: DataFrame, key: str) -> int:
+    """`append_merge_delta` against a snapshot."""
     src = rows.filter(F.col(key).isNotNull())
     has_tomb = _TOMBSTONE in src.columns
     order_cols = ([_TOMBSTONE] if has_tomb else []) + \
@@ -3326,34 +3256,19 @@ def append_merge_delta(spark: SparkSession, rows: DataFrame, *,
         *[F.col(c).desc_nulls_last() for c in order_cols])
     src = (src.withColumn("__rn", F.row_number().over(w))
            .filter(F.col("__rn") == 1).drop("__rn"))
-    meta = table_meta(spark, path)
-    chk = _resolve_checks(meta, None)
-    _enforce_schema_mode(spark, path, src.columns,
-                         _resolve_schema_mode(meta, None),
-                         "merge delta")
-    # checks ride the delta write (r16) — tombstone rows exempt via
-    # live_if (SQL deletes are not subject to CHECK)
-    spec = None
-    if chk:
-        live_if = (~F.coalesce(F.col(_TOMBSTONE), F.lit(False))
-                   if has_tomb else None)
-        spec = (chk, "merge delta", table_schema(spark, path), live_if)
-    return _append_delta_claiming(spark, src, path, key=key,
-                                  checks_spec=spec)
+    # tombstone rows are exempt from CHECK (SQL deletes are not
+    # subject to it)
+    live_if = (~F.coalesce(F.col(_TOMBSTONE), F.lit(False))
+               if has_tomb else None)
+    return _append_checked(snap, src, key, "merge delta", live_if)
 
 
 def table_schema(spark: SparkSession, path: str):
-    """The table's current declared schema (StructType) — the base
-    `_current_manifest` resolves, else the newest pending delta; None
-    when no table exists (first write defines it). One parquet-footer
-    read, no data."""
-    version = current_base_version(spark, path)
-    if version:
-        return _base_schema(spark, path, version)
-    deltas = _delta_versions(spark, path)
-    if deltas:
-        return _read_delta_dir(spark, path, deltas[-1]).schema
-    return None
+    """The table's current declared schema (StructType) — the
+    snapshot's base, else the newest pending delta; None when no table
+    exists (first write defines it). One parquet-footer read, no
+    data."""
+    return snapshot(spark, path).schema
 
 
 def table_key_dtype(spark: SparkSession, path: str, key: str):
@@ -3363,10 +3278,7 @@ def table_key_dtype(spark: SparkSession, path: str, key: str):
     lands (ADVICE r8: a string-typed tombstone on a long-keyed table
     breaks every subsequent `read_merged` at the unionByName
     type-resolution step)."""
-    schema = table_schema(spark, path)
-    if schema is None:
-        return None
-    return schema[key].dataType if key in schema.names else None
+    return snapshot(spark, path).key_dtype(key)
 
 
 class SchemaViolation(ValueError):
@@ -3394,9 +3306,9 @@ def _resolve_schema_mode(meta: dict[str, str],
     return meta.get(_SCHEMA_MODE_KEY, "merge")
 
 
-def _enforce_schema_mode(spark: SparkSession, path: str,
-                         source_cols: list[str], mode: str, what: str,
-                         updated_at_col: str | None = None) -> None:
+def _enforce_schema_mode(snap: Snapshot, source_cols: list[str], mode: str,
+                         what: str, updated_at_col: str | None = None
+                         ) -> None:
     """Under `strict`, refuse a batch introducing columns the table's
     current schema lacks. Column REMOVAL is always fine (absent
     columns merge as null-skip). The tombstone marker and the
@@ -3404,7 +3316,7 @@ def _enforce_schema_mode(spark: SparkSession, path: str,
     "new". First write defines the schema unconditionally."""
     if mode != "strict":
         return
-    schema = table_schema(spark, path)
+    schema = snap.schema
     if schema is None:
         return
     known = set(schema.names) | {_TOMBSTONE}
@@ -3413,7 +3325,7 @@ def _enforce_schema_mode(spark: SparkSession, path: str,
     extra = sorted(c for c in source_cols if c not in known)
     if extra:
         raise SchemaViolation(
-            f"{what} introduces column(s) {extra} but {path} pins "
+            f"{what} introduces column(s) {extra} but {snap.path} pins "
             f"schema.mode=strict — evolve the schema explicitly with "
             f"one schema_mode='merge' upsert round (the strict pin "
             f"survives; schema_mode='unpin' removes it), or drop "

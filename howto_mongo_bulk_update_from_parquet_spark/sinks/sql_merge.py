@@ -112,9 +112,8 @@ import re
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
-from .keyed_table import (_TOMBSTONE, append_delete_delta,
-                          append_merge_delta, read_merged, table_meta,
-                          table_schema)
+from .keyed_table import (_TOMBSTONE, _append_merge, _append_tombstones,
+                          _read_merged_through, snapshot)
 
 
 class MergeSyntaxError(ValueError):
@@ -336,8 +335,9 @@ def sql_merge(spark: SparkSession, text: str, *,
 
     src = (spark.sql(spec["source_sql"]) if spec["source_sql"]
            else spark.table(spec["source_name"]))
-    tgt = read_merged(spark, path, key)
-    tgt_fields = {f.name: f.dataType for f in table_schema(spark, path)}
+    snap = snapshot(spark, path)         # one resolution per statement
+    tgt = _read_merged_through(snap, key)
+    tgt_fields = {f.name: f.dataType for f in snap.schema}
     src_fields = {f.name: f.dataType for f in src.schema.fields}
     has_star = any(act == "update" and sets == "*"
                    for _, (act, sets) in spec["matched"])
@@ -527,7 +527,7 @@ def sql_merge(spark: SparkSession, text: str, *,
     # the write job itself via the Observation API (zero extra jobs);
     # only a CHECK-constrained table pays a separate agg pass, see
     # _counted.
-    delta_version = append_merge_delta(spark, rows, path=path, key=key)
+    delta_version = _append_merge(snap, rows, key)
 
     counts = get_counts()
     n_source, n_matched_rows = int(counts["n"]), int(counts["m"] or 0)
@@ -634,7 +634,8 @@ def sql_delete(spark: SparkSession, text: str, *,
             "[WHERE <pred>]")
     path, key = _resolve_target(m.group("target"), tables, "DELETE")
     alias = m.group("alias") or m.group("target")
-    victims = read_merged(spark, path, key).alias(alias)
+    snap = snapshot(spark, path)
+    victims = _read_merged_through(snap, key).alias(alias)
     if m.group("where"):
         w = m.group("where")
         victims = _bind(lambda: victims.filter(F.expr(w)),
@@ -644,8 +645,7 @@ def sql_delete(spark: SparkSession, text: str, *,
     # the Observation is safe unconditionally — see _counted)
     obs = Observation()
     victims = victims.observe(obs, F.count(F.lit(1)).alias("n"))
-    v = append_delete_delta(spark, victims.select(key),
-                            path=path, key=key)
+    v = _append_tombstones(snap, victims.select(key), key)
     return {"action": "delete", "n_deleted": int(obs.get["n"]),
             "delta_version": v}
 
@@ -669,8 +669,8 @@ def sql_update(spark: SparkSession, text: str, *,
             "c = <expr>[, ...] [WHERE <pred>]")
     path, key = _resolve_target(m.group("target"), tables, "UPDATE")
     alias = m.group("alias") or m.group("target")
-    schema = table_schema(spark, path)
-    tgt_fields = {f.name: f.dataType for f in schema}
+    snap = snapshot(spark, path)
+    tgt_fields = {f.name: f.dataType for f in snap.schema}
     assigned = {}
     for col, rhs in _split_assignments(m.group("sets")):
         if col not in tgt_fields:
@@ -682,7 +682,7 @@ def sql_update(spark: SparkSession, text: str, *,
                 f"UPDATE SET cannot assign the merge key {key!r} — "
                 f"a key change is a delete + insert")
         assigned[col] = rhs
-    rows = read_merged(spark, path, key).alias(alias)
+    rows = _read_merged_through(snap, key).alias(alias)
     if m.group("where"):
         w = m.group("where")
         rows = _bind(lambda: rows.filter(F.expr(w)), "UPDATE WHERE")
@@ -696,7 +696,7 @@ def sql_update(spark: SparkSession, text: str, *,
     proj = _bind(lambda: rows.select(*cols), "UPDATE SET")
     proj, get_counts = _counted(spark, path, proj,
                                 [F.count(F.lit(1)).alias("n")])
-    v = append_merge_delta(spark, proj, path=path, key=key)
+    v = _append_merge(snap, proj, key)
     return {"action": "update", "n_updated": int(get_counts()["n"]),
             "delta_version": v}
 
@@ -770,7 +770,8 @@ def sql_insert(spark: SparkSession, text: str, *,
             "statement is not of the form INSERT INTO <t> [(cols)] "
             "SELECT ... | VALUES (...), ...")
     path, key = _resolve_target(m.group("target"), tables, "INSERT")
-    schema = table_schema(spark, path)
+    snap = snapshot(spark, path)
+    schema = snap.schema
     tgt_fields = {f.name: f.dataType for f in schema}
     df = spark.sql(m.group("body"))
     if m.group("cols") is not None:
@@ -799,7 +800,7 @@ def sql_insert(spark: SparkSession, text: str, *,
     proj = df.select(*sel)
     proj, get_counts = _counted(spark, path, proj,
                                 [F.count(F.lit(1)).alias("n")])
-    v = append_merge_delta(spark, proj, path=path, key=key)
+    v = _append_merge(snap, proj, key)
     return {"action": "insert", "n_inserted": int(get_counts()["n"]),
             "delta_version": v}
 
@@ -882,8 +883,8 @@ def sql_copy(spark: SparkSession, text: str, *,
             f"COPY INTO FILEFORMAT must be one of "
             f"{sorted(_COPY_FORMATS)}, got {fmt!r}")
     opts = dict(_COPY_OPT_RE.findall(m.group("opts") or ""))
-    schema = table_schema(spark, path)
-    tgt_fields = {f.name: f.dataType for f in schema}
+    snap = snapshot(spark, path)
+    tgt_fields = {f.name: f.dataType for f in snap.schema}
     try:
         df = spark.read.options(**opts).format(fmt).load(m.group("src"))
     except Exception as exc:  # noqa: BLE001 - surface as statement error
@@ -907,7 +908,7 @@ def sql_copy(spark: SparkSession, text: str, *,
     proj = df.select(*sel)
     proj, get_counts = _counted(spark, path, proj,
                                 [F.count(F.lit(1)).alias("n")])
-    v = append_merge_delta(spark, proj, path=path, key=key)
+    v = _append_merge(snap, proj, key)
     return {"action": "copy", "n_loaded": int(get_counts()["n"]),
             "delta_version": v}
 
@@ -922,8 +923,7 @@ def sql_optimize(spark: SparkSession, text: str, *,
     {action, base_version, folded_through, zorder} WITHOUT counting
     the table — OPTIMIZE on 100 TB must not pay an extra O(table)
     count job for a report line."""
-    from .keyed_table import (compact, current_base_version,
-                              folded_through)
+    from .keyed_table import compact
     m = _OPTIMIZE_RE.match(_strip_leading_comments(text))
     if not m:
         raise MergeSyntaxError(
@@ -932,10 +932,11 @@ def sql_optimize(spark: SparkSession, text: str, *,
     path, key = _resolve_target(m.group("target"), tables, "OPTIMIZE")
     zcol = m.group("zcol")
     if zcol is not None:
-        if zcol not in {f.name for f in table_schema(spark, path)}:
+        snap = snapshot(spark, path)
+        if zcol not in snap.schema.names:
             raise MergeSyntaxError(
                 f"OPTIMIZE ZORDER BY names unknown column {zcol!r}")
-        if table_meta(spark, path).get("range_key") != key:
+        if snap.meta.get("range_key") != key:
             # z-order clusters a RANGE base's files; on a plain/hash
             # table the engine would silently key-sort instead — and
             # a result claiming "zorder: <col>" would be a lie
@@ -945,10 +946,9 @@ def sql_optimize(spark: SparkSession, text: str, *,
                 f"lay it out first: compact --range-files N "
                 f"--zorder-col {zcol}")
     compact(spark, path, key, zorder_col=zcol)
-    return {"action": "optimize",
-            "base_version": current_base_version(spark, path),
-            "folded_through": folded_through(spark, path),
-            "zorder": zcol}
+    after = snapshot(spark, path)
+    return {"action": "optimize", "base_version": after.version,
+            "folded_through": after.floor, "zorder": zcol}
 
 
 def sql_vacuum(spark: SparkSession, text: str, *,
@@ -1037,7 +1037,6 @@ def sql_create(spark: SparkSession, text: str, *,
     posture; drop the directory or use the write verbs to evolve).
     Returns {action, table, path, key, version} without an O(table)
     count job."""
-    from .keyed_table import current_base_version
     m = _CREATE_RE.match(_strip_leading_comments(text))
     if not m:
         raise MergeSyntaxError(
@@ -1050,7 +1049,7 @@ def sql_create(spark: SparkSession, text: str, *,
             f"{tables[name][0]!r}) — CREATE never overwrites")
     from . import fs as hfs
     try:
-        occupied = (current_base_version(spark, loc) > 0
+        occupied = (snapshot(spark, loc).version > 0
                     or bool(hfs.exists(spark, loc)
                             and hfs.listdir(spark, loc)))
     except Exception:  # noqa: BLE001 - absent/unreadable dir: creatable
@@ -1074,4 +1073,4 @@ def sql_create(spark: SparkSession, text: str, *,
     tables[name] = (loc, key)
     register_sql_view(spark, loc, key, name)
     return {"action": "create", "table": name, "path": loc,
-            "key": key, "version": current_base_version(spark, loc)}
+            "key": key, "version": snapshot(spark, loc).version}

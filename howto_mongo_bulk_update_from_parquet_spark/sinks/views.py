@@ -48,12 +48,9 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from .changes import (OP_COL, PRE_COL, VERSION_COL,
-                      ChangeHistoryUnavailable, read_table_changes)
-from .keyed_table import (_complete_deltas, _current_manifest,
-                          _delta_versions, _deltas_key_range, _meta_floor,
-                          _read_merged_through, current_base_version,
-                          folded_through, read_merged, table_meta,
-                          upsert_into_keyed_table)
+                      ChangeHistoryUnavailable, _table_changes)
+from .keyed_table import (Snapshot, _deltas_key_range, _read_merged_through,
+                          _upsert, read_merged, snapshot)
 
 OFFSET_PROP = "user.feed_offset"
 RECOVER_COUNT_PROP = "user.recover_count"
@@ -115,11 +112,10 @@ def _check_view_shape(cur_columns, cols: list[str], names: dict,
             f"with")
 
 
-def _snapshot_state(spark: SparkSession, table_path: str, key: str,
-                    group_col: str, cols_: list[str], names: dict,
-                    track_minmax: bool):
+def _snapshot_state(src: Snapshot, key: str, group_col: str,
+                    cols_: list[str], names: dict, track_minmax: bool):
     """(snapshot aggregate, offset) from ONE consistent (base version,
-    committed deltas) resolution of the source — the shared core of
+    committed deltas) resolution of the source, `src` — the shared core of
     the first bootstrap and the auto-recovery re-bootstrap (one copy:
     a change to snapshot aggregation or offset derivation cannot
     diverge the two paths — review r14). The frame is materialized
@@ -128,11 +124,7 @@ def _snapshot_state(spark: SparkSession, table_path: str, key: str,
     import uuid as _uuid
 
     from pyspark.sql import Observation
-    version, meta = _current_manifest(spark, table_path)
-    floor = _meta_floor(meta)
-    committed = _complete_deltas(spark, table_path, floor=floor)
-    state = _read_merged_through(spark, table_path, key, committed,
-                                 base_version=version or None)
+    state = _read_merged_through(src, key)
     # the group count rides the checkpoint materialization itself
     # (r17 trim, guide §1.4): the bootstrap/recover stats used to pay
     # a separate count() job against the checkpointed frame
@@ -142,16 +134,20 @@ def _snapshot_state(spark: SparkSession, table_path: str, key: str,
             .agg(*_snapshot_aggs(cols_, names, track_minmax))
             .observe(obs, F.count(F.lit(1)).alias("__n"))
             .localCheckpoint())
-    return snap, (committed[-1] if committed else floor), \
+    return snap, (src.deltas[-1] if src.deltas else src.floor), \
         int(obs.get["__n"])
 
 
 def view_offset(spark: SparkSession, view_path: str) -> int:
     """Last source delta version this view has applied (0 = never)."""
-    if not current_base_version(spark, view_path):
+    return _offset(snapshot(spark, view_path))
+
+
+def _offset(view: Snapshot) -> int:
+    if not view.version:
         return 0
     try:
-        return int(table_meta(spark, view_path).get(OFFSET_PROP, 0) or 0)
+        return int(view.meta.get(OFFSET_PROP, 0) or 0)
     except ValueError:
         return 0
 
@@ -186,12 +182,11 @@ def maintain_grouped_view(spark: SparkSession, *, table_path: str,
     extremum needs the group's surviving rows — the classic
     non-invertible-aggregate recompute. Only the flagged groups
     recompute, from the table's merged state AS OF the window's end
-    version (never the live head — a racing appender's newer deltas
-    must not leak into a state committed under this offset; if a
-    concurrent fold already swallowed that state, the round aborts
-    cleanly for a re-run). Typical rounds retract no extremum and
-    stay pure-differential — `recomputed_groups` in the stats is the
-    evidence. Recompute-round cost, stated precisely: the
+    version, read from the round's own source snapshot (never the
+    live head — a racing appender's newer deltas must not leak into a
+    state committed under this offset). Typical rounds retract no
+    extremum and stay pure-differential — `recomputed_groups` in the
+    stats is the evidence. Recompute-round cost, stated precisely: the
     offset-consistent state is one merged read of the table with a
     broadcast semi filter (I/O O(table bytes scanned) map-side, no
     shuffle beyond the flagged groups' rows; a group-span base prune
@@ -217,14 +212,13 @@ def maintain_grouped_view(spark: SparkSession, *, table_path: str,
 
     `auto_recover=True` (r14, verdict item 2): when the change window
     is no longer servable — feed history vacuumed/GC'd past the
-    view's offset, pre-images folded away, or a concurrent fold
-    racing the recompute path — the maintainer RE-BOOTSTRAPS instead
-    of dead-ending on `ChangeHistoryUnavailable`: one consistent
-    snapshot re-aggregate of the source (the same O(table) cost as
-    the first bootstrap — the price of falling behind retention, the
-    standard CDC snapshot-rebuild), PLUS zero-rows for groups the
-    view carries that the snapshot no longer has (an upsert alone
-    cannot retract them), committed atomically with the fresh offset
+    view's offset, or pre-images folded away — the maintainer
+    RE-BOOTSTRAPS instead of dead-ending on `ChangeHistoryUnavailable`:
+    one consistent snapshot re-aggregate of the source (the same
+    O(table) cost as the first bootstrap — the price of falling behind
+    retention, the standard CDC snapshot-rebuild), PLUS zero-rows for
+    groups the view carries that the snapshot no longer has (an upsert
+    alone cannot retract them), committed atomically with the fresh offset
     so the next round resumes pure-differential. Nothing was
     committed on the failed differential attempt, so recovery never
     double-counts. Default False: an operator who wants the error
@@ -262,35 +256,38 @@ def _maintain_round(spark: SparkSession, table_path: str, key: str,
                     view_path: str, group_col: str, sum_col: str,
                     track_minmax: bool, auto_recover: bool) -> dict:
     """One lease-held maintenance round (the body of
-    `maintain_grouped_view`)."""
+    `maintain_grouped_view`). The source and the view are each
+    resolved ONCE; every read and the view commit of the round use
+    those two snapshots."""
     cols_, names = _sum_cols(sum_col)
-    if not current_base_version(spark, view_path):
-        snap, newest, n_groups = _snapshot_state(spark, table_path, key,
-                                                 group_col, cols_, names,
-                                                 track_minmax)
-        upsert_into_keyed_table(spark, snap, path=view_path,
-                                key=group_col, updated_at_col=None,
-                                table_props={OFFSET_PROP: str(newest)})
+    src, view = snapshot(spark, table_path), snapshot(spark, view_path)
+    if not view.version:
+        snap, newest, n_groups = _snapshot_state(src, key, group_col,
+                                                 cols_, names, track_minmax)
+        _upsert(view, snap, group_col, updated_at_col=None,
+                table_props={OFFSET_PROP: str(newest)})
         return {"applied_through": int(newest),
                 "groups_touched": n_groups,
                 "changes": -1, "bootstrap": True}
     try:
-        return _apply_differential(spark, table_path, key, view_path,
-                                   group_col, sum_col, track_minmax)
+        return _apply_differential(src, key, view, group_col, sum_col,
+                                   track_minmax)
     except ChangeHistoryUnavailable:
         if not auto_recover:
             raise
-        return _recover_rebootstrap(spark, table_path, key, view_path,
-                                    group_col, sum_col, track_minmax)
+        return _recover_rebootstrap(src, key, view, group_col, sum_col,
+                                    track_minmax)
 
 
-def _apply_differential(spark: SparkSession, table_path: str, key: str,
-                        view_path: str, group_col: str, sum_col: str,
+def _apply_differential(src: Snapshot, key: str, view: Snapshot,
+                        group_col: str, sum_col: str,
                         track_minmax: bool) -> dict:
-    """One differential maintenance round (the non-bootstrap body of
+    """One differential maintenance round of the source snapshot `src`
+    into the view snapshot `view` (the non-bootstrap body of
     `maintain_grouped_view`); raises `ChangeHistoryUnavailable` when
     the window cannot be served, having committed nothing."""
-    off = view_offset(spark, view_path)
+    spark, table_path, view_path = src.spark, src.path, view.path
+    off = _offset(view)
     cols_shape, names_shape = _sum_cols(sum_col)
     # no-op fast path (r14 trim): metadata alone decides whether any
     # change landed above the offset — a scheduled maintainer polling
@@ -300,18 +297,16 @@ def _apply_differential(spark: SparkSession, table_path: str, key: str,
     # nothing: an all-empty window would run the contribution job on
     # an empty feed, whose observed metrics never latch (AQE replaces
     # the plan over an empty shuffle with an empty relation)
-    arrived = [v for v in _delta_versions(spark, table_path) if v > off]
-    if folded_through(spark, table_path) <= off and (
+    arrived = [v for v in src.listed if v > off]
+    if src.floor <= off and (
             not arrived or _deltas_key_range(spark, table_path, key,
                                              arrived) == (None, None)):
         # the shape contract must surface even with zero arrivals
         # (ADVICE r15): an idle poll with a mismatched
         # sum_col/track_minmax previously reported success silently.
-        # Schema-only read — resolving the view's columns executes
-        # nothing.
-        _check_view_shape(
-            read_merged(spark, view_path, group_col).columns,
-            cols_shape, names_shape, track_minmax, view_path)
+        # Schema-only: the view's columns are its snapshot's schema.
+        _check_view_shape(view.schema.names, cols_shape, names_shape,
+                          track_minmax, view_path)
         return {"applied_through": off, "groups_touched": 0,
                 "changes": 0}
     # ONE execution of the enriched feed window (r14 trim, tightened
@@ -331,8 +326,7 @@ def _apply_differential(spark: SparkSession, table_path: str, key: str,
 
     from pyspark.sql import Observation
     feed_obs = Observation(f"feed_stats_{_uuid.uuid4().hex[:8]}")
-    changes = (read_table_changes(spark, table_path, after=off,
-                                  with_preimage=True, key=key)
+    changes = (_table_changes(src, after=off, with_preimage=True, key=key)
                .observe(feed_obs,
                         F.max(F.col(VERSION_COL)).alias("__v"),
                         F.count(F.lit(1)).alias("__n")))
@@ -373,20 +367,27 @@ def _apply_differential(spark: SparkSession, table_path: str, key: str,
     # the touched-group count rides the same checkpoint job: `merged`
     # below holds exactly one row per `delta` group (the view holds one
     # row per group, semi-joined to these), so no later action has to
-    # consume `merged` for the count to latch
+    # consume `merged` for the count to latch. Contribution rows that
+    # count for no group (an insert or retraction under a NULL group, a
+    # tombstone of a key that never existed) are not filtered out
+    # before the aggregate: they ride it as ONE extra NULL group,
+    # dropped after the checkpoint. A window whose rows all drop
+    # therefore still shuffles a row, and AQE cannot replace the
+    # aggregate — and both observations with it — by an empty relation.
     group_obs = Observation(f"groups_{_uuid.uuid4().hex[:8]}")
     delta = (contrib
-             .filter(F.col("__keep") & F.col("__g").isNotNull())
-             .groupBy("__g").agg(*delta_aggs)
-             .observe(group_obs, F.count(F.lit(1)).alias("__n"))
-             .localCheckpoint())
+             .groupBy(F.when(F.col("__keep"), F.col("__g")).alias("__g"))
+             .agg(*delta_aggs)
+             .observe(group_obs, F.count(F.col("__g")).alias("__n"))
+             .localCheckpoint()
+             .filter(F.col("__g").isNotNull()))
     stats = feed_obs.get
     n_groups = int(group_obs.get["__n"])
     served, n_changes = stats["__v"], int(stats["__n"])
     if served is None:
         return {"applied_through": off, "groups_touched": 0,
                 "changes": 0}
-    cur = read_merged(spark, view_path, group_col)
+    cur = _read_merged_through(view, group_col)
     _check_view_shape(cur.columns, cols_, names, track_minmax,
                       view_path)
     cur = (cur.alias("c")
@@ -449,18 +450,11 @@ def _apply_differential(spark: SparkSession, table_path: str, key: str,
                    .collect()]        # bounded by the window's groups
         n_rc = len(rc_keys)
         if rc_keys:
-            version, meta = _current_manifest(spark, table_path)
-            floor = _meta_floor(meta)
-            if floor > served:
-                raise ChangeHistoryUnavailable(
-                    f"a concurrent fold advanced {table_path} past "
-                    f"offset {served} mid-round — re-run the "
-                    f"maintenance (nothing was committed)")
-            window = [v for v in
-                      _complete_deltas(spark, table_path, floor=floor)
-                      if v <= served]
-            state = _read_merged_through(spark, table_path, key, window,
-                                         base_version=version or None)
+            # the round's own source snapshot, cut at the window's end:
+            # the state the feed window was read from, whatever a
+            # racing appender or fold has committed since
+            window = [v for v in src.deltas if v <= served]
+            state = _read_merged_through(src, key, window)
             rc_df = spark.createDataFrame(
                 [(g,) for g in rc_keys],
                 f"{group_col} {dict(merged.dtypes)[group_col]}")
@@ -498,9 +492,8 @@ def _apply_differential(spark: SparkSession, table_path: str, key: str,
     # non-minmax rounds do not checkpoint `merged` (r17, guide §1.4):
     # the view upsert's write job consumes it. (The minmax branch keeps
     # its checkpoint: rc_keys are collected from it before the write.)
-    upsert_into_keyed_table(spark, merged, path=view_path,
-                            key=group_col, updated_at_col=None,
-                            table_props={OFFSET_PROP: str(served)})
+    _upsert(view, merged, group_col, updated_at_col=None,
+            table_props={OFFSET_PROP: str(served)})
     out = {"applied_through": int(served),
            "groups_touched": n_groups,
            "changes": n_changes}
@@ -509,8 +502,8 @@ def _apply_differential(spark: SparkSession, table_path: str, key: str,
     return out
 
 
-def _recover_rebootstrap(spark: SparkSession, table_path: str, key: str,
-                         view_path: str, group_col: str, sum_col: str,
+def _recover_rebootstrap(src: Snapshot, key: str, view: Snapshot,
+                         group_col: str, sum_col: str,
                          track_minmax: bool) -> dict:
     """Snapshot-diff recovery (r14): the change feed can no longer
     serve the view's window, so rebuild the view's truth from one
@@ -524,12 +517,10 @@ def _recover_rebootstrap(spark: SparkSession, table_path: str, key: str,
     Cost O(table) + O(live view groups) — the floor for recovering
     from lost history without a second log."""
     cols_, names = _sum_cols(sum_col)
-    cur = read_merged(spark, view_path, group_col)
-    _check_view_shape(cur.columns, cols_, names, track_minmax,
-                      view_path)
-    snap, newest, n_groups = _snapshot_state(spark, table_path, key,
-                                             group_col, cols_, names,
-                                             track_minmax)
+    cur = _read_merged_through(view, group_col)
+    _check_view_shape(cur.columns, cols_, names, track_minmax, view.path)
+    snap, newest, n_groups = _snapshot_state(src, key, group_col, cols_,
+                                             names, track_minmax)
     zero_cols = [F.col(group_col),
                  F.lit(0).cast("long").alias("cnt")]
     for c in cols_:
@@ -549,19 +540,16 @@ def _recover_rebootstrap(spark: SparkSession, table_path: str, key: str,
     # structured warning instead of silently eating the cost.
     n_prior = 0
     try:
-        n_prior = int(table_meta(spark, view_path
-                                 ).get(RECOVER_COUNT_PROP, 0))
+        n_prior = int(view.meta.get(RECOVER_COUNT_PROP, 0))
     except (ValueError, TypeError):
         pass
-    upsert_into_keyed_table(spark, payload, path=view_path,
-                            key=group_col, updated_at_col=None,
-                            table_props={
-                                OFFSET_PROP: str(newest),
-                                RECOVER_COUNT_PROP: str(n_prior + 1)})
+    _upsert(view, payload, group_col, updated_at_col=None,
+            table_props={OFFSET_PROP: str(newest),
+                         RECOVER_COUNT_PROP: str(n_prior + 1)})
     if n_prior >= 1:
         from ..observability import StructuredLog
         StructuredLog().event(
-            "view_recover_repeated", view=view_path, source=table_path,
+            "view_recover_repeated", view=view.path, source=src.path,
             recover_count=n_prior + 1,
             hint="feed history is being reclaimed faster than this "
                  "view is maintained — raise retention (vacuum/fold "

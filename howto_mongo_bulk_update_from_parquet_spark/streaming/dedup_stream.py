@@ -49,21 +49,18 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from ..sinks import fs as hfs
-from ..sinks.keyed_table import (_complete_deltas, append_delta, compact,
-                                 folded_through, read_keyed_table,
-                                 read_pending_deltas, recover_dead_claims,
-                                 upsert_into_keyed_table)
+from ..sinks.keyed_table import (Snapshot, _read_current, _read_pending,
+                                 append_delta, compact, recover_dead_claims,
+                                 snapshot, upsert_into_keyed_table)
 
 MODES = ("near", "spans", "vec")
 
 
-def _index_or_none(spark: SparkSession, path: str) -> DataFrame | None:
-    try:
-        # honor_buckets: a bucket-stored index feeds the probe join
-        # exchange-free on the index side
-        return read_keyed_table(spark, path, honor_buckets=True)
-    except FileNotFoundError:
-        return None                      # first arrival seeds it
+def _index_or_none(snap: Snapshot) -> DataFrame | None:
+    # honor_buckets: a bucket-stored index feeds the probe join
+    # exchange-free on the index side; no version = the first arrival
+    # seeds it
+    return _read_current(snap, honor_buckets=True) if snap.version else None
 
 
 def dedup_batch_verdicts(docs: DataFrame, index: DataFrame | None,
@@ -230,9 +227,9 @@ def stream_dedup_parquet(spark: SparkSession, source_dir: str, *,
             return
         docs = batch_df.select(F.col(id_col).alias("doc_id"),
                                F.col(text_col).alias("text"))
-        index = _index_or_none(sess, index_path)
-        pending = (read_pending_deltas(sess, index_path)
-                   if index is not None else None)
+        snap = snapshot(sess, index_path)   # one resolution: base + tail
+        index = _index_or_none(snap)
+        pending = _read_pending(snap) if index is not None else None
         out, index_rows, index_key = dedup_batch_verdicts(
             docs, index, mode, pending=pending)
         # cache the verdict frame: the index fold's survivor filter
@@ -255,9 +252,7 @@ def stream_dedup_parquet(spark: SparkSession, source_dir: str, *,
                                                     path=index_path,
                                                     key=index_key))
                 if compact_pending:
-                    n_pend = len(_complete_deltas(
-                        sess, index_path,
-                        floor=folded_through(sess, index_path)))
+                    n_pend = len(snapshot(sess, index_path).deltas)
                     if n_pend >= compact_pending:
                         compact(sess, index_path, index_key)
             elif update_index:
@@ -274,8 +269,8 @@ def stream_dedup_parquet(spark: SparkSession, source_dir: str, *,
         from ..plans.incremental_vec import vec_batch_verdicts
         emb = batch_df.select(F.col(id_col).alias("vec_id"),
                               F.col(vec_col).alias("embedding"))
-        index = _index_or_none(sess, index_path)
-        store = _index_or_none(sess, vectors_path)
+        index = _index_or_none(snapshot(sess, index_path))
+        store = _index_or_none(snapshot(sess, vectors_path))
         if (index is None) != (store is None):
             # one store missing is a mis-pointed path, not a first
             # arrival — failing the stream beats silently re-seeding

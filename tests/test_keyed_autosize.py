@@ -17,7 +17,7 @@ from pyspark.sql import functions as F
 
 from howto_mongo_bulk_update_from_parquet_spark.sinks import fs as hfs
 from howto_mongo_bulk_update_from_parquet_spark.sinks.keyed_table import (
-    _current_manifest, append_delta, base_file_map, compact,
+    append_delta, base_file_map, compact,
     compact_pruned, current_base_version, read_merged, table_meta,
     upsert_into_keyed_table)
 

@@ -174,16 +174,17 @@ def test_delete_inherits_concurrent_writer_fences(spark, tmp_path, monkeypatch):
     p = str(tmp_path / "race")
     upsert_into_keyed_table(spark, _src(spark, [(1, "x", 1.0)]),
                             path=p, key="k", updated_at_col=None)   # v1
+    stale = kt.snapshot(spark, p)       # the loser resolved v1
     upsert_into_keyed_table(spark, _src(spark, [(2, "y", 2.0)]),
                             path=p, key="k", updated_at_col=None)   # v2
-    real = kt._current_manifest
-    monkeypatch.setattr(kt, "_current_manifest", lambda *a, **k: (1, {}))
+    real = kt.snapshot
+    monkeypatch.setattr(kt, "snapshot", lambda *a, **k: stale)
     with pytest.raises(kt.ConcurrentWriteError):
         delete_from_keyed_table(
             spark, spark.createDataFrame([(1,)], "k long"),
             path=p, key="k")
     monkeypatch.undo()
-    assert kt._current_manifest is real
+    assert kt.snapshot is real
     # winner intact; retry succeeds against the true version
     assert sorted(r.k for r in read_keyed_table(spark, p).collect()) == [1, 2]
     out, n = delete_from_keyed_table(
@@ -281,7 +282,7 @@ def test_versioned_delete_folds_pending_deltas(spark, tmp_path):
     to die, and no surviving delta (__v >= 1) may re-apply over the new
     base (__v = 0) in read_merged and resurrect deleted rows."""
     from howto_mongo_bulk_update_from_parquet_spark.sinks.keyed_table import \
-        _complete_deltas
+        snapshot
     p = str(tmp_path / "mix")
     upsert_into_keyed_table(
         spark, _src(spark, [(1, "x", 1.0), (2, "y", 2.0)]),
@@ -295,7 +296,7 @@ def test_versioned_delete_folds_pending_deltas(spark, tmp_path):
     assert n == 2                       # key 2 (base) AND key 3 (delta-only)
     # folded: invisible to every reader (files are retained one more
     # commit for in-flight pre-fold readers, then GC'd)
-    assert _complete_deltas(spark, p) == []
+    assert snapshot(spark, p).deltas == ()
     live = {r.k: (r.a, r.b) for r in out.collect()}
     assert live == {1: ("x2", 1.0)}     # delta update survived the fold
     assert {r.k: (r.a, r.b) for r in read_merged(spark, p, "k").collect()} \
@@ -313,10 +314,11 @@ def test_append_delta_claims_version_against_stale_listing(
     p = str(tmp_path / "race")
     upsert_into_keyed_table(spark, _src(spark, [(1, "x", 1.0)]),
                             path=p, key="k", updated_at_col=None)
+    stale = kt.snapshot(spark, p)
     v1 = append_delta(spark, _src(spark, [(5, "a", None)]), path=p, key="k")
     # the "loser": its directory listing is stale (taken before v1
     # landed), so it claims the same version number
-    monkeypatch.setattr(kt, "_delta_versions", lambda s, path: [])
+    monkeypatch.setattr(kt, "snapshot", lambda *a, **k: stale)
     v2 = append_delta(spark, _src(spark, [(6, "b", None)]), path=p, key="k")
     monkeypatch.undo()
     assert (v1, v2) == (1, 2)

@@ -56,7 +56,7 @@ def test_compact_preserves_content_and_removes_deltas(spark, tmp_path):
     # pre-fold readers finish their scans) but readers already ignore
     # them under the watermark
     from howto_mongo_bulk_update_from_parquet_spark.sinks import keyed_table as kt
-    assert kt._complete_deltas(spark, path) == []
+    assert kt.snapshot(spark, path).deltas == ()
     # delta numbering is MONOTONIC across compactions: the manifest's
     # folded_through watermark covers version 1 forever, so the next
     # append must claim 2 — a re-used number at or below the watermark

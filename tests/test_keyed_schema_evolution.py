@@ -54,7 +54,7 @@ def test_new_column_through_lsm_and_compaction(spark, tmp_path):
     compacted = compact(spark, p, "k")
     assert {r.k: (r.v, r.score) for r in compacted.collect()} == want
     from howto_mongo_bulk_update_from_parquet_spark.sinks import keyed_table as kt
-    assert kt._complete_deltas(spark, p) == []
+    assert kt.snapshot(spark, p).deltas == ()
     assert {r.k: (r.v, r.score)
             for r in read_keyed_table(spark, p).collect()} == want
     # and the widened table keeps merging correctly afterwards

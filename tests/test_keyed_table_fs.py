@@ -122,11 +122,12 @@ def test_interleaved_writers_loser_gets_clean_conflict(spark, tmp_path, monkeypa
     path = os.path.join(str(tmp_path), "race")
     r0 = spark.createDataFrame([("a", 1.0)], "_id string, v double")
     upsert_into_keyed_table(spark, r0, path=path, key="_id")     # v1
+    # loser resolved version 1 before the winner's commit landed
+    # (writers resolve the table once, into one snapshot)
+    stale = kt.snapshot(spark, path)
     winner = spark.createDataFrame([("b", 2.0)], "_id string, v double")
     upsert_into_keyed_table(spark, winner, path=path, key="_id")  # v2 committed
-    # loser read version 1 before the winner's commit landed (writers
-    # resolve version + metadata through the single manifest read)
-    monkeypatch.setattr(kt, "_current_manifest", lambda *a, **k: (1, {}))
+    monkeypatch.setattr(kt, "snapshot", lambda *a, **k: stale)
     loser = spark.createDataFrame([("c", 3.0)], "_id string, v double")
     with pytest.raises(kt.ConcurrentWriteError, match="re-read and retry"):
         upsert_into_keyed_table(spark, loser, path=path, key="_id")
@@ -220,7 +221,7 @@ def test_compact_single_write_versioned_base(spark, tmp_path):
     # the freshly-folded delta keeps its files one more commit (the
     # delta analog of retain_versions) but is invisible to readers
     from howto_mongo_bulk_update_from_parquet_spark.sinks import keyed_table as kt
-    assert kt._complete_deltas(spark, path) == []
+    assert kt.snapshot(spark, path).deltas == ()
     # second compact rolls the version forward (GC'ing the previous
     # fold's files); the default retain window keeps current + previous
     append_delta(spark, spark.createDataFrame([("c", 3.0)], "_id string, v double"),

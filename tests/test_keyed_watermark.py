@@ -154,7 +154,7 @@ def test_fold_stops_at_inflight_gap(spark, tmp_path):
     # watermark; the freshly-folded delta 1 is retained one commit
     assert sorted(d for d in os.listdir(p) if d.startswith("delta_")) == \
         ["delta_00001", "delta_00002", "delta_00003"]
-    assert kt._complete_deltas(spark, p) == [3]
+    assert kt.snapshot(spark, p).deltas == (3,)
     assert {r.k for r in read_merged(spark, p, "k").collect()} == {1, 2, 3}
 
 
@@ -236,7 +236,7 @@ def test_upsert_folds_pending_deltas(spark, tmp_path):
     assert {r.k: r.v for r in read_merged(spark, p, "k").collect()} == want
     assert folded_through(spark, p) == 1
     # folded: invisible to readers, files retained one commit
-    assert kt._complete_deltas(spark, p) == []
+    assert kt.snapshot(spark, p).deltas == ()
     # an in-flight gap refuses cleanly, same as delete
     append_delta(spark, _df(spark, [(5, "e")]), path=p, key="k")   # v2
     os.makedirs(os.path.join(p, "delta_00002"), exist_ok=True)
@@ -337,7 +337,7 @@ def test_mixed_path_random_op_sequences_match_model(spark, tmp_path):
         assert got == want, ops
         # after a fold (no reader-visible deltas — retained folded
         # files don't count), the committed snapshot IS the merged view
-        if not kt._complete_deltas(spark, p):
+        if not kt.snapshot(spark, p).deltas:
             from howto_mongo_bulk_update_from_parquet_spark.sinks.keyed_table import (
                 read_keyed_table)
             snap = {r.k: (r.a, r.b)
@@ -411,16 +411,16 @@ def test_manifest_retry_exhaustion_raises_not_empty_meta(spark, tmp_path,
     p = str(tmp_path / "mexhaust")
     upsert_into_keyed_table(spark, _df(spark, [(1, "a")]), path=p, key="k",
                             updated_at_col=None)
-    # sanity: the healthy final re-read path still resolves
-    v, meta = kt._current_manifest(spark, p, retries=0)
-    assert v == 1
+    # sanity: the healthy read resolves
+    assert kt.snapshot(spark, p).version == 1
     monkeypatch.setattr(hfs, "read_text", lambda s, path: None)
     with pytest.raises(ConcurrentWriteError, match="re-read and retry"):
-        kt._current_manifest(spark, p, retries=2)
-    # a directory with no table reads as (0, {})
+        kt.snapshot(spark, p)
+    # a directory with no table reads as version 0, no metadata
     empty = str(tmp_path / "no_table")
     os.makedirs(empty)
-    assert kt._current_manifest(spark, empty) == (0, {})
+    got = kt.snapshot(spark, empty)
+    assert (got.version, got.meta) == (0, {})
 
 
 def test_vacuum_reclaims_dormant_folded_deltas(spark, tmp_path):

@@ -225,7 +225,7 @@ def test_lookup_puts_the_key_first_with_or_without_pending_deltas(
     merge is also driven directly with a kept-file frame whose key
     comes later."""
     from howto_mongo_bulk_update_from_parquet_spark.sinks.keyed_table import (
-        _read_merged_through, current_base_version)
+        _read_merged_through, snapshot)
     path = str(tmp_path / "t")
     src = spark.range(50).select(
         F.concat(F.lit("a"), F.col("id").cast("string")).alias("a"),
@@ -240,11 +240,8 @@ def test_lookup_puts_the_key_first_with_or_without_pending_deltas(
     assert hit.columns == miss.columns == ["k", "a", "b"]
     assert [tuple(r) for r in hit.collect()] == [(3, "u", 1.5)]
     assert [tuple(r) for r in miss.collect()] == [(40, "a40", 20.0)]
-    version = current_base_version(spark, path)
+    snap = snapshot(spark, path)
     key_later = read_merged(spark, path, "k").select("a", "k", "b")
-    no_window = _read_merged_through(spark, path, "k", [],
-                                     base_version=version,
-                                     base_df=key_later)
-    window = _read_merged_through(spark, path, "k", [1],
-                                  base_version=version, base_df=key_later)
+    no_window = _read_merged_through(snap, "k", [], base_df=key_later)
+    window = _read_merged_through(snap, "k", [1], base_df=key_later)
     assert no_window.columns == window.columns == ["k", "a", "b"]

@@ -124,13 +124,11 @@ def test_range_table_hits_branch_pruned(spark, tmp_path, monkeypatch):
     # whole table (an overall-[min,max] bound would admit all 8)
     from howto_mongo_bulk_update_from_parquet_spark.sinks import zonemap as zm
     from howto_mongo_bulk_update_from_parquet_spark.sinks.keyed_table import (
-        _base_dir, _touched_base_files, base_file_map,
-        current_base_version)
-    v = current_base_version(spark, path)
-    zmap = zm.read_zone_map(spark, _base_dir(path, v))
-    touched = _touched_base_files(
-        spark, path, "k", [1, 2], zmap,
-        sorted(base_file_map(spark, path, v)))
+        _touched_base_files, snapshot)
+    snap = snapshot(spark, path)
+    zmap = zm.read_zone_map(spark, snap.base.dir)
+    touched = _touched_base_files(snap, "k", [1, 2], zmap,
+                                  sorted(snap.base.file_map))
     assert len(touched) == 1
 
 

@@ -57,12 +57,6 @@ def test_rotating_file_handler_writes_and_rotates(tmp_path):
     assert lines and all(r["event"] == "write_complete" for r in lines)
 
 
-def test_cloudwatch_handler_is_honestly_gated():
-    from howto_mongo_bulk_update_from_parquet_spark.observability import cloudwatch_handler
-    with pytest.raises(NotImplementedError, match="watchtower"):
-        cloudwatch_handler()
-
-
 def test_aws_named_profile_bridge(tmp_path, monkeypatch):
     """configparser twin of the reference's boto3 profile read
     (src/func/aws.py:8-31): named profile keys + region from the

@@ -96,8 +96,8 @@ def test_seeded_ntz_type_equals_a_cold_read(spark, tmp_path):
         base = kt._base_dir(path, kt.current_base_version(spark, path))
         cold = spark.read.parquet(base).schema["ts"].dataType
         assert read_merged(spark, path, "_id").schema["ts"].dataType == cold
-        assert kt._read_base(spark, path, kt.current_base_version(
-            spark, path)).schema["ts"].dataType == cold
+        assert kt.snapshot(spark, path).base.read() \
+            .schema["ts"].dataType == cold
         cold_delta = spark.read.parquet(
             os.path.join(path, "delta_00001")).schema["ts"].dataType
         assert kt._read_delta_dir(spark, path, 1).schema["ts"].dataType \

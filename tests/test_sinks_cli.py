@@ -362,7 +362,7 @@ def test_cli_changefeed_two_rounds_then_compact(spark, tmp_path, capsys):
     assert rc == 0
     from howto_mongo_bulk_update_from_parquet_spark.sinks import keyed_table as kt
     n_folded = len([d for d in os.listdir(table) if d.startswith("delta_")])
-    assert kt._complete_deltas(spark, table) == []   # folded, retained 1 commit
+    assert kt.snapshot(spark, table).deltas == ()   # folded, retained 1 commit
     got = {r.k: r.v for r in read_merged(spark, table, "k").collect()}
     assert got == {2: "b2", 3: "c", 4: "d"}
     # guard: a mistyped feed is refused before any delta lands
@@ -376,7 +376,7 @@ def test_cli_changefeed_two_rounds_then_compact(spark, tmp_path, capsys):
     # nothing landed: no NEW delta beyond the retained folded ones
     assert len([d for d in os.listdir(table)
                 if d.startswith("delta_")]) == n_folded
-    assert kt._complete_deltas(spark, table) == []
+    assert kt.snapshot(spark, table).deltas == ()
 
 
 def test_cli_changefeed_schema_evolution_mid_feed(spark, tmp_path):
@@ -410,7 +410,7 @@ def test_cli_changefeed_schema_evolution_mid_feed(spark, tmp_path):
     assert got == {2: ("b2", 0.5), 3: ("c", 0.9)}
     # compaction folds the widened schema into the committed base
     assert main(["compact", "--table", table, "--key", "k"]) == 0
-    assert kt._complete_deltas(spark, table) == []
+    assert kt.snapshot(spark, table).deltas == ()
     base = read_keyed_table(spark, table)
     assert "score" in base.columns
     assert {r.k: (r.v, r.score) for r in base.collect()} == got

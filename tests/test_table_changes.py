@@ -213,8 +213,7 @@ def test_preimage_one_pass_matches_per_version_merge(spark, tmp_path):
     values), schema evolution mid-history, and a bounded window whose
     lookback spans an earlier non-window delta."""
     from howto_mongo_bulk_update_from_parquet_spark.sinks.keyed_table import (
-        _complete_deltas, _current_manifest, _meta_floor,
-        _read_merged_through)
+        _read_merged_through, snapshot)
 
     path = str(tmp_path / "tbl")
     base = spark.createDataFrame(
@@ -245,16 +244,14 @@ def test_preimage_one_pass_matches_per_version_merge(spark, tmp_path):
         got = read_table_changes(spark, path, after=after, until=until,
                                  with_preimage=True, key="k")
         pcols = got.schema["_change_pre"].dataType.fieldNames()
-        version, meta = _current_manifest(spark, path)
-        committed = _complete_deltas(spark, path,
-                                     floor=_meta_floor(meta))
+        snap = snapshot(spark, path)
+        committed = snap.deltas
         hi = until if until is not None else committed[-1]
         window = [v for v in committed if after < v <= hi]
         for r in got.collect():
             v = r[VERSION_COL]
             below = [e for e in committed if e < v]
-            state = _read_merged_through(spark, path, "k", below,
-                                         base_version=version or None)
+            state = _read_merged_through(snap, "k", below)
             want_rows = state.filter(F.col("k") == r["k"]).collect()
             pre = r["_change_pre"]
             if not want_rows:

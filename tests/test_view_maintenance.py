@@ -31,9 +31,12 @@ def _mk_table(spark, tmp_path, n=12):
 
 
 def _recompute(spark, path):
+    """The grouped aggregate from scratch, over non-NULL groups only:
+    the view does not track a NULL group."""
     return sorted(
         (r.g, r.cnt, float(r.total)) for r in
-        read_merged(spark, path, "k").groupBy("g").agg(
+        read_merged(spark, path, "k").filter(F.col("g").isNotNull())
+        .groupBy("g").agg(
             F.count(F.lit(1)).alias("cnt"),
             F.sum(F.col("val").cast("decimal(38,6)"))
              .cast("double").alias("total")).collect())
@@ -124,8 +127,24 @@ def test_bootstrap_then_increments_match_recompute(spark, tmp_path):
                                view_path=vp, group_col="g",
                                sum_col="val")
     assert st["changes"] == 0 and st["groups_touched"] == 0
-    # one window with a group move, a delete, an insert, and a
-    # null-skip partial update (g=None keeps the old group)
+    # non-empty windows whose every contribution drops: an insert
+    # under a NULL group, then a tombstone of a key that never existed
+    for applied, append in (
+            (2, lambda: append_delta(spark, spark.createDataFrame(
+                [Row(k=100, g=None, val=1.0)],
+                "k bigint, g bigint, val double"), path=path, key="k")),
+            (3, lambda: append_delete_delta(
+                spark, spark.createDataFrame([Row(k=999)]), path=path,
+                key="k"))):
+        append()
+        st = maintain_grouped_view(spark, table_path=path, key="k",
+                                   view_path=vp, group_col="g",
+                                   sum_col="val")
+        assert (st["applied_through"], st["changes"],
+                st["groups_touched"]) == (applied, 1, 0)
+        assert _view(spark, vp) == _recompute(spark, path)
+    # one window with a group move, a delete, a key leaving the NULL
+    # group, and a null-skip partial update (g=None keeps the old group)
     append_delta(spark, spark.createDataFrame([Row(k=1, g=9, val=11.0)]),
                  path=path, key="k")
     append_delete_delta(spark, spark.createDataFrame([Row(k=2)]),
@@ -140,7 +159,7 @@ def test_bootstrap_then_increments_match_recompute(spark, tmp_path):
     st = maintain_grouped_view(spark, table_path=path, key="k",
                                view_path=vp, group_col="g",
                                sum_col="val")
-    assert st["applied_through"] == 5 and st["changes"] == 4
+    assert st["applied_through"] == 7 and st["changes"] == 4
     assert st["groups_touched"] == 5        # 0, 1, 2, 5 and 9
     assert _view(spark, vp) == _recompute(spark, path)
     # idempotent: nothing new, nothing touched
