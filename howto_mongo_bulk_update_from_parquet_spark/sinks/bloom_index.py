@@ -39,8 +39,10 @@ from functools import reduce
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from . import fs as hfs
+from .zonemap import stats_read
 
 BLOOM_SIDECAR = "_bloomidx"
 M_BITS = 1 << 16
@@ -63,7 +65,9 @@ def collect_bloom_index(spark: SparkSession, base_dir: str,
                         paths: list[str] | None = None,
                         m_bits: int | None = None,
                         n_hashes: int = N_HASHES,
-                        n_max: int | None = None) -> DataFrame | None:
+                        n_max: int | None = None,
+                        schema: T.StructType | None = None
+                        ) -> DataFrame | None:
     """Per-file sparse bloom bitsets for `cols` over the parquet files
     of `base_dir` (or the explicit `paths` subset — the pruned fold
     stats only its rewritten files). One job per call: explode k
@@ -84,8 +88,9 @@ def collect_bloom_index(spark: SparkSession, base_dir: str,
     the caller already knows it — the write path collects the zone
     map immediately before this and its per-file `rows` entries are
     the exact same per-file counts (r16 trim: one fewer job per
-    bloom-indexed base write; identical m_bits by construction)."""
-    df = spark.read.parquet(*(paths if paths else [base_dir]))
+    bloom-indexed base write; identical m_bits by construction).
+    `schema` is the writer's (`zonemap.stats_read`)."""
+    df = stats_read(spark, base_dir, cols, paths, schema)
     usable = [c for c in cols if c in df.columns]
     if not usable:
         return None

@@ -106,30 +106,8 @@ def _table_changes(snap: Snapshot, *, after: int = 0,
     if with_preimage and not key:
         raise ValueError("with_preimage needs the merge key")
     spark, path = snap.spark, snap.path
-    version_now, floor, present = snap.version, snap.floor, snap.listed
-    known_max = max(present[-1] if present else 0, floor)
-    hi = known_max if until is None else min(until, known_max)
-    have = set(present)
-    versions: list[int] = []
-    missing: list[int] = []
-    for v in range(after + 1, hi + 1):
-        if v not in have:
-            if v <= floor:
-                missing.append(v)        # folded AND reclaimed
-                continue
-            break                        # gap above the floor: stop
-        # above the floor the snapshot knows which slots committed; a
-        # folded delta still on disk is checked directly
-        if not (v in snap.deltas or (v <= floor and hfs.exists(
-                spark, hfs.join(path, f"delta_{v:05d}", "_SUCCESS")))):
-            break                        # live appender mid-write
-        versions.append(v)
-    if missing:
-        raise ChangeHistoryUnavailable(
-            f"delta versions {missing} of {path} were already "
-            f"reclaimed (folded through {floor}); snapshot-diff the "
-            f"retained versions and resume the feed above "
-            f"{max(missing)}")
+    version_now, floor = snap.version, snap.floor
+    versions = _feed_window(snap, after, until)
     if with_preimage and versions and versions[0] <= floor:
         raise ChangeHistoryUnavailable(
             f"pre-images need unfolded deltas, but version "
@@ -184,6 +162,41 @@ def _table_changes(snap: Snapshot, *, after: int = 0,
     return allv.select(*cols, *tail)
 
 
+def _feed_window(snap: Snapshot, after: int = 0,
+                 until: int | None = None) -> list[int]:
+    """The delta versions a feed read of (after, until] serves, from
+    the snapshot's listing: contiguous from `after + 1`, truncated at
+    the first gap above the floor or slot a live appender is still
+    writing. Raises `ChangeHistoryUnavailable` when the window reaches
+    versions already reclaimed."""
+    spark, path, floor, present = snap.spark, snap.path, snap.floor, \
+        snap.listed
+    known_max = max(present[-1] if present else 0, floor)
+    hi = known_max if until is None else min(until, known_max)
+    have = set(present)
+    versions: list[int] = []
+    missing: list[int] = []
+    for v in range(after + 1, hi + 1):
+        if v not in have:
+            if v <= floor:
+                missing.append(v)        # folded AND reclaimed
+                continue
+            break                        # gap above the floor: stop
+        # above the floor the snapshot knows which slots committed; a
+        # folded delta still on disk is checked directly
+        if not (v in snap.deltas or (v <= floor and hfs.exists(
+                spark, hfs.join(path, f"delta_{v:05d}", "_SUCCESS")))):
+            break                        # live appender mid-write
+        versions.append(v)
+    if missing:
+        raise ChangeHistoryUnavailable(
+            f"delta versions {missing} of {path} were already "
+            f"reclaimed (folded through {floor}); snapshot-diff the "
+            f"retained versions and resume the feed above "
+            f"{max(missing)}")
+    return versions
+
+
 def _with_preimage_one_pass(snap: Snapshot, key: str, versions: list[int],
                             deltas: dict, base: DataFrame,
                             ptypes: dict) -> DataFrame:
@@ -236,17 +249,17 @@ def _with_preimage_one_pass(snap: Snapshot, key: str, versions: list[int],
     # the base contributes pre-state only for keys the WINDOW deltas
     # touch: zone-pruned file set (bounded by the deltas' recorded
     # key-range sidecars), then an exact broadcast semi join — the
-    # base is never shuffled and never read beyond admissible files
+    # base is never shuffled and never read beyond admissible files.
+    # A semi join needs no distinct key set
     win_keys = None
     for v in versions:
         kdf = deltas[v].select(key).filter(F.col(key).isNotNull())
         win_keys = kdf if win_keys is None else win_keys.unionByName(kdf)
-    win_keys = win_keys.distinct()
     hits = _hits_base(snap, key, base, versions)
     parts = [deltas[v].withColumn("__v", F.lit(v)) for v in versions]
     parts += [hist_dfs[e].withColumn("__v", F.lit(e))
               for e in hist if e not in deltas]
-    parts.append(hits.join(F.broadcast(win_keys), key)
+    parts.append(hits.join(F.broadcast(win_keys), key, "left_semi")
                  .withColumn("__v", F.lit(0)))
     u = reduce(
         lambda a, b: a.unionByName(b, allowMissingColumns=True), parts)

@@ -329,15 +329,24 @@ def _seed_schema_memo(spark: SparkSession, dirpath: str,
     list. One write means one schema in every file, so the single-
     footer and the merged inference agree and both keys are seeded
     (base versions read merged, see `_Base.schema`)."""
-    if any(not isinstance(f.dataType, _SEEDABLE_ATOMIC)
-           for f in schema.fields):
+    seeded = _read_back_schema(schema)
+    if seeded is None:
         return
     fp = tuple(sorted(hfs.listdir(spark, dirpath)))
-    seeded = T.StructType([T.StructField(f.name, f.dataType, True)
-                           for f in schema.fields])
     for merge_schema in (False, True):
         _memo_put(_PQ_SCHEMA_MEMO, ((dirpath,), fp, merge_schema),
                   seeded)
+
+
+def _read_back_schema(schema: T.StructType) -> "T.StructType | None":
+    """The schema a footer inference of files written with `schema`
+    returns — every top-level field nullable — or None when a field's
+    type is not one whose roundtrip is exact (`_SEEDABLE_ATOMIC`)."""
+    if any(not isinstance(f.dataType, _SEEDABLE_ATOMIC)
+           for f in schema.fields):
+        return None
+    return T.StructType([T.StructField(f.name, f.dataType, True)
+                         for f in schema.fields])
 
 
 def _read_committed_parquet(spark: SparkSession, paths: list[str],
@@ -523,9 +532,21 @@ class _Base:
         writer seeds the merged key of the memo too. The memo key is
         `_read_committed_parquet`'s, fingerprinted by the listing this
         object already holds."""
+        return _memo_schema(self.spark, self._memo_key, self.read_paths,
+                            True)
+
+    @cached_property
+    def _memo_key(self) -> tuple:
         fp = () if self.refs else tuple(sorted(self.names))
-        return _memo_schema(self.spark, (tuple(self.read_paths), fp, True),
-                            self.read_paths, True)
+        return (tuple(self.read_paths), fp, True)
+
+    def seed_schema(self, schema: T.StructType) -> None:
+        """Record `schema` — known to the writer that just committed
+        this version — as its merged schema, so no reader runs the
+        inference job (`_seed_schema_memo`'s rule)."""
+        seeded = _read_back_schema(schema)
+        if seeded is not None:
+            _memo_put(_PQ_SCHEMA_MEMO, self._memo_key, seeded)
 
     def read(self) -> DataFrame:
         return self.spark.read.schema(self.schema).parquet(*self.read_paths)
@@ -1459,7 +1480,8 @@ def _write_base_and_meta(spark: SparkSession, df: DataFrame, path: str,
         zm_cols = [key] + [c for c in cols if c != key]
         if zorder and zorder not in zm_cols:
             zm_cols.append(zorder)           # the 2nd dim must be mapped
-        zmap = zm.collect_zone_map(spark, _base_dir(path, version), zm_cols)
+        zmap = zm.collect_zone_map(spark, _base_dir(path, version), zm_cols,
+                                   schema=df.schema)
         if zmap:
             zm.write_zone_map(spark, _base_dir(path, version), zmap)
             meta["range_files"] = str(n_range)
@@ -1482,7 +1504,7 @@ def _write_base_and_meta(spark: SparkSession, df: DataFrame, path: str,
                 rows = bloom.collect_bloom_index(
                     spark, _base_dir(path, version), bl,
                     n_max=max((e["rows"] for e in zmap["files"]),
-                              default=1))
+                              default=1), schema=df.schema)
                 if rows is not None:
                     bloom.write_bloom_index(
                         spark, _base_dir(path, version), rows)
@@ -2354,7 +2376,8 @@ def _merged_touched(snap: Snapshot, key: str, base: DataFrame,
                     deltas: list[int], predicate: Column | None
                     ) -> tuple[DataFrame, DataFrame, list[str]]:
     """The delta-touched half of the fast merge: ``(dkeys, merged,
-    cols)`` — the distinct delta key set, the FULLY MERGED final rows
+    cols)`` — the delta key set (not de-duplicated: it only feeds
+    broadcast semi and anti joins), the FULLY MERGED final rows
     for exactly those keys (version window + null-skip + tombstone
     cut over base-hits ∪ deltas, a frame bounded by the delta size),
     and the non-key output columns. `base` must already carry
@@ -2362,13 +2385,13 @@ def _merged_touched(snap: Snapshot, key: str, base: DataFrame,
     this branch directly, pairing it with its own zone-map-pruned
     untouched branch."""
     dl = _read_deltas_tagged(snap.spark, snap.path, deltas, predicate)
-    dkeys = dl.select(key).filter(F.col(key).isNotNull()).distinct()
+    dkeys = dl.select(key).filter(F.col(key).isNotNull())
     # the HITS branch only needs rows a delta could touch — on a
     # range-layout base it reads just the zone-map-admissible files
     hits_src = _hits_base(snap, key, base, deltas)
     if predicate is not None and hits_src is not base:
         hits_src = hits_src.filter(predicate)
-    base_hits = (hits_src.join(F.broadcast(dkeys), key)
+    base_hits = (hits_src.join(F.broadcast(dkeys), key, "left_semi")
                  .withColumn("__v", F.lit(0)))
     merged = _latest_per_key(
         base_hits.unionByName(dl, allowMissingColumns=True), key)
@@ -2664,7 +2687,8 @@ def lookup_join_keyed_table(spark: SparkSession, path: str, key: str,
     tombstoned keys are cut by the merge)."""
     snap = snapshot(spark, path)
     base = snap.require_base()
-    pkeys = probes.select(key).filter(F.col(key).isNotNull()).distinct()
+    # only bounds and semi joins read the probe keys: no distinct
+    pkeys = probes.select(key).filter(F.col(key).isNotNull())
     b = pkeys.agg(F.min(key).alias("lo"), F.max(key).alias("hi")).first()
     if b.lo is None:                     # empty probe set
         empty = base.read_files([])
@@ -2944,10 +2968,13 @@ def compact_pruned(spark: SparkSession, path: str, key: str,
     a FULL `compact` (or `materialize=True`) re-materializes the table
     self-contained — the escape hatch for plain `spark.read.parquet`
     consumers, which see only a carried base's own directory. Same
-    commit protocol as `compact` (claimed slot, atomic manifest flip,
-    `folded_through` watermark, one-commit delta GC); zone-map entries
-    of carried files survive verbatim, rewritten files are re-stats'd
-    with a scan of only themselves.
+    commit protocol as `compact` (claimed slot written through a
+    private staging dir and one exclusive rename, atomic manifest
+    flip, `folded_through` watermark, one-commit delta GC); zone-map
+    entries of carried files survive verbatim, rewritten files are
+    re-stats'd with a scan of only themselves, read with the schema
+    they were written with, and that schema seeds the new version's
+    schema memo — the fold re-reads no footer it wrote.
 
     Rewritten files are range-clustered among THEMSELVES, so their
     spans can straddle carried files' gaps — pruning correctness
@@ -3006,43 +3033,53 @@ def compact_pruned(spark: SparkSession, path: str, key: str,
                  .sortWithinPartitions(key))
     new_version = _next_base_version(spark, path, version)
     dst = _claim_base_slot(spark, path, new_version)
-    _run_claimed_write(
-        dst, lambda: rewritten.write.mode("errorifexists").parquet(dst))
-    if materialize:
-        hfs.copy_many(spark, [fmap[f] for f in untouched], dst)
-    else:
-        # flatten: an untouched file that is itself a ref keeps its
-        # ORIGINAL owner dir, so resolution stays one hop deep no
-        # matter how many pruned folds chain. fmap paths were built
-        # via hfs.join, which rstrips '/', so the slice prefix must
-        # be the normalized root — slicing with a trailing-slash
-        # `path` would chop the first character off every ref and
-        # brick the table (ADVICE r12).
-        import json
-        root = path.rstrip("/")
-        refs = sorted(fmap[f][len(root) + 1:] for f in untouched)
-        hfs.write_text(spark, hfs.join(dst, _CARRIED),
-                       json.dumps({"version": 1, "refs": refs},
-                                  separators=(",", ":")))
     carried_names = set(untouched)
-    new_files = [f for f in hfs.listdir(spark, dst)
-                 if not f.startswith(("_", ".")) and f not in carried_names]
-    zm_cols = list(zmap["cols"])
-    new_map = zm.collect_zone_map(
-        spark, dst, zm_cols,
-        paths=[hfs.join(dst, f) for f in new_files]) if new_files else None
-    entries = [e for e in zmap["files"] if e["file"] in carried_names]
-    if new_map:
-        entries += new_map["files"]
-    zm.write_zone_map(spark, dst, {
-        "version": 1, "cols": zmap["cols"],
-        "files": sorted(entries, key=lambda e: e["file"])})
-    # bloom index rides the same carry discipline as the zone map:
-    # carried files keep their rows verbatim (possibly built under
-    # older sizing — the prober handles per-row params), rewritten
-    # files are re-stats'd with a scan of only themselves
     bl_cols = [c for c in snap.meta.get("bloom_cols", "").split(",") if c]
-    if bl_cols:
+    new_files: list[str] = []
+
+    def _write_slot(staging: str) -> None:
+        # the rewritten files and every sidecar land in a writer-PRIVATE
+        # staging dir and the slot is taken by ONE exclusive rename
+        # (_staged_claimed_write): two pruned folds that both pass the
+        # claim fence cannot land in one directory (the pre-r13
+        # base-write hole, closed the same way)
+        rewritten.write.mode("errorifexists").parquet(staging)
+        if materialize:
+            hfs.copy_many(spark, [fmap[f] for f in untouched], staging)
+        else:
+            # flatten: an untouched file that is itself a ref keeps its
+            # ORIGINAL owner dir, so resolution stays one hop deep no
+            # matter how many pruned folds chain. fmap paths were built
+            # via hfs.join, which rstrips '/', so the slice prefix must
+            # be the normalized root — slicing with a trailing-slash
+            # `path` would chop the first character off every ref and
+            # brick the table (ADVICE r12).
+            import json
+            root = path.rstrip("/")
+            refs = sorted(fmap[f][len(root) + 1:] for f in untouched)
+            hfs.write_text(spark, hfs.join(staging, _CARRIED),
+                           json.dumps({"version": 1, "refs": refs},
+                                      separators=(",", ":")))
+        new_files.extend(
+            f for f in hfs.listdir(spark, staging)
+            if not f.startswith(("_", ".")) and f not in carried_names)
+        # the rewritten files are re-stats'd with a scan of only
+        # themselves, read with the schema they were written with
+        paths = [hfs.join(staging, f) for f in new_files]
+        new_map = zm.collect_zone_map(
+            spark, staging, list(zmap["cols"]), paths=paths,
+            schema=rewritten.schema) if new_files else None
+        entries = [e for e in zmap["files"] if e["file"] in carried_names]
+        if new_map:
+            entries += new_map["files"]
+        zm.write_zone_map(spark, staging, {
+            "version": 1, "cols": zmap["cols"],
+            "files": sorted(entries, key=lambda e: e["file"])})
+        # bloom index rides the same carry discipline as the zone map:
+        # carried files keep their rows verbatim (possibly built under
+        # older sizing — the prober handles per-row params)
+        if not bl_cols:
+            return
         idx_parts = []
         old_idx = bloom.read_bloom_index(spark, _base_dir(path, version))
         if old_idx is not None:
@@ -3050,20 +3087,31 @@ def compact_pruned(spark: SparkSession, path: str, key: str,
                 old_idx.filter(F.col("file").isin(list(carried_names))))
         if new_files:
             fresh = bloom.collect_bloom_index(
-                spark, dst, bl_cols,
-                paths=[hfs.join(dst, f) for f in new_files],
+                spark, staging, bl_cols, paths=paths,
                 n_max=(max((e["rows"] for e in new_map["files"]),
-                           default=1) if new_map else None))
+                           default=1) if new_map else None),
+                schema=rewritten.schema)
             if fresh is not None:
                 idx_parts.append(fresh)
         if idx_parts:
             merged_idx = idx_parts[0]
             for p in idx_parts[1:]:
                 merged_idx = merged_idx.unionByName(p)
-            bloom.write_bloom_index(spark, dst, merged_idx)
+            bloom.write_bloom_index(spark, staging, merged_idx)
+
+    _staged_claimed_write(spark, dst, _write_slot)
     _publish(snap, new_version, _next_meta(snap, key, fold),
              retain_versions)
-    return _Base(spark, path, new_version).read(), {
+    new_base = _Base(spark, path, new_version)
+    # the new version's merged schema is the rewritten frame's when the
+    # carried files' columns are its leading columns (columns only ever
+    # append): the result read and every later reader skip inference
+    old_cols = [(f.name, f.dataType) for f in snap.base.schema.fields]
+    new_cols = [(f.name, f.dataType) for f in rewritten.schema.fields]
+    if new_files and (not untouched
+                      or new_cols[:len(old_cols)] == old_cols):
+        new_base.seed_schema(rewritten.schema)
+    return new_base.read(), {
         "pruned": True, "new_version": new_version,
         "deltas_folded": len(fold), "files_total": len(all_files),
         "files_rewritten": len(new_files),
@@ -3106,8 +3154,8 @@ def delete_from_keyed_table(spark: SparkSession, keys: DataFrame, *,
     target = _rewrite_target(snap, key, fold)
     if target is None:
         raise FileNotFoundError(f"no keyed table at {path}")
-    del_keys = (keys.select(F.col(key)).filter(F.col(key).isNotNull())
-                .distinct())
+    # an anti join needs no distinct key set
+    del_keys = keys.select(F.col(key)).filter(F.col(key).isNotNull())
     remaining = target.join(del_keys, key, "left_anti")
     # count BEFORE the commit: under retain_versions=1 the commit
     # retires the base `target` lazily scans

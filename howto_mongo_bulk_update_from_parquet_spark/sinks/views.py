@@ -19,14 +19,23 @@ post-image is `coalesce(change, pre)` per column — applied here
 before contributing, or a partial update would silently retract a
 value it never replaced.
 
+One round is ONE write plan, the counting algorithm for COUNT/SUM
+views (Gupta & Mumick, IEEE Data Eng. Bull. 1995): COUNT and SUM are
+additive, so the view's current rows unioned with the window's
+contribution rows and re-aggregated by one `groupBy(group)` ARE the
+new view. Cost: O(changes) for the feed plus an O(view groups)
+rewrite of the view — the same bound a keyed upsert of the view has.
+
 The view itself is a keyed table (group = merge key), so it gets the
 full commit protocol, time travel, and layouts for free. The feed
 offset rides the view's own manifest as a `user.` table property —
 data and offset flip in ONE atomic commit, so a crash between "apply"
 and "record progress" cannot double-count (re-running re-reads from
-the committed offset). Groups whose count reaches zero stay as
-cnt=0 rows (one commit per maintenance round, no second delete
-commit to crash between); `read_grouped_view` filters them.
+the committed offset). The offset is the last delta version of the
+round's window, read from the source snapshot's listing before the
+write. Groups whose count reaches zero stay as cnt=0 rows (one commit
+per maintenance round, no second delete commit to crash between);
+`read_grouped_view` filters them.
 
 Cadence contract: pre-images need unfolded deltas, so maintenance
 must drain before the source folds (the feed raises with guidance
@@ -44,13 +53,16 @@ from __future__ import annotations
 
 import uuid
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
-from .changes import (OP_COL, PRE_COL, VERSION_COL,
-                      ChangeHistoryUnavailable, _table_changes)
-from .keyed_table import (Snapshot, _deltas_key_range, _read_merged_through,
-                          _upsert, read_merged, snapshot)
+from .changes import (OP_COL, PRE_COL, ChangeHistoryUnavailable,
+                      _feed_window, _table_changes)
+from .keyed_table import (Snapshot, _commit_base, _deltas_key_range,
+                          _fold_run, _next_meta, _read_merged_through,
+                          _refuse_stranded_deltas, _resolve_layout,
+                          _rewrite_target, _upsert, _vanished_snapshot_guard,
+                          read_merged, snapshot)
 
 OFFSET_PROP = "user.feed_offset"
 RECOVER_COUNT_PROP = "user.recover_count"
@@ -121,14 +133,11 @@ def _snapshot_state(src: Snapshot, key: str, group_col: str,
     diverge the two paths — review r14). The frame is materialized
     once (localCheckpoint, O(groups) rows — the view itself): the
     write and the stats count both read it."""
-    import uuid as _uuid
-
-    from pyspark.sql import Observation
     state = _read_merged_through(src, key)
     # the group count rides the checkpoint materialization itself
     # (r17 trim, guide §1.4): the bootstrap/recover stats used to pay
     # a separate count() job against the checkpointed frame
-    obs = Observation(f"snap_groups_{_uuid.uuid4().hex[:8]}")
+    obs = Observation(f"snap_groups_{uuid.uuid4().hex[:8]}")
     snap = (state.filter(F.col(group_col).isNotNull())
             .groupBy(group_col)
             .agg(*_snapshot_aggs(cols_, names, track_minmax))
@@ -165,6 +174,12 @@ def maintain_grouped_view(spark: SparkSession, *, table_path: str,
     {applied_through, groups_touched, changes[, recomputed_groups]} —
     groups_touched is the incrementality evidence a caller can assert
     on (bounded by the window's change rows, not by the view).
+
+    A differential round is one plan: the feed window's contribution
+    rows and the view's current rows, one `groupBy(group)`, one view
+    write — O(changes) feed work plus an O(view groups) rewrite, the
+    bound a keyed upsert of the view has. `changes` and
+    `groups_touched` are observed on that aggregate, in the write job.
 
     FIRST call (no view yet) BOOTSTRAPS from a snapshot: full
     groupBy of the table's merged state as of one consistent
@@ -225,7 +240,8 @@ def maintain_grouped_view(spark: SparkSession, *, table_path: str,
     (to alert on retention misconfiguration) still gets it.
 
     WRITER LEASE (r15, verdict item 5): the round is multi-step
-    (feed read → contribution build → view upsert → offset flip);
+    (feed window → contribution aggregate and view write → offset
+    flip);
     the manifest CAS underneath already guarantees at most one
     COMMIT per round wins, but the single-maintainer contract was
     otherwise documented-not-checked. Each call now holds the view
@@ -279,227 +295,205 @@ def _maintain_round(spark: SparkSession, table_path: str, key: str,
                                     track_minmax)
 
 
+@_vanished_snapshot_guard
 def _apply_differential(src: Snapshot, key: str, view: Snapshot,
                         group_col: str, sum_col: str,
                         track_minmax: bool) -> dict:
     """One differential maintenance round of the source snapshot `src`
     into the view snapshot `view` (the non-bootstrap body of
     `maintain_grouped_view`); raises `ChangeHistoryUnavailable` when
-    the window cannot be served, having committed nothing."""
-    spark, table_path, view_path = src.spark, src.path, view.path
+    the window cannot be served, having committed nothing.
+
+    The round is ONE write plan: the view's current rows and the
+    window's contribution rows are unioned and re-aggregated by one
+    `groupBy(group)` (COUNT and SUM are additive, so the sum of a
+    group's stored row and its contributions IS its new row), and the
+    result is committed as the view's next base with the new offset."""
+    spark = src.spark
     off = _offset(view)
-    cols_shape, names_shape = _sum_cols(sum_col)
+    cols_, names = _sum_cols(sum_col)
+    # the shape contract surfaces on every call, an idle poll included
+    # (ADVICE r15). Schema-only: the view's columns are its schema.
+    _check_view_shape(view.schema.names, cols_, names, track_minmax,
+                      view.path)
     # no-op fast path (r14 trim): metadata alone decides whether any
-    # change landed above the offset — a scheduled maintainer polling
-    # an idle table must not pay feed construction (whose pre-image
-    # plan runs eager per-version span joins) to learn "nothing new".
+    # change landed above the offset. The window is the feed's own
+    # (`_feed_window`, which raises when it was reclaimed), so the
+    # offset committed below is the last version the feed reads.
     # Deltas whose _KEYRANGE sidecars record zero rows count as
-    # nothing: an all-empty window would run the contribution job on
-    # an empty feed, whose observed metrics never latch (AQE replaces
-    # the plan over an empty shuffle with an empty relation)
-    arrived = [v for v in src.listed if v > off]
-    if src.floor <= off and (
-            not arrived or _deltas_key_range(spark, table_path, key,
-                                             arrived) == (None, None)):
-        # the shape contract must surface even with zero arrivals
-        # (ADVICE r15): an idle poll with a mismatched
-        # sum_col/track_minmax previously reported success silently.
-        # Schema-only: the view's columns are its snapshot's schema.
-        _check_view_shape(view.schema.names, cols_shape, names_shape,
-                          track_minmax, view_path)
+    # nothing: an all-empty window would run the plan on an empty feed,
+    # whose observed metrics never latch (AQE replaces the plan over an
+    # empty shuffle with an empty relation)
+    window = _feed_window(src, after=off)
+    if not window or (src.floor <= off and _deltas_key_range(
+            spark, src.path, key, window) == (None, None)):
         return {"applied_through": off, "groups_touched": 0,
                 "changes": 0}
-    # ONE execution of the enriched feed window (r14 trim, tightened
-    # r17): the feed's plan is expensive to EXECUTE repeatedly (the
-    # pre-image window pass), so the round must consume it once. The
-    # r16 form localCheckpointed the feed (its own job) because the
-    # add/retract halves read it twice; r17 fuses both halves into a
-    # single `inline()` pass — each change row emits its +post and
-    # -pre contribution rows in ONE projection — so the feed executes
-    # exactly once, INSIDE the contribution checkpoint job below, and
-    # the feed-stats/served-version Observation rides that same job
-    # (guide §1.4/§2.3: one fewer job and one fewer materialization
-    # per maintenance round; contribution multiset identical to the
-    # old union by construction — each half keeps its own validity
-    # flag).
-    import uuid as _uuid
-
-    from pyspark.sql import Observation
-    feed_obs = Observation(f"feed_stats_{_uuid.uuid4().hex[:8]}")
-    changes = (_table_changes(src, after=off, with_preimage=True, key=key)
-               .observe(feed_obs,
-                        F.max(F.col(VERSION_COL)).alias("__v"),
-                        F.count(F.lit(1)).alias("__n")))
-    cols_, names = _sum_cols(sum_col)
-    # null-skip post-image, then the differential contributions —
-    # every value column rides this ONE pass (per-column __t/__v/__r
-    # channels, indexed to keep generated names collision-free)
+    served = window[-1]
+    changes = _table_changes(src, after=off, until=served,
+                             with_preimage=True, key=key)
+    # the view is written by its rounds only, so it normally has no
+    # pending delta; one left by hand is folded, as an upsert would
+    fold, stranded = _fold_run(view)
+    _refuse_stranded_deltas(view, fold, stranded, "view round")
+    cur = _rewrite_target(view, group_col, fold)
+    # each change row emits its +post and -pre contribution rows in ONE
+    # projection (the feed executes once, inside the write job). The
+    # null-skip post-image is `coalesce(change, pre)` per column.
+    # Channels: __g the group (NULL when the row counts for no group:
+    # an insert or retraction under a NULL group, a tombstone of a key
+    # that never existed), __c the count, __n 1 per change row (0 on
+    # its retraction, NULL on view rows), __t<i> the SUM, and under
+    # minmax __v<i> an added value, __r<i> a retracted one, __m<i>/__x<i>
+    # the view row's live extremes
     post_g = F.coalesce(F.col(group_col), F.col(f"{PRE_COL}.{group_col}"))
-    add_sel = [(F.col(OP_COL) == "U").alias("__keep"),
-               post_g.alias("__g"), F.lit(1).cast("long").alias("__c")]
-    ret_sel = [F.col(PRE_COL).isNotNull().alias("__keep"),
-               F.col(f"{PRE_COL}.{group_col}").alias("__g"),
-               F.lit(-1).cast("long").alias("__c")]
+    add_sel = [F.when(F.col(OP_COL) == "U", post_g).alias("__g"),
+               F.lit(1).cast("long").alias("__c"), F.lit(1).alias("__n")]
+    ret_sel = [F.when(F.col(PRE_COL).isNotNull(),
+                      F.col(f"{PRE_COL}.{group_col}")).alias("__g"),
+               F.lit(-1).cast("long").alias("__c"), F.lit(0).alias("__n")]
+    cur_sel = [F.col(group_col).alias("__g"),
+               F.col("cnt").cast("long").alias("__c"),
+               F.lit(None).cast("int").alias("__n")]
+    nulld = F.lit(None).cast("double")
     for i, c in enumerate(cols_):
         post_v = F.coalesce(F.col(c), F.col(f"{PRE_COL}.{c}"))
         pre_v = F.col(f"{PRE_COL}.{c}")
-        add_sel += [F.coalesce(post_v.cast(_DEC),
-                               F.lit(0).cast(_DEC)).alias(f"__t{i}"),
-                    post_v.cast("double").alias(f"__v{i}"),
-                    F.lit(None).cast("double").alias(f"__r{i}")]
-        ret_sel += [(-F.coalesce(pre_v.cast(_DEC),
-                                 F.lit(0).cast(_DEC))).alias(f"__t{i}"),
-                    F.lit(None).cast("double").alias(f"__v{i}"),
-                    pre_v.cast("double").alias(f"__r{i}")]
+        add_sel.append(F.coalesce(post_v.cast(_DEC), F.lit(0).cast(_DEC))
+                       .alias(f"__t{i}"))
+        ret_sel.append((-F.coalesce(pre_v.cast(_DEC), F.lit(0).cast(_DEC)))
+                       .alias(f"__t{i}"))
+        cur_sel.append(F.col(names[c][0]).cast(_DEC).alias(f"__t{i}"))
+        if track_minmax:
+            live = F.col("cnt") > 0
+            add_sel += [post_v.cast("double").alias(f"__v{i}"),
+                        nulld.alias(f"__r{i}"), nulld.alias(f"__m{i}"),
+                        nulld.alias(f"__x{i}")]
+            ret_sel += [nulld.alias(f"__v{i}"),
+                        pre_v.cast("double").alias(f"__r{i}"),
+                        nulld.alias(f"__m{i}"), nulld.alias(f"__x{i}")]
+            cur_sel += [nulld.alias(f"__v{i}"), nulld.alias(f"__r{i}"),
+                        F.when(live, F.col(names[c][1])).alias(f"__m{i}"),
+                        F.when(live, F.col(names[c][2])).alias(f"__x{i}")]
     contrib = changes.select(
         F.inline(F.array(F.struct(*add_sel), F.struct(*ret_sel))))
-    # localCheckpoint: the contribution frame is O(touched groups) and
-    # feeds BOTH the semi join and the full outer below — materializing
-    # it cuts the shared lineage (self-join ambiguity) and computes the
-    # feed read once
-    delta_aggs = [F.sum("__c").alias("__dc")]
-    for i in range(len(cols_)):
-        delta_aggs += [F.sum(f"__t{i}").alias(f"__dt{i}"),
-                       F.min(f"__v{i}").alias(f"__wmin{i}"),
-                       F.max(f"__v{i}").alias(f"__wmax{i}"),
-                       F.min(f"__r{i}").alias(f"__rmin{i}"),
-                       F.max(f"__r{i}").alias(f"__rmax{i}")]
-    # the touched-group count rides the same checkpoint job: `merged`
-    # below holds exactly one row per `delta` group (the view holds one
-    # row per group, semi-joined to these), so no later action has to
-    # consume `merged` for the count to latch. Contribution rows that
-    # count for no group (an insert or retraction under a NULL group, a
-    # tombstone of a key that never existed) are not filtered out
-    # before the aggregate: they ride it as ONE extra NULL group,
-    # dropped after the checkpoint. A window whose rows all drop
-    # therefore still shuffles a row, and AQE cannot replace the
-    # aggregate — and both observations with it — by an empty relation.
-    group_obs = Observation(f"groups_{_uuid.uuid4().hex[:8]}")
-    delta = (contrib
-             .groupBy(F.when(F.col("__keep"), F.col("__g")).alias("__g"))
-             .agg(*delta_aggs)
-             .observe(group_obs, F.count(F.col("__g")).alias("__n"))
-             .localCheckpoint()
-             .filter(F.col("__g").isNotNull()))
-    stats = feed_obs.get
-    n_groups = int(group_obs.get["__n"])
-    served, n_changes = stats["__v"], int(stats["__n"])
-    if served is None:
-        return {"applied_through": off, "groups_touched": 0,
-                "changes": 0}
-    cur = _read_merged_through(view, group_col)
-    _check_view_shape(cur.columns, cols_, names, track_minmax,
-                      view_path)
-    cur = (cur.alias("c")
-           .join(F.broadcast(delta.alias("s")),
-                 F.col(f"c.{group_col}") == F.col("s.__g"), "semi"))
-    new_cnt = (F.coalesce(F.col("c.cnt"), F.lit(0))
-               + F.coalesce(F.col("d.__dc"), F.lit(0)))
-    cols = [F.coalesce(F.col(f"c.{group_col}"), F.col("d.__g"))
-             .alias(group_col),
-            new_cnt.alias("cnt")]
+    aggs = [F.sum("__c").alias("cnt"), F.sum("__n").alias("__n"),
+            F.count("__n").alias("__h")]
     for i, c in enumerate(cols_):
-        cols.append(
-            (F.coalesce(F.col(f"c.{names[c][0]}"), F.lit(0).cast(_DEC))
-             + F.coalesce(F.col(f"d.__dt{i}"), F.lit(0).cast(_DEC)))
-            .cast(_DEC).alias(names[c][0]))
+        aggs.append(F.sum(f"__t{i}").cast(_DEC).alias(names[c][0]))
+        if track_minmax:
+            aggs += [F.min(f"__v{i}").alias(f"__wmin{i}"),
+                     F.max(f"__v{i}").alias(f"__wmax{i}"),
+                     F.min(f"__r{i}").alias(f"__rmin{i}"),
+                     F.max(f"__r{i}").alias(f"__rmax{i}"),
+                     F.max(f"__m{i}").alias(f"__m{i}"),
+                     F.max(f"__x{i}").alias(f"__x{i}")]
+    # both counts ride the aggregate's output, which always receives a
+    # row when the round writes (the window is non-empty, and its rows
+    # that count for no group ride as ONE extra NULL group, dropped
+    # after the observation) — so AQE cannot replace the observed node
+    # by an empty relation, and the write job (or the minmax
+    # checkpoint) latches the observation
+    obs = Observation(f"view_round_{uuid.uuid4().hex[:8]}")
+    agg = (contrib.unionByName(cur.select(*cur_sel)).groupBy("__g")
+           .agg(*aggs)
+           .observe(obs, F.sum("__n").alias("changes"),
+                    F.count(F.when(F.col("__g").isNotNull()
+                                   & (F.col("__h") > 0), 1))
+                    .alias("groups"))
+           .filter(F.col("__g").isNotNull()))
+    out = [F.col("__g").alias(group_col), "cnt",
+           *[names[c][0] for c in cols_]]
+    n_rc = 0
     if track_minmax:
-        # monotone fast path: added values only TIGHTEN extremes.
-        # A retraction at/beyond the current extremum invalidates it
-        # (flag for recompute); empty groups null out. The STORED
-        # extremes count only while the stored cnt > 0: an emptied
-        # group's row physically keeps its last extremes (the view
-        # upsert's null-skip merge would treat written NULLs as
-        # "keep old"), so a refill must start fresh from the window's
-        # own values, never least/greatest against the stale ones
-        # (caught by test_minmax_group_emptied_and_refilled). With
-        # multiple value columns, ANY column's retracted extremum
+        # monotone fast path: added values only TIGHTEN extremes. A
+        # retraction at/beyond the current extremum invalidates it
+        # (flag for recompute); empty groups null out. The stored
+        # extremes count only while the stored cnt > 0 (the __m/__x
+        # channels): a refill of an emptied group starts fresh from the
+        # window's own values (test_minmax_group_emptied_and_refilled).
+        # With multiple value columns, ANY column's retracted extremum
         # flags the group (one recompute rebuilds all its aggregates).
+        new_cnt = F.col("cnt")
         rc_any = F.lit(False)
         for i, c in enumerate(cols_):
-            cur_vmin = F.when(F.col("c.cnt") > 0, F.col(f"c.{names[c][1]}"))
-            cur_vmax = F.when(F.col("c.cnt") > 0, F.col(f"c.{names[c][2]}"))
+            cur_vmin, cur_vmax = F.col(f"__m{i}"), F.col(f"__x{i}")
+            rmin, rmax = F.col(f"__rmin{i}"), F.col(f"__rmax{i}")
             rc_any = rc_any | (
-                (cur_vmin.isNotNull() & F.col(f"d.__rmin{i}").isNotNull()
-                 & (F.col(f"d.__rmin{i}") <= cur_vmin))
-                | (cur_vmax.isNotNull() & F.col(f"d.__rmax{i}").isNotNull()
-                   & (F.col(f"d.__rmax{i}") >= cur_vmax))
+                (cur_vmin.isNotNull() & rmin.isNotNull()
+                 & (rmin <= cur_vmin))
+                | (cur_vmax.isNotNull() & rmax.isNotNull()
+                   & (rmax >= cur_vmax))
                 # a retraction against a group the view has no
                 # extremes for (fresh or emptied group) cannot be
                 # patched locally
-                | (cur_vmin.isNull() & F.col(f"d.__rmin{i}").isNotNull()))
-            cols += [
-                F.when(new_cnt <= 0, F.lit(None).cast("double"))
-                 .otherwise(F.least(cur_vmin, F.col(f"d.__wmin{i}")))
-                 .alias(names[c][1]),
-                F.when(new_cnt <= 0, F.lit(None).cast("double"))
-                 .otherwise(F.greatest(cur_vmax, F.col(f"d.__wmax{i}")))
-                 .alias(names[c][2])]
-        cols.append(F.coalesce((new_cnt > 0) & rc_any,
-                               F.lit(False)).alias("__rc"))
-    merged = (cur.alias("c")
-              .join(delta.alias("d"),
-                    F.col(f"c.{group_col}") == F.col("d.__g"),
-                    "full_outer")
-              .select(*cols))
-    n_rc = 0
-    if track_minmax:
-        merged = merged.localCheckpoint()
+                | (cur_vmin.isNull() & rmin.isNotNull()))
+            out += [F.when(new_cnt <= 0, nulld)
+                    .otherwise(F.least(cur_vmin, F.col(f"__wmin{i}")))
+                    .alias(names[c][1]),
+                    F.when(new_cnt <= 0, nulld)
+                    .otherwise(F.greatest(cur_vmax, F.col(f"__wmax{i}")))
+                    .alias(names[c][2])]
+        out.append(F.coalesce((new_cnt > 0) & rc_any,
+                              F.lit(False)).alias("__rc"))
+        merged = agg.select(*out).localCheckpoint()
         rc_keys = [r[group_col] for r in
                    merged.filter(F.col("__rc")).select(group_col)
                    .collect()]        # bounded by the window's groups
         n_rc = len(rc_keys)
+        merged = merged.filter(~F.col("__rc")).drop("__rc")
         if rc_keys:
-            # the round's own source snapshot, cut at the window's end:
-            # the state the feed window was read from, whatever a
-            # racing appender or fold has committed since
-            window = [v for v in src.deltas if v <= served]
-            state = _read_merged_through(src, key, window)
-            rc_df = spark.createDataFrame(
-                [(g,) for g in rc_keys],
-                f"{group_col} {dict(merged.dtypes)[group_col]}")
-            rc_agg = (state.join(F.broadcast(rc_df), group_col)
-                      .groupBy(group_col)
-                      .agg(*_snapshot_aggs(cols_, names, True)))
-            # groups whose every row died recompute to NO rows: keep
-            # them as cnt=0 (the view's standard zero-group debris)
-            rc_sel = [F.col(f"k.{group_col}").alias(group_col),
-                      F.coalesce(F.col("a.cnt"), F.lit(0)).alias("cnt")]
-            for c in cols_:
-                tn, mn, xn = names[c]
-                rc_sel += [F.coalesce(F.col(f"a.{tn}"),
-                                      F.lit(0).cast(_DEC)).alias(tn),
-                           F.col(f"a.{mn}").alias(mn),
-                           F.col(f"a.{xn}").alias(xn)]
-            rc_full = (rc_df.alias("k")
-                       .join(rc_agg.alias("a"),
-                             F.col(f"k.{group_col}")
-                             == F.col(f"a.{group_col}"), "left")
-                       .select(*rc_sel)
-                       # materialize the recompute result (O(flagged
-                       # groups) rows) so the offset-consistent
-                       # state-merge subtree executes exactly ONCE
-                       # (r17, guide §3.3/§5): left in the lineage it
-                       # re-executed inside every broadcast build of
-                       # the view upsert's write plan — the census
-                       # showed 4 × ~2.4 s jobs each re-running the
-                       # source merge for one 300-row frame
-                       .localCheckpoint())
-            merged = (merged.filter(~F.col("__rc")).drop("__rc")
-                      .unionByName(rc_full))
-        else:
-            merged = merged.drop("__rc")
-    # non-minmax rounds do not checkpoint `merged` (r17, guide §1.4):
-    # the view upsert's write job consumes it. (The minmax branch keeps
-    # its checkpoint: rc_keys are collected from it before the write.)
-    _upsert(view, merged, group_col, updated_at_col=None,
-            table_props={OFFSET_PROP: str(served)})
-    out = {"applied_through": int(served),
-           "groups_touched": n_groups,
-           "changes": n_changes}
+            merged = merged.unionByName(_recompute_groups(
+                src, key, served, group_col, rc_keys,
+                dict(merged.dtypes)[group_col], cols_, names))
+    else:
+        merged = agg.select(*out)
+    meta = _next_meta(view, group_col, fold)
+    meta[OFFSET_PROP] = str(served)
+    _commit_base(view, merged, group_col,
+                 _resolve_layout(view, group_col, fold), meta,
+                 retain_versions=2)
+    stats = obs.get
+    out_stats = {"applied_through": int(served),
+                 "groups_touched": int(stats["groups"]),
+                 "changes": int(stats["changes"] or 0)}
     if track_minmax:
-        out["recomputed_groups"] = n_rc
-    return out
+        out_stats["recomputed_groups"] = n_rc
+    return out_stats
+
+
+def _recompute_groups(src: Snapshot, key: str, served: int, group_col: str,
+                      rc_keys: list, g_type: str, cols_: list[str],
+                      names: dict) -> DataFrame:
+    """Every aggregate of the flagged MIN/MAX groups, recomputed from
+    the round's own source snapshot cut at the window's end: the state
+    the feed window was read from, whatever a racing appender or fold
+    has committed since. Groups whose every row died recompute to
+    cnt=0 rows (the view's standard zero-group debris)."""
+    state = _read_merged_through(src, key,
+                                 [v for v in src.deltas if v <= served])
+    rc_df = src.spark.createDataFrame([(g,) for g in rc_keys],
+                                      f"{group_col} {g_type}")
+    rc_agg = (state.join(F.broadcast(rc_df), group_col)
+              .groupBy(group_col)
+              .agg(*_snapshot_aggs(cols_, names, True)))
+    rc_sel = [F.col(f"k.{group_col}").alias(group_col),
+              F.coalesce(F.col("a.cnt"), F.lit(0)).alias("cnt")]
+    for c in cols_:
+        tn, mn, xn = names[c]
+        rc_sel += [F.coalesce(F.col(f"a.{tn}"),
+                              F.lit(0).cast(_DEC)).alias(tn),
+                   F.col(f"a.{mn}").alias(mn), F.col(f"a.{xn}").alias(xn)]
+    return (rc_df.alias("k")
+            .join(rc_agg.alias("a"),
+                  F.col(f"k.{group_col}") == F.col(f"a.{group_col}"),
+                  "left")
+            .select(*rc_sel)
+            # materialized (O(flagged groups) rows) so the offset-
+            # consistent state-merge subtree executes exactly ONCE (r17):
+            # left in the lineage it re-executed inside every broadcast
+            # build of the view's write plan
+            .localCheckpoint())
 
 
 def _recover_rebootstrap(src: Snapshot, key: str, view: Snapshot,

@@ -54,6 +54,7 @@ from typing import Any
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from . import fs as hfs
 
@@ -93,9 +94,24 @@ def norm_probe(v: Any) -> Any:
     return _to_json_value(v)
 
 
+def stats_read(spark: SparkSession, base_dir: str, cols: list[str],
+               paths: list[str] | None = None,
+               schema: T.StructType | None = None) -> DataFrame:
+    """The files a stats collector scans: `paths`, else every file of
+    `base_dir`. A writer that just wrote them passes its `schema`; the
+    read then takes the stat columns from it instead of running a
+    footer-inference job over files whose schema it already knows."""
+    reader = spark.read
+    if schema is not None:
+        reader = reader.schema(T.StructType(
+            [f for f in schema.fields if f.name in cols]))
+    return reader.parquet(*(paths if paths else [base_dir]))
+
+
 def collect_zone_map(spark: SparkSession, base_dir: str,
                      cols: list[str],
-                     paths: list[str] | None = None) -> dict | None:
+                     paths: list[str] | None = None,
+                     schema: T.StructType | None = None) -> dict | None:
     """Per-file min/max/row-count for `cols` over the parquet files of
     `base_dir`, as the zone-map document (not yet written). One
     aggregation job, grouped on the hidden `_metadata.file_path`
@@ -105,8 +121,9 @@ def collect_zone_map(spark: SparkSession, base_dir: str,
     remains. `paths` restricts the scan to an explicit file subset —
     the pruned-compaction path stats ONLY its rewritten files and
     carries the untouched files' entries forward verbatim, so the
-    stats job is O(rewritten bytes), never O(base)."""
-    df = spark.read.parquet(*(paths if paths else [base_dir]))
+    stats job is O(rewritten bytes), never O(base). `schema` is the
+    writer's (`stats_read`)."""
+    df = stats_read(spark, base_dir, cols, paths, schema)
     usable = [c for c in cols
               if c in df.columns and _dtype_name(df, c) in _ORDERED_DTYPES]
     if not usable:

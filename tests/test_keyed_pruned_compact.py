@@ -446,3 +446,56 @@ def test_trailing_slash_path_keeps_refs_intact(spark, tmp_path):
     assert stats2["pruned"] is True
     got2 = {r["k"]: r["val"] for r in df2.collect()}
     assert got2[20] == -1 and got2[350] == -2 and len(got2) == 400
+
+
+def test_racing_pruned_folds_share_no_slot(spark, tmp_path, monkeypatch):
+    """Two pruned folds of the same snapshot that BOTH pass the slot
+    claim: the loser resolved its snapshot, claimed the next version
+    and started writing; the winner folded and committed that version
+    before the loser's write created anything, so the loser's write
+    proceeds as if its existence pre-check had passed. The loser gets
+    ConcurrentWriteError, the slot holds only the winner's files and
+    sidecars, and reads equal the model."""
+    from pyspark.sql.readwriter import DataFrameWriter
+
+    from howto_mongo_bulk_update_from_parquet_spark.sinks import \
+        keyed_table as kt
+
+    path = _mk_range_table(spark, tmp_path, n=80, files=4)
+    append_delta(spark, spark.createDataFrame(
+        [Row(k=10, val=-1, tag="w"), Row(k=500, val=5, tag="new")]),
+        path=path, key="k")
+    model = {r["k"]: (r["val"], r["tag"])
+             for r in read_merged(spark, path, "k").collect()}
+    v0 = current_base_version(spark, path)
+    # both folds resolve this snapshot; the winner commits while the
+    # loser is writing, so the loser's copy is stale when it publishes
+    stale = kt.snapshot(spark, path)
+    real_parquet = DataFrameWriter.parquet
+    race = {"armed": True}
+
+    def racing_parquet(self, p, *args, **kwargs):
+        if race["armed"] and f"base_v{v0 + 1:05d}" in p:
+            race["armed"] = False
+            race["winner"] = compact_pruned(spark, path, "k")[1]
+            self = self.mode("append")   # its pre-check passed earlier
+        return real_parquet(self, p, *args, **kwargs)
+
+    monkeypatch.setattr(kt, "snapshot", lambda *a, **k: stale)
+    monkeypatch.setattr(DataFrameWriter, "parquet", racing_parquet)
+    with pytest.raises(kt.ConcurrentWriteError):
+        compact_pruned(spark, path, "k")
+    monkeypatch.undo()
+    winner = race["winner"]
+    assert winner["new_version"] == v0 + 1
+    assert current_base_version(spark, path) == v0 + 1
+    slot = hfs.join(path, f"base_v{v0 + 1:05d}")
+    own = [f for f in hfs.listdir(spark, slot)
+           if not f.startswith(("_", "."))]
+    assert len(own) == winner["files_rewritten"]
+    zmap = zm.read_zone_map(spark, slot)
+    assert sorted(e["file"] for e in zmap["files"]) == \
+        sorted(base_file_map(spark, path, v0 + 1))
+    got = {r["k"]: (r["val"], r["tag"])
+           for r in read_keyed_table(spark, path).collect()}
+    assert got == model

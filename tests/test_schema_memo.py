@@ -6,6 +6,7 @@ different files at the same path."""
 
 import os
 
+import pytest
 from pyspark.sql import functions as F
 
 from howto_mongo_bulk_update_from_parquet_spark.sinks import keyed_table as kt
@@ -104,3 +105,29 @@ def test_seeded_ntz_type_equals_a_cold_read(spark, tmp_path):
             == cold_delta
     finally:
         spark.conf.set(conf, old)
+
+
+@pytest.mark.parametrize("materialize", [False, True])
+def test_pruned_fold_seeds_the_schema_a_cold_read_infers(spark, tmp_path,
+                                                         materialize):
+    """`compact_pruned` seeds the new version's merged-schema memo entry
+    from the rewritten frame. After folding a delta that adds a column,
+    the seeded entry equals a cold `mergeSchema` read of the new base's
+    files: the new column is present and the field order matches."""
+    path = os.path.join(str(tmp_path), "t")
+    upsert_into_keyed_table(spark, spark.range(40).select(
+        F.col("id").alias("k"), (F.col("id") * 2).alias("v"),
+        F.lit("t").alias("tag")), path=path, key="k", updated_at_col=None,
+        range_files=4)
+    append_delta(spark, spark.createDataFrame(
+        [(3, 7, None, "NEW")], "k bigint, v bigint, tag string, extra string"),
+        path=path, key="k")
+    _, stats = kt.compact_pruned(spark, path, "k", materialize=materialize)
+    assert stats["files_carried"] > 0 and stats["files_rewritten"] > 0
+    new_base = kt._Base(spark, path, stats["new_version"])
+    seeded = _PQ_SCHEMA_MEMO[new_base._memo_key]
+    cold = (spark.read.option("mergeSchema", "true")
+            .parquet(*new_base.read_paths).schema)
+    assert "extra" in seeded.names
+    assert seeded.names == cold.names
+    assert seeded == cold
