@@ -407,9 +407,9 @@ def cmd_sql(args: argparse.Namespace) -> int:
         try:
             out = sql_write(spark, args.text, tables=keyed_reg)
         except (MergeSyntaxError, ConcurrentWriteError) as exc:
-            # ConcurrentWriteError: a clean loss (racing writer /
-            # in-flight appender refusing a RESTORE) — retryable,
-            # reported as a usage-style error, never a traceback
+            # ConcurrentWriteError: a clean loss to a racing writer —
+            # retryable, reported as a usage-style error, never a
+            # traceback
             print(f"{write_statement_kind(args.text)} error: {exc}",
                   file=sys.stderr)
             return 2
@@ -527,11 +527,12 @@ def cmd_table_info(args: argparse.Namespace) -> int:
         "deltas_on_disk": deltas,
         "deltas_pending": list(snap.deltas),
         "deltas_folded_awaiting_gc": [v for v in deltas if v <= floor],
-        # claim debris: incomplete (no _SUCCESS) or complete-but-
-        # unpublished base/delta dirs. Racing writers resolve these
-        # through the grace-window fences; a SINGLE owner (a restarting
-        # stream) clears them via recover_dead_claims — this line is
-        # how an operator sees there is anything to decide about
+        # claim debris: unpublished base dirs, and base/delta dirs
+        # without _SUCCESS, which only a writer from before the staged
+        # claims leaves (MIGRATION.md). Writers skip stale unpublished
+        # bases after the grace window; a SINGLE owner (a restarting
+        # stream) clears all of it via recover_dead_claims — this line
+        # is how an operator sees there is anything to decide about
         "claim_debris": sorted(
             d for d in ([f"base_v{v:05d}" for v in snap.bases]
                         + [f"delta_{v:05d}" for v in snap.listed])

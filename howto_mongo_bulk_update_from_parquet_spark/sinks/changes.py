@@ -26,10 +26,12 @@ arrival architecture that wants a feed writes through the LSM path
 (the CLI's `upsert --lsm` / `delete --tombstone`), which is also the
 only path that scales per-arrival cost at 100 TB.
 
-Emission order: strictly by delta version, truncated at the first
-gap or incomplete (claimed, mid-write) slot — the same contiguity
-discipline as `_fold_run`, so a consumer can never observe
-change v+1 before a concurrent appender finishes v.
+Emission order: strictly by delta version. A delta directory is
+committed once it exists (its one exclusive rename publishes the data
+files and sidecars together), and an appender takes its number from a
+fresh listing right before that rename, so version v+1 never appears
+before v: a consumer reading the listed versions in order cannot skip
+a change that lands later.
 """
 
 from __future__ import annotations
@@ -92,8 +94,7 @@ def read_table_changes(spark: SparkSession, path: str, *,
     streaming form's GC note states.
 
     Raises `ChangeHistoryUnavailable` when the window reaches
-    versions already reclaimed; truncates (never errors) at a live
-    appender's incomplete slot so emission stays contiguous."""
+    versions already reclaimed."""
     return _table_changes(snapshot(spark, path), after=after, until=until,
                           with_preimage=with_preimage, key=key)
 
@@ -164,37 +165,21 @@ def _table_changes(snap: Snapshot, *, after: int = 0,
 
 def _feed_window(snap: Snapshot, after: int = 0,
                  until: int | None = None) -> list[int]:
-    """The delta versions a feed read of (after, until] serves, from
-    the snapshot's listing: contiguous from `after + 1`, truncated at
-    the first gap above the floor or slot a live appender is still
-    writing. Raises `ChangeHistoryUnavailable` when the window reaches
-    versions already reclaimed."""
-    spark, path, floor, present = snap.spark, snap.path, snap.floor, \
-        snap.listed
-    known_max = max(present[-1] if present else 0, floor)
-    hi = known_max if until is None else min(until, known_max)
-    have = set(present)
-    versions: list[int] = []
-    missing: list[int] = []
-    for v in range(after + 1, hi + 1):
-        if v not in have:
-            if v <= floor:
-                missing.append(v)        # folded AND reclaimed
-                continue
-            break                        # gap above the floor: stop
-        # above the floor the snapshot knows which slots committed; a
-        # folded delta still on disk is checked directly
-        if not (v in snap.deltas or (v <= floor and hfs.exists(
-                spark, hfs.join(path, f"delta_{v:05d}", "_SUCCESS")))):
-            break                        # live appender mid-write
-        versions.append(v)
+    """The delta versions a feed read of (after, until] serves: the
+    snapshot's listed deltas in that window. Raises
+    `ChangeHistoryUnavailable` when the window reaches versions at or
+    below the floor that were already reclaimed."""
+    top = snap.floor if until is None else min(until, snap.floor)
+    have = set(snap.listed)
+    missing = [v for v in range(after + 1, top + 1) if v not in have]
     if missing:
         raise ChangeHistoryUnavailable(
-            f"delta versions {missing} of {path} were already "
-            f"reclaimed (folded through {floor}); snapshot-diff the "
+            f"delta versions {missing} of {snap.path} were already "
+            f"reclaimed (folded through {snap.floor}); snapshot-diff the "
             f"retained versions and resume the feed above "
             f"{max(missing)}")
-    return versions
+    return [v for v in snap.listed
+            if v > after and (until is None or v <= until)]
 
 
 def _with_preimage_one_pass(snap: Snapshot, key: str, versions: list[int],
@@ -346,9 +331,12 @@ def stream_table_changes(spark: SparkSession, path: str,
                          max_files_per_trigger: int | None = None
                          ) -> DataFrame:
     """The feed as a Structured Streaming source: a file stream over
-    `delta_*` directories (claimed slots publish by ATOMIC RENAME, so
-    a directory's files appear to the source's listing all at once;
-    `_`-prefixed sidecars are invisible to the parquet reader). Each
+    `delta_*` directories. A delta directory is complete once it
+    exists — its data files and `_KEYRANGE` sidecar appear together
+    with the one exclusive rename that commits it, so the source's
+    listing never sees part of a delta, and the `.stage-*` dirs the
+    rename comes from never match `delta_*`; `_`-prefixed sidecars are
+    invisible to the parquet reader. Each
     micro-batch carries whatever new delta files landed, tagged with
     `_change_version` parsed from the file path and `_change_op` from
     the tombstone marker — the downstream half of the arrival loop: a

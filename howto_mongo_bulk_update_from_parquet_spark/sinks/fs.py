@@ -12,6 +12,7 @@ configuration (credentials, endpoints, committers all apply).
 
 from __future__ import annotations
 
+import errno
 import os
 import re
 from typing import Any
@@ -254,14 +255,33 @@ def write_text_atomic(spark: SparkSession, path: str, text: str) -> None:
 
 def rename_no_clobber(spark: SparkSession, src: str, dst: str) -> bool:
     """Rename `src` to `dst` only if `dst` does not already exist;
-    False when it does (the caller lost a publish race). HDFS rename
-    already refuses an existing target, but the local scheme maps to
-    POSIX rename(2), which silently REPLACES it — so the existence
-    check runs first everywhere. The check-then-rename pair is not one
-    atomic op; callers layer it over a coarser claim (the versioned
-    data directory) and treat a False as a clean conflict signal, the
+    False when it does (the caller lost a publish race). The existence
+    check runs first everywhere; the check-then-rename pair is not one
+    atomic op, so callers treat a False as a clean conflict signal, the
     same discipline Delta Lake applies to its log-entry PUT on stores
-    without a compare-and-swap primitive."""
+    without a compare-and-swap primitive.
+
+    A local DIRECTORY is renamed with rename(2) itself, which refuses
+    a non-empty target, so a racer whose directory lands in the gap
+    still wins alone. Hadoop's local rename would instead fall back to
+    a copy that moves `src` INSIDE the existing `dst` and report
+    success — two writers would both believe they took one slot. (A
+    slot directory is never empty: every writer stages at least one
+    file.) A file keeps the Hadoop rename, whose rename(2) replaces an
+    existing target, so for files only the check guards the gap."""
+    lsrc, ldst = _local_path(spark, src), _local_path(spark, dst)
+    if lsrc is not None and ldst is not None and os.path.isdir(lsrc):
+        if os.path.lexists(ldst):
+            return False
+        try:
+            os.rename(lsrc, ldst)
+        except OSError as e:
+            # ENOTEMPTY/EEXIST: a racer's directory landed first;
+            # ENOENT: a racer renamed `src` away first
+            if e.errno in (errno.ENOTEMPTY, errno.EEXIST, errno.ENOENT):
+                return False
+            raise
+        return True
     fs, p_dst = _fs_path(spark, dst)
     if fs.exists(p_dst):
         return False

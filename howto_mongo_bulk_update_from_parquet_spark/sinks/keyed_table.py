@@ -27,38 +27,47 @@ paths.
 On-disk layout: `base_v{NNNNN}/` base directories, `delta_{NNNNN}/`
 delta directories and the VERSIONED manifest files `_CURRENT.v{NNNNN}`
 — nothing else. Every keyed statement resolves the table ONCE into a
-`Snapshot` (`snapshot`): one root listing, one read of the newest
-manifest, one `_SUCCESS` check per delta above its `folded_through`
-floor. Base version, manifest metadata, floor and committed pending
-deltas therefore always come from one resolution, and the base's file
-map and schema are built from it at most once. Readers, writers and
-SQL verbs take that snapshot instead of re-resolving the table. Only
-the fences that must see fresh state read fresh state: the commit's
-pointer compare-and-swap (`_commit_version`), the next free base
-slot (`_next_base_version`) and the claim checks.
+`Snapshot` (`snapshot`): one root listing and one read of the newest
+manifest. Base version, manifest metadata, `folded_through` floor and
+pending deltas therefore always come from one resolution, and the
+base's file map and schema are built from it at most once. Readers,
+writers and SQL verbs take that snapshot instead of re-resolving the
+table. Only the fences that must see fresh state read fresh state:
+the commit's pointer compare-and-swap (`_commit_version`), the next
+free base slot (`_next_base_version`) and the delta slot number
+(`_next_delta_version`).
+
+One slot rule: a `base_v*` / `delta_*` directory in the table root is
+complete once it exists. Every writer builds its slot in a private
+`.stage-*` directory (data files and sidecars alike) and creates the
+slot with ONE exclusive rename (`fs.rename_no_clobber`); nothing
+writes into a slot after it appears. A delta's rename is its commit,
+so every listed delta above the floor is committed and the rewriting
+writers fold exactly `snap.deltas`. A base's rename only takes the
+slot: the base commits when its manifest pointer publishes.
 
 Commits publish a manifest by writing a temp file and renaming it
-into place only if the target is absent (`fs.rename_no_clobber`).
-Because a commit creates a NEW name and retires older pointers only
-after the new one is visible, there is never a missing-pointer
-window; a table whose pointers were all removed by hand recovers
-from its complete base directories (see `snapshot`). The rewriting
-writers (upsert, compact, delete) share one prelude (`_fold_run`) and
-one commit tail (`_commit_base`); the pruned fold and restore share
-its publish + GC step (`_publish`).
+into place only if the target is absent. Because a commit creates a
+NEW name and retires older pointers only after the new one is
+visible, there is never a missing-pointer window; a table whose
+pointers were all removed by hand recovers from its complete base
+directories (see `snapshot`). The rewriting writers (upsert, compact,
+delete) share one commit tail (`_commit_base`); the pruned fold and
+restore share its publish + GC step (`_publish`).
 
 Concurrent writers: two upsert rounds that both read base version N
 both try to produce N+1. The loser is caught at TWO fences and gets a
 clean `ConcurrentWriteError` instead of silently dropping the
-winner's round: (1) the data write claims `base_v{N+1}` with Spark's
-error-if-exists mode — a completed competing write is detected before
-a byte is clobbered; (2) the manifest publish refuses to land
-`_CURRENT.v{N+1}` if a pointer at or past N+1 already exists.
-Interleaved rounds — the realistic failure, one writer committing
-while another holds a stale read — are always detected. Writers
-racing within the same millisecond on an object store additionally
-need a coordination service for the final rename (the same caveat
-Delta Lake documents for S3 without conditional PUT).
+winner's round: (1) the slot `base_v{N+1}` is taken by the winner's
+rename, so the loser's rename (or its earlier listing) finds it
+occupied; (2) the manifest publish refuses to land `_CURRENT.v{N+1}`
+if a pointer at or past N+1 already exists. Two appenders never
+share a delta number: each picks its number from a fresh listing
+right before its rename, and a lost rename re-lists. Both fences need
+an atomic directory rename, which local filesystems and HDFS give;
+writers racing within the same millisecond on an object store
+additionally need a coordination service for the final rename (the
+same caveat Delta Lake documents for S3 without conditional PUT).
 `retain_versions` (default 2: current + previous) keeps the base a
 pre-flip reader resolved alive until the next commit.
 """
@@ -92,26 +101,23 @@ class ConcurrentWriteError(RuntimeError):
     (picking up the winner's commit) and retry the upsert."""
 
 
-# How long a version directory without _SUCCESS must sit untouched
-# before a claimer may treat it as dead-writer debris and clear it.
-# Fresher than this, the directory is presumed to belong to a LIVE
-# writer mid-job (ADVICE r9: deleting it would clobber an in-flight
-# round) and the claimer must treat the slot as occupied instead.
+# How long a base slot no manifest pointer names must sit untouched
+# before a writer may skip it as dead-writer debris. Fresher than
+# this, the slot is presumed to belong to a LIVE writer between its
+# rename and its manifest publish, and the slot counts as taken.
 STALE_CLAIM_GRACE_MS = 15 * 60 * 1000
 
 
 def _claim_is_stale(spark: SparkSession, dst: str,
                     grace_ms: int = STALE_CLAIM_GRACE_MS) -> bool:
-    """True when an existing no-_SUCCESS directory is demonstrably a
-    dead writer's debris: nothing in it (the dir entry, any child, or
-    any file at ANY depth — Spark's task phase writes only under
-    `_temporary/...`) has been touched for `grace_ms`. 'Now' comes
+    """True when an existing slot directory is demonstrably a dead
+    writer's debris: nothing in it (the dir entry, any child, or any
+    file at ANY depth) has been touched for `grace_ms`. 'Now' comes
     from the filesystem itself (a probe file's mtime), so driver clock
     skew against the storage clock cannot shrink or invert the window.
-    A live writer's job keeps some task file's mtime current, so it
-    never looks stale. A TRUNCATED listing (the metadata-scan cap hit
-    before exhaustion) proves nothing — the fresh task files may sit
-    past the cap — so it reads as occupied, not stale (ADVICE r10)."""
+    A TRUNCATED listing (the metadata-scan cap hit before exhaustion)
+    proves nothing — a fresh file may sit past the cap — so it reads
+    as occupied, not stale (ADVICE r10)."""
     newest, truncated = hfs.newest_mtime(spark, dst)
     if newest is None:
         return True                      # vanished — nothing to clear
@@ -197,54 +203,6 @@ def _java_chain_has_class(jexc, suffix: str, max_depth: int = 32) -> bool:
         except Exception:                # Py4J gateway hiccup mid-walk
             return False
         depth += 1
-    return False
-
-
-def _is_path_exists_error(exc: BaseException) -> bool:
-    """Java-side 'target already exists' failures that escape the
-    pre-write AnalysisException check: when two writers pass the
-    exists-check near-simultaneously, the loser fails at task/job
-    commit with FileAlreadyExistsException surfaced through
-    Py4JJavaError/SparkException (ADVICE r9) — the same clean-conflict
-    signal, so claimers retry instead of crashing. Matches the ACTUAL
-    exception class, not a substring of the stringified trace: a
-    Py4JJavaError's str() embeds the full Java stack (suppressed and
-    nested exceptions included), so an unrelated failure whose trace
-    merely MENTIONS FileAlreadyExistsException must not read as a
-    clean conflict — in `_append_delta_claiming` that would turn a
-    real error into up to 64 futile re-write attempts (ADVICE r10).
-    For Py4J errors the java_exception's getCause() chain is walked by
-    getClass().getName(); for Python-side wrappers only the FIRST
-    LINE of the message is matched. Follows explicit __cause__ only —
-    an implicit __context__ chain can drag in unrelated exceptions."""
-    seen = set()
-    cur: BaseException | None = exc
-    while cur is not None and id(cur) not in seen:
-        seen.add(id(cur))
-        # raw Py4JJavaError / captured PySpark exception: the JVM
-        # throwable itself is available — compare real class names
-        jexc = (getattr(cur, "java_exception", None)
-                or getattr(cur, "_origin", None))
-        if jexc is not None:
-            if _java_chain_has_class(jexc, "FileAlreadyExistsException"):
-                return True
-        else:
-            # captured-without-origin keeps the Java getMessage() in
-            # _desc; plain Python exceptions use str(). Either way only
-            # the FIRST LINE counts — anything below is stack trace.
-            msg = getattr(cur, "_desc", None)
-            if not isinstance(msg, str):
-                msg = str(cur)
-            if "FileAlreadyExistsException" in msg.split("\n", 1)[0]:
-                return True
-        nxt = cur.__cause__
-        if nxt is None:
-            # CapturedException chains converted causes in _cause (the
-            # py4j boundary raises `from None`, so __cause__ is empty)
-            cand = getattr(cur, "_cause", None)
-            if isinstance(cand, BaseException):
-                nxt = cand
-        cur = nxt
     return False
 
 
@@ -613,10 +571,9 @@ class Snapshot:
     meta: dict[str, str]
     #: the delta version through which deltas are folded into the base
     floor: int
-    #: committed (has _SUCCESS) deltas above the floor — the set a
-    #: reader applies
+    #: the listed deltas above the floor — the set a reader applies
     deltas: tuple[int, ...]
-    #: every `delta_*` directory listed, in any state
+    #: every `delta_*` directory listed, folded or not
     listed: tuple[int, ...]
     #: published manifest pointers
     pointers: tuple[int, ...]
@@ -658,18 +615,42 @@ class Snapshot:
 _MANIFEST_READS = 4
 
 
+def _list_root(spark: SparkSession, path: str
+               ) -> tuple[list[str], list[int], dict[str, str]]:
+    """``(names, pointers, meta)``: one root listing, the manifest
+    pointers in it, and the key=value metadata of the newest one
+    (empty when there is none). A pointer retired between the listing
+    and the read re-lists and retries (`_MANIFEST_READS` reads in all)
+    rather than return empty metadata, which would collapse the
+    watermark to 0 and resurrect folded deltas; if every read races a
+    retirement, it fails retryable instead of guessing (ADVICE r10)."""
+    for _ in range(_MANIFEST_READS):
+        names = hfs.listdir(spark, path)
+        pointers = _versions(names, _MANIFEST_V_RE)
+        if not pointers:
+            return names, pointers, {}
+        txt = hfs.read_text(spark,
+                            hfs.join(path, _manifest_name(pointers[-1])))
+        if txt is None:
+            continue                         # retired mid-read — re-list
+        meta: dict[str, str] = {}
+        for line in txt.splitlines()[1:]:
+            k, sep, v = line.partition("=")
+            if sep:
+                meta[k.strip()] = v.strip()
+        return names, pointers, meta
+    raise ConcurrentWriteError(
+        f"manifest pointer for {path} kept racing retirements across "
+        f"{_MANIFEST_READS} reads — re-read and retry")
+
+
 def snapshot(spark: SparkSession, path: str) -> Snapshot:
     """Resolve the table at `path` once: one root listing (manifest
-    pointers, `base_v*` and `delta_*` directories), one read of the
-    newest manifest `_CURRENT.v{NNNNN}`, and one `_SUCCESS` check per
-    delta above its `folded_through` floor. Version 0 with empty
+    pointers, `base_v*` and `delta_*` directories) and one read of the
+    newest manifest `_CURRENT.v{NNNNN}` (`_list_root`). The pending
+    deltas are the listed ones above its `folded_through` floor: a
+    delta directory is committed once it exists. Version 0 with empty
     metadata when `path` holds no table.
-
-    A pointer retired between the listing and the read re-lists and
-    retries (`_MANIFEST_READS` reads in all) rather than return empty
-    metadata, which would collapse the watermark to 0 and resurrect
-    folded deltas; if every read races a retirement, it fails
-    retryable instead of guessing (ADVICE r10).
 
     Recovery, when every pointer is gone (manual damage — the commit
     protocol never leaves a pointerless window): the version is the
@@ -677,35 +658,20 @@ def snapshot(spark: SparkSession, path: str) -> Snapshot:
     survive, since the newest may be a data write whose manifest
     publish never landed — stale-but-committed beats
     newest-but-unconfirmed — and its metadata is empty."""
-    for _ in range(_MANIFEST_READS):
-        names = hfs.listdir(spark, path)
-        pointers = _versions(names, _MANIFEST_V_RE)
-        bases = _versions(names, _BASE_RE)
-        meta: dict[str, str] = {}
-        if pointers:
-            version = pointers[-1]
-            txt = hfs.read_text(spark,
-                                hfs.join(path, _manifest_name(version)))
-            if txt is None:
-                continue                     # retired mid-read — re-list
-            for line in txt.splitlines()[1:]:
-                k, sep, v = line.partition("=")
-                if sep:
-                    meta[k.strip()] = v.strip()
-        else:
-            complete = [v for v in bases if hfs.exists(
-                spark, hfs.join(_base_dir(path, v), "_SUCCESS"))]
-            version = complete[-2] if len(complete) >= 2 else \
-                (complete[-1] if complete else 0)
-        floor = _meta_int(meta, "folded_through")
-        listed = _versions(names, _DELTA_RE)
-        deltas = tuple(v for v in listed if v > floor and hfs.exists(
-            spark, hfs.join(_delta_dir(path, v), "_SUCCESS")))
-        return Snapshot(spark, path, version, meta, floor, deltas,
-                        tuple(listed), tuple(pointers), tuple(bases))
-    raise ConcurrentWriteError(
-        f"manifest pointer for {path} kept racing retirements across "
-        f"{_MANIFEST_READS} reads — re-read and retry")
+    names, pointers, meta = _list_root(spark, path)
+    bases = _versions(names, _BASE_RE)
+    if pointers:
+        version = pointers[-1]
+    else:
+        complete = [v for v in bases if hfs.exists(
+            spark, hfs.join(_base_dir(path, v), "_SUCCESS"))]
+        version = complete[-2] if len(complete) >= 2 else \
+            (complete[-1] if complete else 0)
+    floor = _meta_int(meta, "folded_through")
+    listed = _versions(names, _DELTA_RE)
+    return Snapshot(spark, path, version, meta, floor,
+                    tuple(v for v in listed if v > floor), tuple(listed),
+                    tuple(pointers), tuple(bases))
 
 
 def current_base_version(spark: SparkSession, path: str) -> int:
@@ -841,90 +807,74 @@ def _commit_version(spark: SparkSession, path: str, version: int,
 
 def _write_claiming_base(spark: SparkSession, df: DataFrame, path: str,
                          version: int) -> None:
-    """Write `df` as `base_v{version}`, claiming the slot ATOMICALLY
-    (r13): the data lands in a writer-PRIVATE hidden staging directory
-    (`.stage-base_vNNNNN-<uuid>`, no contention possible), and the
-    slot is taken by a single directory RENAME — exclusive on HDFS
-    (rename refuses an existing target) and on the local scheme
-    (rename(2) onto a non-empty directory fails). The loser of the
-    rename gets a clean ConcurrentWriteError and its staging is
-    removed. `_claim_base_slot` still runs first for the cheap early
-    conflicts and stale-debris clearing.
-
-    Why not error-if-exists into the slot directly (the pre-r13
-    protocol): two writers could BOTH pass Spark's existence pre-check
-    before either created the directory, and when their job lifetimes
-    did not overlap neither collision signal (_temporary interference,
-    FileAlreadyExists at commit) fired — both 'succeeded' into ONE
-    directory, and the pointer-CAS winner published a slot holding
-    both writers' row sets. Caught live by tests/test_keyed_races.py
-    (thread-0's rounds masked by duplicate stale rows, ~1-in-10 runs
-    under load). The staged rename closes the hole structurally: the
-    slot either does not exist or holds exactly one writer's complete
-    output — there is no window in which it is shared."""
-    dst = _claim_base_slot(spark, path, version)
+    """Write `df` as `base_v{version}` through a private staging dir
+    and one exclusive rename (`_staged_claimed_write`): the slot either
+    does not exist or holds exactly one writer's complete output, so
+    two racing writers can never land in one directory."""
     _staged_claimed_write(
-        spark, dst,
-        lambda staging: df.write.mode("errorifexists").parquet(staging))
+        spark, _base_dir(path, version),
+        lambda staging: df.write.parquet(staging))
 
 
-def _staged_claimed_write(spark: SparkSession, dst: str, write_to,
-                          validate=None) -> None:
-    """Run `write_to(staging)` against a fresh private staging dir,
-    then atomically rename it onto `dst`; a False rename (slot taken
-    since the claim check) raises ConcurrentWriteError. Staging is
-    deleted on every non-renamed outcome; a process killed mid-write
-    leaks one `.stage-*` dir, swept by `recover_dead_claims` and
-    ignored by every reader (dot-prefixed, outside the base_v/delta_
-    name space).
-
-    `validate` (optional) runs AFTER the write and BEFORE the rename:
-    a raise there discards the staging dir and nothing becomes
-    visible — the hook check-constraint enforcement rides now that
-    its violation scan is an Observation on the write job itself
-    (r16: one batch pass instead of two, no separate probe job)."""
+def _staged(spark: SparkSession, parent: str, label: str, write_to,
+            publish):
+    """Run `write_to(staging)` against a fresh writer-private staging
+    dir `.stage-{label}-<uuid>` under `parent`, then return
+    `publish(staging)`, which renames it into its slot or raises.
+    Staging is deleted on every outcome that did not rename it; a
+    process killed mid-write leaks one `.stage-*` dir, swept by
+    `recover_dead_claims` and ignored by every reader (dot-prefixed,
+    outside the base_v/delta_ name space)."""
     import uuid
-    root = dst.rstrip("/")
-    parent, name = root.rsplit("/", 1)
-    staging = hfs.join(parent, f".stage-{name}-{uuid.uuid4().hex[:12]}")
-    renamed = False
+    staging = hfs.join(parent, f".stage-{label}-{uuid.uuid4().hex[:12]}")
     try:
         write_to(staging)
-        if validate is not None:
-            validate()
-        renamed = hfs.rename_no_clobber(spark, staging, dst)
-        if not renamed:
+        return publish(staging)
+    except BaseException:
+        hfs.delete(spark, staging)
+        raise
+
+
+def _staged_claimed_write(spark: SparkSession, dst: str, write_to) -> None:
+    """`_staged` onto the fixed slot `dst`: a lost rename (the slot was
+    taken after `_next_base_version` listed it free) raises
+    ConcurrentWriteError."""
+    parent, name = dst.rstrip("/").rsplit("/", 1)
+
+    def publish(staging: str) -> None:
+        if not hfs.rename_no_clobber(spark, staging, dst):
             raise ConcurrentWriteError(
                 f"{dst} appeared during this round's write (a concurrent "
                 f"writer won the slot rename) — re-read and retry")
-    finally:
-        if not renamed:
-            hfs.delete(spark, staging)
+
+    _staged(spark, parent, name, write_to, publish)
 
 
 def _next_base_version(spark: SparkSession, path: str,
                        current: int) -> int:
-    """First claimable base version above `current`, skipping COMPLETE
-    but never-committed orphan directories that sat untouched past the
-    staleness grace window — the debris of a writer that died between
-    finishing its base write and flipping the manifest. Without the
-    skip, every future rewrite targets the poisoned number and raises
-    ConcurrentWriteError forever (the claim fence rightly refuses to
-    clobber a complete dir: a FRESH one belongs to a racing writer
-    about to commit and must stay a clean conflict). Version numbers
-    need not be dense: readers resolve through manifest pointers only,
-    and `_commit_version` retains by published pointers, so a skipped
-    orphan falls out of the keep set at the next commit."""
-    published = set(_versions(hfs.listdir(spark, path), _MANIFEST_V_RE))
+    """The slot a rewrite of base `current` takes, from one root
+    listing: the first version above `current` with no directory. A
+    slot that exists is taken — by a racing writer between its rename
+    and its manifest publish — and raises ConcurrentWriteError, unless
+    no pointer names it and it sat untouched past the staleness grace
+    window: then it is a dead writer's debris, complete or not, and is
+    skipped (without the skip every later rewrite would target the
+    poisoned number forever). Version numbers need not be dense:
+    readers resolve through manifest pointers only, and
+    `_commit_version` retains by published pointers, so a skipped slot
+    falls out of the keep set and is deleted at the next commit."""
+    names = hfs.listdir(spark, path)
+    published = set(_versions(names, _MANIFEST_V_RE))
+    taken = set(_versions(names, _BASE_RE))
     v = current + 1
-    while True:
+    while v in taken:
         dst = _base_dir(path, v)
-        if (v not in published
-                and hfs.exists(spark, hfs.join(dst, "_SUCCESS"))
-                and _claim_is_stale(spark, dst)):
-            v += 1
-            continue
-        return v
+        if v in published or not _claim_is_stale(spark, dst):
+            raise ConcurrentWriteError(
+                f"{dst} is taken by a concurrent writer that read the "
+                f"same base snapshot — re-read and retry")
+        v += 1
+    return v
 
 
 def recover_dead_claims(spark: SparkSession, path: str,
@@ -933,28 +883,27 @@ def recover_dead_claims(spark: SparkSession, path: str,
     grace window, returning the cleared names. Sound ONLY under an
     exclusive-writer contract: the caller must know the previous
     writer is dead — the restarting single-writer stream recovering
-    its OWN kill's debris is the canonical case (r13). Two classes:
+    its OWN kill's debris is the canonical case (r13). It sweeps:
 
-    - INCOMPLETE (no _SUCCESS) base/delta dirs — a kill mid-write.
-      Without clearing, the replayed epoch dies on the claim fence's
-      'fresh incomplete dir = live writer' conflict on every restart
-      until STALE_CLAIM_GRACE_MS expires.
-    - COMPLETE but UNPUBLISHED base dirs — a kill in the sliver
-      between the claimed write finishing (_SUCCESS lands) and the
-      manifest flip. The fence reads those as 'a racing writer about
-      to commit' (ConcurrentWriteError), which under single ownership
-      is the same dead debris. Published versions are never touched
-      (the manifest names them); COMPLETE deltas are never touched —
-      a delta's _SUCCESS IS its commit, there is no flip to miss.
+    - `.stage-*` dirs — a writer killed before its slot rename.
+    - UNPUBLISHED base dirs, above the newest manifest pointer — a
+      kill between the slot rename and the manifest publish. `_next_base_version` reads a fresh one as a
+      racing writer about to commit (ConcurrentWriteError) until
+      STALE_CLAIM_GRACE_MS expires; under single ownership it is the
+      same dead debris.
+    - Pre-staging incomplete slots: `base_v*` / `delta_*` dirs without
+      `_SUCCESS`, which only a writer from before the staged claims
+      left (it wrote into the slot itself). Readers take every listed
+      delta as committed, so such a dir must go before the table is
+      used again (MIGRATION.md).
 
-    Both classes are exactly what the grace-window machinery
-    (`_next_base_version`, `_claim_is_stale`) reclaims for CONCURRENT
-    writers — this just skips the wait the caller's ownership makes
-    unnecessary.
+    Published bases — every one at or below the newest pointer, since
+    a retained version loses its own pointer at the next commit — and
+    complete deltas are never touched.
 
-    r14: the exclusive-writer contract is now CHECKED against the
-    table's writer lease (`sinks/lease.py`) — when a LIVE lease is
-    held by someone other than `lease_owner`, the sweep refuses with
+    r14: the exclusive-writer contract is CHECKED against the table's
+    writer lease (`sinks/lease.py`) — when a LIVE lease is held by
+    someone other than `lease_owner`, the sweep refuses with
     `WriterLeaseHeld` instead of deleting what may be the live
     writer's in-flight staging. An expired or absent lease keeps the
     pre-lease behavior (the caller's ownership claim stands)."""
@@ -967,13 +916,11 @@ def recover_dead_claims(spark: SparkSession, path: str,
             f"held live by {holder!r} — its staging may be in flight; "
             f"stop that writer or let the lease expire")
     names = hfs.listdir(spark, path)
-    published = set(_versions(names, _MANIFEST_V_RE))
+    newest = max(_versions(names, _MANIFEST_V_RE), default=math.inf)
     cleared = []
     for d in names:
         base_m = _BASE_RE.match(d)
         if d.startswith(".stage-"):
-            # a killed writer's private staging (never renamed into a
-            # slot) — invisible to readers, pure dead bytes
             hfs.delete(spark, hfs.join(path, d))
             cleared.append(d)
             continue
@@ -981,96 +928,11 @@ def recover_dead_claims(spark: SparkSession, path: str,
             continue
         dst = hfs.join(path, d)
         complete = hfs.exists(spark, hfs.join(dst, "_SUCCESS"))
-        if complete and (not base_m or int(base_m.group(1)) in published):
+        if complete and (not base_m or int(base_m.group(1)) <= newest):
             continue
         hfs.delete(spark, dst)
         cleared.append(d)
     return cleared
-
-
-def _claim_base_slot(spark: SparkSession, path: str, version: int) -> str:
-    """The claim fence both base writers share: a COMPLETE competing
-    dir is a clean conflict, a fresh incomplete one is a live writer
-    (also a conflict — never clobbered), a stale incomplete one is
-    dead-writer debris and is cleared."""
-    dst = _base_dir(path, version)
-    if hfs.exists(spark, dst):
-        if hfs.exists(spark, hfs.join(dst, "_SUCCESS")):
-            raise ConcurrentWriteError(
-                f"{dst} already written by a concurrent round that read "
-                f"the same base snapshot — re-read and retry")
-        if not _claim_is_stale(spark, dst):
-            raise ConcurrentWriteError(
-                f"{dst} is being written by a concurrent round right now "
-                f"(incomplete but recently touched) — re-read and retry")
-        hfs.delete(spark, dst)
-    return dst
-
-
-# AnalysisException conditions that mean "the target already exists"
-# — the only analysis failures a claimed write may read as a clean
-# concurrent-writer conflict. Probed on Spark 4.1: the plain
-# errorifexists parquet write raises PATH_ALREADY_EXISTS; the bucketed
-# CTAS raises TABLE_OR_VIEW_ALREADY_EXISTS (catalog name taken) or the
-# legacy-numbered condition for a non-empty LOCATION. Everything else
-# (bad CLUSTERED BY column, schema/catalog errors — the CTAS surface
-# is broad) is a PERMANENT failure and must not be reported as
-# retryable (ADVICE r10).
-_CONFLICT_CONDITIONS = frozenset({
-    "PATH_ALREADY_EXISTS",
-    "TABLE_OR_VIEW_ALREADY_EXISTS",
-    "LOCATION_ALREADY_EXISTS",
-    "_LEGACY_ERROR_TEMP_1241",   # CTAS: location is a non-empty directory
-})
-
-
-def _is_temporary_interference(exc: BaseException, dst: str) -> bool:
-    """True when a failed write's error names a task file under THIS
-    destination's `_temporary` staging dir: two writers that both
-    passed the claim pre-check share one staging root, and the
-    winner's job-commit cleanup destroys the loser's in-flight task
-    files (surfacing as chmod/rename/missing-file task failures, not
-    as FileAlreadyExistsException — proven by the threaded race in
-    tests/test_keyed_races.py). Mapping it to the retryable conflict
-    is safe even for a false positive (e.g. disk trouble under
-    _temporary): the retry re-claims and fails permanently if the
-    cause was real."""
-    msg = str(exc)
-    leaf = dst.rstrip("/").rsplit("/", 1)[-1]
-    # no trailing slash on the marker: the staging ROOT itself can be
-    # the named victim ("cannot access '.../base_vN/_temporary'")
-    return f"{leaf}/_temporary" in msg
-
-
-def _run_claimed_write(dst: str, write) -> None:
-    """Execute a claimed write, mapping both conflict signals — the
-    pre-write already-exists AnalysisException and the Java-side
-    FileAlreadyExistsException at job commit — to ConcurrentWriteError
-    so every racing writer loses cleanly. Only the already-exists
-    error conditions map; any other AnalysisException (the bucketed
-    CTAS can fail analysis for many permanent reasons) re-raises."""
-    from pyspark.errors import AnalysisException
-    try:
-        write()
-    except AnalysisException as exc:
-        if _analysis_says(exc, _CONFLICT_CONDITIONS, "already exists"):
-            raise ConcurrentWriteError(
-                f"{dst} appeared during this round's write (concurrent "
-                f"writer) — re-read and retry") from exc
-        raise
-    except Exception as exc:
-        if _is_path_exists_error(exc):
-            raise ConcurrentWriteError(
-                f"{dst} appeared during this round's write (concurrent "
-                f"writer, detected at job commit) — re-read and retry"
-            ) from exc
-        if _is_temporary_interference(exc, dst):
-            raise ConcurrentWriteError(
-                f"{dst} task files were destroyed mid-job — a competing "
-                f"writer that passed the same claim pre-check committed "
-                f"first and cleaned the shared _temporary dir — re-read "
-                f"and retry") from exc
-        raise
 
 
 def _bucket_table_ident(path: str, version: int) -> str:
@@ -1106,38 +968,29 @@ def _read_base_bucketed(spark: SparkSession, path: str, version: int,
 def _write_claiming_base_bucketed(spark: SparkSession, df: DataFrame,
                                   path: str, version: int,
                                   key: str, buckets: int) -> None:
-    """`_write_claiming_base`, bucketed: same claim fences, but the
+    """`_write_claiming_base`, bucketed: same staged slot, but the
     data lands via the bucketed writer (external table + explicit
     path) so each file carries its bucket id. No extra shuffle: the
     merge join's output is already hash-partitioned on the key with
     the same Murmur3 function the bucketed writer uses, so each task
     emits (almost always) exactly one bucket's file."""
-    dst = _claim_base_slot(spark, path, version)
-
     def _ctas_into(staging: str) -> None:
-        # staged like the plain writer (r13 — the same two-writers-
-        # pass-the-precheck hole existed here: both DROPped the shared
-        # ident, both CTAS'd into the slot). The CTAS lands at the
-        # PRIVATE staging location under a staging-derived ident; the
-        # transient catalog entry is dropped before the rename
-        # (external — data untouched), and readers re-register the
-        # bucket spec over the committed dir lazily
-        # (_read_base_bucketed; bucket ids live in the FILE NAMES,
-        # which the rename preserves).
+        # the CTAS lands at the PRIVATE staging location under a
+        # staging-derived ident; the transient catalog entry is
+        # dropped before the rename (external — data untouched), and
+        # readers re-register the bucket spec over the committed dir
+        # lazily (_read_base_bucketed; bucket ids live in the FILE
+        # NAMES, which the rename preserves)
         sname = _bucket_table_ident(staging, version)
-        spark.sql(f"DROP TABLE IF EXISTS {sname}")
         try:
-            _run_claimed_write(
-                staging, lambda: (df.write.format("parquet")
-                                  .bucketBy(buckets, key).sortBy(key)
-                                  .option("path", staging)
-                                  .saveAsTable(sname)))
+            (df.write.format("parquet").bucketBy(buckets, key).sortBy(key)
+             .option("path", staging).saveAsTable(sname))
         finally:
             spark.sql(f"DROP TABLE IF EXISTS {sname}")
 
-    _staged_claimed_write(spark, dst, _ctas_into)
-    # hygiene: a pre-staging round (or a failed old attempt) may have
-    # left the slot ident registered over a now-different location
+    _staged_claimed_write(spark, _base_dir(path, version), _ctas_into)
+    # the slot ident may still be registered, with its old schema, by
+    # an earlier table at this path that was dropped and re-created
     spark.sql(f"DROP TABLE IF EXISTS {_bucket_table_ident(path, version)}")
 
 
@@ -1529,48 +1382,6 @@ def _write_base_and_meta(spark: SparkSession, df: DataFrame, path: str,
     return meta
 
 
-def _fold_run(snap: Snapshot) -> tuple[list[int], list[int]]:
-    """The prelude every rewriting writer shares: ``(run, stranded)``
-    — the contiguous complete RUN of pending deltas a fold may safely
-    absorb, and every slot above the floor left out of it. The run
-    stops at the first claimed-but-incomplete slot: a live appender
-    may still complete it, and a watermark past its number would make
-    every reader skip it forever. An incomplete slot whose files sat
-    untouched past the staleness grace window is dead-writer debris:
-    it is deleted and the run continues — otherwise abandoned debris
-    below committed deltas would block every fold forever. Each writer
-    decides what a stranded slot means for it."""
-    run: list[int] = []
-    stranded: list[int] = []
-    for v in snap.listed:
-        if v <= snap.floor:
-            continue
-        if stranded:
-            stranded.append(v)
-        elif v in snap.deltas:
-            run.append(v)
-        elif _claim_is_stale(snap.spark, _delta_dir(snap.path, v)):
-            hfs.delete(snap.spark, _delta_dir(snap.path, v))
-        else:
-            stranded.append(v)
-    return run, stranded
-
-
-def _refuse_stranded_deltas(snap: Snapshot, run: list[int],
-                            stranded: list[int], what: str) -> None:
-    """The upsert/delete policy on `_fold_run`'s stranded slots: a
-    committed delta beyond an in-flight slot refuses the rewrite.
-    Folding past the gap would orphan the in-flight delta below the
-    watermark; folding only the run would leave the later deltas to
-    re-apply over the rewrite (resurrect). A rewrite loses nothing by
-    waiting out the in-flight append."""
-    if any(v in snap.deltas for v in stranded):
-        raise ConcurrentWriteError(
-            f"{snap.path} has committed deltas beyond an in-flight append "
-            f"(foldable run {run} vs committed {list(snap.deltas)}) — "
-            f"retry the {what} after the appender finishes or times out")
-
-
 def _next_meta(snap: Snapshot, key: str, fold: list[int]) -> dict[str, str]:
     """The manifest metadata a rewrite of `snap` + `fold` carries
     forward — dropping the watermark would resurrect folded-but-not-
@@ -1748,8 +1559,7 @@ def _upsert(snap: Snapshot, source: DataFrame, key: str, *,
     # carrying un-compacted LSM deltas must fold them into the merge
     # target — otherwise the pending deltas re-apply over the NEW base
     # in read_merged and win over this (newer) upsert round.
-    fold, stranded = _fold_run(snap)
-    _refuse_stranded_deltas(snap, fold, stranded, "upsert")
+    fold = list(snap.deltas)
     layout = _resolve_layout(snap, key, fold, **layout_args)
     meta = _next_meta(snap, key, fold)
     if table_props:
@@ -1958,27 +1768,23 @@ def vacuum_orphan_bases(spark: SparkSession, path: str, *,
 # Each delta's key [min,max] and row count, recorded inside the delta
 # dir so point/range lookups SKIP whole pending deltas whose key range
 # cannot intersect the probe — the LSM read-path twin of the base's
-# zone map. Written after the claim's rename: a reader sees no sidecar
-# (reads the delta) or the complete one.
+# zone map. Written into the delta's staging dir, so it appears with
+# the delta.
 _KEYRANGE = "_KEYRANGE.json"
 
 
-def _write_delta_keyrange_from_stats(spark: SparkSession, dst: str,
-                                     key: str, stats: dict) -> None:
-    """Write the `_KEYRANGE` sidecar from already-computed
-    {lo, hi, n} stats (the Observation riding the append's write job —
-    same rows the files hold, the write is deterministic). Advisory:
-    any failure is swallowed, the delta is then read unskipped."""
+def _write_keyrange(spark: SparkSession, dirpath: str, key: str,
+                    stats: dict) -> None:
+    """Write the `_KEYRANGE` sidecar from already-computed {lo, hi, n}
+    stats (the Observation riding the append's write job — same rows
+    the files hold)."""
     import json
-    try:
-        doc = {"version": 1, "key": key,
-               "min": zm._to_json_value(stats["lo"]),
-               "max": zm._to_json_value(stats["hi"]),
-               "rows": stats["n"]}
-        hfs.write_text(spark, hfs.join(dst, _KEYRANGE),
-                       json.dumps(doc, separators=(",", ":")))
-    except Exception:
-        pass
+    doc = {"version": 1, "key": key,
+           "min": zm._to_json_value(stats["lo"]),
+           "max": zm._to_json_value(stats["hi"]),
+           "rows": stats["n"]}
+    hfs.write_text(spark, hfs.join(dirpath, _KEYRANGE),
+                   json.dumps(doc, separators=(",", ":")))
 
 
 def _keyrange(spark: SparkSession, path: str, v: int,
@@ -2048,105 +1854,88 @@ def _delta_may_match(spark: SparkSession, path: str, v: int, key: str,
     return True
 
 
+#: renames an append tries before it gives up: each lost rename means
+#: another appender took the number just listed
+_CLAIM_ATTEMPTS = 64
+
+
+def _next_delta_version(snap: Snapshot) -> int:
+    """The number a delta renamed in now takes: one above both the
+    newest delta in a fresh root listing and the `folded_through`
+    floor. The floor is `snap`'s unless a base committed since (a new
+    newest pointer — a pointer's manifest never changes), when the
+    manifest is read again (`_list_root`). Numbers stay monotonic
+    across folds; one at or below the floor would be skipped by every
+    reader."""
+    names = hfs.listdir(snap.spark, snap.path)
+    floor = snap.floor
+    if _versions(names, _MANIFEST_V_RE)[-1:] != list(snap.pointers[-1:]):
+        names, _, meta = _list_root(snap.spark, snap.path)
+        floor = _meta_int(meta, "folded_through")
+    return max([*_versions(names, _DELTA_RE), floor]) + 1
+
+
 def _append_delta_claiming(snap: Snapshot, src: DataFrame, key: str,
-                           checks_spec: tuple | None = None,
-                           max_retries: int = 64) -> int:
-    """Write `src` as the next `delta_{N}` directory, CLAIMING the
-    version: two concurrent appenders (a CLI tombstone racing a
-    streaming changefeed batch, or a scheduled compact) can list the
-    same newest version and pick the same N — `errorifexists` makes
-    the loser fail the write instead of silently clobbering the
-    winner's delta (ADVICE r8), and it retries with the next number.
-    A Java-side FileAlreadyExistsException at job commit (both
-    appenders passed the pre-check) retries the same way (ADVICE r9).
+                           checks_spec: tuple | None = None) -> int:
+    """Write `src` as the next `delta_{N}` directory and return N. ONE
+    write job builds the whole delta in a private staging dir: the
+    data files, the CHECK verdict (`checks_spec`, an Observation on the
+    job, validated before anything is visible) and the `_KEYRANGE`
+    sidecar (an Observation too). The number is then picked from a
+    fresh listing and the current floor (`_next_delta_version`) right
+    before the exclusive rename that commits the delta; a lost rename
+    (another appender took that number) re-lists and renames again,
+    never re-writes (`_CLAIM_ATTEMPTS` renames in all).
 
-    An existing directory WITHOUT _SUCCESS is treated as OCCUPIED —
-    presumed to be a live appender mid-write — and the claim bumps to
-    the next number; only when it has sat untouched past the staleness
-    grace window (a writer that died mid-job) is it cleared and the
-    slot re-claimed (ADVICE r9: deleting a fresh one would corrupt the
-    in-flight job).
+    Picking the number at rename time keeps it above every fold that
+    commits while the write job runs: a number fixed before the job
+    can be freed by a fold plus the next commit's delta GC, and the
+    delta then lands at or below the floor, where no reader looks. The
+    window left is the gap between the listing and the rename — an
+    append, a fold and one more commit all landing inside it still
+    lose the delta. Closing it needs deltas committed through the
+    manifest (ROADMAP.md, "One commit protocol for bases and
+    deltas"). The rename must be atomic, as for every slot: local
+    filesystems and HDFS; object stores keep the module docstring's
+    caveat."""
+    import uuid
 
-    Numbering starts above BOTH the newest delta the snapshot lists
-    and its `folded_through` watermark, so delta versions stay
-    monotonic across compactions (a re-used number at or below the
-    watermark would be invisibly skipped by every reader); a slot
-    claimed since the listing is one more lost race."""
-    from pyspark.errors import AnalysisException
+    from pyspark.sql import Observation
     spark, path = snap.spark, snap.path
-    version = max((snap.listed or (0,))[-1], snap.floor) + 1
-    for _ in range(max_retries):
-        dst = _delta_dir(path, version)
-        if hfs.exists(spark, dst) and not hfs.exists(
-                spark, hfs.join(dst, "_SUCCESS")):
-            if not _claim_is_stale(spark, dst):
-                version += 1            # live appender mid-write — skip
-                continue
-            hfs.delete(spark, dst)
-        try:
-            # staged atomic claim (r13, same hole as the base writer:
-            # two appenders passing the existence pre-check with
-            # non-overlapping jobs both landed in ONE delta dir) —
-            # write private, rename-exclusive into the slot.
-            # The key-range sidecar's min/max/count ride the write job
-            # itself via the Observation API (r16 optimization, guide
-            # §1.4 posture: metrics on the action, zero extra jobs) —
-            # the r15 form re-read the written files with a separate
-            # aggregation job per append. A fresh Observation per
-            # retry: one observation latches one action.
-            out = src
-            validate = None
-            if checks_spec is not None:
-                # CHECK enforcement rides the same write (fresh
-                # observation per retry, same rule as keyrange): a
-                # violating batch is refused before the rename, so
-                # no delta — not even a partial one — ever lands
-                chk, what, tf, live_if = checks_spec
-                out, validate = _observed_checks(out, chk, what,
-                                                 table_fields=tf,
-                                                 live_if=live_if)
-            obs = None
-            if key in src.columns:
-                import uuid as _uuid
+    out, validate = src, None
+    if checks_spec is not None:
+        chk, what, tf, live_if = checks_spec
+        out, validate = _observed_checks(out, chk, what, table_fields=tf,
+                                         live_if=live_if)
+    obs = None
+    if key in src.columns:
+        obs = Observation(f"keyrange_{uuid.uuid4().hex[:8]}")
+        out = out.observe(obs, F.min(key).alias("lo"),
+                          F.max(key).alias("hi"),
+                          F.count(F.lit(1)).alias("n"))
 
-                from pyspark.sql import Observation
-                obs = Observation(f"keyrange_{_uuid.uuid4().hex[:8]}")
-                out = out.observe(obs, F.min(key).alias("lo"),
-                                  F.max(key).alias("hi"),
-                                  F.count(F.lit(1)).alias("n"))
-            _staged_claimed_write(
-                spark, dst,
-                lambda staging: out.write.mode("errorifexists")
-                                   .parquet(staging),
-                validate=validate)
-            if obs is not None:
-                _write_delta_keyrange_from_stats(spark, dst, key,
-                                                 obs.get)
-            # the writer knows the delta's schema — seed the memo so
-            # the next statement's merged read skips footer inference
-            # (r17; sidecars above are already in the fingerprint)
-            _seed_schema_memo(spark, dst, out.schema)
-            return version
-        except ConcurrentWriteError:
-            version += 1               # a concurrent appender won the slot
-        except AnalysisException as exc:
-            # only the already-exists condition is a lost race; any
-            # other analysis failure is permanent — retrying it 64
-            # times would only bury the real error (same narrowing as
-            # _run_claimed_write, ADVICE r10)
-            if _analysis_says(exc, _CONFLICT_CONDITIONS, "already exists"):
-                version += 1           # a concurrent appender won this slot
-            else:
-                raise
-        except Exception as exc:
-            if _is_path_exists_error(exc) or _is_temporary_interference(
-                    exc, dst):
-                version += 1           # lost the race at job commit
-            else:
-                raise
-    raise ConcurrentWriteError(
-        f"could not claim a delta version under {path} after "
-        f"{max_retries} attempts (concurrent appenders)")
+    def write_to(staging: str) -> None:
+        out.write.parquet(staging)
+        if validate is not None:
+            validate()
+        if obs is not None:
+            _write_keyrange(spark, staging, key, obs.get)
+
+    def publish(staging: str) -> int:
+        for _ in range(_CLAIM_ATTEMPTS):
+            version = _next_delta_version(snap)
+            if hfs.rename_no_clobber(spark, staging,
+                                     _delta_dir(path, version)):
+                return version
+        raise ConcurrentWriteError(
+            f"could not claim a delta version under {path} after "
+            f"{_CLAIM_ATTEMPTS} renames (concurrent appenders)")
+
+    version = _staged(spark, path, "delta_", write_to, publish)
+    # the writer knows the delta's schema — seed the memo so the next
+    # statement's merged read skips footer inference (r17)
+    _seed_schema_memo(spark, _delta_dir(path, version), out.schema)
+    return version
 
 
 def append_delta(spark: SparkSession, source: DataFrame, *, path: str,
@@ -2429,15 +2218,14 @@ def _read_merged_through(snap: Snapshot, key: str,
                          predicate: Column | None = None,
                          single_partition: bool = False) -> DataFrame:
     """The merged view of `snap` over an EXPLICIT delta set — None
-    means the snapshot's committed pending deltas (`read_merged`); the
-    fold paths pass the contiguous complete run when later deltas
-    exist beyond an in-flight slot. The base is the snapshot's (none
-    for a deltas-only table); `base_df` overrides the base read
-    entirely (the pruned-lookup path passes the zone-map-selected file
-    subset); `predicate` is a key-only filter applied to EVERY part —
-    sound because the merge and tombstone cut both partition by the
-    key, so restricting to a key subset keeps each surviving key's
-    full version history.
+    means the snapshot's pending deltas (`read_merged`); the lookups
+    pass the deltas their probe can intersect. The base is the
+    snapshot's (none for a deltas-only table); `base_df` overrides the
+    base read entirely (the pruned-lookup path passes the
+    zone-map-selected file subset); `predicate` is a key-only filter
+    applied to EVERY part — sound because the merge and tombstone cut
+    both partition by the key, so restricting to a key subset keeps
+    each surviving key's full version history.
     `single_partition` plans the version window over one partition
     (no exchange) — for callers that know the input is small."""
     spark, path = snap.spark, snap.path
@@ -2832,12 +2620,7 @@ def compact(spark: SparkSession, path: str, key: str,
     superseded bases (`retain_versions`), they are kept for ONE more
     commit (removed by the NEXT committing operation via
     `_gc_folded_deltas`) so an in-flight reader that resolved the
-    pre-fold manifest can finish scanning them (r9 verdict #3).
-
-    Only the contiguous complete run of pending deltas is folded: a
-    claimed-but-incomplete slot (live appender mid-write) stops the
-    run, and every delta beyond it — complete or not — is left in
-    place above the watermark for the next compaction."""
+    pre-fold manifest can finish scanning them (r9 verdict #3)."""
     version = _compact(snapshot(spark, path), key, n_files, retain_versions,
                        buckets=buckets, range_files=range_files,
                        stats_cols=stats_cols, zorder_col=zorder_col,
@@ -2848,14 +2631,11 @@ def compact(spark: SparkSession, path: str, key: str,
 
 def _compact(snap: Snapshot, key: str, n_files: int | None = None,
              retain_versions: int = 2, **layout_args) -> int:
-    """`compact` of a snapshot; returns the new base version. Compact's
-    policy on a stranded slot is to fold only the run: deltas beyond an
-    in-flight slot are masked, so the new base contains nothing the
-    watermark doesn't cover. A bucketed/range table keeps its layout
-    through compaction; an explicit `buckets`/`range_files`
-    (re-)lays-out the folded base — the natural way to cluster a table
-    built through the LSM path."""
-    fold, _ = _fold_run(snap)
+    """`compact` of a snapshot; returns the new base version. A
+    bucketed/range table keeps its layout through compaction; an
+    explicit `buckets`/`range_files` (re-)lays-out the folded base —
+    the natural way to cluster a table built through the LSM path."""
+    fold = list(snap.deltas)
     merged = _read_merged_through(snap, key, fold)
     layout = _resolve_layout(snap, key, fold, **layout_args)
     if n_files and not layout.buckets and not layout.range_files:
@@ -2998,7 +2778,7 @@ def compact_pruned(spark: SparkSession, path: str, key: str,
             "pruned": False,
             "reason": "no range layout / zone map on this key — full fold",
             "new_version": new_version}
-    fold, _ = _fold_run(snap)
+    fold = list(snap.deltas)
     fmap = snap.base.file_map
     all_files = sorted(fmap)
     if not fold:
@@ -3032,18 +2812,13 @@ def compact_pruned(spark: SparkSession, path: str, key: str,
     rewritten = (rewritten.repartitionByRange(n_out, F.col(key))
                  .sortWithinPartitions(key))
     new_version = _next_base_version(spark, path, version)
-    dst = _claim_base_slot(spark, path, new_version)
     carried_names = set(untouched)
     bl_cols = [c for c in snap.meta.get("bloom_cols", "").split(",") if c]
     new_files: list[str] = []
 
     def _write_slot(staging: str) -> None:
-        # the rewritten files and every sidecar land in a writer-PRIVATE
-        # staging dir and the slot is taken by ONE exclusive rename
-        # (_staged_claimed_write): two pruned folds that both pass the
-        # claim fence cannot land in one directory (the pre-r13
-        # base-write hole, closed the same way)
-        rewritten.write.mode("errorifexists").parquet(staging)
+        # the rewritten files and every sidecar land in staging
+        rewritten.write.parquet(staging)
         if materialize:
             hfs.copy_many(spark, [fmap[f] for f in untouched], staging)
         else:
@@ -3099,7 +2874,7 @@ def compact_pruned(spark: SparkSession, path: str, key: str,
                 merged_idx = merged_idx.unionByName(p)
             bloom.write_bloom_index(spark, staging, merged_idx)
 
-    _staged_claimed_write(spark, dst, _write_slot)
+    _staged_claimed_write(spark, _base_dir(path, new_version), _write_slot)
     _publish(snap, new_version, _next_meta(snap, key, fold),
              retain_versions)
     new_base = _Base(spark, path, new_version)
@@ -3149,8 +2924,7 @@ def delete_from_keyed_table(spark: SparkSession, keys: DataFrame, *,
     Returns the post-delete table, or ``(df, n_deleted)`` with
     ``return_counts``."""
     snap = snapshot(spark, path)
-    fold, stranded = _fold_run(snap)
-    _refuse_stranded_deltas(snap, fold, stranded, "delete")
+    fold = list(snap.deltas)
     target = _rewrite_target(snap, key, fold)
     if target is None:
         raise FileNotFoundError(f"no keyed table at {path}")
@@ -3187,11 +2961,7 @@ def restore_table(spark: SparkSession, path: str, key: str,
     the newer value — only a base flip expresses full overwrite.
 
     Pending deltas above the folded-through watermark are superseded
-    (they describe arrivals the restore erases): the contiguous
-    complete run is marked folded; an IN-FLIGHT incomplete slot
-    refuses the restore loudly (committing around it would let the
-    straggler's rows re-apply ON TOP of the snapshot when it
-    completes — silent corruption of the restored state). The
+    (they describe arrivals the restore erases) and marked folded. The
     snapshot's zone map and bloom index ride verbatim (the files are
     the same files); bucket-layout metadata is DROPPED — the
     bucketed read path resolves a per-version catalog ident the
@@ -3207,29 +2977,17 @@ def restore_table(spark: SparkSession, path: str, key: str,
     snap = snapshot(spark, path)
     restored = _retained_base(spark, path, version)
     snapdir = restored.dir
-    fold, stranded = _fold_run(snap)
-    if stranded:
-        raise ConcurrentWriteError(
-            f"delta slot(s) {stranded} of {path} are claimed by a "
-            f"live appender — a restore committed now would let those "
-            f"rows re-apply on top of the snapshot; retry once they "
-            f"commit (or their claims go stale)")
+    fold = list(snap.deltas)
     # flatten: the file map resolves the snapshot's own carried refs
     # to their ORIGINAL owner dirs, so the restore's refs stay one hop
     fmap = restored.file_map
     root = path.rstrip("/")
     refs = sorted(p[len(root) + 1:] for p in fmap.values())
     new_version = _next_base_version(spark, path, snap.version)
-    dst = _claim_base_slot(spark, path, new_version)
     zmap = zm.read_zone_map(spark, snapdir)
     idx = bloom.read_bloom_index(spark, snapdir)
 
     def _write_slot(staging: str) -> None:
-        # sidecars land in a writer-PRIVATE staging dir and the slot
-        # is taken by ONE exclusive rename (_staged_claimed_write) —
-        # overwriting write_text calls straight into the slot would
-        # let two racing restores interleave their sidecars in one
-        # directory (the pre-r13 base-write hole, closed the same way)
         hfs.write_text(spark, hfs.join(staging, _CARRIED),
                        json.dumps({"version": 1, "refs": refs},
                                   separators=(",", ":")))
@@ -3239,7 +2997,7 @@ def restore_table(spark: SparkSession, path: str, key: str,
             bloom.write_bloom_index(spark, staging, idx)
         hfs.write_text(spark, hfs.join(staging, "_SUCCESS"), "")
 
-    _staged_claimed_write(spark, dst, _write_slot)
+    _staged_claimed_write(spark, _base_dir(path, new_version), _write_slot)
     meta = _next_meta(snap, key, fold)
     meta.pop("bucket_key", None)
     meta.pop("buckets", None)

@@ -59,8 +59,7 @@ from pyspark.sql import functions as F
 from .changes import (OP_COL, PRE_COL, ChangeHistoryUnavailable,
                       _feed_window, _table_changes)
 from .keyed_table import (Snapshot, _commit_base, _deltas_key_range,
-                          _fold_run, _next_meta, _read_merged_through,
-                          _refuse_stranded_deltas, _resolve_layout,
+                          _next_meta, _read_merged_through, _resolve_layout,
                           _rewrite_target, _upsert, _vanished_snapshot_guard,
                           read_merged, snapshot)
 
@@ -334,8 +333,7 @@ def _apply_differential(src: Snapshot, key: str, view: Snapshot,
                              with_preimage=True, key=key)
     # the view is written by its rounds only, so it normally has no
     # pending delta; one left by hand is folded, as an upsert would
-    fold, stranded = _fold_run(view)
-    _refuse_stranded_deltas(view, fold, stranded, "view round")
+    fold = list(view.deltas)
     cur = _rewrite_target(view, group_col, fold)
     # each change row emits its +post and -pre contribution rows in ONE
     # projection (the feed executes once, inside the write job). The

@@ -184,10 +184,10 @@ def stream_dedup_parquet(spark: SparkSession, source_dir: str, *,
             release_writer_lease(spark, store, lease_owner)
         raise
     # single-writer restart recovery: the stream OWNS its stores (now
-    # lease-proven), so a previous kill's incomplete claim dirs are
-    # this writer's own debris — clear them now instead of dying on
-    # the claim fence for the whole staleness grace window
-    # (keyed_table.recover_dead_claims)
+    # lease-proven), so a previous kill's staging dirs and unpublished
+    # bases are this writer's own debris — clear them now instead of
+    # dying on the taken base slot for the whole staleness grace
+    # window (keyed_table.recover_dead_claims)
     for store in stores:
         if hfs.exists(spark, store):
             recover_dead_claims(spark, store, lease_owner=lease_owner)

@@ -207,3 +207,19 @@ def test_recover_dead_claims_clears_complete_unpublished_base(spark,
     upsert_into_keyed_table(
         spark, spark.createDataFrame([(3, 33)], "k long, v long"),
         path=path, key="k", updated_at_col=None)
+
+
+def test_recover_dead_claims_keeps_retained_history(spark, tmp_path):
+    """A retained base version lost its manifest pointer at the next
+    commit, but it was published: the sweep keeps it, so time travel
+    to it still works."""
+    from howto_mongo_bulk_update_from_parquet_spark.sinks.keyed_table import (
+        recover_dead_claims)
+
+    path = str(tmp_path / "rdc3")
+    for i in range(2):
+        upsert_into_keyed_table(
+            spark, spark.createDataFrame([(i, i)], "k long, v long"),
+            path=path, key="k", updated_at_col=None)
+    assert recover_dead_claims(spark, path) == []
+    assert read_keyed_table(spark, path, version=1).count() == 1

@@ -106,3 +106,42 @@ def test_append_races_compact(spark, tmp_path):
     for i in range(6):
         assert got[1000 + i] == i        # no appended round was lost
     assert len(got) == 56
+
+
+def test_racing_appenders_take_distinct_numbers(spark, tmp_path):
+    """More appenders than cores, each picking its delta number from a
+    listing right before its rename: every append lands under its own
+    number (a lost rename re-lists) and no appended row is lost."""
+    import sys
+
+    path = str(tmp_path / "race_aa")
+    upsert_into_keyed_table(
+        spark, spark.createDataFrame([(0, 0)], "k long, v long"),
+        path=path, key="k", updated_at_col=None)
+    versions, errors = [], []
+
+    def appender(tid):
+        try:
+            for i in range(2):
+                k = 100 + 10 * tid + i
+                versions.append(append_delta(spark, spark.createDataFrame(
+                    [(k, k)], "k long, v long"), path=path, key="k"))
+        except Exception as exc:         # noqa: BLE001
+            errors.append((tid, exc))
+
+    old = sys.getswitchinterval()
+    sys.setswitchinterval(1e-5)
+    try:
+        ts = [threading.Thread(target=appender, args=(t,))
+              for t in range(6)]
+        for t in ts:
+            t.start()
+        for t in ts:
+            t.join(timeout=300)
+    finally:
+        sys.setswitchinterval(old)
+    assert not any(t.is_alive() for t in ts)
+    assert not errors, errors
+    assert sorted(versions) == list(range(1, 13))
+    got = {r["k"] for r in read_merged(spark, path, "k").collect()}
+    assert got == {0} | {100 + 10 * t + i for t in range(6) for i in (0, 1)}

@@ -4,8 +4,8 @@ reference (`_CARRIED.json`) and flips the manifest. The tests pin
 the three claims that matter: FULL-overwrite semantics (a column
 NULL at the snapshot comes back NULL — inexpressible as a null-skip
 delta), zero data files written (metadata-only), and the commit
-protocol (pending deltas superseded, in-flight slots refuse, the
-restore is itself a version another restore can undo)."""
+protocol (pending deltas superseded, the restore is itself a version
+another restore can undo)."""
 
 import os
 
@@ -88,13 +88,6 @@ def test_restore_refuses_inflight_delta_and_missing_version(
     path = _seed(spark, tmp_path)
     with pytest.raises(FileNotFoundError, match="retired"):
         restore_table(spark, path, "k", version=77)
-    # claim a delta slot without completing it: a live appender
-    os.makedirs(os.path.join(path, "delta_00003"))
-    with open(os.path.join(path, "delta_00003", "part-0.parquet"),
-              "wb") as fh:
-        fh.write(b"x")                     # fresh mtime = live claim
-    with pytest.raises(ConcurrentWriteError, match="live appender"):
-        restore_table(spark, path, "k", version=1)
 
 
 def test_sql_restore_statement(spark, tmp_path):

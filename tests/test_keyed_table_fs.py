@@ -234,6 +234,41 @@ def test_compact_single_write_versioned_base(spark, tmp_path):
         {"a", "b", "c"}
 
 
+def test_rename_no_clobber_loses_to_a_directory_landing_in_the_gap(
+        spark, tmp_path, monkeypatch):
+    """A racer's slot directory that lands between the existence check
+    and the rename: the rename loses (False) and leaves both directories
+    as they were. Hadoop's local rename would move the loser INSIDE the
+    winner's slot and report success, so two writers would both believe
+    they took the one slot."""
+    src, dst = tmp_path / ".stage-x", tmp_path / "slot"
+    for d in (src, dst):
+        d.mkdir()
+        (d / "part-0").write_text(d.name)
+    real_fs_path = hfs._fs_path
+
+    def fs_path_in_the_gap(s, p):
+        fs, jp = real_fs_path(s, p)
+
+        class InTheGap:
+            def exists(self, q):
+                return False
+
+            def __getattr__(self, name):
+                return getattr(fs, name)
+
+        return InTheGap(), jp
+
+    # both existence checks run before the racer's directory landed
+    monkeypatch.setattr(hfs, "_fs_path", fs_path_in_the_gap)
+    monkeypatch.setattr(os.path, "lexists", lambda p: False)
+    lost = not hfs.rename_no_clobber(spark, str(src), str(dst))
+    monkeypatch.undo()
+    assert lost
+    assert os.listdir(dst) == ["part-0"]
+    assert (src / "part-0").read_text() == ".stage-x"
+
+
 def test_local_path_resolution(spark, tmp_path):
     """The metadata-read fast path must engage ONLY for provably-local
     paths: bare paths under a file: default FS, file:///-style URIs

@@ -1,7 +1,7 @@
-"""Round-10 keyed-table hardening: the folded-through watermark (a
-reader racing a fold never sees folded deltas re-applied), live-claim
-protection (an incomplete-but-fresh directory is occupied, not debris),
-and Java-side exists-error mapping."""
+"""Keyed-table hardening: the folded-through watermark (a reader racing
+a fold never sees folded deltas re-applied, and an append racing folds
+still lands above it), and base-slot protection (a fresh directory in
+the next base slot is taken, a stale one is dead-writer debris)."""
 
 import os
 import shutil
@@ -79,35 +79,6 @@ def test_tombstone_watermark_survives_upsert_commit(spark, tmp_path):
     assert folded_through(spark, p) == 1
 
 
-def test_fresh_incomplete_delta_dir_is_occupied_not_clobbered(spark, tmp_path):
-    """ADVICE r9: a delta dir without _SUCCESS may belong to a LIVE
-    appender mid-write — the claimer must bump to the next number, not
-    delete it. Once it is stale (untouched past the grace window) it
-    is dead-writer debris and the slot is re-claimed."""
-    p = str(tmp_path / "live")
-    upsert_into_keyed_table(spark, _df(spark, [(1, "a")]),
-                            path=p, key="k", updated_at_col=None)
-    inflight = os.path.join(p, "delta_00001")
-    os.makedirs(inflight)
-    with open(os.path.join(inflight, "part-live.parquet"), "wb") as fh:
-        fh.write(b"mid-write task file")
-    v = append_delta(spark, _df(spark, [(2, "b")]), path=p, key="k")
-    assert v == 2                                    # bumped past the slot
-    assert os.path.exists(os.path.join(inflight, "part-live.parquet"))
-    # while fresh, the debris also blocks compaction's fold run (the
-    # appender may still complete slot 1)
-    compact(spark, p, "k")
-    assert folded_through(spark, p) == 0
-    assert os.path.exists(inflight)
-    # aged past the grace window → dead-writer debris: the next fold
-    # GCs it and the run continues through the committed delta
-    _age(inflight)
-    compact(spark, p, "k")
-    assert not os.path.exists(inflight)
-    assert folded_through(spark, p) == 2
-    assert {r.k for r in read_merged(spark, p, "k").collect()} == {1, 2}
-
-
 def test_fresh_incomplete_base_dir_raises_clean_conflict(spark, tmp_path):
     """Same rule on the versioned-base path: a fresh incomplete
     base_v{N+1} is a concurrent writer → ConcurrentWriteError (no
@@ -119,102 +90,13 @@ def test_fresh_incomplete_base_dir_raises_clean_conflict(spark, tmp_path):
     os.makedirs(inflight)
     with open(os.path.join(inflight, "part-live.parquet"), "wb") as fh:
         fh.write(b"mid-write task file")
-    with pytest.raises(ConcurrentWriteError, match="recently touched"):
+    with pytest.raises(ConcurrentWriteError, match="taken by a concurrent"):
         upsert_into_keyed_table(spark, _df(spark, [(2, "b")]),
                                 path=p, key="k", updated_at_col=None)
     _age(inflight)
     out = upsert_into_keyed_table(spark, _df(spark, [(2, "b")]),
                                   path=p, key="k", updated_at_col=None)
     assert {r.k for r in out.collect()} == {1, 2}
-
-
-def test_fold_stops_at_inflight_gap(spark, tmp_path):
-    """A claimed-but-incomplete slot between committed deltas: compact
-    folds only the contiguous complete run (a watermark past the gap
-    would hide the in-flight delta forever); delete refuses cleanly
-    (folding only the run would let the later delta re-apply over the
-    anti-join — the resurrect bug again)."""
-    p = str(tmp_path / "gap")
-    upsert_into_keyed_table(spark, _df(spark, [(1, "a")]),
-                            path=p, key="k", updated_at_col=None)
-    append_delta(spark, _df(spark, [(2, "b")]), path=p, key="k")   # v1
-    os.makedirs(os.path.join(p, "delta_00002"))                    # in-flight
-    with open(os.path.join(p, "delta_00002", "part-live.parquet"), "wb") as fh:
-        fh.write(b"mid-write")
-    v3 = append_delta(spark, _df(spark, [(3, "c")]), path=p, key="k")
-    assert v3 == 3
-    # reader applies every COMMITTED delta (1 and 3), skips in-flight 2
-    assert {r.k for r in read_merged(spark, p, "k").collect()} == {1, 2, 3}
-    with pytest.raises(ConcurrentWriteError, match="in-flight append"):
-        delete_from_keyed_table(
-            spark, spark.createDataFrame([(1,)], "k long"), path=p, key="k")
-    compact(spark, p, "k")
-    assert folded_through(spark, p) == 1             # run stopped at the gap
-    # in-flight slot 2 and committed delta 3 left in place above the
-    # watermark; the freshly-folded delta 1 is retained one commit
-    assert sorted(d for d in os.listdir(p) if d.startswith("delta_")) == \
-        ["delta_00001", "delta_00002", "delta_00003"]
-    assert kt.snapshot(spark, p).deltas == (3,)
-    assert {r.k for r in read_merged(spark, p, "k").collect()} == {1, 2, 3}
-
-
-class _FakeJavaThrowable:
-    """Py4J-side JVM throwable stand-in: getClass().getName() +
-    getCause() are the only methods the matcher may rely on."""
-
-    def __init__(self, class_name, cause=None):
-        self._name, self._cause = class_name, cause
-
-    def getClass(self):
-        outer = self
-
-        class _Cls:
-            def getName(self):
-                return outer._name
-        return _Cls()
-
-    def getCause(self):
-        return self._cause
-
-
-def test_is_path_exists_error_detection():
-    """ADVICE r9 + r10: the Java-side job-commit failure (two writers
-    passed the pre-check) must be recognized through the Py4J wrapper
-    by its ACTUAL exception class — never by substring-matching the
-    full stringified trace, where an unrelated error that merely
-    MENTIONS the class would misread as a clean conflict."""
-    # raw Py4JJavaError shape: java_exception carries the throwable
-    py4j_style = RuntimeError("An error occurred while calling o123.parquet.")
-    py4j_style.java_exception = _FakeJavaThrowable(
-        "org.apache.hadoop.fs.FileAlreadyExistsException")
-    assert kt._is_path_exists_error(py4j_style)
-    # ... including when it is a nested getCause(), not the top frame
-    nested = RuntimeError("An error occurred while calling o9.save.")
-    nested.java_exception = _FakeJavaThrowable(
-        "org.apache.spark.SparkException",
-        cause=_FakeJavaThrowable(
-            "org.apache.hadoop.fs.FileAlreadyExistsException"))
-    assert kt._is_path_exists_error(nested)
-    # a java-backed error whose PYTHON str() mentions the class in the
-    # embedded trace but whose real class chain does not → NOT a
-    # conflict (the r10 false-positive: 64 futile re-write attempts)
-    trap = RuntimeError(
-        "executor OOM\n  Suppressed: "
-        "org.apache.hadoop.fs.FileAlreadyExistsException: /x")
-    trap.java_exception = _FakeJavaThrowable(
-        "java.lang.OutOfMemoryError")
-    assert not kt._is_path_exists_error(trap)
-    # plain Python wrapper: only the FIRST LINE of the message counts
-    first_line = RuntimeError(
-        "org.apache.hadoop.fs.FileAlreadyExistsException: /t/delta_00004")
-    assert kt._is_path_exists_error(first_line)
-    wrapped = RuntimeError("job aborted")
-    wrapped.__cause__ = first_line
-    assert kt._is_path_exists_error(wrapped)
-    deep_trace_only = RuntimeError(
-        "job aborted\n: org.apache.hadoop.fs.FileAlreadyExistsException: /x")
-    assert not kt._is_path_exists_error(deep_trace_only)
-    assert not kt._is_path_exists_error(RuntimeError("executor lost"))
 
 
 def test_upsert_folds_pending_deltas(spark, tmp_path):
@@ -237,17 +119,40 @@ def test_upsert_folds_pending_deltas(spark, tmp_path):
     assert folded_through(spark, p) == 1
     # folded: invisible to readers, files retained one commit
     assert kt.snapshot(spark, p).deltas == ()
-    # an in-flight gap refuses cleanly, same as delete
-    append_delta(spark, _df(spark, [(5, "e")]), path=p, key="k")   # v2
-    os.makedirs(os.path.join(p, "delta_00002"), exist_ok=True)
-    # v2 exists committed; claim 3 as in-flight debris then commit 4
-    os.makedirs(os.path.join(p, "delta_00003"))
-    with open(os.path.join(p, "delta_00003", "part-live.parquet"), "wb") as fh:
-        fh.write(b"mid-write")
-    append_delta(spark, _df(spark, [(6, "f")]), path=p, key="k")   # v4
-    with pytest.raises(ConcurrentWriteError, match="in-flight append"):
-        upsert_into_keyed_table(spark, _df(spark, [(7, "g")]),
-                                path=p, key="k", updated_at_col=None)
+
+
+def test_append_takes_its_number_above_folds_during_its_write(
+        spark, tmp_path, monkeypatch):
+    """An append numbers its delta when its staged rename lands, not
+    before its write job: an append, a compact, an append and a compact
+    that all commit while the job runs (the second compact's GC deletes
+    the first folded delta, freeing its number) cannot leave it at or
+    below the folded_through floor, where no reader would look."""
+    from pyspark.sql.readwriter import DataFrameWriter
+
+    p = str(tmp_path / "race_fold")
+    upsert_into_keyed_table(spark, _df(spark, [(1, "a")]),
+                            path=p, key="k", updated_at_col=None)
+    real = DataFrameWriter.parquet
+    raced = []
+
+    def parquet_then_race(self, path, *args, **kwargs):
+        real(self, path, *args, **kwargs)
+        if ".stage-delta_" in path and not raced:
+            raced.append(path)
+            append_delta(spark, _df(spark, [(2, "b")]), path=p, key="k")
+            compact(spark, p, "k")
+            append_delta(spark, _df(spark, [(3, "c")]), path=p, key="k")
+            compact(spark, p, "k")
+
+    monkeypatch.setattr(DataFrameWriter, "parquet", parquet_then_race)
+    v = append_delta(spark, _df(spark, [(4, "d")]), path=p, key="k")
+    monkeypatch.undo()
+    assert raced
+    assert v > folded_through(spark, p) == 2
+    compact(spark, p, "k")
+    assert {r.k for r in read_merged(spark, p, "k").collect()} == \
+        {1, 2, 3, 4}
 
 
 def test_mixed_path_random_op_sequences_match_model(spark, tmp_path):
@@ -370,36 +275,6 @@ def test_truncated_metadata_scan_reads_as_occupied(spark, tmp_path):
     import unittest.mock as mock
     with mock.patch.object(hfs, "newest_mtime", return_value=(mt, True)):
         assert not kt._claim_is_stale(spark, d)
-
-
-def test_claimed_write_reraises_permanent_analysis_errors(spark, tmp_path):
-    """ADVICE r10: only already-exists AnalysisExceptions map to the
-    retryable ConcurrentWriteError; the bucketed CTAS's broader
-    analysis surface (bad CLUSTERED BY column, catalog errors) is a
-    permanent failure and must surface as itself."""
-    from pyspark.errors import AnalysisException
-    df = _df(spark, [(1, "a")])
-    dst = str(tmp_path / "ctas_bad")
-    # permanent: bucket column that does not exist → re-raised
-    with pytest.raises(AnalysisException):
-        kt._run_claimed_write(
-            dst, lambda: df.write.format("parquet")
-            .bucketBy(4, "no_such_col").sortBy("no_such_col")
-            .option("path", dst).saveAsTable("tmp_adv_r10_badcol"))
-    # conflict: plain errorifexists onto an existing path → mapped
-    taken = str(tmp_path / "taken")
-    df.write.parquet(taken)
-    with pytest.raises(ConcurrentWriteError, match="re-read and retry"):
-        kt._run_claimed_write(
-            taken, lambda: df.write.mode("errorifexists").parquet(taken))
-    # conflict: bucketed CTAS onto a non-empty location → mapped
-    spark.sql("DROP TABLE IF EXISTS tmp_adv_r10_loc")
-    with pytest.raises(ConcurrentWriteError, match="re-read and retry"):
-        kt._run_claimed_write(
-            taken, lambda: df.write.format("parquet")
-            .bucketBy(4, "k").sortBy("k")
-            .option("path", taken).saveAsTable("tmp_adv_r10_loc"))
-    spark.sql("DROP TABLE IF EXISTS tmp_adv_r10_loc")
 
 
 def test_manifest_retry_exhaustion_raises_not_empty_meta(spark, tmp_path,

@@ -1,6 +1,6 @@
 """Change-data-feed over the keyed table's LSM deltas
-(`sinks/changes.py`): batch windows, op typing, contiguity at a live
-claim, reclamation errors, schema evolution, and the streaming form
+(`sinks/changes.py`): batch windows, op typing, reclamation errors,
+schema evolution, and the streaming form
 (drain, incremental pickup across restarts, fold-behind-the-stream
 safety).
 """
@@ -11,7 +11,6 @@ import pytest
 from pyspark.sql import Row
 from pyspark.sql import functions as F
 
-from howto_mongo_bulk_update_from_parquet_spark.sinks import fs as hfs
 from howto_mongo_bulk_update_from_parquet_spark.sinks.changes import (
     OP_COL, VERSION_COL, ChangeHistoryUnavailable, changes_schema,
     read_table_changes, stream_table_changes)
@@ -67,20 +66,6 @@ def test_changes_survive_fold_one_commit_then_raise(spark, tmp_path):
     # ...but a feed resuming above the reclaimed window still works
     out = read_table_changes(spark, path, after=1).collect()
     assert [(r["k"], r[VERSION_COL]) for r in out] == [(2, 2)]
-
-
-def test_truncates_at_incomplete_claim(spark, tmp_path):
-    path = _mk_table(spark, tmp_path)
-    append_delta(spark, spark.createDataFrame([Row(k=1, v=1.0, tag="a")]),
-                 path=path, key="k")
-    # fake a live appender mid-write on slot 2 (claimed, no _SUCCESS)
-    d2 = hfs.join(path, "delta_00002")
-    hfs.write_text(spark, hfs.join(d2, "part-0.parquet.tmp"), "x")
-    spark.createDataFrame([Row(k=9, v=9.0, tag="z")]) \
-        .write.parquet(hfs.join(path, "delta_00003"))
-    out = read_table_changes(spark, path).collect()
-    # emission stops BEFORE the gap: v3 must not surface ahead of v2
-    assert [(r["k"], r[VERSION_COL]) for r in out] == [(1, 1)]
 
 
 def test_schema_evolution_nulls_old_rows(spark, tmp_path):
