@@ -307,7 +307,7 @@ WHERE CAST(o_totalprice AS DOUBLE) BETWEEN 1000 AND 20000
           "prune beats the key-sorted layout's (r13)")
 def q_keyed_zorder_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Attestation of the `zorder_col` layout (r12 verdict stretch,
-    `sinks/keyed_table._write_base_and_meta`): `o_totalprice` is
+    `sinks/keyed_table._write_frame`): `o_totalprice` is
     decorrelated from the order key, so on a KEY-sorted range base a
     price-only scan reads ~every file; on the z-ordered base each
     file covers a bounded (key, price) rectangle and the same scan

@@ -267,8 +267,12 @@ def rename_no_clobber(spark: SparkSession, src: str, dst: str) -> bool:
     a copy that moves `src` INSIDE the existing `dst` and report
     success — two writers would both believe they took one slot. (A
     slot directory is never empty: every writer stages at least one
-    file.) A file keeps the Hadoop rename, whose rename(2) replaces an
-    existing target, so for files only the check guards the gap."""
+    file.) Everything else renames through `FileContext.rename` with
+    `Options.Rename.NONE`, which refuses an existing target of either
+    kind (FileAlreadyExistsException, a lost race): on HDFS that check
+    is part of the NameNode's atomic rename, where
+    `FileSystem.rename` would move a directory INSIDE an existing one
+    and report success."""
     lsrc, ldst = _local_path(spark, src), _local_path(spark, dst)
     if lsrc is not None and ldst is not None and os.path.isdir(lsrc):
         if os.path.lexists(ldst):
@@ -286,8 +290,15 @@ def rename_no_clobber(spark: SparkSession, src: str, dst: str) -> bool:
     if fs.exists(p_dst):
         return False
     _, p_src = _fs_path(spark, src)
+    jvm = spark._jvm
+    no_clobber = spark._sc._gateway.new_array(jvm.org.apache.hadoop.fs
+                                              .Options.Rename, 1)
+    no_clobber[0] = jvm.org.apache.hadoop.fs.Options.Rename.NONE
     try:
-        return bool(fs.rename(p_src, p_dst))
+        jvm.org.apache.hadoop.fs.FileContext.getFileContext(
+            fs.getUri(), spark._jsc.hadoopConfiguration()
+        ).rename(p_src, p_dst, no_clobber)
+        return True
     except Exception as e:
         # a SOURCE that vanished mid-call (a concurrent racer renamed
         # it first) or a DESTINATION that appeared mid-call (a racer

@@ -51,9 +51,10 @@ into place only if the target is absent. Because a commit creates a
 NEW name and retires older pointers only after the new one is
 visible, there is never a missing-pointer window; a table whose
 pointers were all removed by hand recovers from its complete base
-directories (see `snapshot`). The rewriting writers (upsert, compact,
-delete) share one commit tail (`_commit_base`); the pruned fold and
-restore share its publish + GC step (`_publish`).
+directories (see `snapshot`). All six base rewriters (upsert, delete,
+`compact`, `compact_pruned`, `restore_table` and the view round) commit
+through one tail (`_commit_base`), which builds every file of the new
+base, sidecars included, in staging before the slot rename.
 
 Concurrent writers: two upsert rounds that both read base version N
 both try to produce N+1. The loser is caught at TWO fences and gets a
@@ -439,9 +440,12 @@ class _Base:
     every reader needs derive from that one listing, each built at
     most once."""
 
-    def __init__(self, spark: SparkSession, path: str, version: int):
+    def __init__(self, spark: SparkSession, path: str, version: int,
+                 refs: list[str] | None = None):
         self.spark, self.path, self.version = spark, path, version
         self.dir = _base_dir(path, version)
+        if refs is not None:             # the writer's own: no sidecar read
+            self.__dict__["refs"] = refs
 
     @cached_property
     def names(self) -> list[str]:
@@ -805,17 +809,6 @@ def _commit_version(spark: SparkSession, path: str, version: int,
             spark.sql("DROP TABLE IF EXISTS " + _bucket_table_ident(path, v))
 
 
-def _write_claiming_base(spark: SparkSession, df: DataFrame, path: str,
-                         version: int) -> None:
-    """Write `df` as `base_v{version}` through a private staging dir
-    and one exclusive rename (`_staged_claimed_write`): the slot either
-    does not exist or holds exactly one writer's complete output, so
-    two racing writers can never land in one directory."""
-    _staged_claimed_write(
-        spark, _base_dir(path, version),
-        lambda staging: df.write.parquet(staging))
-
-
 def _staged(spark: SparkSession, parent: str, label: str, write_to,
             publish):
     """Run `write_to(staging)` against a fresh writer-private staging
@@ -965,35 +958,6 @@ def _read_base_bucketed(spark: SparkSession, path: str, version: int,
     return spark.table(name)
 
 
-def _write_claiming_base_bucketed(spark: SparkSession, df: DataFrame,
-                                  path: str, version: int,
-                                  key: str, buckets: int) -> None:
-    """`_write_claiming_base`, bucketed: same staged slot, but the
-    data lands via the bucketed writer (external table + explicit
-    path) so each file carries its bucket id. No extra shuffle: the
-    merge join's output is already hash-partitioned on the key with
-    the same Murmur3 function the bucketed writer uses, so each task
-    emits (almost always) exactly one bucket's file."""
-    def _ctas_into(staging: str) -> None:
-        # the CTAS lands at the PRIVATE staging location under a
-        # staging-derived ident; the transient catalog entry is
-        # dropped before the rename (external — data untouched), and
-        # readers re-register the bucket spec over the committed dir
-        # lazily (_read_base_bucketed; bucket ids live in the FILE
-        # NAMES, which the rename preserves)
-        sname = _bucket_table_ident(staging, version)
-        try:
-            (df.write.format("parquet").bucketBy(buckets, key).sortBy(key)
-             .option("path", staging).saveAsTable(sname))
-        finally:
-            spark.sql(f"DROP TABLE IF EXISTS {sname}")
-
-    _staged_claimed_write(spark, _base_dir(path, version), _ctas_into)
-    # the slot ident may still be registered, with its old schema, by
-    # an earlier table at this path that was dropped and re-created
-    spark.sql(f"DROP TABLE IF EXISTS {_bucket_table_ident(path, version)}")
-
-
 @dataclass(frozen=True)
 class _Layout:
     """The next base's layout, resolved once per write (`_resolve_layout`)."""
@@ -1065,8 +1029,9 @@ def _resolve_layout(snap: Snapshot, key: str, fold: list[int], *,
         target = _meta_int(meta, "target_file_bytes") if ranged else 0
     if target:
         n_buckets = 0
-        n_range = _autosize_range(snap, fold, target,
-                                  seed=n_range or _AUTOSIZE_SEED)
+        n_range = _autosize_range(
+            snap, list(snap.base.file_map.values()) if snap.version else [],
+            fold, target, seed=n_range or _AUTOSIZE_SEED)
     if zorder_col is not None:
         zorder = zorder_col or None
     else:
@@ -1078,13 +1043,15 @@ def _resolve_layout(snap: Snapshot, key: str, fold: list[int], *,
                    tuple(bloom_cols))
 
 
-def _autosize_range(snap: Snapshot, fold: list[int], target: int,
-                    seed: int) -> int:
+def _autosize_range(snap: Snapshot, files: list[str], fold: list[int],
+                    target: int, seed: int) -> int:
     """File count for the next RANGE base under a byte target
     (`target_file_bytes` — the Iceberg/Delta target-file-size posture):
-    observed bytes of the current base (carried refs resolved, sizes
-    from one listing per owner directory, never from reading data)
-    plus the foldable delta dirs, divided by the target. A PINNED
+    observed bytes of the base `files` the write rewrites (full paths,
+    carried refs resolved: the whole base for a full rewrite, the
+    touched files for a pruned fold; sizes from one listing per owner
+    directory, never from reading data) plus the foldable delta dirs,
+    divided by the target. A PINNED
     `range_files` count means a growing table grows its FILES without
     bound — at 100 TB the zone map stops pruning anything because
     every file spans a huge slice; a byte target grows the COUNT
@@ -1094,8 +1061,7 @@ def _autosize_range(snap: Snapshot, fold: list[int], target: int,
     next fold corrects it — the same one-commit self-correction the
     retention protocol uses. A fresh table has nothing observed and
     lands as `seed` files."""
-    est = _files_bytes(snap.spark, list(snap.base.file_map.values())) \
-        if snap.version else 0
+    est = _files_bytes(snap.spark, files)
     est += sum(hfs.dir_size(snap.spark, _delta_dir(snap.path, v))
                for v in fold)
     if est <= 0:
@@ -1190,9 +1156,10 @@ def _observed_checks(df: DataFrame, checks: dict[str, str], what: str,
     row are Observation aggregates computed during the write itself,
     so a checked batch costs ONE pass instead of two (the old
     pre-write probe re-executed the batch's dedup window) and zero
-    extra jobs. A violating batch is still refused with nothing
-    visible: staged dirs are discarded, unpublished bases are orphan
-    debris no reader resolves (and the caller deletes them).
+    extra jobs. A violating batch is refused with nothing visible:
+    every writer validates inside its private staging dir, before the
+    rename that creates its slot, and a refusal discards the staging
+    dir (`_staged`).
 
     Same SQL CHECK semantics as `_enforce_checks` (NULL passes;
     missing columns ride as typed NULLs). `live_if` exempts rows
@@ -1276,110 +1243,79 @@ def _zorder_expr(df: DataFrame, key: str, col: str):
     return zorder2(x, y)
 
 
-def _write_base_and_meta(spark: SparkSession, df: DataFrame, path: str,
-                         version: int, key: str, layout: _Layout,
-                         meta: dict[str, str]) -> dict[str, str]:
-    """Route to the bucketed, range-clustered, or plain claiming
-    writer and keep the manifest's layout spec truthful for the base
-    being written. The RANGE layout clusters the base into
-    `layout.range_files` disjoint key ranges (`repartitionByRange` +
-    `sortWithinPartitions`) and records a per-file min/max zone map
-    (`_zonemap.json` inside the base dir) over the key plus
-    `layout.stats_cols` (inherited from the manifest's `zonemap_cols`
-    when not given), so point/range lookups prune to the files that
-    can hold the key instead of scanning the base. `layout.zorder`
-    names a SECONDARY clustering column (r12 verdict stretch): files
-    then cover bounded (key, col) z-rectangles instead of pure key
-    slices, making `scan_keyed_table` prunes selective on the stats
-    column too — key prunes widen ~√files in exchange, the classic
-    Z-ORDER trade (Delta OPTIMIZE ZORDER BY). Costs one extra pass for
-    the z-bounds, paid against a persisted frame."""
-    meta = dict(meta)
-    n_range, zorder = layout.range_files, layout.zorder
+def _write_frame(spark: SparkSession, df: DataFrame, staging: str,
+                 key: str, layout: _Layout) -> str | None:
+    """Write `df` into `staging` in its layout, returning the z-order
+    column when the z-order path ran. Bucketed: the bucketed writer
+    (external table + explicit path) gives each file its bucket id with
+    no extra shuffle — the merge join's output is already
+    hash-partitioned on the key with the Murmur3 function the bucketed
+    writer uses, so each task emits (almost always) one bucket's file.
+    Range: `layout.range_files` disjoint key ranges
+    (`repartitionByRange` + `sortWithinPartitions`). `layout.zorder`
+    names a SECONDARY clustering column of a range layout (r12 verdict
+    stretch): files then cover bounded (key, col) z-rectangles instead
+    of pure key slices, making `scan_keyed_table` prunes selective on
+    the stats column too — key prunes widen ~√files in exchange, the
+    classic Z-ORDER trade (Delta OPTIMIZE ZORDER BY). It costs one
+    extra pass for the z-bounds, paid against a persisted frame."""
     if layout.buckets:
-        _write_claiming_base_bucketed(spark, df, path, version,
-                                      key, layout.buckets)
-        meta["buckets"] = str(layout.buckets)
-        meta["bucket_key"] = key
-        n_range = 0
-    else:
-        if n_range and zorder and zorder in df.columns:
-            df = df.persist()
-            try:
-                z = _zorder_expr(df, key, zorder)
-                if z is not None:
-                    clustered = (df.withColumn("__z", z)
-                                 .repartitionByRange(n_range, "__z")
-                                 .sortWithinPartitions("__z")
-                                 .drop("__z"))
-                else:                        # empty/all-null dims
-                    clustered = (df.repartitionByRange(n_range,
-                                                       F.col(key))
-                                 .sortWithinPartitions(key))
-                _write_claiming_base(spark, clustered, path, version)
-            finally:
-                df.unpersist()
+        # a transient staging-derived catalog ident, dropped before the
+        # rename (external — data untouched); readers re-register the
+        # bucket spec over the committed dir lazily (_read_base_bucketed;
+        # bucket ids live in the FILE NAMES, which the rename preserves)
+        sname = _bucket_table_ident(staging, 0)
+        try:
+            (df.write.format("parquet").bucketBy(layout.buckets, key)
+             .sortBy(key).option("path", staging).saveAsTable(sname))
+        finally:
+            spark.sql(f"DROP TABLE IF EXISTS {sname}")
+        return None
+    n_range = layout.range_files
+    zorder = layout.zorder if n_range and layout.zorder in df.columns \
+        else None
+    src = df.persist() if zorder else df
+    try:
+        z = _zorder_expr(src, key, zorder) if zorder else None
+        if z is not None:
+            out = (src.withColumn("__z", z).repartitionByRange(n_range, "__z")
+                   .sortWithinPartitions("__z").drop("__z"))
+        elif n_range:                    # also empty/all-null z dims
+            out = (src.repartitionByRange(n_range, F.col(key))
+                   .sortWithinPartitions(key))
         else:
-            if n_range:
-                df = (df.repartitionByRange(n_range, F.col(key))
-                      .sortWithinPartitions(key))
-            _write_claiming_base(spark, df, path, version)
-            zorder = None
-        meta.pop("buckets", None)
-        meta.pop("bucket_key", None)
-    if n_range:
-        cols = layout.stats_cols if layout.stats_cols is not None \
-            else _meta_stats_cols(meta)
-        zm_cols = [key] + [c for c in cols if c != key]
-        if zorder and zorder not in zm_cols:
-            zm_cols.append(zorder)           # the 2nd dim must be mapped
-        zmap = zm.collect_zone_map(spark, _base_dir(path, version), zm_cols,
-                                   schema=df.schema)
-        if zmap:
-            zm.write_zone_map(spark, _base_dir(path, version), zmap)
-            meta["range_files"] = str(n_range)
-            meta["range_key"] = key
-            meta["zonemap_cols"] = ",".join(zmap["cols"])
-            if zorder:
-                meta["zorder_col"] = zorder
-            else:
-                meta.pop("zorder_col", None)
-            if layout.target:
-                meta["target_file_bytes"] = str(layout.target)
-            else:
-                meta.pop("target_file_bytes", None)
-            # bloom index on top of the range layout: equality-probe
-            # file skipping for high-cardinality columns the min/max
-            # map cannot prune (collected like the zone map — one
-            # column-pruned job over the just-written base)
-            bl = [c for c in layout.bloom if c in df.columns]
-            if bl:
-                rows = bloom.collect_bloom_index(
-                    spark, _base_dir(path, version), bl,
-                    n_max=max((e["rows"] for e in zmap["files"]),
-                              default=1), schema=df.schema)
-                if rows is not None:
-                    bloom.write_bloom_index(
-                        spark, _base_dir(path, version), rows)
-                    meta["bloom_cols"] = ",".join(bl)
-                else:
-                    meta.pop("bloom_cols", None)
-            else:
-                meta.pop("bloom_cols", None)
-            # all sidecars are in the dir now — seed the schema memo
-            # so the post-commit result read (and every later reader)
-            # skips footer inference of the base this session just
-            # wrote (r17, guide §1.2)
-            _seed_schema_memo(spark, _base_dir(path, version), df.schema)
-            return meta
-    for k in ("range_files", "range_key", "zonemap_cols", "zorder_col",
-              "target_file_bytes", "bloom_cols"):
-        meta.pop(k, None)
-    if not layout.buckets:
-        # plain (non-bucketed, non-range) base: dir is complete — seed
-        # the memo for the post-commit result read (r17)
-        _seed_schema_memo(spark, _base_dir(path, version), df.schema)
-    return meta
+            out = src
+        out.write.parquet(staging)
+    finally:
+        if zorder:
+            src.unpersist()
+    return zorder
+
+
+_LAYOUT_META = ("buckets", "bucket_key", "range_files", "range_key",
+                "zonemap_cols", "zorder_col", "target_file_bytes",
+                "bloom_cols")
+
+
+def _layout_meta(meta: dict[str, str], key: str, layout: _Layout,
+                 zmap: dict | None, zorder: str | None,
+                 bloom_cols: list[str]) -> None:
+    """Make the manifest's layout spec truthful for a base written in
+    `layout`: a range spec only when a zone map was written (`zmap`),
+    the z-order column only when the z-order path ran, bloom columns
+    only when an index was built; every other layout key is dropped."""
+    spec = {"buckets": str(layout.buckets), "bucket_key": key} \
+        if layout.buckets else {}
+    if zmap:
+        spec.update(range_files=str(layout.range_files), range_key=key,
+                    zonemap_cols=",".join(zmap["cols"]), zorder_col=zorder,
+                    target_file_bytes=layout.target and str(layout.target),
+                    bloom_cols=",".join(bloom_cols))
+    for k in _LAYOUT_META:
+        if spec.get(k):
+            meta[k] = spec[k]
+        else:
+            meta.pop(k, None)
 
 
 def _next_meta(snap: Snapshot, key: str, fold: list[int]) -> dict[str, str]:
@@ -1413,36 +1349,123 @@ def _rewrite_target(snap: Snapshot, key: str,
     return snap.base.read()
 
 
-def _commit_base(snap: Snapshot, df: DataFrame, key: str, layout: _Layout,
-                 meta: dict[str, str], retain_versions: int,
-                 validators=()) -> int:
-    """The commit tail every rewriting writer shares: claim the next
-    base version, write `df` with its layout and sidecars, run the
-    pre-publish `validators` (observations latched by the write — a
-    violation deletes the unpublished base, which no manifest names,
-    so no reader ever resolves it), publish, and GC. Returns the new
-    version."""
+@dataclass(frozen=True)
+class _Carry:
+    """Data files a new base takes over unchanged — {name: full path},
+    owner dirs resolved one hop — with the zone map and bloom index of
+    the base they come from; the entries and rows of these files ride
+    into the new base verbatim."""
+    files: dict[str, str]
+    zmap: dict | None = None
+    bloom: DataFrame | None = None
+
+
+def _commit_base(snap: Snapshot, df: DataFrame | None, key: str,
+                 layout: _Layout, meta: dict[str, str],
+                 retain_versions: int, validators=(),
+                 carry: _Carry | None = None,
+                 materialize: bool = False) -> int:
+    """The commit tail of every base rewriter (upsert, delete,
+    `compact`, `compact_pruned`, `restore_table`, the view round):
+    claim the next base version, build the whole slot in one private
+    staging dir, take the slot with one exclusive rename
+    (`_staged_claimed_write`), publish, GC the folded deltas and seed
+    the new version's schema memo. Returns the new version.
+
+    Staging receives, in order: `df` in `layout` (`_write_frame`), the
+    pre-publish `validators` (observations the write latched), the zone
+    map and bloom index — `carry`'s entries and rows plus a collection
+    over the files just written, which staging holds alone at that
+    point — and the `carry` files: refs in `_CARRIED.json`, or copies
+    under `materialize`. With no frame (`df` None) staging is marked
+    `_SUCCESS`. Any failure discards staging, so a failed writer
+    leaves no slot behind.
+
+    Without `carry` the manifest's layout spec is made truthful for
+    what was written (`_layout_meta`); with it `meta` is published as
+    given — carried files keep the layout they were written under."""
+    import functools
+    import json
     spark, path = snap.spark, snap.path
     version = _next_base_version(spark, path, snap.version)
-    meta = _write_base_and_meta(spark, df, path, version, key, layout, meta)
-    for validate in validators:
-        if validate is not None:
-            try:
-                validate()
-            except ConstraintViolation:
-                hfs.delete(spark, _base_dir(path, version))
-                raise
-    _publish(snap, version, meta, retain_versions)
-    return version
+    meta = dict(meta)
+    refs = None
 
+    def build(staging: str) -> None:
+        nonlocal refs
+        zorder = fresh = None
+        if df is not None:
+            zorder = _write_frame(spark, df, staging, key, layout)
+            for validate in validators:
+                if validate is not None:
+                    validate()
+            if layout.range_files:
+                cols = layout.stats_cols if layout.stats_cols is not None \
+                    else _meta_stats_cols(meta)
+                zm_cols = [key] + [c for c in cols if c != key]
+                if zorder and zorder not in zm_cols:
+                    zm_cols.append(zorder)   # the 2nd dim must be mapped
+                fresh = zm.collect_zone_map(spark, staging, zm_cols,
+                                            schema=df.schema)
+        zmap = fresh
+        if carry is not None and carry.zmap is not None:
+            zmap = {"version": 1, "cols": carry.zmap["cols"],
+                    "files": [e for e in carry.zmap["files"]
+                              if e["file"] in carry.files]
+                    + (fresh["files"] if fresh else [])}
+        if zmap:
+            zm.write_zone_map(spark, staging, zmap)
+        # bloom index on top of the range layout: equality-probe file
+        # skipping for high-cardinality columns the min/max map cannot
+        # prune; the zone map's per-file row counts size its bitsets
+        bl = [c for c in layout.bloom if c in df.columns] if fresh else []
+        rows = [] if carry is None or carry.bloom is None else [
+            carry.bloom.filter(F.col("file").isin(list(carry.files)))]
+        if bl:
+            rows.append(bloom.collect_bloom_index(
+                spark, staging, bl, schema=df.schema,
+                n_max=max((e["rows"] for e in fresh["files"]), default=1)))
+        if rows:
+            bloom.write_bloom_index(
+                spark, staging, functools.reduce(DataFrame.unionByName, rows))
+        if carry is None:
+            _layout_meta(meta, key, layout, zmap, zorder, bl)
+        elif materialize:
+            hfs.copy_many(spark, list(carry.files.values()), staging)
+        else:
+            # table-relative refs: `path` normalized like the file map's
+            # hfs.join-built paths, or every ref loses its first
+            # character and the table is bricked (ADVICE r12)
+            root = path.rstrip("/")
+            refs = sorted(p[len(root) + 1:] for p in carry.files.values())
+            hfs.write_text(spark, hfs.join(staging, _CARRIED),
+                           json.dumps({"version": 1, "refs": refs},
+                                      separators=(",", ":")))
+        if df is None:
+            hfs.write_text(spark, hfs.join(staging, "_SUCCESS"), "")
 
-def _publish(snap: Snapshot, version: int, meta: dict[str, str],
-             retain_versions: int) -> None:
-    """Publish `version` against `snap` (the manifest compare-and-swap),
-    then GC the deltas folded at or before the snapshot's floor."""
-    _commit_version(snap.spark, snap.path, version, retain_versions,
-                    meta=meta)
+    _staged_claimed_write(spark, _base_dir(path, version), build)
+    if layout.buckets:
+        # the slot ident may still be registered, with its old schema, by
+        # an earlier table at this path that was dropped and re-created
+        spark.sql(f"DROP TABLE IF EXISTS {_bucket_table_ident(path, version)}")
+    _commit_version(spark, path, version, retain_versions, meta=meta)
     _gc_folded_deltas(snap)
+    if df is None or layout.buckets:
+        return version
+    # the writer knows the schema it wrote: the result read and every
+    # later reader skip footer inference (r17, guide §1.2)
+    if carry is None:
+        _seed_schema_memo(spark, _base_dir(path, version), df.schema)
+    else:
+        # a frame written beside carried files rewrote the rest of the
+        # snapshot's base; the version reads with the frame's schema
+        # when the carried files' columns lead it (columns only append)
+        old = [(f.name, f.dataType) for f in snap.base.schema.fields]
+        new = [(f.name, f.dataType) for f in df.schema.fields]
+        if not carry.files or new[:len(old)] == old:
+            _Base(spark, path, version, refs).seed_schema(df.schema)
+    return version
 
 
 def _read_new_base(snap: Snapshot, version: int) -> DataFrame:
@@ -1585,7 +1608,7 @@ def _upsert(snap: Snapshot, source: DataFrame, key: str, *,
         # dedup window. `source_prepared` tells the downstream merge
         # not to plan the dedup window a second time (r17, VERDICT
         # r16 item 7).
-        # Validation runs before the manifest publish (_commit_base).
+        # Validation runs before the slot rename (_commit_base).
         source, chk_validate = _observed_checks(
             prepare_source(source, key, dedup_order_by), eff_checks,
             "upsert source", table_fields=snap.schema)
@@ -2747,14 +2770,16 @@ def compact_pruned(spark: SparkSession, path: str, key: str,
     references, so chains of pruned folds share unchanged files until
     a FULL `compact` (or `materialize=True`) re-materializes the table
     self-contained — the escape hatch for plain `spark.read.parquet`
-    consumers, which see only a carried base's own directory. Same
-    commit protocol as `compact` (claimed slot written through a
-    private staging dir and one exclusive rename, atomic manifest
-    flip, `folded_through` watermark, one-commit delta GC); zone-map
-    entries of carried files survive verbatim, rewritten files are
-    re-stats'd with a scan of only themselves, read with the schema
-    they were written with, and that schema seeds the new version's
-    schema memo — the fold re-reads no footer it wrote.
+    consumers, which see only a carried base's own directory. It
+    commits through the same tail as `compact` (`_commit_base`: the
+    slot built in staging, one exclusive rename, atomic manifest flip,
+    `folded_through` watermark, one-commit delta GC), passing the
+    rewritten frame with the untouched files as its carry: zone-map
+    entries and bloom rows of carried files survive verbatim,
+    rewritten files are re-stats'd with a scan of only themselves,
+    read with the schema they were written with, and that schema seeds
+    the new version's schema memo — the fold re-reads no footer it
+    wrote. The manifest keeps the table's layout spec as it was.
 
     Rewritten files are range-clustered among THEMSELVES, so their
     spans can straddle carried files' gaps — pruning correctness
@@ -2792,104 +2817,35 @@ def compact_pruned(spark: SparkSession, path: str, key: str,
     # span
     base_df = snap.base.read_files([fmap[f] for f in sorted(touched)])
     rewritten = _read_merged_through(snap, key, fold, base_df=base_df)
-    # default: the rewritten group keeps its file count. Under a
-    # `target_file_bytes` table (inherited only — layout changes go
-    # through upsert/compact) the group is re-sized by observed bytes
-    # instead, so deltas ballooning a hot file SPLIT it at the fold
-    # that absorbs them rather than growing it without bound.
+    # the rewritten group keeps its file count, unless the table has a
+    # byte target (inherited only — layout changes go through
+    # upsert/compact): then the touched files' and deltas' bytes size
+    # it, so deltas ballooning a hot file SPLIT it at the fold that
+    # absorbs them rather than growing it without bound. Rewritten
+    # files are KEY-sorted even on a z-ordered table: the surgical fold
+    # must not pay the z-bounds pass; their zone-map entries keep every
+    # prune correct (just less val-selective for those files), and the
+    # next FULL compact re-z-orders the whole base.
     n_out = max(1, len(touched))
     target = _meta_int(snap.meta, "target_file_bytes")
     if target:
-        tb = _files_bytes(spark, [fmap[f] for f in touched])
-        tb += sum(hfs.dir_size(spark, _delta_dir(path, v)) for v in fold)
-        if tb > 0:
-            n_out = max(1, math.ceil(tb / target))
-    # rewritten files are KEY-sorted even on a z-ordered table: the
-    # surgical fold rewrites a handful of files and must not pay the
-    # z-bounds pass; their zone-map entries are re-collected so every
-    # prune stays correct (just less val-selective for those files),
-    # and the next FULL compact re-z-orders the whole base
-    rewritten = (rewritten.repartitionByRange(n_out, F.col(key))
-                 .sortWithinPartitions(key))
-    new_version = _next_base_version(spark, path, version)
-    carried_names = set(untouched)
+        n_out = _autosize_range(snap, [fmap[f] for f in touched], fold,
+                                target, seed=n_out)
     bl_cols = [c for c in snap.meta.get("bloom_cols", "").split(",") if c]
-    new_files: list[str] = []
-
-    def _write_slot(staging: str) -> None:
-        # the rewritten files and every sidecar land in staging
-        rewritten.write.parquet(staging)
-        if materialize:
-            hfs.copy_many(spark, [fmap[f] for f in untouched], staging)
-        else:
-            # flatten: an untouched file that is itself a ref keeps its
-            # ORIGINAL owner dir, so resolution stays one hop deep no
-            # matter how many pruned folds chain. fmap paths were built
-            # via hfs.join, which rstrips '/', so the slice prefix must
-            # be the normalized root — slicing with a trailing-slash
-            # `path` would chop the first character off every ref and
-            # brick the table (ADVICE r12).
-            import json
-            root = path.rstrip("/")
-            refs = sorted(fmap[f][len(root) + 1:] for f in untouched)
-            hfs.write_text(spark, hfs.join(staging, _CARRIED),
-                           json.dumps({"version": 1, "refs": refs},
-                                      separators=(",", ":")))
-        new_files.extend(
-            f for f in hfs.listdir(spark, staging)
-            if not f.startswith(("_", ".")) and f not in carried_names)
-        # the rewritten files are re-stats'd with a scan of only
-        # themselves, read with the schema they were written with
-        paths = [hfs.join(staging, f) for f in new_files]
-        new_map = zm.collect_zone_map(
-            spark, staging, list(zmap["cols"]), paths=paths,
-            schema=rewritten.schema) if new_files else None
-        entries = [e for e in zmap["files"] if e["file"] in carried_names]
-        if new_map:
-            entries += new_map["files"]
-        zm.write_zone_map(spark, staging, {
-            "version": 1, "cols": zmap["cols"],
-            "files": sorted(entries, key=lambda e: e["file"])})
-        # bloom index rides the same carry discipline as the zone map:
-        # carried files keep their rows verbatim (possibly built under
-        # older sizing — the prober handles per-row params)
-        if not bl_cols:
-            return
-        idx_parts = []
-        old_idx = bloom.read_bloom_index(spark, _base_dir(path, version))
-        if old_idx is not None:
-            idx_parts.append(
-                old_idx.filter(F.col("file").isin(list(carried_names))))
-        if new_files:
-            fresh = bloom.collect_bloom_index(
-                spark, staging, bl_cols, paths=paths,
-                n_max=(max((e["rows"] for e in new_map["files"]),
-                           default=1) if new_map else None),
-                schema=rewritten.schema)
-            if fresh is not None:
-                idx_parts.append(fresh)
-        if idx_parts:
-            merged_idx = idx_parts[0]
-            for p in idx_parts[1:]:
-                merged_idx = merged_idx.unionByName(p)
-            bloom.write_bloom_index(spark, staging, merged_idx)
-
-    _staged_claimed_write(spark, _base_dir(path, new_version), _write_slot)
-    _publish(snap, new_version, _next_meta(snap, key, fold),
-             retain_versions)
+    carry = _Carry({f: fmap[f] for f in untouched}, zmap,
+                   bloom.read_bloom_index(spark, snap.base.dir)
+                   if bl_cols else None)
+    new_version = _commit_base(
+        snap, rewritten, key,
+        _Layout(range_files=n_out, stats_cols=list(zmap["cols"]),
+                bloom=tuple(bl_cols)),
+        _next_meta(snap, key, fold), retain_versions, carry=carry,
+        materialize=materialize)
     new_base = _Base(spark, path, new_version)
-    # the new version's merged schema is the rewritten frame's when the
-    # carried files' columns are its leading columns (columns only ever
-    # append): the result read and every later reader skip inference
-    old_cols = [(f.name, f.dataType) for f in snap.base.schema.fields]
-    new_cols = [(f.name, f.dataType) for f in rewritten.schema.fields]
-    if new_files and (not untouched
-                      or new_cols[:len(old_cols)] == old_cols):
-        new_base.seed_schema(rewritten.schema)
     return new_base.read(), {
         "pruned": True, "new_version": new_version,
         "deltas_folded": len(fold), "files_total": len(all_files),
-        "files_rewritten": len(new_files),
+        "files_rewritten": len(new_base.file_map) - len(untouched),
         "files_carried": len(untouched)}
 
 
@@ -2960,44 +2916,27 @@ def restore_table(spark: SparkSession, path: str, key: str,
     column that was NULL at the snapshot but non-null now would keep
     the newer value — only a base flip expresses full overwrite.
 
-    Pending deltas above the folded-through watermark are superseded
-    (they describe arrivals the restore erases) and marked folded. The
-    snapshot's zone map and bloom index ride verbatim (the files are
-    the same files); bucket-layout metadata is DROPPED — the
-    bucketed read path resolves a per-version catalog ident the
-    carried base does not own — while range/z-order hints stay (they
-    describe the carried files accurately). History keeps rolling
-    forward: the restore is itself a new version, so a restore can
-    be undone by another restore (`retain_versions` permitting).
+    It commits through `_commit_base` with no frame, carrying every
+    file of the snapshot. Pending deltas above the folded-through
+    watermark are superseded (they describe arrivals the restore
+    erases) and marked folded. The snapshot's zone map and bloom index
+    ride verbatim (the files are the same files); bucket-layout
+    metadata is DROPPED — the bucketed read path resolves a
+    per-version catalog ident the carried base does not own — while
+    range/z-order hints stay (they describe the carried files
+    accurately). History keeps rolling forward: the restore is itself
+    a new version, so a restore can be undone by another restore
+    (`retain_versions` permitting).
 
     Returns {restored_to, new_version, files_carried,
     deltas_superseded}."""
-    import json
-
     snap = snapshot(spark, path)
-    restored = _retained_base(spark, path, version)
-    snapdir = restored.dir
-    fold = list(snap.deltas)
     # flatten: the file map resolves the snapshot's own carried refs
     # to their ORIGINAL owner dirs, so the restore's refs stay one hop
-    fmap = restored.file_map
-    root = path.rstrip("/")
-    refs = sorted(p[len(root) + 1:] for p in fmap.values())
-    new_version = _next_base_version(spark, path, snap.version)
-    zmap = zm.read_zone_map(spark, snapdir)
-    idx = bloom.read_bloom_index(spark, snapdir)
-
-    def _write_slot(staging: str) -> None:
-        hfs.write_text(spark, hfs.join(staging, _CARRIED),
-                       json.dumps({"version": 1, "refs": refs},
-                                  separators=(",", ":")))
-        if zmap is not None:
-            zm.write_zone_map(spark, staging, zmap)
-        if idx is not None:
-            bloom.write_bloom_index(spark, staging, idx)
-        hfs.write_text(spark, hfs.join(staging, "_SUCCESS"), "")
-
-    _staged_claimed_write(spark, _base_dir(path, new_version), _write_slot)
+    restored = _retained_base(spark, path, version)
+    carry = _Carry(restored.file_map, zm.read_zone_map(spark, restored.dir),
+                   bloom.read_bloom_index(spark, restored.dir))
+    fold = list(snap.deltas)
     meta = _next_meta(snap, key, fold)
     meta.pop("bucket_key", None)
     meta.pop("buckets", None)
@@ -3005,9 +2944,10 @@ def restore_table(spark: SparkSession, path: str, key: str,
     # from; a later non-restore commit drops the marker (its content
     # is no longer the snapshot's)
     meta["restored_from"] = str(version)
-    _publish(snap, new_version, meta, retain_versions)
+    new_version = _commit_base(snap, None, key, _Layout(), meta,
+                               retain_versions, carry=carry)
     return {"restored_to": version, "new_version": new_version,
-            "files_carried": len(refs),
+            "files_carried": len(carry.files),
             "deltas_superseded": len(fold)}
 
 

@@ -160,9 +160,10 @@ def write_zone_map(spark: SparkSession, base_dir: str,
     spans and the entries split across `_zonemap_shard_NNNNN.json`
     files, so planning a probe parses O(probe) bytes instead of
     O(files). Shard files land BEFORE the index (a reader that sees
-    the index sees every shard it names); the base directory is
-    always a freshly claimed version slot, so no stale shards can
-    linger from a previous map."""
+    the index sees every shard it names). The keyed-table writer
+    targets its private staging dir, before the rename that creates
+    the base slot, so no stale shards can linger from a previous
+    map."""
     files = sorted(zmap["files"], key=lambda e: e["file"])
     cols = zmap["cols"]
     if len(files) <= SHARD_TARGET:

@@ -3,13 +3,18 @@
 takes): a differential COUNT/SUM view round is one write plan, a pruned
 fold re-reads nothing it wrote (no `parquet at` footer-inference job),
 and a scan with a pending delta runs no de-duplication job for its
-delta key set. The counts are ceilings: a change that adds a job to
-one of these calls fails here."""
+delta key set. The base rewriters the benchmark does not run (range
+upsert, `compact`, delete, `restore_table`, the pruned fold of a cold
+touched-file decision) are pinned too, with and without a bloom index.
+The counts are ceilings: a change that adds a job to one of these calls
+fails here."""
 
 from pyspark.sql import Row
 
 from howto_mongo_bulk_update_from_parquet_spark.sinks.keyed_table import (
-    append_delta, compact_pruned, scan_keyed_table, upsert_into_keyed_table)
+    append_delta, compact, compact_pruned, current_base_version,
+    delete_from_keyed_table, restore_table, scan_keyed_table,
+    upsert_into_keyed_table)
 from howto_mongo_bulk_update_from_parquet_spark.sinks.views import \
     maintain_grouped_view
 
@@ -59,3 +64,50 @@ def test_keyed_cycle_job_counts(spark, tmp_path):
     assert len(fold_jobs) <= 6, fold_jobs
     assert not [j for j in fold_jobs
                 if any(n.startswith("parquet at") for n in j)], fold_jobs
+
+
+def _rewriter_census(spark, path, bloom_cols=None) -> dict[str, int]:
+    """Jobs of each base rewriter on a 40-row range table."""
+    def rows(ks):
+        return spark.createDataFrame(
+            [Row(k=k, score=float(k), h=f"h{k * 7 % 40}") for k in ks])
+
+    layout = dict(range_files=4, stats_cols=["score"],
+                  bloom_cols=bloom_cols)
+    upsert_into_keyed_table(spark, rows(range(40)), path=path, key="k",
+                            updated_at_col=None, **layout)
+
+    def n_jobs(fn):
+        return len(_census(spark, fn))
+
+    jobs = {"upsert": n_jobs(lambda: upsert_into_keyed_table(
+        spark, rows([1, 2, 45]), path=path, key="k", updated_at_col=None,
+        **layout))}
+    if bloom_cols is None:
+        append_delta(spark, rows([7]), path=path, key="k")
+        jobs["compact"] = n_jobs(lambda: compact(spark, path, "k"))
+        jobs["delete"] = n_jobs(lambda: delete_from_keyed_table(
+            spark, rows([3]), path=path, key="k"))
+    append_delta(spark, rows([4, 50]), path=path, key="k")
+    jobs["compact_pruned"] = n_jobs(lambda: compact_pruned(spark, path, "k"))
+    previous = current_base_version(spark, path) - 1
+    jobs["restore_table"] = n_jobs(lambda: restore_table(
+        spark, path, "k", previous))
+    return jobs
+
+
+def test_base_rewriter_job_counts(spark, tmp_path):
+    plain = _rewriter_census(spark, str(tmp_path / "plain"))
+    bloomed = _rewriter_census(spark, str(tmp_path / "bloom"),
+                               bloom_cols=["h"])
+    # the data write, then the zone-map collection over the written
+    # files; a bloom index adds its collection and its write. Restore
+    # writes no data: it carries every file with its sidecars verbatim.
+    assert plain["upsert"] <= 7, plain
+    assert plain["compact"] <= 8, plain
+    assert plain["delete"] <= 8, plain
+    assert plain["compact_pruned"] <= 6, plain
+    assert plain["restore_table"] == 0, plain
+    assert bloomed["upsert"] <= 10, bloomed
+    assert bloomed["compact_pruned"] <= 10, bloomed
+    assert bloomed["restore_table"] <= 1, bloomed

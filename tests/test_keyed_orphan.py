@@ -223,3 +223,47 @@ def test_recover_dead_claims_keeps_retained_history(spark, tmp_path):
             path=path, key="k", updated_at_col=None)
     assert recover_dead_claims(spark, path) == []
     assert read_keyed_table(spark, path, version=1).count() == 1
+
+
+def test_failed_sidecar_leaves_no_slot(spark, tmp_path, monkeypatch):
+    """A writer that fails after its data write but before its zone map
+    lands leaves no `base_v*` dir behind: every sidecar is built in the
+    private staging dir, before the slot rename. A slot left above the
+    published version would read as a live racer's claim, and every
+    later rewrite would raise ConcurrentWriteError until the staleness
+    grace expired."""
+    from howto_mongo_bulk_update_from_parquet_spark.sinks import \
+        zonemap as zm
+
+    path = str(tmp_path / "wedge")
+    upsert_into_keyed_table(spark, _docs(spark, 40), path=path, key="k",
+                            updated_at_col=None, range_files=4)
+    real = zm.collect_zone_map
+
+    def fail_once(*a, **k):
+        monkeypatch.setattr(zm, "collect_zone_map", real)
+        raise RuntimeError("injected zone-map failure")
+
+    def unpublished_slots():
+        v = current_base_version(spark, path)
+        return [d for d in os.listdir(path)
+                if d.startswith("base_v") and int(d[6:]) > v]
+
+    writes = [
+        lambda: upsert_into_keyed_table(
+            spark, spark.createDataFrame([Row(k=3, val=-3)]), path=path,
+            key="k", updated_at_col=None, range_files=4),
+        lambda: compact(spark, path, "k"),
+    ]
+    for write in writes:
+        monkeypatch.setattr(zm, "collect_zone_map", fail_once)
+        with pytest.raises(RuntimeError, match="injected"):
+            write()
+        assert unpublished_slots() == []
+        before = current_base_version(spark, path)
+        upsert_into_keyed_table(
+            spark, spark.createDataFrame([Row(k=5, val=-5)]), path=path,
+            key="k", updated_at_col=None)
+        assert current_base_version(spark, path) > before
+    got = {r["k"]: r["val"] for r in read_keyed_table(spark, path).collect()}
+    assert got[5] == -5 and got[3] == 6 and len(got) == 40

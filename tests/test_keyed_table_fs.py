@@ -234,17 +234,9 @@ def test_compact_single_write_versioned_base(spark, tmp_path):
         {"a", "b", "c"}
 
 
-def test_rename_no_clobber_loses_to_a_directory_landing_in_the_gap(
-        spark, tmp_path, monkeypatch):
-    """A racer's slot directory that lands between the existence check
-    and the rename: the rename loses (False) and leaves both directories
-    as they were. Hadoop's local rename would move the loser INSIDE the
-    winner's slot and report success, so two writers would both believe
-    they took the one slot."""
-    src, dst = tmp_path / ".stage-x", tmp_path / "slot"
-    for d in (src, dst):
-        d.mkdir()
-        (d / "part-0").write_text(d.name)
+def _exists_checks_in_the_gap(monkeypatch):
+    """Make every Hadoop existence check answer as if run before a
+    racer's target landed."""
     real_fs_path = hfs._fs_path
 
     def fs_path_in_the_gap(s, p):
@@ -259,8 +251,22 @@ def test_rename_no_clobber_loses_to_a_directory_landing_in_the_gap(
 
         return InTheGap(), jp
 
-    # both existence checks run before the racer's directory landed
     monkeypatch.setattr(hfs, "_fs_path", fs_path_in_the_gap)
+
+
+def test_rename_no_clobber_loses_to_a_directory_landing_in_the_gap(
+        spark, tmp_path, monkeypatch):
+    """A racer's slot directory that lands between the existence check
+    and the rename: the rename loses (False) and leaves both directories
+    as they were. Hadoop's local rename would move the loser INSIDE the
+    winner's slot and report success, so two writers would both believe
+    they took the one slot."""
+    src, dst = tmp_path / ".stage-x", tmp_path / "slot"
+    for d in (src, dst):
+        d.mkdir()
+        (d / "part-0").write_text(d.name)
+    # both existence checks run before the racer's directory landed
+    _exists_checks_in_the_gap(monkeypatch)
     monkeypatch.setattr(os.path, "lexists", lambda p: False)
     lost = not hfs.rename_no_clobber(spark, str(src), str(dst))
     monkeypatch.undo()
@@ -296,3 +302,82 @@ def test_fast_and_jvm_reads_agree(spark, tmp_path):
     assert bare.strip() == uri.strip() == '{"v": 1}'
     assert hfs.read_text(spark, os.path.join(d, "absent")) is None
     assert sorted(hfs.listdir(spark, d)) == ["m.json"]
+
+
+def test_every_base_sidecar_is_written_in_staging(spark, tmp_path,
+                                                  monkeypatch):
+    """Nothing writes into a `base_v*` slot after it appears: the zone
+    map, bloom index, carried refs and `_SUCCESS` of every base rewriter
+    land in its `.stage-*` dir before the slot rename; the only other
+    text the writers put down is the manifest's temp file."""
+    import re
+
+    from pyspark.sql import Row
+
+    from howto_mongo_bulk_update_from_parquet_spark.sinks import \
+        bloom_index as bi
+    from howto_mongo_bulk_update_from_parquet_spark.sinks.keyed_table import (
+        compact_pruned, delete_from_keyed_table, restore_table)
+
+    path = str(tmp_path / "staged")
+
+    def rows(ks):
+        return spark.createDataFrame(
+            [Row(k=k, score=float(k), h=f"h{k * 7 % 40}") for k in ks])
+
+    layout = dict(range_files=4, stats_cols=["score"], bloom_cols=["h"])
+    upsert_into_keyed_table(spark, rows(range(40)), path=path, key="k",
+                            updated_at_col=None, **layout)
+    written = []
+    real_text, real_bloom = hfs.write_text, bi.write_bloom_index
+    monkeypatch.setattr(hfs, "write_text", lambda s, p, t: (
+        written.append(p), real_text(s, p, t))[1])
+    monkeypatch.setattr(bi, "write_bloom_index", lambda s, d, r: (
+        written.append(d), real_bloom(s, d, r))[1])
+    upsert_into_keyed_table(spark, rows([1, 2, 45]), path=path, key="k",
+                            updated_at_col=None, **layout)
+    compact(spark, path, "k")
+    delete_from_keyed_table(spark, rows([3]), path=path, key="k")
+    append_delta(spark, rows([4, 50]), path=path, key="k")
+    compact_pruned(spark, path, "k")
+    restore_table(spark, path, "k", current_base_version(spark, path) - 1)
+    monkeypatch.undo()
+    staged = re.compile(r"/\.stage-[^/]+(/|$)")
+    manifest_tmp = re.compile(r"/_CURRENT\.v\d{5}\.tmp\.[0-9a-f]+$")
+    assert written
+    stray = [p for p in written
+             if not (staged.search(p) or manifest_tmp.search(p))]
+    assert stray == [], stray
+    got = sorted(r["k"] for r in read_keyed_table(spark, path).collect())
+    assert got == sorted(set(range(40)) - {3} | {45})
+
+
+def test_hadoop_rename_no_clobber_refuses_an_existing_target(
+        spark, tmp_path, monkeypatch):
+    """The Hadoop branch of `rename_no_clobber` refuses a directory or a
+    file that landed in the check-then-rename gap: it returns False,
+    leaves the target as it was and does not move the source inside
+    it. `FileSystem.rename` would move a directory INSIDE an existing
+    directory and replace an existing file, reporting success."""
+    slot_src, slot_dst = tmp_path / ".stage-x", tmp_path / "slot"
+    for d in (slot_src, slot_dst):
+        d.mkdir()
+        (d / "part-0").write_text(d.name)
+    file_src, file_dst = tmp_path / "m.tmp", tmp_path / "m"
+    file_src.write_text("mine")
+    file_dst.write_text("theirs")
+    # the Hadoop branch (as on `hdfs://`), its existence check run
+    # before the racer's target landed
+    monkeypatch.setattr(hfs, "_local_path", lambda s, p: None)
+    _exists_checks_in_the_gap(monkeypatch)
+    won_dir = hfs.rename_no_clobber(spark, f"file://{slot_src}",
+                                    f"file://{slot_dst}")
+    won_file = hfs.rename_no_clobber(spark, f"file://{file_src}",
+                                     f"file://{file_dst}")
+    monkeypatch.undo()
+    assert not won_dir and not won_file
+    assert os.listdir(slot_dst) == ["part-0"]
+    assert (slot_dst / "part-0").read_text() == "slot"
+    assert (slot_src / "part-0").read_text() == ".stage-x"
+    assert file_dst.read_text() == "theirs"
+    assert file_src.read_text() == "mine"
